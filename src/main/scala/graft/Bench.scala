@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
@@ -111,24 +114,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // STATIC conf, default 100: the full surface generates 1000+
-      // codegen classes per pass, so at 100 every repeat run re-Janinos
-      // everything already evicted — medians then measure compiler
-      // thrash, not the queries (the r14 t33/t31/t32 tail anomaly).
-      // Env-overridable for cache-thrash experiments (r17 e07 forensics).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.DsRangeRewrite.install(spark)
-    graft.plans.LevenshteinPrefilter.install(spark)
+    val spark = GraftSession.getOrCreate()
     if (SparkEntry.queries.isEmpty) {
       System.err.println("[bench] FATAL: no queries registered")
       spark.stop()
@@ -141,7 +127,10 @@ object Bench {
       val w = spark.read.parquet(s"$sfDir/lineitem.parquet")
       w.groupBy("l_returnflag").count().write.mode("overwrite")
         .format("noop").save()
-    } catch { case _: Throwable => () }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] warm-up FAILED: ${e.getMessage}")
+    }
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS",
       DefaultRuns.toString).toInt.max(1)
     // optional comma-separated query filters: ONLY for debugging a single

@@ -42,14 +42,7 @@ object Main {
     val mapPath = conf.raw.getOrElse("dump_map_file", "dump.map")
     val mapping = FieldMapping.parseString(Files.readString(Paths.get(mapPath)))
 
-    val spark = sparkOpt.getOrElse(SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-dump")
-      .getOrCreate())
-    graft.plans.DsRangeRewrite.install(spark)
-    graft.plans.LevenshteinPrefilter.install(spark)
+    val spark = sparkOpt.fold(GraftSession.getOrCreate())(GraftSession.install)
 
     val sfDir = conf.raw.getOrElse("source_dir",
       throw GraftError.Other("source_dir missing from conf"))

@@ -46,27 +46,26 @@ object Verify {
       false
     }
 
+  /** `Verify <sfDir> <outDir> [<name>[,<name>…]]`. The optional third
+    * argument slices the surface to the named queries (unknown names are
+    * rejected) and restricts oracle_sql.json to them, so
+    * `tools/local_verify.py` compares just that slice; a sliced run exits
+    * 1 if any of its queries failed. The full dump always completes and
+    * leaves failures to the markers. */
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: the 96-query surface generates 1000+
-      // codegen classes; without this the dump pass re-Janinos evicted
-      // classes continuously (see BASELINE.md round-15 bench diagnosis)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.DsRangeRewrite.install(spark)
-    graft.plans.LevenshteinPrefilter.install(spark)
-    new java.io.File(outDir).mkdirs()
-    val failed = SparkEntry.queries.toSeq.filterNot { case (name, fn) =>
-      dumpOne(spark, sfDir, outDir, name, fn)
+    val Array(sfDir, outDir) = args.take(2)
+    val slice = args.lift(2)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val reg = SparkEntry.queries
+    slice.foreach { names =>
+      val unknown = names.diff(reg.keySet)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     }
+    val selected = (name: String) => slice.forall(_.contains(name))
+    val spark = GraftSession.getOrCreate()
+    new java.io.File(outDir).mkdirs()
+    val failed = reg.toSeq.filter { case (name, _) => selected(name) }
+      .filterNot { case (name, fn) => dumpOne(spark, sfDir, outDir, name, fn) }
     if (failed.nonEmpty)
       System.err.println(
         s"[verify] ${failed.size} queries FAILED: ${failed.map(_._1).sorted.mkString(", ")}")
@@ -87,9 +86,12 @@ object Verify {
     // (two dirs in one JVM would otherwise embed the wrong dir's
     // merges/centroids — r16 advice)
     graft.queries.OracleDump.sfDir = Some(sfDir)
-    val json = SparkEntry.oracleSql
+    // filter BEFORE forcing oracle thunks: trained-state thunks for
+    // queries that did not run in this JVM throw by design
+    val json = graft.queries.Registry.oracleSqlFor(selected)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (slice.nonEmpty && failed.nonEmpty) sys.exit(1)
   }
 }

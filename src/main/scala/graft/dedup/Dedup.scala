@@ -348,8 +348,6 @@ object Dedup {
     * a local constant; the extra exchange carries only the fixed-width
     * id columns. */
   private[graft] def cpuSpread(df: DataFrame): DataFrame = {
-    // env kill-switch for A/B probes, like CoreOps.spreadSmallScan's
-    if (sys.env.get("SPARK_GRAFT_CPU_SPREAD").contains("0")) return df
     val sc = df.sparkSession.sparkContext
     val parts = math.max(sc.defaultParallelism,
       df.sparkSession.sessionState.conf.numShufflePartitions)

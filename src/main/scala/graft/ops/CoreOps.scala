@@ -52,10 +52,8 @@ object CoreOps {
     * Deterministic: round-robin repartition sorts its input locally first
     * (spark.sql.execution.sortBeforeRepartition, default on), and every
     * registered query's output is row-order-independent (keyed
-    * aggregates/joins; the driver compare sorts). Env kill-switch
-    * SPARK_GRAFT_SCAN_SPREAD=0 for A/B probes. */
+    * aggregates/joins; the oracle compare sorts). */
   def spreadSmallScan(df: DataFrame): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SCAN_SPREAD").contains("0")) return df
     val sc = df.sparkSession.sparkContext
     // a bare relation's partition count: physical planning only, no job
     val parts = df.rdd.getNumPartitions
@@ -76,8 +74,6 @@ object CoreOps {
     * exchange (the first r21 cpuSpread attempt, documented there). The
     * count scales with the session, never a local constant. */
   def spreadByKeys(df: DataFrame, keys: Column*): DataFrame = {
-    // env kill-switch for A/B probes, like [[spreadSmallScan]]'s
-    if (sys.env.get("SPARK_GRAFT_KEY_SPREAD").contains("0")) return df
     val sc = df.sparkSession.sparkContext
     val parts = math.max(sc.defaultParallelism,
       df.sparkSession.sessionState.conf.numShufflePartitions)

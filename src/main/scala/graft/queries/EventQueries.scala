@@ -26,27 +26,12 @@ object EventQueries {
     * over the five streaming rows 44.7→34.8 s) — the replay state is a
     * few thousand keys, so a single partition is un-skewed by
     * construction and every stateful stage schedules one task per batch
-    * instead of four. Env-overridable (SPARK_GRAFT_STREAM_STATE_PARTS)
-    * so the harness cost can be probed without a rebuild; this tunes the
-    * REPLAY HARNESS only — a production run of the same operators sizes
-    * state partitions to the real key cardinality. */
+    * instead of four. This tunes the REPLAY HARNESS only — a production
+    * run of the same operators sizes state partitions to the real key
+    * cardinality. */
   private[queries] def replaySession(spark: SparkSession): SparkSession = {
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_STATE_PARTS", "1"))
-    // generic probe hook (r22, SPARK_GRAFT_STREAM_STATE_PARTS's sibling):
-    // semicolon-separated k=v conf pairs applied to the child session, so
-    // state-store/checkpoint conf candidates can be A/B'd without a
-    // rebuild. Empty by default — the recorded methodology is unchanged.
-    sys.env.get("SPARK_GRAFT_STREAM_CONF").foreach {
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => ss.conf.set(k.trim, v.trim)
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_STREAM_CONF entry '$kv' is not k=v")
-        }
-      }
-    }
+    ss.conf.set("spark.sql.shuffle.partitions", "1")
     ss
   }
 

@@ -25,8 +25,12 @@ object Registry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.fn).toMap
 
-  def oracleSql: Map[String, String] =
-    all.flatMap(q =>
+  def oracleSql: Map[String, String] = oracleSqlFor(_ => true)
+
+  /** Oracles of the queries `keep` selects; the filter runs before any
+    * dump-time thunk is forced. */
+  def oracleSqlFor(keep: String => Boolean): Map[String, String] =
+    all.filter(q => keep(q.name)).flatMap(q =>
       q.oracleFn.map(f => q.name -> f())
         .orElse(q.oracle.map(q.name -> _))).toMap
 }

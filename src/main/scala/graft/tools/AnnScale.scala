@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.ops.CoreOps.scan
@@ -23,15 +22,7 @@ import graft.sim.Similarity
 object AnnScale {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: AnnScale <dir>")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate()
     val emb = scan(spark, args(0), "embeddings")
     val queries = emb.where(col("vec_id") < 5)
     val corpus = emb.count()

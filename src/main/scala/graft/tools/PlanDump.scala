@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes PLANS.md: the formatted physical plan of each headline query,
   * with the scale-relevant properties called out. Re-run after plan-
   * affecting changes: `sbt "runMain graft.tools.PlanDump"`. */
@@ -66,14 +64,9 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 4 cores like the spec session, so PLANS.md matches what
+    // PlanAuditSpec enforces on any machine
+    val spark = graft.GraftSession.getOrCreate(cores = 4)
 
     val sections = headline.map { case (name, why) =>
       val df = graft.queries.Registry.queries(name)(spark, sf)

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query plan snapshots for optimization-round evidence: write the
   * `explain("formatted")` output of each named query to
   * `<outDir>/<query>_<tag>.txt` — the before/after plan-diff artifacts the
@@ -11,8 +9,7 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt "runMain graft.tools.PlanSnap plans/r21 before t29_fuzzy_neardup,t48_source_dedup_report"
   *
-  * Session conf mirrors Bench (32 local cores, shuffle partitions = cpus,
-  * UTC, nanosAsLong, both custom rules installed) so the captured plan is
+  * The session is Bench's ([[graft.GraftSession]]) so the captured plan is
   * the one the bench actually runs — a 4-core PlanDump-style session can
   * pick different join strategies under AQE thresholds. */
 object PlanSnap {
@@ -22,18 +19,7 @@ object PlanSnap {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sf = args.lift(3).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.DsRangeRewrite.install(spark)
-    graft.plans.LevenshteinPrefilter.install(spark)
+    val spark = graft.GraftSession.getOrCreate()
     Files.createDirectories(Paths.get(outDir))
     val reg = graft.queries.Registry.queries
     names.foreach { name =>

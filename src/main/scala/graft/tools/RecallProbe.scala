@@ -123,15 +123,7 @@ object RecallProbe {
     require(args.nonEmpty, "usage: RecallProbe <dir> [n] [r]")
     val n = if (args.length > 1) args(1).toInt else 33
     val r = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate()
     println(t29(spark, args(0), n, r).json)
     println(s15(spark, args(0), n, r).json)
     spark.stop()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Conf-registered listener (see [[ReplayProbe]]): the replay harnesses
   * run their streams on CHILD sessions (spark.newSession()), each with
   * its own StreamingQueryManager, so a listener added to the parent via
@@ -41,18 +39,9 @@ object ReplayProbe {
     val name = args.headOption.getOrElse("ev10_stream_hourly_replay")
     val sf = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.streaming.streamingQueryListeners",
-        classOf[ReplayProbeRecorder].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.getOrCreate(extra = Map(
+      "spark.sql.streaming.streamingQueryListeners" ->
+        classOf[ReplayProbeRecorder].getName))
 
     val t0 = System.nanoTime()
     graft.queries.Registry.queries(name)(spark, sf)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic 1-in-N sample of the DOCUMENTS and EMBEDDINGS tables of
@@ -52,15 +51,7 @@ object SampleDocs {
     require(src.getCanonicalPath != dst.getCanonicalPath,
       "dst must differ from src")
     dst.mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate()
     // embeddings get the same duplication-preserving sample as documents:
     // a scaled world replicates every VECTOR verbatim too, so the
     // full-corpus pair queries (s15's near-dup output is quadratic in

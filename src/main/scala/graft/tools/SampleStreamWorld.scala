@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic 1-in-N SAMPLED FEED for the streaming ×100 cell — the
@@ -65,15 +64,7 @@ object SampleStreamWorld {
     require(src.getCanonicalPath != dst.getCanonicalPath,
       "dst must differ from src")
     dst.mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate()
     val sampledTables = Map(
       "events.parquet" -> "user_id", "documents.parquet" -> "doc_id")
     src.listFiles.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)

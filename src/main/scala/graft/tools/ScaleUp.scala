@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** Deterministic F× scale-up of a testdata directory — the tool behind the
@@ -143,15 +143,7 @@ object ScaleUp {
     require(src.isDirectory, s"$src is not a directory")
     require(src.getCanonicalPath != dst.getCanonicalPath,
       "dst must differ from src")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate()
     src.listFiles.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       .foreach { t =>
         val table = t.getName.stripSuffix(".parquet")

@@ -69,15 +69,7 @@ object StreamDrain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StreamDrain <dir> [filesPerTrigger]")
     val fpt = if (args.length > 1) args(1).toInt else 8
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.getOrCreate()
     val r = drain(spark, args(0), fpt)
     println(s"""{"rows":${r.rows},"batches":${r.batches},""" +
       s""""sec":${r.sec},"match":${r.matches}}""")

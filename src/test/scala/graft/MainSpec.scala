@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.SparkSession
+
 class MainSpec extends SparkSpec {
 
   private def writeConf(dir: String, extra: String = ""): String = {
@@ -32,6 +34,24 @@ class MainSpec extends SparkSpec {
     assert(sql.startsWith("#data timestamp: "))
     assert(sql.contains("insert into db.t (id,flag,ds,version) values"))
     assert(sql.contains("'19960102'") && sql.contains("'2.0'"))
+  }
+
+  test("without a session argument, the thread's active session is used " +
+    "with its confs untouched") {
+    val dir = Files.createTempDirectory("graft_main").toString
+    val prev = SparkSession.getActiveSession
+    val iso = SparkSpec.session.newSession()
+    iso.conf.set("spark.sql.shuffle.partitions", "3")
+    SparkSession.setActiveSession(iso)
+    try {
+      assert(Main.run(writeConf(dir)) >= 1)
+      assert(SparkSession.getActiveSession.contains(iso))
+      assert(iso.conf.get("spark.sql.shuffle.partitions") == "3")
+      assert(iso.experimental.extraOptimizations
+        .contains(graft.plans.DsRangeRewrite))
+    } finally
+      prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    assert(SparkSession.getActiveSession == prev)
   }
 
   test("empty partition honors the 9998 contract through the CLI path") {

@@ -700,6 +700,60 @@ class PlanAuditSpec extends SparkSpec {
       s"winnow_prints must run once, reused across all consumers:\n$finalStr")
   }
 
+  test("t09: every round-robin exchange in its plans has no Exchange " +
+    "below it (the near-dup candidates stay unspread)") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def initial(qe: QueryExecution): SparkPlan = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p                        => p
+    }
+    // clusterAssign localCheckpoints the pair edges while the query is
+    // BUILT, so the candidate lineage lives in those checkpoint jobs, not
+    // in the final plan: capture every job's plan on a private session
+    // (listener events are per session) and pin them all
+    val s = spark.newSession()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        plans.add(funcName -> initial(qe)): Unit
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try {
+      val df = Registry.queries("t09_training_pipeline")(s, sf)
+      df.count()
+      // the bus delivers in order: once the final count arrives, every
+      // checkpoint job before it has been delivered too
+      val deadline = System.nanoTime() + 120_000_000_000L
+      import scala.jdk.CollectionConverters._
+      while (!plans.asScala.exists(_._1 == "count") &&
+             System.nanoTime() < deadline)
+        Thread.sleep(50)
+      val all = plans.asScala.toSeq
+      assert(all.exists(_._1 == "count"), "the final count never reached the listener")
+      // the pair verify (the cpuSpread site) must be among the pinned plans
+      assert(all.exists { case (f, p) =>
+        f == "localCheckpoint" && p.exists(_.expressions.exists(
+          _.exists(_.isInstanceOf[graft.functions.SortedIntersectSize])))
+      }, s"expected the pair-edge checkpoint among ${all.map(_._1)}")
+      (initial(df.queryExecution) +: all.map(_._2)).foreach { root =>
+        root.collect {
+          case e: ShuffleExchangeExec
+              if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+        }.foreach { e =>
+          assert(e.child.collect { case c: Exchange => c }.isEmpty,
+            s"a round-robin spread sits mid-plan (Exchange below it):\n$e")
+        }
+      }
+    } finally s.listenerManager.unregister(listener)
+  }
+
   test("IVF-PQ s19: probes and candidates broadcast; no cartesian; the " +
     "float embedding column never rides a shuffle") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
