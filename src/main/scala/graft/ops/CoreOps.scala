@@ -1,7 +1,15 @@
 package graft.ops
 
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+import java.util.HexFormat
+
+import scala.util.Try
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.conf.{FieldMapping, MissingFieldPolicy, SourceField}
 import graft.GraftError
@@ -16,9 +24,92 @@ object CoreOps {
 
   /** §2 row 1 — table scan. In this harness tables are parquet files under
     * a scale-factor dir; on a real cluster this is
-    * `spark.read.table("db.tbl")` against the Hive catalog. */
-  def scan(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$table.parquet")
+    * `spark.read.table("db.tbl")` against the Hive catalog.
+    *
+    * A plain `spark.read.parquet` infers the schema with a footer-reading
+    * Spark job on every call, even for a one-file table (Spark 4.1's
+    * `SchemaMergeUtils` always `parallelize`s). The schema is memoized per
+    * path, JVM-wide, so that job is skipped only on a REPEAT scan of an
+    * unchanged path within one JVM: a query set run in one JVM (`Verify`,
+    * `Bench`, where many queries read the same tables) or a long-lived
+    * driver calling `Main.run` again on an unchanged table. A one-shot
+    * `graft.Main` run scans its source once per JVM and always misses; a
+    * `hive_db` source does not come here at all. A first miss costs the
+    * plain read plus one hash over the listing. The memo is re-used only
+    * when re-inferring would give the same answer:
+    *  - the session's explicitly set confs that can change inference
+    *    (`spark.sql.parquet.*`, `spark.sql.legacy.*`, `spark.sql.files.*`,
+    *    `spark.sql.sources.*`, case sensitivity, time zone, timestamp
+    *    type) equal the ones at inference;
+    *  - the file index Spark lists for the schema-given read — the one
+    *    listing the query plans with, not a second one — has the same
+    *    (path, length, modificationTime) sequence, in listing order, as the
+    *    index the schema was inferred from. So an added, removed, rewritten
+    *    or emptied file re-infers, and a deleted path or an empty directory
+    *    raises exactly what `spark.read.parquet` raises. As with Spark's
+    *    own file-status cache, an in-place rewrite that keeps both the
+    *    length and the modification time is not seen.
+    *
+    * A conf mismatch takes the plain read and replaces the entry. A
+    * listing mismatch has already paid one listing for the schema-given
+    * read, so the plain read lists again: on a 365-partition table that
+    * doubled the scan (2.7 s against 1.3 s, local disk, 4 cores). A path
+    * whose files changed once, such as a source that gains a `ds`
+    * partition a day, keeps changing, so it is dropped from the memo and
+    * every later scan of it in this JVM is the plain read: at most one
+    * doubled scan per path. Memory: one SHA-256 listing digest, one conf
+    * snapshot and one `StructType` per memoized path, and the path string
+    * of each changed one; no file list, DataFrame or session is held. */
+  def scan(spark: SparkSession, sfDir: String, table: String): DataFrame = {
+    val path = s"$sfDir/$table.parquet"
+    val confs = schemaConfs(spark)
+    val memo = Option(schemaMemo.get(path)).filter(_.confs == confs)
+    val hit = memo.flatMap { m =>
+      Try(spark.read.schema(m.schema).parquet(path)).toOption
+        .filter(listingDigest(_).contains(m.listing))
+    }
+    hit.getOrElse {
+      if (memo.isDefined) {
+        changedPaths.add(path)
+        schemaMemo.remove(path)
+      }
+      val df = spark.read.parquet(path)
+      if (!changedPaths.contains(path))
+        listingDigest(df).foreach(d => schemaMemo.put(path, SchemaMemo(confs, d, df.schema)))
+      df
+    }
+  }
+
+  /** Session confs that can change what parquet schema inference returns. */
+  private val SchemaConfPrefixes: Seq[String] = Seq(
+    "spark.sql.parquet.", "spark.sql.legacy.", "spark.sql.files.",
+    "spark.sql.sources.", "spark.sql.caseSensitive",
+    "spark.sql.session.timeZone", "spark.sql.timestampType")
+
+  private final case class SchemaMemo(confs: Map[String, String],
+                                      listing: String, schema: StructType)
+
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, SchemaMemo]()
+
+  private val changedPaths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private def schemaConfs(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) => SchemaConfPrefixes.exists(k.startsWith) }
+
+  /** SHA-256 of the relation's listed (path, length, mtime) sequence; None
+    * when `df` is not a single file-index scan. */
+  private def listingDigest(df: DataFrame): Option[String] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .collect { case index: PartitioningAwareFileIndex =>
+        val md = MessageDigest.getInstance("SHA-256")
+        index.allFiles().foreach { f =>
+          md.update(s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}\n"
+            .getBytes(StandardCharsets.UTF_8))
+        }
+        HexFormat.of().formatHex(md.digest())
+      }
 
   /** Scan-tail parallelization for UNDER-SPLIT inputs (guide §2: make
     * partitioning scale-adaptive, never a constant tuned for one mode).

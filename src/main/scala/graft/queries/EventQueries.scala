@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.CoreOps
 import graft.streaming.StreamOps
 
 /** Event-time analytics over the `events` table (timestamped stream shape).
@@ -107,7 +108,7 @@ object EventQueries {
 
   /** Normalize the ns-or-timestamp `ts` column to a TimestampType. */
   def readEvents(spark: SparkSession, sfDir: String): DataFrame =
-    normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
+    normalizeTs(CoreOps.scan(spark, sfDir, "events"))
 
   /** Tumbling 1-hour event-time windows (batch view of the streaming op;
     * identical code path as StreamOps.windowedCounts). */

@@ -2675,7 +2675,7 @@ object TextQueries {
     val sinkDir = tmp("graft_t41_sink_")
     val ckptDir = tmp("graft_t41_ckpt_")
 
-    val corpus = ss.read.parquet(s"$sfDir/documents.parquet")
+    val corpus = scan(ss, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val mem = MemoryStream[(Long, String)]
     // caller-managed index: the persisted corpus projection registers in

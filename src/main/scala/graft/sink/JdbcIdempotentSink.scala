@@ -5,8 +5,6 @@ import java.util.Properties
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
-import graft.conf.FieldMapping
-
 /** Idempotent keyed-overwrite JDBC sink (SURVEY.md §2 rows 11, 13, 14).
   *
   * The reference achieves effectively-once-per-logical-partition by issuing
@@ -65,12 +63,4 @@ object JdbcIdempotentSink {
         } finally ps.close()
       } finally conn.close()
     }
-
-  /** Overwrite-by-logical-partition using the mapping's constant columns as
-    * the key, exactly like the reference's delete_before_dump. */
-  def writeWithMapping(df: DataFrame, url: String, table: String,
-                       mapping: FieldMapping, conf: Map[String, String],
-                       connProps: Properties = new Properties(),
-                       batchSize: Int = 100): Unit =
-    write(df, url, table, mapping.constants(conf), connProps, batchSize)
 }

@@ -3,8 +3,9 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 /** Writes PLANS.md: the formatted physical plan of each headline query,
-  * with the scale-relevant properties called out. Re-run after plan-
-  * affecting changes: `sbt "runMain graft.tools.PlanDump"`. */
+  * with the scale-relevant properties called out and IDs renumbered per
+  * plan ([[PlanText]]). Re-run after plan-affecting changes:
+  * `sbt "runMain graft.tools.PlanDump"`. */
 object PlanDump {
   private val headline = Seq(
     "p01_flagship" -> "pushdown + pruning: the reference's whole pipeline",
@@ -69,9 +70,7 @@ object PlanDump {
     val spark = graft.GraftSession.getOrCreate(cores = 4)
 
     val sections = headline.map { case (name, why) =>
-      val df = graft.queries.Registry.queries(name)(spark, sf)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val plan = PlanText.formatted(graft.queries.Registry.queries(name)(spark, sf))
       s"""## $name — $why
          |
          |```
@@ -87,6 +86,9 @@ object PlanDump {
          |- `BroadcastHashJoin` for dimension sides; no `CartesianProduct`
          |- `TakeOrderedAndProject` for top-k (no global Sort)
          |- single `Exchange` per keyed aggregation
+         |
+         |Expression IDs (`#N`) and `plan_id`s are renumbered per plan in order of
+         |first appearance, so a regenerated file diffs only where a plan changed.
          |
          |${sections.mkString("\n")}""".stripMargin
     Files.writeString(Paths.get("PLANS.md"), doc)

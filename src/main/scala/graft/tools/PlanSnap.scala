@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 /** Per-query plan snapshots for optimization-round evidence: write the
-  * `explain("formatted")` output of each named query to
+  * `explain("formatted")` output of each named query ([[PlanText]]) to
   * `<outDir>/<query>_<tag>.txt` — the before/after plan-diff artifacts the
   * optimization rounds commit under plans/r{N}/.
   *
@@ -23,11 +23,8 @@ object PlanSnap {
     Files.createDirectories(Paths.get(outDir))
     val reg = graft.queries.Registry.queries
     names.foreach { name =>
-      val df = reg(name)(spark, sf)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       val f = Paths.get(outDir, s"${name}_$tag.txt")
-      Files.writeString(f, plan)
+      Files.writeString(f, PlanText.formatted(reg(name)(spark, sf)))
       println(s"wrote $f")
     }
     spark.stop()

@@ -81,6 +81,27 @@ class MainSpec extends SparkSpec {
     assert(sql.contains("insert into mydb.t2 "))
   }
 
+  test("a second ds day of the same table plans with no Spark job") {
+    // a private copy of the table, so the first run is a schema-memo miss
+    // whatever other suites have already scanned
+    val src = trackedTempDir("graft_main_src")
+    Files.copy(java.nio.file.Paths.get(s"$sf/lineitem.parquet"),
+      java.nio.file.Paths.get(s"$src/lineitem.parquet"))
+    def runDay(ds: String) = jobsStartedBy(Main.run(
+      writeConf(trackedTempDir("graft_main"), s"source_dir=$src\nds=$ds"),
+      Some(spark)))
+    val (n1, first) = runDay("19950405")
+    val (n2, second) = runDay("19971106")
+    assert(n1 == 8 && n2 == 8)
+    // Pipeline.run plans, then counts: every job before the count is the
+    // plan's. The first day's plan infers the schema; the second's reuses it.
+    def planJobs(jobs: Seq[String]) =
+      jobs.takeWhile(!_.startsWith("count at Pipeline.scala"))
+    assert(planJobs(first).size == 1 && first.size > 1, first)
+    assert(planJobs(second).isEmpty, second)
+    assert(second.size == first.size - 1, s"$first vs $second")
+  }
+
   test("JDBC sink path loads into Derby idempotently from conf") {
     val url = "jdbc:derby:memory:graftmain;create=true"
     val conn = java.sql.DriverManager.getConnection(url)

@@ -27,6 +27,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     p.toString
   }
 
+  /** `body`'s result and the names of the first stage of each Spark job it
+    * starts in this thread, in job order. Job-start events reach the status
+    * tracker asynchronously, so a sentinel job runs afterwards in its own
+    * group and is awaited: events are delivered in order, so once the
+    * sentinel is visible every job `body` started is too. */
+  def jobsStartedBy[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${getClass.getSimpleName}-${System.nanoTime()}"
+    sc.setJobGroup(group, "counted")
+    val out = try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-sentinel", "sentinel")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val tracker = sc.statusTracker
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (tracker.getJobIdsForGroup(s"$group-sentinel").isEmpty &&
+           System.nanoTime() < deadline) Thread.sleep(20)
+    assert(tracker.getJobIdsForGroup(s"$group-sentinel").nonEmpty,
+      "sentinel job never reached the status tracker")
+    val stages = tracker.getJobIdsForGroup(group).sorted.toSeq.map { id =>
+      tracker.getJobInfo(id).flatMap(_.stageIds.minOption)
+        .flatMap(tracker.getStageInfo).fold("?")(_.name)
+    }
+    (out, stages)
+  }
+
   override def afterAll(): Unit = {
     synchronized {
       tempDirs.foreach { p =>
