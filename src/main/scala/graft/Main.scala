@@ -60,40 +60,9 @@ object Main {
             mapping.constants(conf.raw), batchSize = conf.batchSize,
             deleteBeforeDump = conf.deleteBeforeDump)
         case None =>
-          val sqlFile = conf.raw.getOrElse("dump_sql_file", "dump.sql")
-          val target = conf.mysqlTarget.getOrElse("db.tbl")
-          // Stream statements to the file partition by partition
-          // (toLocalIterator holds ONE partition's statements at a time)
-          // instead of SqlGenSink.script's coalesce(1)+collect — the
-          // script artifact is inherently a single local file (the
-          // reference's dump.sql), but building it must not buffer the
-          // whole table in driver memory or serialize the generation
-          // into one task.
-          // Write to a sibling temp file and move into place only after
-          // the iterator is exhausted: streaming into the final path
-          // directly would truncate the previous good dump BEFORE the job
-          // runs, and a mid-job failure would leave a partial file whose
-          // statements are individually well-formed — invisible to a
-          // consumer that ignores the exit code. ATOMIC_MOVE keeps the
-          // old artifact readable until the new one is complete.
-          val dest = Paths.get(sqlFile)
-          val tmp = Paths.get(sqlFile + ".tmp")
-          val out = Files.newBufferedWriter(tmp)
-          var ok = false
-          try {
-            out.write(s"#data timestamp: ${System.currentTimeMillis()}")
-            val it = SqlGenSink.insertStatements(df, target, conf.batchSize)
-              .toLocalIterator()
-            while (it.hasNext) { out.write("\n\n"); out.write(it.next()) }
-            ok = true
-          } finally {
-            out.close()
-            if (ok)
-              Files.move(tmp, dest,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            else Files.deleteIfExists(tmp)
-          }
+          SqlGenSink.writeScript(df, conf.mysqlTarget.getOrElse("db.tbl"),
+            conf.batchSize,
+            Paths.get(conf.raw.getOrElse("dump_sql_file", "dump.sql")))
       }
     }
   }

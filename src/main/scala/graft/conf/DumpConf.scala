@@ -49,7 +49,6 @@ final case class DumpConf(raw: Map[String, String]) {
     * (HiveToMysql.java:127, 560-564). */
   def dryRun: Boolean = raw.get("mode").exists(_.trim == "test")
 
-  def skipScan: Boolean = flag("skip_dump_to_local_file", dflt = false)
   def skipTransform: Boolean = flag("skip_local_file_to_sql", dflt = false)
   def skipSink: Boolean = flag("skip_sql_to_target", dflt = false)
 

@@ -42,8 +42,6 @@ object EmptyDataPolicy {
   */
 final case class FieldMapping(entries: Seq[MappingEntry]) {
   def targets: Seq[String] = entries.map(_.target)
-  def sourceFields: Seq[SourceField] =
-    entries.collect { case s: SourceField => s }
   def constants(conf: Map[String, String]): Seq[(String, String)] =
     entries.collect {
       case LiteralConstant(t, v) => t -> v

@@ -15,7 +15,11 @@ import org.apache.spark.sql.types._
   * lambda interpreters — ~`tables × planes × dim` boxed ops per row.
   * This expression runs the same dots in the same left-to-right IEEE
   * order (bit-identical codes, so the DuckDB oracle built from the same
-  * plane literals still hash-matches) at plain-JVM-loop cost.
+  * plane literals still hash-matches) at plain-JVM-loop cost. The other
+  * builtin form, each literal-plane dot expanded into a flat 64-term
+  * multiply-add chain, looks codegen-friendly but DOUBLES the query
+  * time: 30 planes × 64 element_at terms per row overwhelm the
+  * generated method.
   *
   * Input is the already-`asDouble`-cast embedding (array<double>), same
   * as the builtin path consumed. */

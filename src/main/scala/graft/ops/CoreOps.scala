@@ -246,15 +246,6 @@ object CoreOps {
     df.select(exprs.toIndexedSeq: _*)
   }
 
-  /** §2 row 15 — empty-result policy. `df.isEmpty` runs a LIMIT-1 job
-    * (cheap; does not materialize the result). */
-  def checkNonEmpty(df: DataFrame,
-                    policy: graft.conf.EmptyDataPolicy): DataFrame = {
-    if (policy == graft.conf.EmptyDataPolicy.Fail && df.isEmpty)
-      throw GraftError.NoData("pipeline produced zero rows")
-    df
-  }
-
   /** Degrade every column to string at the sink edge — the reference loads
     * everything as varchar (README.md:17). Kept OUT of the main pipeline so
     * plans stay typed; applied only where varchar-fidelity is wanted. */

@@ -12,9 +12,10 @@ import graft.ops.CoreOps
   *
   * Stage-skip flags (skip_dump_to_local_file etc., dump.conf:24-26) existed
   * because each reference stage materialized an on-disk artifact; in Spark
-  * there are no mid-pipeline files, so the flags degrade to: skipScan has no
-  * meaning (kept for conf compat), skipTransform passes the scan through
-  * unmapped, skipSink returns the DataFrame without writing.
+  * there are no mid-pipeline files, so the flags degrade to:
+  * `skip_dump_to_local_file` has no meaning (still accepted through
+  * `DumpConf.raw` and ignored, for conf compat), skipTransform passes the
+  * scan through unmapped, skipSink returns the DataFrame without writing.
   *
   * Dry-run (`mode=test`, HiveToMysql.java:560-564) prints the optimized
   * plan instead of executing — the Spark analogue of printing the would-be

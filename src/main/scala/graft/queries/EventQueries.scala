@@ -1,6 +1,9 @@
 package graft.queries
 
+import java.sql.Timestamp
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.ops.CoreOps
@@ -30,10 +33,88 @@ object EventQueries {
     * instead of four. This tunes the REPLAY HARNESS only — a production
     * run of the same operators sizes state partitions to the real key
     * cardinality. */
-  private[queries] def replaySession(spark: SparkSession): SparkSession = {
+  private def replaySession(spark: SparkSession): SparkSession = {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "1")
     ss
+  }
+
+  private val replayRuns = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** One replay's resources, handed to the body of [[replay]]: the child
+    * session its streams must be built on, a memory-sink name unique in
+    * the JVM, and single-use scratch dirs. */
+  private[queries] final class Replay private[EventQueries] (
+      val session: SparkSession, tag: String) {
+    val sinkName = s"${tag}_sink_${replayRuns.incrementAndGet()}"
+    private[queries] val scratchDirs =
+      scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    private[EventQueries] val cleanups =
+      scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+
+    /** A fresh dir, scrubbed when the replay ends. tmpfs when available:
+      * the replay's fixed cost is the per-micro-batch offset/commit/
+      * state-delta writes (fsync'd small files), which a disk /tmp turns
+      * into ~1 s per batch. Replay checkpoints are single-use. */
+    def scratchDir(): String = {
+      val base = java.nio.file.Paths.get("/dev/shm")
+      val dir =
+        if (java.nio.file.Files.isWritable(base))
+          java.nio.file.Files.createTempDirectory(base, s"graft_${tag}_")
+        else java.nio.file.Files.createTempDirectory(s"graft_${tag}_")
+      scratchDirs += dir
+      dir.toString
+    }
+
+    /** Run `f` at teardown, after the queries stop and the sink view is
+      * dropped, before the scratch dirs are scrubbed. */
+    def onCleanup(f: => Unit): Unit = cleanups += (() => f)
+
+    /** Start `df` into the memory sink [[sinkName]], checkpointed in a
+      * fresh scratch dir. */
+    def startMemorySink(df: org.apache.spark.sql.Dataset[_],
+                        outputMode: String)
+        : org.apache.spark.sql.streaming.StreamingQuery =
+      df.writeStream.format("memory").queryName(sinkName)
+        .option("checkpointLocation", scratchDir())
+        .outputMode(outputMode).start()
+  }
+
+  /** The harness every streaming replay (ev10-ev13, t41) runs in. `body`
+    * builds its streams on `r.session` (a fresh [[replaySession]]),
+    * starts its query, feeds it and returns the sink read. The harness
+    * collects that read, then tears down in order: stop every query on
+    * the child session, drop the memory-sink view, run the `onCleanup`
+    * actions, scrub the scratch dirs. The rows come back on the CALLER's
+    * session with the read's field names and types, every field
+    * nullable — the schema the parquet dump has always had.
+    *
+    * No-data micro-batches stay ENABLED (the default) deliberately:
+    * they are what applies each batch's watermark advance mid-stream,
+    * so append-mode emission and the late-drop path run live between
+    * feed steps. An r17 draft disabled them for speed and the
+    * lateness-zeroing mutant SURVIVED — the watermark never advanced
+    * until the flush, every window finalized at the end, and the row
+    * was a stream-shaped replay with inert watermark semantics. With
+    * them on, lateness->0 drops the ~28 boundary-crossing sf0.01 rows
+    * and the oracle gate catches it (kill recorded in BASELINE r17). */
+  private[queries] def replay(spark: SparkSession, tag: String)(
+      body: Replay => DataFrame): DataFrame = {
+    val r = new Replay(replaySession(spark), tag)
+    val (rows, fields) =
+      try {
+        val read = body(r)
+        (read.collect(), read.schema.fields)
+      } finally {
+        r.session.streams.active.foreach(_.stop())
+        r.session.catalog.dropTempView(r.sinkName)
+        r.cleanups.foreach(_())
+        r.scratchDirs.foreach(scrubCheckpoint)
+      }
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
+      org.apache.spark.sql.types.StructType(fields.map(f =>
+        org.apache.spark.sql.types.StructField(f.name, f.dataType))))
   }
 
   /** Best-effort recursive delete of a replay's single-use checkpoint.
@@ -389,9 +470,37 @@ object EventQueries {
     * flight) state and reads from a real source (file/Kafka) in
     * production; nothing in it collects. */
   def streamHourlyReplay(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.sql.Timestamp
+    val rows = eventValueRows(spark, sfDir)
+    val batches = boundedDisorderBatches(rows)
+    replay(spark, "ev10") { r =>
+      import r.session.implicits._
+      val mem = MemoryStream[(Long, Timestamp, String, Double)](r.session)
+      val q = r.startMemorySink(StreamOps.windowedCounts(
+          mem.toDF().toDF("event_id", "ts", "event_type", "value"),
+          "1 hour", "2 hours"), "append")
+      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      // TWO flush sentinels: the watermark a batch computes only takes
+      // effect in a LATER batch. With no-data micro-batches enabled the
+      // engine runs that later batch itself, so sentinel 1 alone
+      // suffices; sentinel 2 stays as a belt-and-braces emission batch
+      // so the tail windows flush even if the no-data conf changes
+      // (an r17 draft with them off lost 15 tail windows at sf0.01
+      // until the second sentinel — the oracle gate caught it).
+      val maxTs = rows.iterator.map(_._2.getTime).max
+      Seq(4, 8).foreach { h =>
+        mem.addData((-1L, new Timestamp(maxTs + h * 3600 * 1000L),
+          "__flush", 0.0))
+        q.processAllAvailable()
+      }
+      replayedHours(r.session.table(r.sinkName))
+    }
+  }
 
-    val rows = readEvents(spark, sfDir)
+  /** ev10/ev12's feed rows: every event as (event_id, ts, event_type,
+    * value). */
+  private def eventValueRows(spark: SparkSession, sfDir: String)
+      : Array[(Long, Timestamp, String, Double)] =
+    readEvents(spark, sfDir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       .as[(Long, Timestamp, String, Double)](
         org.apache.spark.sql.Encoders.tuple(
@@ -399,79 +508,13 @@ object EventQueries {
           org.apache.spark.sql.Encoders.TIMESTAMP,
           org.apache.spark.sql.Encoders.STRING,
           org.apache.spark.sql.Encoders.scalaDouble)).collect()
-    val batches = boundedDisorderBatches(rows)
 
-    // No-data micro-batches stay ENABLED (the default) deliberately:
-    // they are what applies each batch's watermark advance mid-stream,
-    // so append-mode emission and the late-drop path run live between
-    // feed steps. An r17 draft disabled them for speed and the
-    // lateness-zeroing mutant SURVIVED — the watermark never advanced
-    // until the flush, every window finalized at the end, and the row
-    // was a stream-shaped replay with inert watermark semantics. With
-    // them on, lateness->0 drops the ~28 boundary-crossing sf0.01 rows
-    // and the driver gate catches it (kill recorded in BASELINE r17).
-    val ss = replaySession(spark)
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import ss.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-
-    val mem = MemoryStream[(Long, Timestamp, String, Double)]
-    val sinkName = s"ev10_sink_${ev10Runs.incrementAndGet()}"
-    // tmpfs checkpoint when available: the replay's fixed cost is the
-    // per-micro-batch offset/commit/state-delta writes (fsync'd small
-    // files), which a disk /tmp turns into ~1 s per batch. The dir is
-    // deleted in the finally — replay checkpoints are single-use.
-    val ckptBase = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isWritable(ckptBase))
-        java.nio.file.Files.createTempDirectory(ckptBase, "graft_ev10_")
-      else java.nio.file.Files.createTempDirectory("graft_ev10_")
-    val q = StreamOps.windowedCounts(
-        mem.toDF().toDF("event_id", "ts", "event_type", "value"),
-        "1 hour", "2 hours")
-      .writeStream.format("memory").queryName(sinkName)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").start()
-    val out =
-      try {
-        batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-        // TWO flush sentinels: the watermark a batch computes only takes
-        // effect in a LATER batch. With no-data micro-batches enabled the
-        // engine runs that later batch itself, so sentinel 1 alone
-        // suffices; sentinel 2 stays as a belt-and-braces emission batch
-        // so the tail windows flush even if the no-data conf changes
-        // (an r17 draft with them off lost 15 tail windows at sf0.01
-        // until the second sentinel — the driver gate caught it).
-        val maxTs = rows.iterator.map(_._2.getTime).max
-        Seq(4, 8).foreach { h =>
-          mem.addData((-1L, new Timestamp(maxTs + h * 3600 * 1000L),
-            "__flush", 0.0))
-          q.processAllAvailable()
-        }
-        ss.table(sinkName)
-          .where(col("event_type") =!= "__flush")
-          .select(date_format(col("window_start"), "yyyy-MM-dd HH")
-            .as("hour"), col("event_type"), col("n"), col("sum_value"))
-          .collect()
-      } finally {
-        q.stop()
-        ss.catalog.dropTempView(sinkName)
-        scrubCheckpoint(ckpt)
-      }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toIndexedSeq, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("hour",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sum_value",
-          org.apache.spark.sql.types.DoubleType))))
-  }
-
-  private val ev10Runs = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** ev10/ev12's sink read: the emitted windows without the flush
+    * sentinels', in ev01's result shape (all three share its oracle). */
+  private def replayedHours(sink: DataFrame): DataFrame =
+    sink.where(col("event_type") =!= "__flush")
+      .select(date_format(col("window_start"), "yyyy-MM-dd HH").as("hour"),
+        col("event_type"), col("n"), col("sum_value"))
 
   /** ev11 — the STATEFUL streaming path made driver-visible (the ev10
     * pattern applied to the custom state machine): replay the whole
@@ -502,8 +545,6 @@ object EventQueries {
     * and resume across every cohort seam, and the gap 30→29 mutant
     * still flags exactly this row at the new size (BASELINE.md r19). */
   def streamSessionsReplay(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.sql.Timestamp
-
     val rows = readEvents(spark, sfDir)
       .select(col("user_id"), col("ts"))
       .as[(Long, Timestamp)](org.apache.spark.sql.Encoders.tuple(
@@ -511,50 +552,23 @@ object EventQueries {
         org.apache.spark.sql.Encoders.TIMESTAMP)).collect()
       .sortBy(r => (r._2.getTime, r._1))
     val batches = sortedCohortBatches(rows)
-
-    val ss = replaySession(spark)
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import ss.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-
-    val mem = MemoryStream[(Long, Timestamp)]
-    val sinkName = s"ev11_sink_${ev10Runs.incrementAndGet()}"
-    val ckptBase = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isWritable(ckptBase))
-        java.nio.file.Files.createTempDirectory(ckptBase, "graft_ev11_")
-      else java.nio.file.Files.createTempDirectory("graft_ev11_")
-    val q = StreamOps.sessionize(mem.toDS(), gapMs = 30 * 60 * 1000L,
-        timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
-      .writeStream.format("memory").queryName(sinkName)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("update").start()
-    val out =
-      try {
-        batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-        ss.table(sinkName)
-          .groupBy(col("user_id"), col("session_start"))
-          .agg(max(col("n_events")).as("n_events"))
-          .withColumn("session_seq", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy(col("user_id")).orderBy(col("session_start")))
-            .cast("long"))
-          .select(col("user_id"), col("session_seq"), col("n_events"))
-          .collect()
-      } finally {
-        q.stop()
-        ss.catalog.dropTempView(sinkName)
-        scrubCheckpoint(ckpt)
-      }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toIndexedSeq, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("session_seq",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_events",
-          org.apache.spark.sql.types.LongType))))
+    replay(spark, "ev11") { r =>
+      import r.session.implicits._
+      val mem = MemoryStream[(Long, Timestamp)](r.session)
+      val q = r.startMemorySink(StreamOps.sessionize(mem.toDS(),
+          gapMs = 30 * 60 * 1000L,
+          timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout),
+        "update")
+      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      r.session.table(r.sinkName)
+        .groupBy(col("user_id"), col("session_start"))
+        .agg(max(col("n_events")).as("n_events"))
+        .withColumn("session_seq", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy(col("user_id")).orderBy(col("session_start")))
+          .cast("long"))
+        .select(col("user_id"), col("session_seq"), col("n_events"))
+    }
   }
 
   /** ev12 — exactly-once ingestion over an at-least-once feed, made
@@ -589,66 +603,23 @@ object EventQueries {
     * O(events within lateness) dedup state + O(windows in flight)
     * aggregation state; nothing in it collects. */
   def streamDedupReplay(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.sql.Timestamp
-
-    val rows = readEvents(spark, sfDir)
-      .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      .as[(Long, Timestamp, String, Double)](
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.TIMESTAMP,
-          org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.scalaDouble)).collect()
+    val rows = eventValueRows(spark, sfDir)
     val batches = duplicatedBatches(boundedDisorderBatches(rows))
-
-    val ss = replaySession(spark)
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import ss.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-
-    val mem = MemoryStream[(Long, Timestamp, String, Double)]
-    val sinkName = s"ev12_sink_${ev10Runs.incrementAndGet()}"
-    val ckptBase = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isWritable(ckptBase))
-        java.nio.file.Files.createTempDirectory(ckptBase, "graft_ev12_")
-      else java.nio.file.Files.createTempDirectory("graft_ev12_")
-    val q = StreamOps.dedupedWindowedCounts(
-        mem.toDF().toDF("event_id", "ts", "event_type", "value"),
-        "1 hour", "96 hours")
-      .writeStream.format("memory").queryName(sinkName)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").start()
-    val out =
-      try {
-        batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-        val maxTs = rows.iterator.map(_._2.getTime).max
-        Seq(120, 240).zipWithIndex.foreach { case (h, i) =>
-          mem.addData((-1L - i, new Timestamp(maxTs + h * 3600 * 1000L),
-            "__flush", 0.0))
-          q.processAllAvailable()
-        }
-        ss.table(sinkName)
-          .where(col("event_type") =!= "__flush")
-          .select(date_format(col("window_start"), "yyyy-MM-dd HH")
-            .as("hour"), col("event_type"), col("n"), col("sum_value"))
-          .collect()
-      } finally {
-        q.stop()
-        ss.catalog.dropTempView(sinkName)
-        scrubCheckpoint(ckpt)
+    replay(spark, "ev12") { r =>
+      import r.session.implicits._
+      val mem = MemoryStream[(Long, Timestamp, String, Double)](r.session)
+      val q = r.startMemorySink(StreamOps.dedupedWindowedCounts(
+          mem.toDF().toDF("event_id", "ts", "event_type", "value"),
+          "1 hour", "96 hours"), "append")
+      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+      val maxTs = rows.iterator.map(_._2.getTime).max
+      Seq(120, 240).zipWithIndex.foreach { case (h, i) =>
+        mem.addData((-1L - i, new Timestamp(maxTs + h * 3600 * 1000L),
+          "__flush", 0.0))
+        q.processAllAvailable()
       }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toIndexedSeq, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("hour",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sum_value",
-          org.apache.spark.sql.types.DoubleType))))
+      replayedHours(r.session.table(r.sinkName))
+    }
   }
 
   /** ev12's at-least-once feed: every `event_id % 7 == 0` row of batch
@@ -686,8 +657,6 @@ object EventQueries {
     * contract); the operator keeps O(rows within window + lateness)
     * state per side and never collects. */
   def streamClickJoinReplay(spark: SparkSession, sfDir: String): DataFrame = {
-    import java.sql.Timestamp
-
     val ev = readEvents(spark, sfDir)
     def side(t: String) = ev.where(col("event_type") === t)
       .select(col("event_id"), col("ts"), col("user_id"))
@@ -727,49 +696,25 @@ object EventQueries {
     val vB = buckets(viewRows); val cB = buckets(clickRows)
     val keys = (vB.keySet ++ cB.keySet).toSeq.sorted
 
-    val ss = replaySession(spark)
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import ss.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-
-    val vMem = MemoryStream[(Long, Timestamp, Long)]
-    val cMem = MemoryStream[(Long, Timestamp, Long)]
-    def sideDf(m: MemoryStream[(Long, Timestamp, Long)]) =
-      m.toDF().toDF("event_id", "ts", "user_id")
-    val sinkName = s"ev13_sink_${ev10Runs.incrementAndGet()}"
-    val ckptBase = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isWritable(ckptBase))
-        java.nio.file.Files.createTempDirectory(ckptBase, "graft_ev13_")
-      else java.nio.file.Files.createTempDirectory("graft_ev13_")
-    val q = StreamOps.clickThroughJoin(sideDf(vMem), sideDf(cMem),
-        within = "4 hours", lateness = "30 minutes")
-      .writeStream.format("memory").queryName(sinkName)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append").start()
-    val out =
-      try {
-        keys.foreach { k =>
-          vB.get(k).foreach(b => vMem.addData(b.toSeq))
-          cB.get(k).foreach(b => cMem.addData(b.toSeq))
-          q.processAllAvailable()
-        }
-        ss.table(sinkName)
-          .select(col("user_id"), col("view_id"), col("click_id"),
-            unix_micros(col("view_ts")).as("view_us"),
-            unix_micros(col("click_ts")).as("click_us"))
-          .collect()
-      } finally {
-        q.stop()
-        ss.catalog.dropTempView(sinkName)
-        scrubCheckpoint(ckpt)
+    replay(spark, "ev13") { r =>
+      import r.session.implicits._
+      val vMem = MemoryStream[(Long, Timestamp, Long)](r.session)
+      val cMem = MemoryStream[(Long, Timestamp, Long)](r.session)
+      def sideDf(m: MemoryStream[(Long, Timestamp, Long)]) =
+        m.toDF().toDF("event_id", "ts", "user_id")
+      val q = r.startMemorySink(StreamOps.clickThroughJoin(sideDf(vMem),
+          sideDf(cMem), within = "4 hours", lateness = "30 minutes"),
+        "append")
+      keys.foreach { k =>
+        vB.get(k).foreach(b => vMem.addData(b.toSeq))
+        cB.get(k).foreach(b => cMem.addData(b.toSeq))
+        q.processAllAvailable()
       }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toIndexedSeq, 1),
-      org.apache.spark.sql.types.StructType(
-        Seq("user_id", "view_id", "click_id", "view_us", "click_us").map(
-          org.apache.spark.sql.types.StructField(_,
-            org.apache.spark.sql.types.LongType))))
+      r.session.table(r.sinkName)
+        .select(col("user_id"), col("view_id"), col("click_id"),
+          unix_micros(col("view_ts")).as("view_us"),
+          unix_micros(col("click_ts")).as("click_us"))
+    }
   }
 
   private val streamClickJoinOracle =

@@ -2662,57 +2662,29 @@ object TextQueries {
     // batching cannot change them
     val feed = batchRows.groupBy(_._1 % 4).toSeq.sortBy(_._1).map(_._2.toSeq)
 
-    val ss = EventQueries.replaySession(spark)
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import ss.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-
-    val scratchBase = java.nio.file.Paths.get("/dev/shm")
-    def tmp(prefix: String) =
-      if (java.nio.file.Files.isWritable(scratchBase))
-        java.nio.file.Files.createTempDirectory(scratchBase, prefix)
-      else java.nio.file.Files.createTempDirectory(prefix)
-    val sinkDir = tmp("graft_t41_sink_")
-    val ckptDir = tmp("graft_t41_ckpt_")
-
-    val corpus = scan(ss, sfDir, "documents")
-      .select(col("doc_id"), col("text"))
-    val mem = MemoryStream[(Long, String)]
-    // caller-managed index: the persisted corpus projection registers in
-    // the session CacheManager and would silently substitute into OTHER
-    // queries' plans after this replay finishes — unpersist in the
-    // finally so the harness leaves the session as it found it
-    val idx = graft.dedup.Dedup.indexCorpus(corpus, "text", "doc_id",
-      persist = true)
-    val q = graft.streaming.StreamOps.startNearDupGateIndexed(
-      mem.toDF().toDF("doc_id", "text"), idx, "text", "doc_id",
-      threshold = 0.5, path = sinkDir.toString,
-      checkpoint = ckptDir.toString)
-    val out =
-      try {
-        feed.foreach { b => mem.addData(b); q.processAllAvailable() }
-        ss.read.parquet(sinkDir.toString)
-          .select(col("id"), col("text"), col("match_id"),
-            col("match_jaccard"), col("passed"))
-          .collect()
-      } finally {
-        q.stop()
-        idx.unpersist()
-        Seq(sinkDir, ckptDir).foreach(EventQueries.scrubCheckpoint)
-      }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toIndexedSeq, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("match_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("match_jaccard",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("passed",
-          org.apache.spark.sql.types.IntegerType))))
+    EventQueries.replay(spark, "t41") { r =>
+      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+      import r.session.implicits._
+      val sinkDir = r.scratchDir()
+      val ckptDir = r.scratchDir()
+      val corpus = scan(r.session, sfDir, "documents")
+        .select(col("doc_id"), col("text"))
+      val mem = MemoryStream[(Long, String)](r.session)
+      // caller-managed index: the persisted corpus projection registers in
+      // the session CacheManager and would silently substitute into OTHER
+      // queries' plans after this replay finishes — unpersist at teardown
+      // so the harness leaves the session as it found it
+      val idx = graft.dedup.Dedup.indexCorpus(corpus, "text", "doc_id",
+        persist = true)
+      r.onCleanup(idx.unpersist())
+      val q = graft.streaming.StreamOps.startNearDupGateIndexed(
+        mem.toDF().toDF("doc_id", "text"), idx, "text", "doc_id",
+        threshold = 0.5, path = sinkDir, checkpoint = ckptDir)
+      feed.foreach { b => mem.addData(b); q.processAllAvailable() }
+      r.session.read.parquet(sinkDir)
+        .select(col("id"), col("text"), col("match_id"),
+          col("match_jaccard"), col("passed"))
+    }
   }
 
   // -----------------------------------------------------------------

@@ -179,18 +179,6 @@ object Similarity {
     Array.fill(planes, dim)(rnd.nextDouble() * 2 - 1)
   }
 
-  /** Sign-bit bucket code of a vector under the given hyperplanes — the
-    * classic random-projection LSH for cosine similarity.
-    * (Measured note: expanding the literal-plane dot into a flat 64-term
-    * multiply-add chain per plane looks codegen-friendly but DOUBLES the
-    * query time — 30 planes × 64 element_at terms per row overwhelms the
-    * generated method; the array-lambda fold below is the faster form.) */
-  def bucketCode(v: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val planeLit = array(p.map(lit).toIndexedSeq: _*)
-      when(dot(v, planeLit) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** LSH-bucketed ANN: join query and corpus on bucket code (per table),
     * exact cosine within buckets, global top-k per query across tables.
     * With t tables of p planes, recall rises as 1-(1-(1-θ/π)^p)^t. */

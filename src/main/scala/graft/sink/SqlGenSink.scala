@@ -1,5 +1,7 @@
 package graft.sink
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 
 /** Stage-B equivalent: code-generate batched multi-row INSERT text
@@ -53,12 +55,38 @@ object SqlGenSink {
     }
   }
 
-  /** Driver-side convenience for tests / small data: the full script text
-    * with the reference's `#data timestamp:` banner
-    * (localDumpToSql, HiveToMysql.java:238-248). NOT for large data. */
-  def script(df: DataFrame, table: String, batchSize: Int = 100,
-             timestampMillis: Long = 0L): String = {
-    val stmts = insertStatements(df.coalesce(1), table, batchSize).collect()
-    (s"#data timestamp: $timestampMillis" +: stmts.toSeq).mkString("\n\n")
+  /** The stage-B artifact: the reference's dump.sql
+    * (localDumpToSql, HiveToMysql.java:238-248) — a `#data timestamp:`
+    * banner, then the statements of [[insertStatements]], blank-line
+    * separated, written to `path`.
+    *
+    * Statements stream to the file partition by partition
+    * (toLocalIterator holds ONE partition's statements at a time): the
+    * artifact is inherently a single local file, but building it must not
+    * buffer the whole table in driver memory or serialize the generation
+    * into one task. They go to a sibling `<path>.tmp` that moves into
+    * place only after the iterator is exhausted: streaming into `path`
+    * directly would truncate the previous good dump BEFORE the job runs,
+    * and a mid-job failure would leave a partial file whose statements are
+    * individually well-formed — invisible to a consumer that ignores the
+    * exit code. ATOMIC_MOVE keeps the old artifact readable until the new
+    * one is complete; on failure the temp file is deleted. */
+  def writeScript(df: DataFrame, table: String, batchSize: Int,
+                  path: Path): Unit = {
+    val tmp = Paths.get(path.toString + ".tmp")
+    val out = Files.newBufferedWriter(tmp)
+    var ok = false
+    try {
+      out.write(s"#data timestamp: ${System.currentTimeMillis()}")
+      val it = insertStatements(df, table, batchSize).toLocalIterator()
+      while (it.hasNext) { out.write("\n\n"); out.write(it.next()) }
+      ok = true
+    } finally {
+      out.close()
+      if (ok)
+        Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      else Files.deleteIfExists(tmp)
+    }
   }
 }

@@ -1,9 +1,10 @@
 package graft.tools
 
-/** Conf-registered listener (see [[ReplayProbe]]): the replay harnesses
-  * run their streams on CHILD sessions (spark.newSession()), each with
-  * its own StreamingQueryManager, so a listener added to the parent via
-  * spark.streams never fires — the
+/** Conf-registered listener (see [[ReplayProbe]]): the streaming replays
+  * run inside the one replay harness, `graft.queries.EventQueries.replay`,
+  * which builds each replay's stream on a CHILD session
+  * (spark.newSession()) with its own StreamingQueryManager, so a listener
+  * added to the parent via spark.streams never fires — the
   * spark.sql.streaming.streamingQueryListeners conf registers on every
   * session instead, collecting into a JVM-static buffer. */
 final class ReplayProbeRecorder

@@ -32,11 +32,21 @@ class CoreOpsSpec extends SparkSpec {
     assert(out.map(_.getInt(2)).toSet == Set(1, 2))
   }
 
+  // The §2 row 15 empty-data check lives only in Pipeline.run now (the
+  // CoreOps.checkNonEmpty copy is gone); this case keeps its old name and
+  // checks both policies on one empty day through that single check.
   test("checkNonEmpty raises 9998 under Fail, passes data through under Ok") {
-    val empty = Seq.empty[Int].toDF("a")
-    assert(intercept[GraftError.NoData](
-      CoreOps.checkNonEmpty(empty, EmptyDataPolicy.Fail)).code == 9998)
-    assert(CoreOps.checkNonEmpty(empty, EmptyDataPolicy.Ok).count() == 0)
+    val m = FieldMapping.parseString("id=l_orderkey")
+    def runEmpty(conf: DumpConf): Long =
+      graft.pipeline.Pipeline.run(spark, sf, "lineitem", "l_shipdate",
+        conf, m)(_ => fail("sink called on an empty day"))
+    val failConf = DumpConf(Map("ds" -> "19000101"))
+    assert(failConf.emptyDataPolicy == EmptyDataPolicy.Fail)
+    assert(intercept[GraftError.NoData](runEmpty(failConf)).code == 9998)
+    val okConf = DumpConf(Map("ds" -> "19000101",
+      "error_if_none_data" -> "false"))
+    assert(okConf.emptyDataPolicy == EmptyDataPolicy.Ok)
+    assert(runEmpty(okConf) == 0)
   }
 
   test("withDs + partitionFilter reproduce the reference ds= semantics") {
@@ -114,6 +124,17 @@ class PipelineSpec extends SparkSpec {
         conf, m)(_ => ())
     }
     assert(e.code == 9998)
+  }
+
+  test("empty partition + error_if_none_data=false returns 0 and never " +
+    "calls the sink") {
+    val conf = DumpConf(Map("ds" -> "19000101",
+      "error_if_none_data" -> "false"))
+    val m = FieldMapping.parseString("id=l_orderkey")
+    var sunk = false
+    val n = graft.pipeline.Pipeline.run(spark, sf, "lineitem", "l_shipdate",
+      conf, m)(_ => sunk = true)
+    assert(n == 0 && !sunk)
   }
 
   test("skip_sql_to_target skips the sink but still counts") {

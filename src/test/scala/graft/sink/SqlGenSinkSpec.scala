@@ -1,5 +1,11 @@
 package graft.sink
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.functions.{col, udf}
+
 import graft.SparkSpec
 
 /** Stage-B output shape (FIXTURES A.3 / HiveToMysql.java:338-377) and the
@@ -61,9 +67,34 @@ class SqlGenSinkSpec extends SparkSpec {
   test("script carries the #data timestamp banner") {
     import spark.implicits._
     val df = Seq((1, "a"), (2, null)).toDF("id", "v")
-    val s = script(df, "db.t", timestampMillis = 123L)
-    assert(s.startsWith("#data timestamp: 123"))
+    val path = Paths.get(trackedTempDir("sqlgen_banner_"), "dump.sql")
+    writeScript(df, "db.t", 100, path)
+    val s = Files.readString(path)
+    assert(s.matches("(?s)#data timestamp: \\d+\n\ninsert into db\\.t .*"), s)
     assert(s.contains("(1,'a')") || s.contains("('1','a')"))
     assert(s.contains("NULL"))
+  }
+
+  test("a job that fails mid-write leaves the previous dump byte-identical " +
+    "and no .tmp file") {
+    val dir = Paths.get(trackedTempDir("sqlgen_atomic_"))
+    val path = dir.resolve("dump.sql")
+    val previous = "#data timestamp: 1\n\ninsert into db.t (id) values ('7');"
+      .getBytes("UTF-8")
+    Files.write(path, previous)
+    // the throwing row sits in the last of 4 partitions, so earlier
+    // partitions' statements are already written when the job fails
+    val boom = udf { (id: Long) =>
+      if (id == 900) throw new IllegalStateException("boom") else id
+    }
+    val df = spark.range(0, 1000, 1, 4).select(boom(col("id")).as("id"))
+    val e = intercept[Exception](writeScript(df, "db.t", 100, path))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")), e)
+    assert(java.util.Arrays.equals(Files.readAllBytes(path), previous))
+    val left = Files.list(dir)
+    try assert(left.iterator().asScala.map(_.getFileName.toString).toSeq ==
+      Seq("dump.sql"))
+    finally left.close()
   }
 }
