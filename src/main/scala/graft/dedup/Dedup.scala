@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.CoreOps
+
 /** Deduplication operators for a 100 TB training-data pipeline. The scale
   * rules baked in here:
   *
@@ -88,24 +90,7 @@ object Dedup {
   def minhashCandidates(df: DataFrame, textCol: String, idCol: String,
                         k: Int = 5, numHashes: Int = 32,
                         bands: Int = 8): DataFrame = {
-    // bands > numHashes would make every band an empty slice -> identical
-    // bucket hash for all docs -> the equi-join degenerates to all-pairs;
-    // non-divisible values would silently ignore trailing signature rows
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    val r = numHashes / bands
-    // default shape goes through the native fused-loop expression (pure
-    // narrow map, no shuffle); non-default params use the aggregation form
-    val base =
-      if (k == 5 && numHashes == 32) {
-        graft.functions.MinHashSig.register(df.sparkSession)
-        df.select(col(idCol).as("id"),
-          expr(s"minhash_sig(lower(trim($textCol)))").as("sig"))
-      } else minhashSignatures(df, textCol, idCol, k, numHashes)
-    val sigs = base
-      .withColumn("bh", explode(bandHashes(col("sig"), bands, r)))
-      .select(col("id"), col("bh.band").as("band"),
-        col("bh.bucket").as("bucket"))
+    val sigs = bandsOf(df, textCol, idCol, "id", k, numHashes, bands)
     val a = sigs.as("a"); val b = sigs.as("b")
     a.join(b, col("a.band") === col("b.band") &&
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
@@ -155,22 +140,67 @@ object Dedup {
   def nearDupPairs(df: DataFrame, textCol: String, idCol: String,
                    threshold: Double, k: Int = 5, numHashes: Int = 32,
                    bands: Int = 8): DataFrame =
-    collapseExpand(df, textCol, idCol,
+    collapseExpand(df, textCol, idCol, Identity.NormalizedText,
       reps => nearDupPairsFlat(reps, "__text", "id",
         threshold, k, numHashes, bands),
       flatPairs = () =>
         nearDupPairsFlat(df, textCol, idCol, threshold, k, numHashes, bands),
-      intraCols = Seq(lit(1.0).as("jaccard")),
-      intraKeep = lit(1.0) >= threshold)
+      intra = (pairs, _) => pairs.select(col("id_a"), col("id_b"),
+        lit(1.0).as("jaccard")).where(lit(1.0) >= threshold))
 
-  /** Rows per distinct normalized text — the probe behind the adaptive
+  /** What counts as "the same document" for an exact collapse — the one
+    * decision every collapsing operator shares. `of` is the identity
+    * value the routing probe hashes, `key` the FULL sha256 digest the
+    * collapse groups on (why the full digest: [[collapseExpand]]).
+    *
+    *   - [[Identity.NormalizedText]], `lower(trim(text))`: the
+    *     Jaccard/SimHash family (s03, s04, t25, the t27/t41 gate), whose
+    *     payloads — gram Jaccard, Hamming, window counts — are functions
+    *     of the NORMALIZED text, so any two texts equal under it are
+    *     fully interchangeable. The `trim` strips ASCII SPACES ONLY —
+    *     deliberately: it must normalize EXACTLY like rawShingles'
+    *     `lower(trim(text))`, or two texts in one group could carry
+    *     different shingle sets and the collapsed route (one rep's grams
+    *     standing for all members) would diverge from the flat route.
+    *     Texts differing by a trailing tab / newline are therefore
+    *     distinct BY DEFINITION here — a missed-collapse corner on such
+    *     corpora, never a correctness one (the probe hashes the same
+    *     value, so routing and grouping stay consistent).
+    *   - [[Identity.RawText]], byte-identity: payloads computed on the
+    *     text as-is (t29's Levenshtein, Jaro-Winkler). Under a normalizing
+    *     key two case-different members would collapse into one group yet
+    *     carry nonzero flat-route distances, and the rep's payload would
+    *     misstate theirs. Their signatures are still functions of the
+    *     normalized text, so candidate equivalence holds a fortiori.
+    *   - [[Identity.Vector]], byte-identical vectors (s15): the probe
+    *     hashes the array's elements directly; the key digests `to_json`,
+    *     NOT `concat_ws` — concat_ws silently SKIPS null elements, so
+    *     [1, null, 5] and [1, 5] would share a key and collapse two
+    *     structurally different vectors into one group (fabricating a
+    *     sim-1.0 pair the flat route would reject), while JSON renders
+    *     nulls and brackets explicitly and distinct float bit patterns
+    *     distinctly. A fixed 32-byte key, where joining on the raw
+    *     256-byte vector would 8× the expansion-join shuffle at 100 TB. */
+  sealed abstract class Identity(norm: Column => Column,
+                                 digestOf: Column => Column) {
+    def of(v: Column): Column = norm(v)
+    def key(v: Column): Column = sha2(digestOf(norm(v)), 256)
+  }
+  object Identity {
+    case object NormalizedText extends Identity(t => lower(trim(t)), t => t)
+    case object RawText extends Identity(t => t, t => t)
+    case object Vector extends Identity(v => v, v => to_json(v))
+  }
+
+  /** Rows per distinct identity value — the probe behind the adaptive
     * collapse routing. count / approx_count_distinct over a cheap 64-bit
-    * text hash (xxhash64, NOT the sha256 collapse key: the probe needs a
-    * ratio, not collision safety; null texts are excluded on both sides,
-    * matching the collapse, which never groups them). Scale shape: one
-    * narrow scan of the text column, HLL sketches partial-combine
-    * map-side, the shuffle carries one fixed-size sketch per partition,
-    * the driver reads one row — O(1) driver memory at any corpus size.
+    * hash of [[Identity.of]] (xxhash64, NOT the sha256 collapse key: the
+    * probe needs a ratio, not collision safety; null values are excluded
+    * on both sides, matching the collapse, which never groups them).
+    * Scale shape: one narrow scan of the value column, HLL sketches
+    * partial-combine map-side, the shuffle carries one fixed-size sketch
+    * per partition, the driver reads one row — O(1) driver memory at any
+    * corpus size.
     *
     * Re-execution safety (the discipline pinned for the clusterAssign
     * convergence Observation): this is an EAGER job completed before the
@@ -182,20 +212,13 @@ object Dedup {
     * output-identical (DedupSpec pins collapsed == flat on both corpus
     * shapes), so even a perturbed probe could not change query results —
     * only which shuffle pays for them. */
-  private[dedup] def duplicationRatio(df: DataFrame, textCol: String,
-                                      rawKey: Boolean = false): Double = {
-    // xxhash64(null) returns the SEED, not null (the simhashesAgg trap) —
-    // keep nullness explicit or null texts pollute the distinct count.
-    // The probe normalization mirrors the collapse key exactly
-    // (`lower(trim(...))` by default, the raw text under `rawKey` — see
-    // collapseExpand), so the probe counts exactly the groups the
-    // collapse would form.
-    val h = when(col(textCol).isNull, lit(null))
-      .otherwise(xxhash64(collapseNorm(col(textCol), rawKey)))
-    val r = df.agg(
-      count(col(textCol)).as("n"),
-      approx_count_distinct(h).as("d"))
-      .head()
+  private[graft] def duplicationRatio(df: DataFrame, valueCol: String,
+      identity: Identity = Identity.NormalizedText): Double = {
+    // xxhash64(null) returns the SEED, not null — keep nullness explicit
+    // or null values pollute the distinct count
+    val v = col(valueCol)
+    val h = when(v.isNull, lit(null)).otherwise(xxhash64(identity.of(v)))
+    val r = df.agg(count(v).as("n"), approx_count_distinct(h).as("d")).head()
     val n = r.getLong(0)
     val d = r.getLong(1)
     if (d <= 0L) 1.0 else n.toDouble / d.toDouble
@@ -211,55 +234,58 @@ object Dedup {
     * axes measure 10–100); corpora near the threshold are cheap on
     * EITHER route, so a borderline misroute costs noise, never
     * correctness. */
-  private[graft] val CollapseDuplicationThreshold = 1.25
+  private val CollapseDuplicationThreshold = 1.25
 
-  private[dedup] def shouldCollapse(df: DataFrame, textCol: String,
-                                    rawKey: Boolean = false): Boolean =
-    duplicationRatio(df, textCol, rawKey) >= CollapseDuplicationThreshold
+  /** The routing decision every collapsing operator takes ([[collapseExpand]]
+    * and its callers, the t27/t41 gate's corpus index, t25's span-window
+    * counts): true when the corpus is duplicate-heavy enough that
+    * per-distinct-value computation + member expansion beats per-row
+    * computation. */
+  def duplicationHeavy(df: DataFrame, valueCol: String,
+                       identity: Identity = Identity.NormalizedText): Boolean =
+    duplicationRatio(df, valueCol, identity) >= CollapseDuplicationThreshold
 
-  /** The normalization under the collapse key and its routing probe:
-    * `lower(trim(text))` for the Jaccard/SimHash family (their payloads —
-    * gram Jaccard, Hamming — are functions of the NORMALIZED text, so any
-    * two texts equal under it are fully interchangeable), or the raw text
-    * (`rawKey = true`) for payloads computed on the text as-is
-    * (Levenshtein, Jaro-Winkler): under a normalizing key two
-    * case-different members would collapse into one group yet carry
-    * nonzero flat-route distances, and the rep's payload would misstate
-    * theirs — byte-identity is the only equality that makes members
-    * interchangeable for a case-sensitive verifier. */
-  private def collapseNorm(text: Column, rawKey: Boolean): Column =
-    if (rawKey) text else lower(trim(text))
+  /** The keyed member slice of a collapse: (id, `valueAs`, ek). */
+  private[graft] def keyedBy(df: DataFrame, valueCol: String, idCol: String,
+                             identity: Identity,
+                             valueAs: String = "__text"): DataFrame =
+    df.select(col(idCol).as("id"), col(valueCol).as(valueAs))
+      .withColumn("ek", identity.key(col(valueAs)))
 
-  /** Public face of the adaptive-collapse routing probe, for operators
-    * OUTSIDE this package that apply the same exact-collapse trick
-    * (t25's span-window counts): true when the corpus is duplicate-heavy
-    * enough that per-distinct-text computation + member expansion beats
-    * per-row computation. Same probe, same threshold, same re-execution
-    * safety argument as [[duplicationRatio]]. */
-  def duplicationHeavy(df: DataFrame, textCol: String): Boolean =
-    shouldCollapse(df, textCol)
+  /** One representative per collapse group, (ek, id, `valueAs`, extra…):
+    * the MIN id and its value — stable under shuffle, where an arbitrary
+    * pick is not. `extra` aggregates ride the same groupBy. */
+  private[graft] def repsOf(keyed: DataFrame, valueAs: String = "__text",
+                            extra: Seq[Column] = Nil): DataFrame =
+    keyed.groupBy(col("ek"))
+      .agg(min(col("id")).as("id"),
+        min_by(col(valueAs), col("id")).as(valueAs) +: extra: _*)
 
-  /** The exact-collapse harness shared by the near-dup operators
-    * ([[nearDupPairs]], [[simhashCandidates]]): probe duplication first
-    * ([[shouldCollapse]]) and route a fully-distinct corpus straight to
-    * `flatPairs` — the collapse is pure overhead there; otherwise group
-    * identical normalized texts (one map-side-combined shuffle on the
-    * FULL sha256 exact key — the only full-text shuffle; the full digest
-    * because a collision here would fabricate jaccard=1.0/hamming=0
-    * pairs between distinct texts, and at 100 TB doc counts the 64-bit
-    * prefix's birthday bound is within reach), run `repPairs` over ONE
-    * representative (min id) per distinct text, and expand verified
-    * rep-level pairs back to the full id space with constant-width
-    * joins. Signatures (MinHash bands, SimHash fingerprints) and gram
-    * sets are functions of the normalized text alone, so:
+  /** The exact-collapse harness shared by the pair operators
+    * ([[nearDupPairs]], [[simhashCandidates]], s15's
+    * `Similarity.lshNearDupPairs`, t29's fuzzy verify): probe duplication
+    * first ([[duplicationHeavy]]) and route a fully-distinct corpus
+    * straight to `flatPairs` — the collapse is pure overhead there;
+    * otherwise group identical values under `identity` (one
+    * map-side-combined shuffle on the FULL sha256 key — the only
+    * full-value shuffle; the full digest because a collision here would
+    * fabricate jaccard=1.0/hamming=0 pairs between distinct texts, and at
+    * 100 TB doc counts the 64-bit prefix's birthday bound is within
+    * reach), run `repPairs` over ONE representative (min id) per distinct
+    * value, and expand verified rep-level pairs back to the full id space
+    * with constant-width joins. Signatures (MinHash bands, SimHash
+    * fingerprints, hyperplane codes) and gram sets are functions of the
+    * identity value alone, so:
     *
-    *   - an intra-group pair (identical texts) is ALWAYS a candidate in
-    *     the flat form and carries the degenerate payload (`intraCols`:
-    *     jaccard exactly 1.0 / hamming 0), guarded by `intraKeep` for
-    *     exactness against pathological thresholds;
+    *   - an intra-group pair (identical values) is ALWAYS a candidate in
+    *     the flat form; `intra` maps the intra pairs (id_a, id_b, ek) and
+    *     the representative table (ek, id, `valueAs`) to its payload —
+    *     a constant (jaccard exactly 1.0 / hamming 0 / dist 0, jw 1.0)
+    *     guarded by the caller's threshold for exactness against
+    *     pathological thresholds, or s15's thresholded rep self-cosine;
     *   - a cross-group member pair is a candidate iff its representative
     *     pair is, and shares its payload verbatim;
-    *   - null-text docs have a null exact key: the null-rejecting
+    *   - null-value docs have a null exact key: the null-rejecting
     *     equi-joins drop them here. The flat paths drop them LATER, by a
     *     different mechanism — in the minhash form a null text's bucket
     *     hash degenerates to the xxhash64 seed (hashing a null slice
@@ -269,14 +295,15 @@ object Dedup {
     *     (no null pairs), so don't "simplify" the flat verify filter on
     *     the assumption nulls never reach it.
     *
-    * Output is therefore IDENTICAL to the flat formulation (DedupSpec
-    * pins both operators on a planted duplicate-heavy corpus) while the
-    * expensive pair machinery — the verify join's gram arrays, the
-    * chunk join's in-group quadratic — touches DISTINCT texts only.
-    * Expansion rows are fixed-width id/payload columns: output volume is
-    * the query's result, not an intermediate.
+    * Output is therefore IDENTICAL to the flat formulation (DedupSpec,
+    * VectorCollapseSpec and FuzzyCollapseSpec pin it on planted
+    * duplicate-heavy corpora) while the expensive pair machinery — the
+    * verify join's gram arrays, the chunk join's in-group quadratic, the
+    * edit-distance DP — touches DISTINCT values only. Expansion rows are
+    * fixed-width id/payload columns: output volume is the query's
+    * result, not an intermediate.
     *
-    * The collapse costs exactly ONE text shuffle (the min_by groupBy) —
+    * The collapse costs exactly ONE value shuffle (the min_by groupBy) —
     * and that is the scale-correct choice, deliberately: the tempting
     * alternative (shuffle only (id, ek) to pick rep ids, then semi-join
     * the text back) avoids the text shuffle only while the rep-id set
@@ -285,39 +312,24 @@ object Dedup {
     * moves anyway — after a second full scan. One groupBy that
     * partial-combines duplicates map-side is strictly better on every
     * corpus shape. */
-  private[graft] def collapseExpand(df: DataFrame, textCol: String,
-                             idCol: String,
-                             repPairs: DataFrame => DataFrame,
-                             flatPairs: () => DataFrame,
-                             intraCols: Seq[Column],
-                             intraKeep: Column,
-                             rawKey: Boolean = false): DataFrame = {
-    if (!shouldCollapse(df, textCol, rawKey)) return flatPairs()
-    // The collapse key's `trim` strips ASCII SPACES ONLY — deliberately:
-    // it must normalize EXACTLY like rawShingles' `lower(trim(text))`, or
-    // two texts in one group could carry different shingle sets and the
-    // collapsed route (one rep's grams standing for all members) would
-    // diverge from the flat route. Texts differing by a trailing tab /
-    // newline are therefore distinct BY DEFINITION here — a missed-collapse
-    // corner on such corpora, never a correctness one (duplicationRatio
-    // probes with the same key, so routing and grouping stay consistent).
-    // `rawKey` callers (case-sensitive payloads — see collapseNorm) group
-    // on byte-identity instead; their signatures are still functions of
-    // the raw text, so candidate equivalence holds a fortiori.
-    val keyed = df.select(col(idCol).as("id"), col(textCol).as("__text"))
-      .withColumn("ek", sha2(collapseNorm(col("__text"), rawKey), 256))
+  private[graft] def collapseExpand(df: DataFrame, valueCol: String,
+                                    idCol: String, identity: Identity,
+                                    repPairs: DataFrame => DataFrame,
+                                    flatPairs: () => DataFrame,
+                                    intra: (DataFrame, DataFrame) => DataFrame,
+                                    valueAs: String = "__text"): DataFrame = {
+    if (!duplicationHeavy(df, valueCol, identity)) return flatPairs()
+    val keyed = keyedBy(df, valueCol, idCol, identity, valueAs)
     val members = keyed.select(col("id"), col("ek"))
-    val reps = keyed.groupBy(col("ek"))
-      .agg(min(col("id")).as("id"), min_by(col("__text"), col("id")).as("__text"))
-    val rp = repPairs(reps.select(col("id"), col("__text")))
+    val reps = repsOf(keyed, valueAs)
+    val rp = repPairs(reps.select(col("id"), col(valueAs)))
     val payload = rp.columns.filterNot(c => c == "id_a" || c == "id_b")
       .map(col).toSeq
-    val intra = members.as("m1")
+    val intraPairs = members.as("m1")
       .join(members.as("m2"),
         col("m1.ek") === col("m2.ek") && col("m1.id") < col("m2.id"))
-      .select(Seq(col("m1.id").as("id_a"), col("m2.id").as("id_b")) ++
-        intraCols: _*)
-      .where(intraKeep)
+      .select(col("m1.id").as("id_a"), col("m2.id").as("id_b"),
+        col("m1.ek").as("ek"))
     val groupOf = reps.select(col("id").as("rid"), col("ek"))
     val cross = rp
       .join(groupOf.as("ka"), col("id_a") === col("ka.rid"))
@@ -326,32 +338,7 @@ object Dedup {
       .join(members.as("mb"), col("mb.ek") === col("kb.ek"))
       .select(Seq(least(col("ma.id"), col("mb.id")).as("id_a"),
         greatest(col("ma.id"), col("mb.id")).as("id_b")) ++ payload: _*)
-    intra.unionAll(cross)
-  }
-
-  /** Spread a narrow candidate/pair table across the session's cores
-    * before a CPU-HEAVY verify projection (edit-distance DP, gram-array
-    * merge intersect). AQE right-sizes post-shuffle partitions by BYTES
-    * (advisoryPartitionSizeInBytes) — correct for I/O-bound stages, but a
-    * candidate table is a few MB of fixed-width ids while the work per
-    * row downstream is thousands of DP cells, so AQE coalesces the whole
-    * verify onto one or two tasks and the stage runs single-core
-    * (measured on t29 at sf0.1: verify 8.7 s coalesced vs 2.0 s spread).
-    * A KEYLESS round-robin repartition with an explicit count is the one
-    * form that survives: a keyed repartition on the pair key matches the
-    * upstream distinct's partitioning, so EnsureRequirements elides it
-    * and AQE coalesces the remaining ENSURE_REQUIREMENTS exchange right
-    * back to one task (observed on the first r21 attempt) — while a
-    * user-specified numPartitions round-robin is a hard constraint the
-    * planner neither removes nor coalesces. The count scales with the
-    * session (defaultParallelism / configured shuffle partitions), never
-    * a local constant; the extra exchange carries only the fixed-width
-    * id columns. */
-  private[graft] def cpuSpread(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val parts = math.max(sc.defaultParallelism,
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    df.repartition(parts)
+    intra(intraPairs, reps).unionAll(cross)
   }
 
   /** The flat (no exact-collapse) near-dup formulation: map (signatures)
@@ -367,8 +354,7 @@ object Dedup {
                        threshold: Double, k: Int = 5, numHashes: Int = 32,
                        bands: Int = 8,
                        spreadCands: Boolean = true): DataFrame = {
-    graft.functions.SortedIntersectSize.register(df.sparkSession)
-    graft.functions.GramHashes.register(df.sparkSession)
+    registerGateFns(df.sparkSession)
     val rawCands = minhashCandidates(df, textCol, idCol, k, numHashes, bands)
     // `spreadCands = false` for callers whose candidate set is small and
     // whose OUTPUT feeds an iterative consumer (t09's clusterAssign): the
@@ -378,37 +364,21 @@ object Dedup {
     // 3.51 s spread (the r21 driver run agreed: 3.69 -> 4.20 s when the
     // spread was added). Dense-candidate callers (s03, t48, t29's twin)
     // keep the spread: s03 min 0.99 s spread vs 1.70 s flat.
-    val cands = if (spreadCands) cpuSpread(rawCands) else rawCands
-    // per-doc sorted distinct hashed grams: the merge-scan intersect needs
-    // sorted inputs, and |union| = na + nb - |intersect| (no union pass).
-    // Default k goes through the native zero-alloc GramHashes expression
-    // (one byte pass, primitive sort+dedupe); other k use the builtin
-    // string-shingle formulation.
-    val gramsCol =
-      if (k == 5) expr(s"gram_hashes(lower(trim($textCol)))")
-      else sort_array(array_distinct(
-        transform(rawShingles(col(textCol), k), s => xxhash64(s))))
-    val grams = df.select(col(idCol).as("id"), gramsCol.as("grams"))
-      .withColumn("n", size(col("grams")))
+    val cands = if (spreadCands) CoreOps.cpuSpread(rawCands) else rawCands
+    val grams = gramsOf(df, textCol, idCol, "id", "grams", "n", k)
     // identical subtree on both sides of the two joins -> Spark reuses the
     // exchange instead of recomputing shingle hashes twice
-    cands
+    verifyJaccard(cands
       .join(grams.as("ga"), col("id_a") === col("ga.id"))
-      .join(grams.as("gb"), col("id_b") === col("gb.id"))
-      .withColumn("inter",
-        expr("intersect_size_sorted(ga.grams, gb.grams)"))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("ga.n") + col("gb.n") - col("inter")).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+      .join(grams.as("gb"), col("id_b") === col("gb.id")),
+      "ga.grams", "gb.grams", "ga.n", "gb.n", threshold, "id_a", "id_b")
   }
 
   /** Incremental near-dup: every BATCH doc's near-dup matches against an
     * existing CORPUS — the nightly near-dup gate, [[exactDedup]]-based
     * t17's approximate sibling. Runs [[nearDupAgainstFlat]] behind the
     * same adaptive exact-collapse routing as [[nearDupPairs]]: the
-    * corpus-side duplication probe ([[shouldCollapse]]) sends
+    * corpus-side duplication probe ([[duplicationHeavy]]) sends
     * distinct-ish corpora straight to the flat form, and duplicate-heavy
     * ones through an ASYMMETRIC collapse — BOTH slices group identical
     * normalized texts (on a hot corpus the batch mirrors its duplication:
@@ -439,18 +409,6 @@ object Dedup {
     nearDupAgainstIndexed(
       indexCorpus(corpus, textCol, idCol, persist = false, k, numHashes, bands),
       batch, textCol, idCol, threshold, k, numHashes, bands)
-
-  /** The space-only-trim exact key slice: it must match rawShingles'
-    * normalization exactly (see the note there). */
-  private def gateKeyed(df: DataFrame, textCol: String,
-                        idCol: String): DataFrame =
-    df.select(col(idCol).as("id"), col(textCol).as("__text"))
-      .withColumn("ek", sha2(lower(trim(col("__text"))), 256))
-
-  private def gateRepsOf(kd: DataFrame): DataFrame =
-    kd.groupBy(col("ek"))
-      .agg(min(col("id")).as("id"),
-        min_by(col("__text"), col("id")).as("__text"))
 
   /** The CORPUS-SIDE INVARIANTS of the incremental gate, computed once:
     * the collapse-routing probe verdict plus the corpus's DERIVED gate
@@ -491,7 +449,7 @@ object Dedup {
       if (persist)
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else df
-    if (!shouldCollapse(corpus, textCol)) {
+    if (!duplicationHeavy(corpus, textCol)) {
       val cb = maybe(bandsOf(corpus, textCol, idCol, "corpus_id",
         k, numHashes, bands))
       val cg = maybe(gramsOf(corpus, textCol, idCol, "corpus_id",
@@ -499,8 +457,8 @@ object Dedup {
       GateCorpusIndex(collapsed = false, k, numHashes, bands, cb, cg,
         null, null, if (persist) Seq(cb, cg) else Seq.empty)
     } else {
-      val kc = maybe(gateKeyed(corpus, textCol, idCol))
-      val reps = gateRepsOf(kc)
+      val kc = maybe(keyedBy(corpus, textCol, idCol, Identity.NormalizedText))
+      val reps = repsOf(kc)
       val cb = maybe(bandsOf(reps, "__text", "id", "corpus_id",
         k, numHashes, bands))
       val cg = maybe(gramsOf(reps, "__text", "id", "corpus_id",
@@ -528,14 +486,14 @@ object Dedup {
     if (!idx.collapsed)
       return nearDupAgainstPrebuilt(idx.cBands, idx.cGrams, batch,
         textCol, idCol, threshold, k, numHashes, bands)
-    val kb = gateKeyed(batch, textCol, idCol)
+    val kb = keyedBy(batch, textCol, idCol, Identity.NormalizedText)
     val rp = nearDupAgainstPrebuilt(idx.cBands, idx.cGrams,
-      gateRepsOf(kb).select(col("id"), col("__text")),
+      repsOf(kb).select(col("id"), col("__text")),
       "__text", "id", threshold, k, numHashes, bands)
     // expansion: rep pair -> every member combination. The batch-side
     // maps are broadcast (nightly-batch contract); the corpus member map
     // is id/ek only — fixed width, no text.
-    val repB = gateRepsOf(kb).select(col("id").as("brid"),
+    val repB = repsOf(kb).select(col("id").as("brid"),
       col("ek").as("bek"))
     rp.join(idx.repsC, col("corpus_id") === col("crid"))
       .join(broadcast(repB), col("batch_id") === col("brid"))
@@ -582,15 +540,20 @@ object Dedup {
     graft.functions.MinHashSig.register(s)
   }
 
-  /** Banded MinHash rows (id, band, bucket) of one side — the gate's
-    * candidate-join input, shared by the inline flat form and the
-    * prebuilt corpus index. */
+  /** Banded MinHash rows (`idAs`, band, bucket) of one side — the
+    * candidate-join input of [[minhashCandidates]], the gate's inline
+    * flat form and the prebuilt corpus index. */
   private def bandsOf(df: DataFrame, textCol: String, idCol: String,
                       idAs: String, k: Int, numHashes: Int,
                       bands: Int): DataFrame = {
+    // bands > numHashes would make every band an empty slice -> identical
+    // bucket hash for all docs -> the equi-join degenerates to all-pairs;
+    // non-divisible values would silently ignore trailing signature rows
     require(bands >= 1 && numHashes % bands == 0,
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
     val r = numHashes / bands
+    // default shape goes through the native fused-loop expression (pure
+    // narrow map, no shuffle); non-default params use the aggregation form
     val base =
       if (k == 5 && numHashes == 32) {
         graft.functions.MinHashSig.register(df.sparkSession)
@@ -603,8 +566,11 @@ object Dedup {
         col("bh.bucket").as("bucket"))
   }
 
-  /** Sorted hashed-gram arrays (id, grams, n) of one side — the gate's
-    * verify input, shared like [[bandsOf]]. */
+  /** Sorted distinct hashed-gram arrays (`idAs`, `gAs`, `nAs`) of one
+    * side — the verify input, shared like [[bandsOf]]. Default k goes
+    * through the native zero-alloc GramHashes expression (one byte pass,
+    * primitive sort+dedupe); other k use the builtin string-shingle
+    * formulation. */
   private def gramsOf(df: DataFrame, textCol: String, idCol: String,
                       idAs: String, gAs: String, nAs: String,
                       k: Int): DataFrame = {
@@ -630,17 +596,27 @@ object Dedup {
       .join(broadcast(bandsOf(batch, textCol, idCol, "batch_id",
         k, numHashes, bands)), Seq("band", "bucket"))
       .select(col("batch_id"), col("corpus_id")).distinct()
-    cand
+    verifyJaccard(cand
       .join(corpusGrams, "corpus_id")
       .join(broadcast(gramsOf(batch, textCol, idCol, "batch_id",
-        "gb", "nb", k)), "batch_id")
-      .withColumn("inter", expr("intersect_size_sorted(gc, gb)"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("nc") + col("nb") - col("inter")).cast("double"))
-      .where(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"),
-        round(col("jaccard"), 6).as("jaccard"))
+        "gb", "nb", k)), "batch_id"),
+      "gc", "gb", "nc", "nb", threshold, "batch_id", "corpus_id")
   }
+
+  /** The Jaccard verify over candidate pairs joined to both sides' sorted
+    * hashed-gram arrays ([[gramsOf]]): the merge-scan intersect needs
+    * sorted inputs, and |union| = na + nb - |intersect| (no union pass).
+    * Keeps pairs at ≥ threshold; returns (`idA`, `idB`, jaccard rounded
+    * to 6 places). */
+  private def verifyJaccard(joined: DataFrame, gA: String, gB: String,
+                            nA: String, nB: String, threshold: Double,
+                            idA: String, idB: String): DataFrame =
+    joined
+      .withColumn("inter", expr(s"intersect_size_sorted($gA, $gB)"))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col(nA) + col(nB) - col("inter")).cast("double"))
+      .where(col("jaccard") >= threshold)
+      .select(col(idA), col(idB), round(col("jaccard"), 6).as("jaccard"))
 
   /** 64-bit SimHash over whitespace tokens: per bit, sum +1/-1 over each
     * token-hash's bit value; the sign of the sum is the fingerprint bit.
@@ -652,43 +628,6 @@ object Dedup {
     graft.functions.SimHash64.register(df.sparkSession)
     df.select(col(idCol).as("id"),
       expr(s"simhash64(lower(trim($textCol)))").as("simhash"))
-  }
-
-  /** The aggregation-shaped SimHash twin (explode tokens → one string hash
-    * per token → 64 vote-sum aggregates → assemble sign bits). Kept as the
-    * builtin-only formulation: it partial-combines map-side (64 ints per
-    * doc on the shuffle) and documents why the nested
-    * higher-order-aggregate alternative is ~20× slower (Catalyst collapses
-    * projections and re-evaluates the token split per bit). */
-  def simhashesAgg(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    // explode_outer: a token-less (empty/whitespace) doc must still get a
-    // row — plain explode would silently drop it from any downstream join
-    val exploded = df.select(col(idCol).as("id"),
-        explode_outer(graft.text.TextOps.tokens(col(textCol))).as("t"))
-      // xxhash64(null) would return the SEED, not null — keep nullness
-      .select(col("id"),
-        when(col("t").isNull, lit(null))
-          .otherwise(xxhash64(col("t"))).as("h"))
-    val votes = (0 until 64).map(i =>
-      sum(when(col("h").isNull, 0)
-        .when(shiftright(col("h"), i).bitwiseAND(1) === 1, 1).otherwise(-1))
-        .as(s"v$i"))
-    val assembled = (0 until 64).map(i =>
-      when(col(s"v$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    exploded.groupBy(col("id"))
-      .agg(votes.head, votes.tail.toIndexedSeq: _*)
-      .select(col("id"), assembled.as("simhash"))
-  }
-
-  /** All columns plus the SimHash — a pure narrow withColumn (the print
-    * is a function of the text alone). The earlier self-join-on-id form
-    * shuffled, multiplied rows quadratically per duplicate id, and
-    * silently dropped null-id rows; this is row-preserving by
-    * construction. */
-  def withSimhash(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.SimHash64.register(df.sparkSession)
-    df.withColumn("simhash", expr(s"simhash64(lower(trim($textCol)))"))
   }
 
   /** Connected components over a near-dup pair graph: every doc gets the
@@ -774,11 +713,11 @@ object Dedup {
     * (DedupSpec-pinned). */
   def simhashCandidates(df: DataFrame, textCol: String, idCol: String,
                         maxHamming: Int = 3): DataFrame =
-    collapseExpand(df, textCol, idCol,
+    collapseExpand(df, textCol, idCol, Identity.NormalizedText,
       reps => simhashCandidatesFlat(reps, "__text", "id", maxHamming),
       flatPairs = () => simhashCandidatesFlat(df, textCol, idCol, maxHamming),
-      intraCols = Seq(lit(0).as("hamming")),
-      intraKeep = lit(0) <= maxHamming)
+      intra = (pairs, _) => pairs.select(col("id_a"), col("id_b"),
+        lit(0).as("hamming")).where(lit(0) <= maxHamming))
 
   /** The flat SimHash candidate formulation: two 64-bit prints within
     * Hamming distance 3 must agree exactly on at least one of the 4

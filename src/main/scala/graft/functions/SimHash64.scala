@@ -16,12 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * from the token hash's corresponding bit, and the sign of the total is
   * the bit — the classic Charikar construction.
   *
-  * vs the aggregation-shaped `Dedup.simhashesAgg` (explode tokens → 64
+  * vs an aggregation-shaped formulation (explode tokens → 64
   * conditional SUMs): identical downstream semantics (chunk-join
   * candidates, Hamming verify), but this form is a NARROW MAP — the
   * explode row-blowup and the groupBy shuffle disappear; per-doc cost is
   * one pass over the bytes. A token-less string votes nothing and yields
-  * 0L, matching the aggregation form's explode_outer null-token row.
+  * 0L.
   *
   * Tokenization: ASCII whitespace (space, \\t, \\n, \\r, \\f, \\u000B) —
   * the byte-level twin of `TextOps.WhitespaceClass` (the explicit class

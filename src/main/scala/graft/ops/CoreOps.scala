@@ -152,24 +152,44 @@ object CoreOps {
     else df
   }
 
-  /** Keyed twin of [[spreadSmallScan]] for CPU-heavy stages that REQUIRE
-    * a clustering (WindowExec, co-grouped aggregation): a user
+  /** Spread a narrow candidate/pair table across the session's cores
+    * before a CPU-HEAVY verify projection (edit-distance DP, gram-array
+    * merge intersect). AQE right-sizes post-shuffle partitions by BYTES
+    * (advisoryPartitionSizeInBytes) — correct for I/O-bound stages, but a
+    * candidate table is a few MB of fixed-width ids while the work per
+    * row downstream is thousands of DP cells, so AQE coalesces the whole
+    * verify onto one or two tasks and the stage runs single-core
+    * (measured on t29 at sf0.1: verify 8.7 s coalesced vs 2.0 s spread).
+    * A KEYLESS round-robin repartition with an explicit count is the one
+    * form that survives: a keyed repartition on the pair key matches the
+    * upstream distinct's partitioning, so EnsureRequirements elides it
+    * and AQE coalesces the remaining ENSURE_REQUIREMENTS exchange right
+    * back to one task (observed on the first r21 attempt) — while a
+    * user-specified numPartitions round-robin is a hard constraint the
+    * planner neither removes nor coalesces. The extra exchange carries
+    * only the fixed-width id columns. */
+  def cpuSpread(df: DataFrame): DataFrame = df.repartition(spreadCount(df))
+
+  /** Keyed twin of [[cpuSpread]] for CPU-heavy stages that REQUIRE a
+    * clustering (WindowExec, co-grouped aggregation): a user
     * `repartition(n, keys)` with an explicit count both satisfies the
     * downstream required distribution and is exempt from AQE partition
     * coalescing — whereas the planner-inserted ENSURE_REQUIREMENTS
     * exchange gets coalesced by BYTES, and a few-MB token stream whose
-    * per-row work is an md5/DP lands on one task (the Dedup.cpuSpread
-    * finding, keyed form). ONLY place this where no upstream exchange
-    * already provides a compatible partitioning — EnsureRequirements
-    * elides a redundant user repartition, restoring the coalescible
-    * exchange (the first r21 cpuSpread attempt, documented there). The
-    * count scales with the session, never a local constant. */
-  def spreadByKeys(df: DataFrame, keys: Column*): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val parts = math.max(sc.defaultParallelism,
+    * per-row work is an md5/DP lands on one task. ONLY place this where
+    * no upstream exchange already provides a compatible partitioning —
+    * EnsureRequirements elides a redundant user repartition, restoring
+    * the coalescible exchange (the keyed-form failure [[cpuSpread]]
+    * documents). */
+  def spreadByKeys(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(spreadCount(df), keys: _*)
+
+  /** The spread count of [[cpuSpread]] and [[spreadByKeys]]: it scales
+    * with the session (defaultParallelism / configured shuffle
+    * partitions), never a local constant. */
+  private def spreadCount(df: DataFrame): Int =
+    math.max(df.sparkSession.sparkContext.defaultParallelism,
       df.sparkSession.sessionState.conf.numShufflePartitions)
-    df.repartition(parts, keys: _*)
-  }
 
   /** Catalog-aware scan: when `hive_db` is configured the source is read
     * through the session catalog as `hive_db.table` — the reference's

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
-import graft.ops.CoreOps.{scan, spreadSmallScan}
+import graft.ops.CoreOps.{cpuSpread, scan, spreadSmallScan}
 import graft.text.TextOps
 
 /** Text-analysis + deduplication queries over the `documents` table.
@@ -153,7 +153,7 @@ object TextQueries {
     * variant is spec-tested — not SQL-expressible). */
   def fingerprints(spark: SparkSession, sfDir: String): DataFrame =
     scan(spark, sfDir, "documents")
-      .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
+      .select(col("doc_id"), Dedup.exactKey(col("text")).as("fp"))
 
   private val fingerprintsOracle =
     """SELECT doc_id, substring(sha256(lower(trim(text))), 1, 16) AS fp
@@ -850,19 +850,17 @@ object TextQueries {
     // Levenshtein DP — the ×10-hot axis measured exactly that blowup
     // (single verify task grinding for 15+ min), so the composition
     // routes through the same adaptive exact-collapse harness as
-    // s03/s04, with `rawKey = true`: Levenshtein/Jaro-Winkler are
-    // case-sensitive, so only byte-identical texts are interchangeable
-    // (a `lower(trim())` group could carry nonzero intra-group
-    // distances). Intra pairs of byte-identical texts are always flat
+    // s03/s04, keyed on byte-identity (`Identity.RawText`, whose scaladoc
+    // says why). Intra pairs of byte-identical texts are always flat
     // candidates (identical signatures band together) with dist = 0,
     // jw = 1.0 exactly — the degenerate payload the collapse injects.
     def fuzzyVerify(d: DataFrame, textCol: String, idCol: String)
         : DataFrame = {
       // spread the narrow candidate table across cores before the DP:
       // AQE's byte-based coalescing would run the whole banded-Levenshtein
-      // verify on one task (Dedup.cpuSpread scaladoc; measured 8.7->2.0 s
+      // verify on one task (CoreOps.cpuSpread scaladoc; measured 8.7->2.0 s
       // at sf0.1)
-      val cands = Dedup.cpuSpread(
+      val cands = cpuSpread(
         Dedup.minhashCandidates(d, textCol, idCol))
       val p = d.select(col(idCol).as("id"),
         substring(col(textCol), 1, 200).as("t"))
@@ -884,12 +882,11 @@ object TextQueries {
           expr("jaro_winkler(pa.t, pb.t)")
             .cast("decimal(28,6)").cast("double").as("jw"))
     }
-    Dedup.collapseExpand(all, "text", "doc_id",
+    Dedup.collapseExpand(all, "text", "doc_id", Dedup.Identity.RawText,
       reps => fuzzyVerify(reps, "__text", "id"),
       () => fuzzyVerify(all, "text", "doc_id"),
-      intraCols = Seq(lit(0).as("dist"), lit(1.0).as("jw")),
-      intraKeep = lit(true),
-      rawKey = true)
+      intra = (pairs, _) => pairs.select(col("id_a"), col("id_b"),
+        lit(0).as("dist"), lit(1.0).as("jw")))
   }
 
   /** Sequence packing — the last pre-training step: concatenate chunks
@@ -1728,35 +1725,31 @@ object TextQueries {
     *    one combined-count row while the collapsed expansion join emits
     *    one row per input row — a violating caller gets route-dependent
     *    output, not an error.
-    *  - The exact key's `trim` is space-only, matching
-    *    [[graft.dedup.Dedup.duplicationRatio]]'s probe key — texts
-    *    differing only by a trailing tab/newline stay in separate groups
-    *    (tokens() would treat them identically, so this is a missed
-    *    collapse, never an output difference; cnt = Σ occ·m sums to the
-    *    same flat total either way).
+    *  - The key is [[graft.dedup.Dedup.Identity.NormalizedText]]'s
+    *    (space-only `trim`): texts differing only by a trailing
+    *    tab/newline stay in separate groups although tokens() treats
+    *    them identically — a missed collapse, never an output
+    *    difference (cnt = Σ occ·m sums to the same flat total).
     *  - The collapsed route computes the sha2 key twice (reps groupBy +
     *    expansion join re-derive `keyed`): measured harmless beside the
     *    tokenize/window work even at ×100-hot, and caching `keyed` would
     *    trade it for a persist of the full text column. */
   def spanLayout(docs: DataFrame, w: Int, dropFrac: Double): DataFrame =
-    if (!graft.dedup.Dedup.duplicationHeavy(docs, "text"))
+    if (!Dedup.duplicationHeavy(docs, "text"))
       spanLayoutFlat(docs, w, dropFrac)
     else {
       // sentinel key for null texts (sha2 of NULL is NULL, and a
       // null-rejecting expansion join would DROP null-text docs that the
       // flat form keeps with zero counts; no 64-hex digest can collide
       // with the sentinel)
-      val ek = when(col("text").isNull, lit("__null__"))
-        .otherwise(sha2(lower(trim(col("text"))), 256))
-      val keyed = docs.select(col("doc_id"), col("text"))
-        .withColumn("ek", ek)
-      val reps = keyed.groupBy(col("ek"))
-        .agg(min(col("doc_id")).as("rid"),
-          min_by(col("text"), col("doc_id")).as("__text"),
-          count(lit(1)).as("m"))
+      val keyed = docs.select(col("doc_id").as("id"), col("text").as("__text"))
+        .withColumn("ek", when(col("__text").isNull, lit("__null__"))
+          .otherwise(Dedup.Identity.NormalizedText.key(col("__text"))))
+      val reps = Dedup.repsOf(keyed, extra = Seq(count(lit(1)).as("m")))
+        .withColumnRenamed("id", "rid")
       val perRep = spanCore(
         reps.select(col("rid"), col("__text"), col("m")), "rid", w, dropFrac)
-      keyed.select(col("doc_id"), col("ek"))
+      keyed.select(col("id").as("doc_id"), col("ek"))
         .join(reps.select(col("rid"), col("ek")), "ek")
         .join(perRep, "rid")
         .select(col("doc_id"), col("n_windows"), col("n_dup_windows"),

@@ -247,64 +247,34 @@ object Similarity {
     *
     * Duplicate-heavy corpora (the ×100 worlds replicate every embedding
     * verbatim; real corpora duplicate embeddings wherever documents
-    * duplicate) route through the vector twin of
-    * [[graft.dedup.Dedup.collapseExpand]]: identical vectors share ALL
-    * bucket codes, so the candidate set grows with duplication² per
-    * distinct vector and the verify join ships two float vectors per
-    * exploded pair — the ×100-sampled cell measured a single sort-merge
-    * task grinding on exactly that. The collapse groups byte-identical
-    * vectors (sha256 over the exact decimal rendering of each float —
-    * distinct bit patterns render distinctly, so the digest is
-    * collision-free modulo SHA; a fixed 32-byte key where joining on the
-    * raw 256-byte vector would 8× the expansion-join shuffle at 100 TB),
-    * runs candidates + cosine over one representative per distinct
-    * vector, and expands with constant-width id joins. Intra-group pairs
-    * carry the rep's SELF-cosine through the same ≥ threshold filter —
-    * not a hardcoded 1.0 — so a zero-norm group (NULL self-cosine,
-    * FloatCosine's contract) is dropped exactly like the flat route
-    * drops it. Output-identical to the flat form (VectorCollapseSpec). */
+    * duplicate) route through [[graft.dedup.Dedup.collapseExpand]] with
+    * the byte-identical vector key: identical vectors share ALL bucket
+    * codes, so the candidate set grows with duplication² per distinct
+    * vector and the verify join ships two float vectors per exploded
+    * pair — the ×100-sampled cell measured a single sort-merge task
+    * grinding on exactly that. Intra-group pairs carry the rep's
+    * SELF-cosine through the same ≥ threshold filter and rounding as the
+    * flat verify (≈1.0 ± ulps → 1.0 after round(…, 6)) — not a hardcoded
+    * 1.0 — so a zero-norm group (NULL self-cosine, FloatCosine's
+    * contract) is dropped exactly like the flat route drops it.
+    * Output-identical to the flat form (VectorCollapseSpec). */
   def lshNearDupPairs(df: DataFrame, threshold: Double,
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       planesPerTable: Int = 8, tables: Int = 6,
                       dim: Int = 64, seed: Long = 137L): DataFrame = {
     graft.functions.FloatCosine.register(df.sparkSession)
-    val base = df.select(col(idCol).as("id"), col(vecCol).as("vf"))
-    if (vectorDuplicationRatio(base, "vf") <
-        graft.dedup.Dedup.CollapseDuplicationThreshold)
-      return lshNearDupPairsFlat(base, threshold, planesPerTable, tables,
-        dim, seed)
-    // to_json, NOT concat_ws: concat_ws silently SKIPS null elements, so
-    // [1, null, 5] and [1, 5] would share a key and collapse two
-    // structurally different vectors into one group (fabricating a
-    // sim-1.0 pair the flat route would reject); JSON renders nulls and
-    // brackets explicitly, so the key is collision-free for any array
-    val keyed = base.withColumn("ek", sha2(to_json(col("vf")), 256))
-    val members = keyed.select(col("id"), col("ek"))
-    val reps = keyed.groupBy(col("ek"))
-      .agg(min(col("id")).as("id"), min_by(col("vf"), col("id")).as("vf"))
-    val rp = lshNearDupPairsFlat(reps.select(col("id"), col("vf")),
-      threshold, planesPerTable, tables, dim, seed)
-    // identical vectors: payload is the self-cosine through the SAME
-    // filter + rounding as the flat verify (≈1.0 ± ulps → 1.0 after
-    // round(…, 6); NULL for zero-norm → group dropped, matching flat)
-    val selfSims = reps
-      .withColumn("s0", expr("float_cosine(vf, vf)"))
-      .where(col("s0") >= threshold)
-      .select(col("ek"), round(col("s0"), 6).as("sim"))
-    val intra = members.as("m1")
-      .join(members.as("m2"),
-        col("m1.ek") === col("m2.ek") && col("m1.id") < col("m2.id"))
-      .join(selfSims.as("ss"), col("m1.ek") === col("ss.ek"))
-      .select(col("m1.id").as("id_a"), col("m2.id").as("id_b"), col("sim"))
-    val groupOf = reps.select(col("id").as("rid"), col("ek"))
-    val cross = rp
-      .join(groupOf.as("ka"), col("id_a") === col("ka.rid"))
-      .join(groupOf.as("kb"), col("id_b") === col("kb.rid"))
-      .join(members.as("ma"), col("ma.ek") === col("ka.ek"))
-      .join(members.as("mb"), col("mb.ek") === col("kb.ek"))
-      .select(least(col("ma.id"), col("mb.id")).as("id_a"),
-        greatest(col("ma.id"), col("mb.id")).as("id_b"), col("sim"))
-    intra.unionAll(cross)
+    def pairs(base: DataFrame): DataFrame =
+      lshNearDupPairsFlat(base, threshold, planesPerTable, tables, dim, seed)
+    graft.dedup.Dedup.collapseExpand(df, vecCol, idCol,
+      graft.dedup.Dedup.Identity.Vector, pairs,
+      flatPairs = () =>
+        pairs(df.select(col(idCol).as("id"), col(vecCol).as("vf"))),
+      intra = (intraPairs, reps) => intraPairs
+        .join(reps.withColumn("s0", expr("float_cosine(vf, vf)"))
+          .where(col("s0") >= threshold)
+          .select(col("ek"), round(col("s0"), 6).as("sim")), "ek")
+        .select(col("id_a"), col("id_b"), col("sim")),
+      valueAs = "vf")
   }
 
   /** The flat (no collapse) LSH near-dup formulation over a prepared
@@ -327,22 +297,6 @@ object Similarity {
       .withColumn("sim", expr("float_cosine(va.vf, vb.vf)"))
       .where(col("sim") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-  }
-
-  /** Rows per distinct vector — [[graft.dedup.Dedup.duplicationRatio]]'s
-    * vector twin (same HLL shape, same O(1)-driver-memory and
-    * re-execution-safety argument; the routing it feeds is
-    * performance-only, both routes output-identical). xxhash64 hashes the
-    * array's elements directly — no normalization: byte-identity is the
-    * collapse equality, exactly like the probe's digest counterpart. */
-  private[graft] def vectorDuplicationRatio(df: DataFrame,
-                                            vecCol: String): Double = {
-    val h = when(col(vecCol).isNull, lit(null)).otherwise(xxhash64(col(vecCol)))
-    val r = df.agg(count(col(vecCol)).as("n"),
-      approx_count_distinct(h).as("d")).head()
-    val n = r.getLong(0)
-    val d = r.getLong(1)
-    if (d <= 0L) 1.0 else n.toDouble / d.toDouble
   }
 
   /** IVF top-k: corpus vectors are bucketed by nearest centroid (one

@@ -149,17 +149,11 @@ object TextOps {
     (id * 48271L) % modulus < rate
   }
 
-  /** Document fingerprint: 64-bit-equivalent prefix of the sha256 of the
-    * normalized text. Collision-safe enough for dedup keys at 100 TB
-    * (2^64 space) and exactly replicable in any engine with sha256. */
-  def fingerprint(text: Column): Column =
-    substring(sha2(lower(trim(text)), 256), 1, 16)
-
   /** Winnowing rolling-hash fingerprints (Schleimer et al., SIGMOD'03):
     * k-gram Rabin-Karp hashes, then the min hash of each sliding window —
     * the standard local fingerprinting for plagiarism-style overlap
     * detection. Pure Scala (driver/executor-side), used via Dataset.map
-    * in tests; the sha-prefix `fingerprint` above is the SQL-path op. */
+    * in tests; the sha-prefix `Dedup.exactKey` is the SQL-path op. */
   def winnow(text: String, k: Int = 5, window: Int = 4): Vector[Long] = {
     val s = text.toLowerCase.trim
     if (s.length < k) return Vector.empty

@@ -62,7 +62,7 @@ class DedupSpec extends SparkSpec {
     val df = rows.toDF("doc_id", "text")
     // the adaptive probe must route THIS corpus through the collapse —
     // otherwise the equality below would vacuously compare flat to flat
-    assert(Dedup.shouldCollapse(df, "text"),
+    assert(Dedup.duplicationHeavy(df, "text"),
       s"planted corpus must collapse (ratio=${Dedup.duplicationRatio(df, "text")})")
     val got = Dedup.nearDupPairs(df, "text", "doc_id", threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet
@@ -96,9 +96,9 @@ class DedupSpec extends SparkSpec {
     val dupHeavy = (1L to 400L)
       .map(i => (i, s"boilerplate legal footer variant ${i % 20} all rights reserved"))
       .toDF("doc_id", "text")
-    assert(!Dedup.shouldCollapse(distinct, "text"),
+    assert(!Dedup.duplicationHeavy(distinct, "text"),
       s"distinct corpus must route flat (ratio=${Dedup.duplicationRatio(distinct, "text")})")
-    assert(Dedup.shouldCollapse(dupHeavy, "text"),
+    assert(Dedup.duplicationHeavy(dupHeavy, "text"),
       s"duplicate-heavy corpus must collapse (ratio=${Dedup.duplicationRatio(dupHeavy, "text")})")
     // the probe is deterministic under re-evaluation (HLL register-merge
     // is commutative and replay-deterministic): same input -> same ratio
@@ -133,8 +133,8 @@ class DedupSpec extends SparkSpec {
 
   test("simhash: identical texts collide; planted near-dups within hamming 3") {
     val base = docs.where(col("doc_id") === 1L)
-    val sh = Dedup.withSimhash(docs, "text")
-      .select("doc_id", "simhash").as[(Long, Long)].collect().toMap
+    val sh = Dedup.simhashes(docs, "text", "doc_id")
+      .select("id", "simhash").as[(Long, Long)].collect().toMap
     assert(sh(1L) == sh(2L)) // identical normalized text -> same simhash
     val cands = Dedup.simhashCandidates(docs, "text", "doc_id")
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -289,7 +289,7 @@ class DedupSpec extends SparkSpec {
       (1000003L, baseTexts(1)),
       (1000004L, null: String))
     val (cdf, bdf) = (corpus.toDF("doc_id", "text"), batch.toDF("doc_id", "text"))
-    assert(Dedup.shouldCollapse(cdf, "text"),
+    assert(Dedup.duplicationHeavy(cdf, "text"),
       "planted corpus must route through the collapse")
     val got = Dedup.nearDupAgainst(cdf, bdf, "text", "doc_id", threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet
@@ -316,7 +316,7 @@ class DedupSpec extends SparkSpec {
     val corpus = (0 until 40).map(i => (i.toLong, s"shared text ${i / 8} " * 8))
       .toDF("doc_id", "text")
     val batch = Seq((1000000L, "shared text 2 " * 8)).toDF("doc_id", "text")
-    assert(Dedup.shouldCollapse(corpus, "text"))
+    assert(Dedup.duplicationHeavy(corpus, "text"))
     def run(s: org.apache.spark.sql.SparkSession) = {
       import s.implicits._
       val c = corpus.as[(Long, String)].collect().toSeq.toDF("doc_id", "text")

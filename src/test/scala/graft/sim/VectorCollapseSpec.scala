@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.dedup.Dedup
 
 /** lshNearDupPairs' adaptive vector exact-collapse (the ×100-sampled-cell
   * fix): on a corpus where embeddings repeat verbatim (duplicated docs →
@@ -13,7 +14,8 @@ import graft.SparkSpec
   * flat form, including the zero-norm edge: FloatCosine returns NULL on a
   * zero vector, so a group of identical ZERO vectors must vanish from
   * both routes (a hardcoded intra payload of 1.0 would fabricate pairs
-  * the flat route never emits). */
+  * the flat route never emits). A null embedding has no key, no bucket
+  * codes and no cosine, so both routes must drop it too. */
 class VectorCollapseSpec extends SparkSpec {
 
   private def unit(xs: Double*): Array[Float] = {
@@ -22,7 +24,7 @@ class VectorCollapseSpec extends SparkSpec {
   }
 
   /** 40 distinct unit vectors (dim 64), each duplicated 8× — plus one
-    * near-dup planted pair and one all-zero group. */
+    * near-dup planted pair, one all-zero group and one null embedding. */
   private def corpus(): DataFrame = {
     val sess = spark
     import sess.implicits._
@@ -37,7 +39,9 @@ class VectorCollapseSpec extends SparkSpec {
       (8000L, unit(bases(0).map(_.toDouble + 0.001).toIndexedSeq: _*)),
       // an identical zero-vector pair: must appear in NEITHER route
       (9000L, Array.fill(64)(0f)),
-      (9001L, Array.fill(64)(0f)))
+      (9001L, Array.fill(64)(0f)),
+      // a null embedding: must appear in NEITHER route
+      (9500L, null: Array[Float]))
     rows.toDF("vec_id", "embedding")
   }
 
@@ -47,8 +51,7 @@ class VectorCollapseSpec extends SparkSpec {
   test("collapsed route == flat form on a duplicate-heavy vector corpus") {
     val df = corpus()
     val base = df.select(col("vec_id").as("id"), col("embedding").as("vf"))
-    assert(Similarity.vectorDuplicationRatio(base, "vf") >=
-      graft.dedup.Dedup.CollapseDuplicationThreshold,
+    assert(Dedup.duplicationHeavy(base, "vf", Dedup.Identity.Vector),
       "planted corpus must trip the routing probe")
     graft.functions.FloatCosine.register(spark)
     val routed = asSet(Similarity.lshNearDupPairs(df, threshold = 0.8))
@@ -66,6 +69,9 @@ class VectorCollapseSpec extends SparkSpec {
       b == 8000L && a < 100 && s < 1.0 && s >= 0.999 }
     assert(nearDups.size == 8, s"expected 8 expanded near-dup pairs, " +
       s"got $nearDups")
+    // the sf-gate embeddings stay on the flat route (distinct vectors)
+    val gate = spark.read.parquet(s"$sf/embeddings.parquet")
+    assert(!Dedup.duplicationHeavy(gate, "embedding", Dedup.Identity.Vector))
   }
 
   test("identical zero vectors are dropped by both routes") {
@@ -76,6 +82,6 @@ class VectorCollapseSpec extends SparkSpec {
     val flat = asSet(Similarity.lshNearDupPairsFlat(base, threshold = 0.8))
     for (s <- Seq(routed, flat))
       assert(!s.exists { case (a, b, _) => a >= 9000L || b >= 9000L },
-        "zero-norm pairs must not survive the cosine filter")
+        "zero-norm and null-vector pairs must not survive the cosine filter")
   }
 }
