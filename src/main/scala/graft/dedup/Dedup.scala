@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native.{
+  gramHashes, intersectSizeSorted, minhashSig, simhash64}
 import graft.ops.CoreOps
 
 /** Deduplication operators for a 100 TB training-data pipeline. The scale
@@ -354,7 +356,6 @@ object Dedup {
                        threshold: Double, k: Int = 5, numHashes: Int = 32,
                        bands: Int = 8,
                        spreadCands: Boolean = true): DataFrame = {
-    registerGateFns(df.sparkSession)
     val rawCands = minhashCandidates(df, textCol, idCol, k, numHashes, bands)
     // `spreadCands = false` for callers whose candidate set is small and
     // whose OUTPUT feeds an iterative consumer (t09's clusterAssign): the
@@ -444,7 +445,6 @@ object Dedup {
   def indexCorpus(corpus: DataFrame, textCol: String, idCol: String,
                   persist: Boolean, k: Int = 5, numHashes: Int = 32,
                   bands: Int = 8): GateCorpusIndex = {
-    registerGateFns(corpus.sparkSession)
     def maybe(df: DataFrame): DataFrame =
       if (persist)
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -519,25 +519,10 @@ object Dedup {
                      textCol: String, idCol: String,
                      threshold: Double, k: Int = 5,
                      numHashes: Int = 32, bands: Int = 8): DataFrame = {
-    registerGateFns(corpus.sparkSession)
     nearDupAgainstPrebuilt(
       bandsOf(corpus, textCol, idCol, "corpus_id", k, numHashes, bands),
       gramsOf(corpus, textCol, idCol, "corpus_id", "gc", "nc", k),
       batch, textCol, idCol, threshold, k, numHashes, bands)
-  }
-
-  /** The native expressions every gate plan needs. Registered on BOTH the
-    * index-build session and (in [[nearDupAgainstPrebuilt]]) the batch's
-    * session: inside foreachBatch the batch DataFrame carries the
-    * stream's CLONED session — the final plan analyzes there, and a clone
-    * made before any registration (fresh JVM: StreamBench) otherwise
-    * fails with UNRESOLVED_ROUTINE on gram_hashes (r13 regression,
-    * spec-pinned in StreamingSpec). */
-  private def registerGateFns(
-      s: org.apache.spark.sql.SparkSession): Unit = {
-    graft.functions.SortedIntersectSize.register(s)
-    graft.functions.GramHashes.register(s)
-    graft.functions.MinHashSig.register(s)
   }
 
   /** Banded MinHash rows (`idAs`, band, bucket) of one side — the
@@ -555,11 +540,10 @@ object Dedup {
     // default shape goes through the native fused-loop expression (pure
     // narrow map, no shuffle); non-default params use the aggregation form
     val base =
-      if (k == 5 && numHashes == 32) {
-        graft.functions.MinHashSig.register(df.sparkSession)
+      if (k == 5 && numHashes == 32)
         df.select(col(idCol).as(idAs),
-          expr(s"minhash_sig(lower(trim($textCol)))").as("sig"))
-      } else minhashSignatures(df, textCol, idCol, k, numHashes)
+          minhashSig(lower(trim(col(textCol)))).as("sig"))
+      else minhashSignatures(df, textCol, idCol, k, numHashes)
         .withColumnRenamed("id", idAs)
     base.withColumn("bh", explode(bandHashes(col("sig"), bands, r)))
       .select(col(idAs), col("bh.band").as("band"),
@@ -574,7 +558,7 @@ object Dedup {
   private def gramsOf(df: DataFrame, textCol: String, idCol: String,
                       idAs: String, gAs: String, nAs: String,
                       k: Int): DataFrame = {
-    val g = if (k == 5) expr(s"gram_hashes(lower(trim($textCol)))")
+    val g = if (k == 5) gramHashes(lower(trim(col(textCol))))
     else sort_array(array_distinct(
       transform(rawShingles(col(textCol), k), s => xxhash64(s))))
     df.select(col(idCol).as(idAs), g.as(gAs))
@@ -584,14 +568,16 @@ object Dedup {
   /** The gate core against PREBUILT corpus band/gram tables: batch side
     * banded+grammed fresh (it is new data), broadcast into the corpus's
     * partitions — the corpus never shuffles and, with a persisted index,
-    * is never even rescanned. */
+    * is never even rescanned. Its native expressions are Columns
+    * ([[graft.functions.Native]]), not registered names, so the plan
+    * resolves on whichever session analyzes it: inside foreachBatch that
+    * is the stream's cloned session (spec-pinned in StreamingSpec). */
   private def nearDupAgainstPrebuilt(corpusBands: DataFrame,
                                      corpusGrams: DataFrame,
                                      batch: DataFrame, textCol: String,
                                      idCol: String, threshold: Double,
                                      k: Int, numHashes: Int,
                                      bands: Int): DataFrame = {
-    registerGateFns(batch.sparkSession)
     val cand = corpusBands
       .join(broadcast(bandsOf(batch, textCol, idCol, "batch_id",
         k, numHashes, bands)), Seq("band", "bucket"))
@@ -612,7 +598,7 @@ object Dedup {
                             nA: String, nB: String, threshold: Double,
                             idA: String, idB: String): DataFrame =
     joined
-      .withColumn("inter", expr(s"intersect_size_sorted($gA, $gB)"))
+      .withColumn("inter", intersectSizeSorted(col(gA), col(gB)))
       .withColumn("jaccard", col("inter").cast("double") /
         (col(nA) + col(nB) - col("inter")).cast("double"))
       .where(col("jaccard") >= threshold)
@@ -625,9 +611,8 @@ object Dedup {
     * Default path is the native one-pass SimHash64 expression — a narrow
     * map, no explode row-blowup, no shuffle at all. */
   def simhashes(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    graft.functions.SimHash64.register(df.sparkSession)
     df.select(col(idCol).as("id"),
-      expr(s"simhash64(lower(trim($textCol)))").as("simhash"))
+      simhash64(lower(trim(col(textCol)))).as("simhash"))
   }
 
   /** Connected components over a near-dup pair graph: every doc gets the

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Trained subword tokenization — byte-pair encoding in the Sennrich et
@@ -365,42 +363,5 @@ object Bpe {
       i += 1
     }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  /** Strict-arity SQL builder bound to a TRAINED merge table (unlike
-    * TokenStats' static stopwords, the binding is per-training — callers
-    * re-register after training; registerFunction overwrites). */
-  def builder(merges: Seq[(String, String)]): Seq[Expression] => Expression = {
-    case Seq(a) => BpeCount(a, merges)
-    case args => throw new IllegalArgumentException(
-      s"$name(word) takes exactly 1 argument, got ${args.length}")
-  }
-
-  def docBuilder(merges: Seq[(String, String)]): Seq[Expression] => Expression = {
-    case Seq(a) => BpeDocCount(a, merges)
-    case args => throw new IllegalArgumentException(
-      s"$docName(text) takes exactly 1 argument, got ${args.length}")
-  }
-
-  def tokensBuilder(merges: Seq[(String, String)]): Seq[Expression] => Expression = {
-    case Seq(a) => BpeTokens(a, merges)
-    case args => throw new IllegalArgumentException(
-      s"$tokensName(word) takes exactly 1 argument, got ${args.length}")
-  }
-
-  /** Per-session registration of `bpe_count` + `bpe_doc_count` +
-    * `bpe_tokens` with the given merges. */
-  def register(spark: SparkSession, merges: Seq[(String, String)]): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[BpeCount].getName, name), builder(merges))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(docName),
-      new ExpressionInfo(classOf[BpeDocCount].getName, docName),
-      docBuilder(merges))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(tokensName),
-      new ExpressionInfo(classOf[BpeTokens].getName, tokensName),
-      tokensBuilder(merges))
   }
 }

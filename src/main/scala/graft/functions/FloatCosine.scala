@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Native codegen'd cosine similarity over two `array<float>` columns.
   *
@@ -105,21 +103,11 @@ case class FloatCosine(left: Expression, right: Expression)
 object FloatCosine {
   val name = "float_cosine"
 
-  private val info = new ExpressionInfo(
-    classOf[FloatCosine].getName, name)
-
-  /** The single SQL builder — shared by register() and GraftExtensions so
-    * the two surfaces cannot drift; strict arity (silently dropping extra
-    * args would return wrong results with no error). */
+  /** The SQL builder [[GraftExtensions]] injects; strict arity (silently
+    * dropping extra args would return wrong results with no error). */
   val builder: Seq[Expression] => Expression = {
     case Seq(a, b) => FloatCosine(a, b)
     case args => throw new IllegalArgumentException(
       s"$name(a, b) takes exactly 2 arguments, got ${args.length}")
   }
-
-  /** Idempotent per-session registration so `expr("float_cosine(a,b)")`
-    * resolves (used by library code paths and tests). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

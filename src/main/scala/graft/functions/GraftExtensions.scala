@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * on a session builder, or
   * `spark.sql.extensions=graft.functions.GraftExtensions`.
   *
-  * Injects the full graft surface: every native function/aggregate this
-  * library defines plus both optimizer rules (DsRangeRewrite and
-  * LevenshteinPrefilter) — a user configuring the extension class gets the
-  * same session the library's own entry points build. */
+  * Injects graft's SQL surface: every stateless native function/aggregate
+  * under its SQL name, plus both optimizer rules (DsRangeRewrite and
+  * LevenshteinPrefilter). The library's own queries need none of the
+  * names: they call the expressions as Columns ([[Native]]). */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, clazz, builder) =>
@@ -23,11 +23,11 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
 }
 
 object GraftExtensions {
-  /** The complete SQL-surface registry: each entry's builder is the SAME
-    * value the companion's register() uses, so the extension session and
-    * the library's own sessions cannot drift. (LshBucketCodes / IvfCell
-    * are deliberately absent: they take runtime seed/centroid arrays and
-    * exist only on the Scala API via the graftbridge shim.) */
+  /** The SQL surface: (name, expression class, builder) of each stateless
+    * native function. Functions whose expression takes runtime state
+    * (LshBucketCodes / IvfCell seeds and centroids, BPE merges, unigram
+    * vocabularies, NB tables, winnowing geometry) are deliberately absent:
+    * they exist only as [[Native]] Column functions. */
   val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     (FloatCosine.name, classOf[FloatCosine], FloatCosine.builder),
     (MinHashSig.name, classOf[MinHashSig], MinHashSig.builder),
@@ -39,5 +39,8 @@ object GraftExtensions {
     (SpaceSavingTopK.name, classOf[SpaceSavingTopK], SpaceSavingTopK.builder),
     (JaroWinkler.name, classOf[JaroWinkler], JaroWinkler.builder),
     (IntDot.name, classOf[IntDot], IntDot.builder),
+    (TokensOf.name, classOf[TokensOf], TokensOf.builder),
+    (TokenStats.name, classOf[TokenStats], TokenStats.builder),
+    (StopwordCounts.name, classOf[StopwordCounts], StopwordCounts.builder),
   )
 }

@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Sorted distinct 64-bit k-gram hashes of a string, in one native pass —
@@ -114,17 +112,11 @@ case class GramHashes(child: Expression, k: Int = 5)
 object GramHashes {
   val name = "gram_hashes"
 
-  /** Shared strict-arity SQL builder (see FloatCosine.builder). */
+  /** Strict-arity SQL builder (see FloatCosine.builder): `gram_hashes(text)`
+    * with the default k=5. */
   val builder: Seq[Expression] => Expression = {
     case Seq(a) => GramHashes(a)
     case args => throw new IllegalArgumentException(
       s"$name(text) takes exactly 1 argument, got ${args.length}")
   }
-
-  /** Idempotent per-session registration: `gram_hashes(text)` with the
-    * default k=5. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[GramHashes].getName, name), builder)
 }

@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Native codegen'd integer dot product over two `array<int>` columns —
   * the coarse-scoring kernel of the quantized ANN path (s14).
@@ -79,18 +77,10 @@ case class IntDot(left: Expression, right: Expression)
 object IntDot {
   val name = "int_dot"
 
-  private val info = new ExpressionInfo(classOf[IntDot].getName, name)
-
-  /** Single SQL builder shared by register() and GraftExtensions (strict
-    * arity — silently dropping args would return wrong results). */
+  /** Strict-arity SQL builder (see FloatCosine.builder). */
   val builder: Seq[Expression] => Expression = {
     case Seq(a, b) => IntDot(a, b)
     case args => throw new IllegalArgumentException(
       s"$name(a, b) takes exactly 2 arguments, got ${args.length}")
   }
-
-  /** Idempotent per-session registration for `expr("int_dot(a,b)")`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Jaro-Winkler similarity over two string columns — the
@@ -99,15 +97,10 @@ object JaroWinkler {
     if (j > 0.7) j + l * 0.1 * (1 - j) else j
   }
 
-  private val info = new ExpressionInfo(classOf[JaroWinkler].getName, name)
-
+  /** Strict-arity SQL builder (see FloatCosine.builder). */
   val builder: Seq[Expression] => Expression = {
     case Seq(a, b) => JaroWinkler(a, b)
     case args => throw new IllegalArgumentException(
       s"$name(a, b) takes exactly 2 arguments, got ${args.length}")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name), info, builder)
 }

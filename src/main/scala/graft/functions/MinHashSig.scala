@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native MinHash signature: all `numHashes` minima in ONE fused loop
@@ -125,18 +123,11 @@ object MinHashSig {
     (a, b)
   }
 
-  /** Shared strict-arity SQL builder (see FloatCosine.builder). */
+  /** Strict-arity SQL builder (see FloatCosine.builder). */
   val builder: Seq[Expression] => Expression = {
     case Seq(a) => MinHashSig(a)
     case args => throw new IllegalArgumentException(
       s"$name(text) takes exactly 1 argument (k/numHashes are fixed at " +
         s"5/32 on the SQL surface), got ${args.length}")
   }
-
-  /** Idempotent per-session registration: `minhash_sig(text)` with the
-    * default k=5, numHashes=32. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[MinHashSig].getName, name), builder)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Trained discriminative quality classifier — the fastText-shape
@@ -148,13 +146,4 @@ object NbQuality {
       StrictMath.log(nPos.toDouble / nNeg.toDouble) * Scale)
     new NbTable(weights, bias)
   }
-
-  def register(spark: SparkSession, table: NbTable): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo("graft.functions.NbQualityScore", name),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, s"$name takes exactly one argument")
-        NbQualityScore(children.head, table)
-      })
 }

@@ -1,13 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All four Gopher-style repetition counters in ONE native pass:
@@ -132,16 +130,10 @@ object RepetitionStatsImpl {
 object RepetitionStats {
   val name = "repetition_stats"
 
-  /** Shared strict-arity SQL builder (see FloatCosine.builder). */
+  /** Strict-arity SQL builder (see FloatCosine.builder). */
   val builder: Seq[Expression] => Expression = {
     case Seq(a) => RepetitionStats(a)
     case args => throw new IllegalArgumentException(
       s"$name(text) takes exactly 1 argument, got ${args.length}")
   }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[RepetitionStats].getName, name), builder)
 }

@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash over whitespace tokens, in one native pass over the
@@ -112,16 +110,10 @@ object SimHash64 {
   def isSpace(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0B
 
-  /** Shared strict-arity SQL builder (see FloatCosine.builder). */
+  /** Strict-arity SQL builder (see FloatCosine.builder). */
   val builder: Seq[Expression] => Expression = {
     case Seq(a) => SimHash64(a)
     case args => throw new IllegalArgumentException(
       s"$name(text) takes exactly 1 argument, got ${args.length}")
   }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[SimHash64].getName, name), builder)
 }

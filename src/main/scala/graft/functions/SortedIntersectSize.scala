@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** |A ∩ B| for two SORTED array<bigint> columns via a single merge scan —
   * O(|A|+|B|) with zero allocation, vs array_intersect's per-call hash
@@ -72,15 +70,10 @@ case class SortedIntersectSize(left: Expression, right: Expression)
 object SortedIntersectSize {
   val name = "intersect_size_sorted"
 
-  /** Shared strict-arity SQL builder (see FloatCosine.builder). */
+  /** Strict-arity SQL builder (see FloatCosine.builder). */
   val builder: Seq[Expression] => Expression = {
     case Seq(a, b) => SortedIntersectSize(a, b)
     case args => throw new IllegalArgumentException(
       s"$name(a, b) takes exactly 2 arguments, got ${args.length}")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName, name), builder)
 }

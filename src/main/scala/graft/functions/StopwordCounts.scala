@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-set stopword hit counts for SEVERAL word sets in ONE token walk:
@@ -103,17 +101,14 @@ object StopwordCountsImpl {
 object StopwordCounts {
   val name = "stopword_counts"
 
-  /** SQL-registered form: one count per [[graft.text.TextOps.langStopwords]]
-    * language, in table order (de, en, es, fr, zh). */
+  /** One set per [[graft.text.TextOps.langStopwords]] language, in table
+    * order (de, en, es, fr, zh). */
+  def langSets: Seq[Seq[String]] = graft.text.TextOps.langStopwords.map(_._2)
+
+  /** Strict-arity SQL builder (see FloatCosine.builder) over [[langSets]]. */
   val builder: Seq[Expression] => Expression = {
-    case Seq(a) =>
-      StopwordCounts(a, graft.text.TextOps.langStopwords.map(_._2))
+    case Seq(a) => StopwordCounts(a, langSets)
     case args => throw new IllegalArgumentException(
       s"$name(text) takes exactly 1 argument, got ${args.length}")
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[StopwordCounts].getName, name), builder)
 }

@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Every token-derived quality-gate signal in ONE codegen-capable pass:
@@ -141,20 +139,14 @@ object TokenStats {
   val name = "token_stats"
 
   /** The English stopword set the quality gates score against —
-    * TextOps.langStopwords("en"); the SQL-registered form binds it. */
+    * TextOps.langStopwords("en"); the SQL form and Native.tokenStats bind it. */
   def enStopwords: Seq[String] =
     graft.text.TextOps.langStopwords.toMap.apply("en")
 
-  /** Shared strict-arity SQL builder (see FloatCosine.builder). */
+  /** Strict-arity SQL builder (see FloatCosine.builder). */
   val builder: Seq[Expression] => Expression = {
     case Seq(a) => TokenStats(a, enStopwords)
     case args => throw new IllegalArgumentException(
       s"$name(text) takes exactly 1 argument, got ${args.length}")
   }
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[TokenStats].getName, name), builder)
 }

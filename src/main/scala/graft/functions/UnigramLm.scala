@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Trained subword tokenization, SECOND family (r17 verdict item 6):
@@ -320,31 +318,5 @@ object UnigramLm {
       r += 1
     }
     toCosts(vocabCounts)
-  }
-
-  private def builder(vocab: Seq[(String, Long)])
-      : Seq[Expression] => Expression = { args =>
-    require(args.length == 1,
-      s"$name(word) takes exactly 1 argument, got ${args.length}")
-    UnigramStats(args.head, vocab)
-  }
-
-  private def docBuilder(vocab: Seq[(String, Long)])
-      : Seq[Expression] => Expression = { args =>
-    require(args.length == 1,
-      s"$docName(text) takes exactly 1 argument, got ${args.length}")
-    UnigramDocStats(args.head, vocab)
-  }
-
-  /** Per-session registration of `unigram_stats` + `unigram_doc_stats`
-    * with the given trained vocabulary. */
-  def register(spark: SparkSession, vocab: Seq[(String, Long)]): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[UnigramStats].getName, name), builder(vocab))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(docName),
-      new ExpressionInfo(classOf[UnigramDocStats].getName, docName),
-      docBuilder(vocab))
   }
 }

@@ -1,12 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowed substring fingerprints (Schleimer, Wilkerson, Aiken 2003,
@@ -115,17 +113,4 @@ object WinnowPrints {
     while (it.hasNext) { out(j) = UTF8String.fromString(it.next()); j += 1 }
     new GenericArrayData(out)
   }
-
-  /** Strict-arity SQL builder at fixed (L, W) — the t38 geometry. */
-  def builder(gramLen: Int, window: Int): Seq[Expression] => Expression = {
-    case Seq(a) => WinnowPrints(a, gramLen, window)
-    case args => throw new IllegalArgumentException(
-      s"$name(text) takes exactly 1 argument, got ${args.length}")
-  }
-
-  def register(spark: SparkSession, gramLen: Int, window: Int): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[WinnowPrints].getName, name),
-      builder(gramLen, window))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.functions.Native.{floatCosine, ivfCells}
 import graft.ops.CoreOps.scan
 import graft.sim.Similarity
 
@@ -1153,7 +1154,7 @@ object SimilarityQueries {
     // the size aggregate, no stage reuse because the keep-flag branch
     // pruned vf out of its copy of the subtree).
     base.unionByName(planted)
-      .withColumn("cc", Similarity.assignCells(col("v"), cents, 2))
+      .withColumn("cc", ivfCells(col("v"), cents, 2))
       // coalesce makes cell/sub NON-NULLABLE (array extraction is
       // nullable to Catalyst even though ivfcells never returns nulls):
       // otherwise the join infers isnotnull filters on the build side's
@@ -1172,7 +1173,7 @@ object SimilarityQueries {
   }
 
   def semanticDedup(spark: SparkSession, sfDir: String): DataFrame =
-    semanticDedupLayout(spark, scan(spark, sfDir, "embeddings"),
+    semanticDedupLayout(scan(spark, sfDir, "embeddings"),
       semCentroids(spark, sfDir), SemCellCap)
 
   /** The full SemDeDup pipeline over a caller-supplied corpus/quantizer/
@@ -1181,10 +1182,8 @@ object SimilarityQueries {
     * value-check the SPLIT-ACTIVE path against a plain-Scala brute force
     * (the gate SFs keep the production cap dormant by design, so the
     * driver's oracle can't exercise it). */
-  def semanticDedupLayout(spark: SparkSession, emb: DataFrame,
-                          cents: Array[Array[Double]],
+  def semanticDedupLayout(emb: DataFrame, cents: Array[Array[Double]],
                           cap: Int): DataFrame = {
-    graft.functions.FloatCosine.register(spark)
     val keyed = semKeyed(emb, cents, cap)
     val a = keyed.select(col("cell"), col("sub"), col("vec_id").as("id_a"),
       col("vf").as("vfa"))
@@ -1202,7 +1201,7 @@ object SimilarityQueries {
     a.join(b,
         a("cell") === b("cell") && a("sub") === b("sub") &&
           b("id_b") < a("id_a") &&
-          expr("float_cosine(vfa, vfb)") >= 0.8,
+          floatCosine(col("vfa"), col("vfb")) >= 0.8,
         "left_outer")
       .groupBy(a("id_a"), a("cell"))
       .agg(count(col("id_b")).as("n_sem_dups"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
+import graft.functions.Native._
 import graft.ops.CoreOps.{cpuSpread, scan, spreadSmallScan}
 import graft.text.TextOps
 
@@ -41,7 +42,6 @@ object TextQueries {
     * count, punctuation, stopwords, quality score — all narrow codegen'd
     * maps (the 100 TB shape: no shuffle at all). */
   def textStats(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.TokenStats.register(spark)
     // One native codegen pass for every token-derived stat (the r14
     // staged-array formulation still ran its single regex split OUTSIDE
     // whole-stage codegen; token_stats keeps the whole row inside WSCG
@@ -49,7 +49,7 @@ object TextQueries {
     // own regex — a different token class entirely.
     val staged = scan(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"),
-        expr("token_stats(text)").as("ts"))
+        tokenStats(col("text")).as("ts"))
     staged.select(
       col("doc_id"),
       col("ts.n_tokens").cast("int").as("n_tokens"),
@@ -107,11 +107,10 @@ object TextQueries {
     * language-ID at 100 TB must be scan-side CPU with zero exchanges
     * (PlanAuditSpec pins Exchange-free). Scores and argmax identical. */
   def langId(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.StopwordCounts.register(spark)
     val docs = scan(spark, sfDir, "documents")
     val langs = TextOps.langStopwords.map(_._1)
     val scored = docs.select(col("doc_id"), col("lang"),
-      expr("stopword_counts(text)").as("sc"))
+      stopwordCounts(col("text")).as("sc"))
       .select(col("doc_id") +: col("lang") +:
         langs.zipWithIndex.map { case (l, i) =>
           col("sc").getItem(i).as(s"s_$l")
@@ -252,11 +251,10 @@ object TextQueries {
     val survivors = exact
       .join(clusters.withColumnRenamed("id", "doc_id"), "doc_id")
       .where(col("doc_id") === col("cluster_id"))
-    graft.functions.TokenStats.register(spark)
     // quality floor via the native one-pass token_stats (no token array
     // materialized just to count it)
     val quality = survivors
-      .where(expr("token_stats(text).n_tokens") >= 10)
+      .where(tokenStats(col("text")).getField("n_tokens") >= 10)
     quality
       .where(TextOps.systematicSample(col("doc_id"), keepBelow = 50))
       .select(col("doc_id"), posexplode(TextOps.chunkWindows(col("text"))))
@@ -271,9 +269,8 @@ object TextQueries {
     * full chain gets a hash-matched correctness row instead of rows-only.
     * t09 keeps exercising the LSH stage, spec-checked. */
   def trainingPipelineExact(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.TokenStats.register(spark)
     Dedup.exactDedup(scan(spark, sfDir, "documents"), "text", "doc_id")
-      .where(expr("token_stats(text).n_tokens") >= 10)
+      .where(tokenStats(col("text")).getField("n_tokens") >= 10)
       .where(TextOps.systematicSample(col("doc_id"), keepBelow = 50))
       .select(col("doc_id"), posexplode(TextOps.chunkWindows(col("text"))))
       .select(col("doc_id"), col("pos").cast("int").as("chunk_no"),
@@ -311,11 +308,10 @@ object TextQueries {
     * would hinge on whether two libm `ln`s round the same way. The tfidf
     * value is still emitted (rounded) for consumers. */
   def tfidfTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.TokensOf.register(spark)
     val docs = scan(spark, sfDir, "documents")
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val tf = docs
-      .select(col("doc_id"), explode(expr("tokens_of(text)")).as("term"))
+      .select(col("doc_id"), explode(tokensOf(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
     // df as a window count over term on the ONE tf lineage — the former
     // tf.groupBy(term) + join-back referenced tf twice, and each
@@ -384,9 +380,8 @@ object TextQueries {
     * the native pass runs ~1 s. Ratios stay exact integer arithmetic
     * until the tie-free DECIMAL rounding. */
   def repetition(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.RepetitionStats.register(spark)
     scan(spark, sfDir, "documents")
-      .select(col("doc_id"), expr("repetition_stats(text)").as("rs"))
+      .select(col("doc_id"), repetitionStats(col("text")).as("rs"))
       .select(col("doc_id"),
         when(col("rs.total_line_chars") === 0, lit(0.0))
           .otherwise(col("rs.dup_line_chars").cast("double") /
@@ -467,9 +462,8 @@ object TextQueries {
     * O(capacity) state instead of a distinct-term shuffle — the spec
     * asserts sketch == exact on this corpus. */
   def heavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.TokensOf.register(spark)
     scan(spark, sfDir, "documents")
-      .select(explode(expr("tokens_of(text)")).as("term"))
+      .select(explode(tokensOf(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("term")).limit(20)
   }
@@ -502,8 +496,6 @@ object TextQueries {
     * compute the upstream (at 100 TB: the whole dedup stage) twice, since
     * nothing guarantees exchange reuse across the two branches. */
   def gopherSignals(docs: DataFrame): DataFrame = {
-    graft.functions.RepetitionStats.register(docs.sparkSession)
-    graft.functions.TokenStats.register(docs.sparkSession)
     // ALL token-derived signals come from ONE codegen-capable native
     // expression (graft.functions.TokenStats): the former staged
     // token-ARRAY projection was CodegenFallback (lambda array ops), so
@@ -514,8 +506,8 @@ object TextQueries {
     // whole-stage codegen, where subexpression elimination evaluates it
     // once; no token array is ever materialized.
     val withSig = docs
-      .withColumn("__ts", expr("token_stats(text)"))
-      .withColumn("__rs", expr("repetition_stats(text)"))
+      .withColumn("__ts", tokenStats(col("text")))
+      .withColumn("__rs", repetitionStats(col("text")))
     val reason =
       when(col("__ts.n_tokens") < 5, "too_short")
         .when(col("__ts.n_tokens") > 5000, "too_long")
@@ -778,7 +770,6 @@ object TextQueries {
     * oracle (bit-identical IEEE evaluation, validated on 7k random
     * pairs). At scale this runs on LSH candidate pairs only. */
   def jaroNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.JaroWinkler.register(spark)
     val base = scan(spark, sfDir, "documents")
       .where(col("doc_id") < 30)
       .select(col("doc_id"), substring(col("text"), 1, 60).as("t"))
@@ -792,7 +783,7 @@ object TextQueries {
     val a = all.select(col("doc_id").as("id_a"), col("t").as("ta"))
     val b = all.select(col("doc_id").as("id_b"), col("t").as("tb"))
     a.crossJoin(b).where(col("id_a") < col("id_b"))
-      .withColumn("jw", expr("jaro_winkler(ta, tb)"))
+      .withColumn("jw", jaroWinkler(col("ta"), col("tb")))
       .where(col("jw") >= 0.9)
       .select(col("id_a"), col("id_b"),
         col("jw").cast("decimal(28,6)").cast("double").as("jw"))
@@ -837,7 +828,6 @@ object TextQueries {
 
   def fuzzyNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     HashOracles.record(spark, sfDir)
-    graft.functions.JaroWinkler.register(spark)
     // No LevenshteinPrefilter.install here: the rule explicitly skips the
     // 3-arg threshold-bounded form t29 uses (threshold.isEmpty guard), so
     // installing it would be vestigial — the bound and its length-gap
@@ -879,7 +869,7 @@ object TextQueries {
         .withColumn("dist", levenshtein(col("pa.t"), col("pb.t"), 20))
         .where(col("dist") >= 0)
         .select(col("id_a"), col("id_b"), col("dist"),
-          expr("jaro_winkler(pa.t, pb.t)")
+          jaroWinkler(col("pa.t"), col("pb.t"))
             .cast("decimal(28,6)").cast("double").as("jw"))
     }
     Dedup.collapseExpand(all, "text", "doc_id", Dedup.Identity.RawText,
@@ -905,14 +895,14 @@ object TextQueries {
     * codegen'd scan-side map the proxy ran in — no join, no extra
     * shuffle, the merge table rides the task closure. */
   def sequencePack(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.Bpe.register(spark, trainedBpe(spark, sfDir))
+    val merges = trainedBpe(spark, sfDir)
     packLayout(
       scan(spark, sfDir, "documents")
         .select(col("doc_id"), posexplode(TextOps.chunkWindows(col("text"))))
         .select(col("doc_id"), col("pos").cast("int").as("chunk_no"),
           col("col").as("chunk")),
       shards = 32, budget = 256,
-      nTok = expr("bpe_doc_count(chunk)"))
+      nTok = bpeDocCount(col("chunk"), merges))
   }
 
   /** The shard-local packing core behind [[sequencePack]], public and
@@ -1017,19 +1007,16 @@ object TextQueries {
     * of growing as 1/97th of the corpus into an unbroadcastable side. A
     * real deployment passes a fixed benchmark table here. */
   def decontaminate(spark: SparkSession, sfDir: String): DataFrame = {
-    val gramHashes20 = (c: org.apache.spark.sql.Column) =>
-      org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        graft.functions.GramHashes(
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-            lower(trim(c))), k = 20))
     val docs = scan(spark, sfDir, "documents")
     val isEval = col("doc_id") % 97 === 0 && col("doc_id") < 1000000L
     val eval = docs.where(isEval)
     val corpus = docs.where(!isEval)
     val evalGrams = eval
-      .select(explode(gramHashes20(col("text"))).as("gh")).distinct()
+      .select(explode(gramHashes(lower(trim(col("text"))), k = 20)).as("gh"))
+      .distinct()
     val hits = corpus
-      .select(col("doc_id"), explode(gramHashes20(col("text"))).as("gh"))
+      .select(col("doc_id"),
+        explode(gramHashes(lower(trim(col("text"))), k = 20)).as("gh"))
       .join(broadcast(evalGrams), "gh")
       .select(col("doc_id")).distinct()
     corpus.join(hits, Seq("doc_id"), "left_anti")
@@ -1076,21 +1063,18 @@ object TextQueries {
     * or a contamination report. DuckDB oracle recomputes with string
     * grams (identical modulo 64-bit hash collisions, as t21). */
   def contaminationScore(spark: SparkSession, sfDir: String): DataFrame = {
-    val gramHashes20 = (c: org.apache.spark.sql.Column) =>
-      org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        graft.functions.GramHashes(
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-            lower(trim(c))), k = 20))
     // spread the under-split scan: the k=20 gram pass is the expensive
     // stage and runs scan-side (CoreOps.spreadSmallScan; measured
     // 1.71 -> 1.24 s min-of-5 at sf0.1)
     val docs = spreadSmallScan(scan(spark, sfDir, "documents"))
     val isEval = col("doc_id") % 97 === 0 && col("doc_id") < 1000000L
     val evalGrams = docs.where(isEval)
-      .select(explode(gramHashes20(col("text"))).as("gh")).distinct()
+      .select(explode(gramHashes(lower(trim(col("text"))), k = 20)).as("gh"))
+      .distinct()
     val corpus = docs.where(!isEval)
     val hits = corpus
-      .select(col("doc_id"), explode(gramHashes20(col("text"))).as("gh"))
+      .select(col("doc_id"),
+        explode(gramHashes(lower(trim(col("text"))), k = 20)).as("gh"))
       .distinct() // distinct (doc, gram): a gram repeated IN a doc is 1 hit
       .join(evalGrams.hint("shuffle_hash"), "gh")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit_grams"))
@@ -1170,8 +1154,6 @@ object TextQueries {
       BloomFilterMightContain, Literal => CatLit, ScalarSubquery}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     val B = org.apache.spark.sql.graftbridge.ColumnBridge
-    val gramHashes20 = (c: org.apache.spark.sql.Column) =>
-      B.column(graft.functions.GramHashes(B.expression(lower(trim(c))), k = 20))
     // NO scan spread here, unlike t30: the sketch gate kills almost every
     // gram in the map stage, so the scan-side work left is too light to
     // repay the spread exchange (A/B min-of-5: 0.87 s flat vs 1.34 s
@@ -1179,7 +1161,8 @@ object TextQueries {
     val docs = scan(spark, sfDir, "documents")
     val isEval = col("doc_id") % 97 === 0 && col("doc_id") < 1000000L
     val evalGrams = docs.where(isEval)
-      .select(explode(gramHashes20(col("text"))).as("gh")).distinct()
+      .select(explode(gramHashes(lower(trim(col("text"))), k = 20)).as("gh"))
+      .distinct()
     // Fixed-size sketch sized for the reference-set cardinality (1e5
     // items / 2^20 bits; measured ZERO false positives at harness SF —
     // the FP-removal join is therefore proven by the saturated-sketch
@@ -1191,7 +1174,8 @@ object TextQueries {
         CatLit(100000L), CatLit(numBits)).toAggregateExpression()).as("bf"))
     val corpus = docs.where(!isEval)
     val gated = corpus
-      .select(col("doc_id"), explode(gramHashes20(col("text"))).as("gh"))
+      .select(col("doc_id"),
+        explode(gramHashes(lower(trim(col("text"))), k = 20)).as("gh"))
       .where(B.column(BloomFilterMightContain(
         ScalarSubquery(sketch.queryExecution.analyzed),
         B.expression(col("gh")))))
@@ -1256,9 +1240,8 @@ object TextQueries {
     // s16 pattern), the groupBy and the term join both consume it with
     // their distribution already satisfied, and the global total becomes
     // a sum over the tiny term table instead of a third corpus pass.
-    graft.functions.TokensOf.register(spark)
     val toks = scan(spark, sfDir, "documents")
-      .select(col("doc_id"), explode(expr("tokens_of(text)")).as("term"))
+      .select(col("doc_id"), explode(tokensOf(col("text"))).as("term"))
       .repartition(col("term"))
     // tf counts doc_id (non-null by the repo-wide contract) rather than
     // lit(1) ON PURPOSE: count(*) would let column pruning strip doc_id
@@ -1331,7 +1314,6 @@ object TextQueries {
     * (Kneser-Ney); every consumer lineage re-enters through this one
     * exchange (AQE stage reuse, sameResult by construction). */
   private def bigramStream(docs: DataFrame): DataFrame = {
-    graft.functions.TokensOf.register(docs.sparkSession)
     // No explicit >=2-token filter: it would be pushed below the staging
     // projection with tokens_of inlined into the Filter (a second
     // tokenization per row — WSCG does not eliminate subexpressions
@@ -1341,7 +1323,7 @@ object TextQueries {
     val n = size(col("ts"))
     val bgLen = greatest(n - 1, lit(0))
     docs
-      .select(col("doc_id"), expr("tokens_of(text)").as("ts"))
+      .select(col("doc_id"), tokensOf(col("text")).as("ts"))
       .select(col("doc_id"), explode(arrays_zip(
         slice(col("ts"), lit(1), bgLen),
         slice(col("ts"), lit(2), bgLen))).as("b"))
@@ -1427,7 +1409,6 @@ object TextQueries {
     * keep_doc). Expected chunk length ≈ `mask` tokens. */
   def cdcLayout(docs: DataFrame, mask: Int): DataFrame = {
     require(mask >= 2, s"mask must be >= 2, got $mask")
-    graft.functions.TokensOf.register(docs.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("pos"))
     // explicit doc_id-keyed spread, not the planner's ENSURE_REQUIREMENTS
@@ -1438,7 +1419,7 @@ object TextQueries {
     // doc-keyed exchange total)
     val pe = graft.ops.CoreOps.spreadByKeys(
       docs.select(col("doc_id"),
-        posexplode(expr("tokens_of(text)")).as(Seq("pos", "tok"))),
+        posexplode(tokensOf(col("text"))).as(Seq("pos", "tok"))),
       col("doc_id"))
     val gram = concat(lit("cdc:"), concat_ws(" ",
       lag(col("tok"), 2).over(w), lag(col("tok"), 1).over(w), col("tok")))
@@ -1530,10 +1511,9 @@ object TextQueries {
   def dsirLayout(docs: DataFrame, targetSources: Seq[String],
                  k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.functions.TokensOf.register(docs.sparkSession)
     val toks = docs
       .select(col("doc_id"), col("source"),
-        explode(expr("tokens_of(text)")).as("term"))
+        explode(tokensOf(col("text"))).as("term"))
       .repartition(col("term"))
     val tf = toks.groupBy(col("term")).agg(
       count(col("doc_id")).as("cf"),
@@ -1779,9 +1759,8 @@ object TextQueries {
       transform(sequence(lit(1), size(ts) - lit(w - 1)),
         i => xxhash64(concat_ws(" ", slice(ts, i, lit(w))))))
       .otherwise(array().cast("array<bigint>"))
-    graft.functions.TokensOf.register(rows.sparkSession)
     val occ = rows
-      .select(col(idCol), col("m"), expr("tokens_of(__text)").as("ts"))
+      .select(col(idCol), col("m"), tokensOf(col("__text")).as("ts"))
       .select(col(idCol), col("m"), explode_outer(wins).as("w"))
       .groupBy(col(idCol), col("m"), col("w"))
       .agg(count(col("w")).as("occ")) // occ = 0 on the null row of a windowless doc
@@ -1872,10 +1851,10 @@ object TextQueries {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"))
       .orderBy(pmod(col("doc_id") * 48271, lit(97)), col("doc_id"))
-    graft.functions.Bpe.register(spark, trainedBpe(spark, sfDir))
+    val merges = trainedBpe(spark, sfDir)
     scan(spark, sfDir, "documents")
       .select(col("doc_id"), col("source"),
-        coalesce(expr("bpe_doc_count(text)").cast("long"), lit(0L))
+        coalesce(bpeDocCount(col("text"), merges).cast("long"), lit(0L))
           .as("n_tok"))
       .withColumn("start_tok",
         coalesce(sum(col("n_tok")).over(
@@ -1943,14 +1922,13 @@ object TextQueries {
     * (packLayout's pattern). Input needs (doc_id, text). */
   def prioritySample(docs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.functions.TokenStats.register(docs.sparkSession)
     // All four weight inputs from ONE codegen-capable native pass
     // (graft.functions.TokenStats) — the former staged token-array
     // projection was CodegenFallback; this keeps the whole weight
     // computation inside whole-stage codegen with no array materialized
     // (WeightedSampleSpec pins zero regex splits in the plan).
     val staged = docs.select(col("doc_id"), col("text"),
-      expr("token_stats(text)").as("ts"))
+      tokenStats(col("text")).as("ts"))
     val w = TextOps.qualityScore(col("ts.n_tokens"), col("ts.n_chars"),
       col("ts.n_punct"), col("ts.n_stop"))
     // u in (0,1]: first 32 md5 bits, +1 so u > 0, over 2^32 (exact: the
@@ -2067,13 +2045,13 @@ object TextQueries {
     * embedded merge table — only the trained merges are shared
     * constants, so a vocab-layout drift in the engine is caught. */
   def bpeTokenize(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.Bpe.register(spark, trainedBpe(spark, sfDir))
+    val merges = trainedBpe(spark, sfDir)
     scan(spark, sfDir, "documents")
       .select(col("doc_id"),
         posexplode(split(lower(col("text")), "[^a-z0-9']+")).as(Seq("pos", "w")))
       .where(length(col("w")) > 0)
       .select(col("doc_id"), col("pos").cast("int").as("word_pos"),
-        posexplode(expr("bpe_tokens(w)")).as(Seq("sym_pos", "token_id")))
+        posexplode(bpeTokens(col("w"), merges)).as(Seq("sym_pos", "token_id")))
       .select(col("doc_id"), col("word_pos"),
         col("sym_pos").cast("int").as("sym_pos"), col("token_id"))
   }
@@ -2117,14 +2095,13 @@ object TextQueries {
     * (doc_id, text), output (doc_id, n_words, n_bpe_tokens). */
   def bpeLayout(docs: DataFrame,
                 merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.Bpe.register(docs.sparkSession, merges)
     docs
       .select(col("doc_id"),
         explode(split(lower(col("text")), "[^a-z0-9']+")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy(col("doc_id"), col("w"))
       .agg(count(lit(1)).as("cnt"))
-      .withColumn("ntok", expr("bpe_count(w)").cast("long"))
+      .withColumn("ntok", bpeCount(col("w"), merges).cast("long"))
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).cast("long").as("n_words"),
         sum(col("cnt") * col("ntok")).cast("long").as("n_bpe_tokens"))
@@ -2315,7 +2292,6 @@ object TextQueries {
     * input (doc_id, text), output (id_a, id_b, n_shared). */
   def winnowLayout(docs: DataFrame, gramLen: Int, window: Int,
                    maxDf: Int = WinnowMaxDf): DataFrame = {
-    graft.functions.WinnowPrints.register(docs.sparkSession, gramLen, window)
     val base = docs.select(col("doc_id"), col("text"))
     val planted = docs
       .where(pmod(col("doc_id"), lit(10)) === 4 && length(col("text")) >= 200)
@@ -2329,7 +2305,8 @@ object TextQueries {
       // candidate branches (doc_id is never null; this is a no-op
       // filter that pins one identical subtree for all consumers)
       .where(col("doc_id").isNotNull)
-      .select(col("doc_id"), explode(expr("winnow_prints(text)")).as("fp"))
+      .select(col("doc_id"),
+        explode(winnowPrints(col("text"), gramLen, window)).as("fp"))
       // fingerprint ONCE (the s16 ReuseExchange idiom): four consumers
       // (df agg, rare join, both exact-verify joins) hang off this plan
       // — without a common Exchange each would re-run the O(n·L) md5
@@ -2727,11 +2704,11 @@ object TextQueries {
     * dump-time VALUES oracle re-derives them EXACTLY (rolling hash and
     * integer sums replayed in SQL — no float-order caveat anywhere). */
   def qualityClassifier(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.NbQuality.register(spark, trainedNb(spark, sfDir))
+    val table = trainedNb(spark, sfDir)
     scan(spark, sfDir, "documents")
       .where(col("text").isNotNull)
       .select(col("doc_id"),
-        expr("nb_quality_score(text)").as("score_1e9"))
+        nbQualityScore(col("text"), table).as("score_1e9"))
       .withColumn("pred", (col("score_1e9") > 0L).cast("int"))
   }
 
@@ -2817,13 +2794,12 @@ object TextQueries {
     * specs: input (source, text), output one row per source with its
     * integer quota. */
   def mixAllocLayout(docs: DataFrame, budget: Long): DataFrame = {
-    graft.functions.TokensOf.register(docs.sparkSession)
     val W = org.apache.spark.sql.expressions.Window
     val wAll = W.partitionBy().rowsBetween(
       W.unboundedPreceding, W.unboundedFollowing)
     docs
       .select(col("source"),
-        size(expr("tokens_of(text)")).cast("long").as("n_tok"))
+        size(tokensOf(col("text"))).cast("long").as("n_tok"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("n_tok")), lit(0L)).cast("long").as("n_tokens"))
@@ -3024,8 +3000,7 @@ object TextQueries {
     * input (doc_id, text), output the top-k (doc_id, n_hits, dl,
     * score). */
   def bm25Layout(docs: DataFrame, query: Seq[String], k: Int): DataFrame = {
-    graft.functions.TokensOf.register(docs.sparkSession)
-    val staged = docs.select(col("doc_id"), expr("tokens_of(text)").as("ts"))
+    val staged = docs.select(col("doc_id"), tokensOf(col("text")).as("ts"))
     val stats = staged.select(size(col("ts")).cast("long").as("dl"))
       .agg(count(lit(1)).as("n_docs"),
         coalesce(sum(col("dl")), lit(0L)).cast("long").as("total_dl"))
@@ -3263,10 +3238,10 @@ object TextQueries {
     * text dies in the scan-side projection, the trained table rides the
     * task closure, and the output is |docs| narrow rows. */
   def unigramTokenCount(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.UnigramLm.register(spark, trainedUnigram(spark, sfDir))
+    val vocab = trainedUnigram(spark, sfDir)
     scan(spark, sfDir, "documents")
       .select(col("doc_id"),
-        expr(s"${graft.functions.UnigramLm.docName}(text)").as("st"))
+        unigramDocStats(col("text"), vocab).as("st"))
       .select(col("doc_id"),
         coalesce(element_at(col("st"), 1), lit(0L)).as("n_words"),
         coalesce(element_at(col("st"), 2), lit(0L)).as("n_pieces"),
@@ -3372,13 +3347,11 @@ object TextQueries {
     * (lang, n_chars, text) scored under the given merge table. */
   def fertilityLayout(docs: DataFrame,
                       merges: Seq[(String, String)]): DataFrame = {
-    graft.functions.TokensOf.register(docs.sparkSession)
-    graft.functions.Bpe.register(docs.sparkSession, merges)
     docs
       .select(col("lang"), col("n_chars"),
-        coalesce(expr("bpe_doc_count(text)").cast("long"), lit(0L))
+        coalesce(bpeDocCount(col("text"), merges).cast("long"), lit(0L))
           .as("n_bpe"),
-        size(expr("tokens_of(text)")).cast("long").as("n_ws"))
+        size(tokensOf(col("text"))).cast("long").as("n_ws"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).cast("long").as("sum_chars"),

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native.{
+  floatCosine, intDot, ivfCell, ivfCells, lshBucketCodes}
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`). Two paths:
   *
@@ -22,14 +25,6 @@ object Similarity {
 
   /** Cast array<float> → array<double> once, at the edge. */
   def asDouble(v: Column): Column = transform(v, x => x.cast("double"))
-
-  /** Wrap a custom Catalyst Expression as a user-facing Column (and
-    * back) — the classic-API bridge for parameterized expressions that
-    * can't go through the SQL function registry (runtime array params). */
-  private def exprCol(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(e)
-  private def colExpr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)
 
   /** Sequential-fold dot product — deterministic order (left to right). */
   def dot(a: Column, b: Column): Column =
@@ -52,14 +47,13 @@ object Similarity {
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    graft.functions.FloatCosine.register(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
     c.crossJoin(broadcast(q))
       .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", expr("float_cosine(qv, cv)"))
+      .withColumn("sim", floatCosine(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
@@ -81,7 +75,6 @@ object Similarity {
   def hardNegatives(queries: DataFrame, corpus: DataFrame, k: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     labelCol: String = "label"): DataFrame = {
-    graft.functions.FloatCosine.register(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       col(labelCol).as("q_label"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
@@ -90,7 +83,7 @@ object Similarity {
       .orderBy(col("sim").desc, col("neighbor_id"))
     c.crossJoin(broadcast(q))
       .where(col("q_label") =!= col("neighbor_label"))
-      .withColumn("sim", expr("float_cosine(qv, cv)"))
+      .withColumn("sim", floatCosine(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
@@ -139,7 +132,6 @@ object Similarity {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding",
                        labelCol: String = "label"): DataFrame = {
-    graft.functions.FloatCosine.register(queries.sparkSession)
     // vectors stay FLOAT end to end; doubles exist only inside the
     // argmin cell expressions. The rerank is the native codegen
     // FloatCosine — the builtin zip_with/aggregate double-fold is
@@ -152,19 +144,16 @@ object Similarity {
     // DuckDB oracle — are unchanged (the s21 precedent).
     val c = corpus.select(col(idCol).as("neighbor_id"),
         col(vecCol).as("cv"), col(labelCol).as("neighbor_label"))
-      .withColumn("cell",
-        exprCol(graft.functions.IvfCell(
-          colExpr(asDouble(col("cv"))), centroids)))
+      .withColumn("cell", ivfCell(asDouble(col("cv")), centroids))
     val q0 = queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qv"), col(labelCol).as("q_label"))
     val qCells = q0.select(col("query_id"), col("qv"), col("q_label"),
-      explode(exprCol(graft.functions.IvfCells(
-        colExpr(asDouble(col("qv"))), centroids, nprobe))).as("cell"))
+      explode(ivfCells(asDouble(col("qv")), centroids, nprobe)).as("cell"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
     c.join(broadcast(qCells), Seq("cell"))
       .where(col("q_label") =!= col("neighbor_label"))
-      .withColumn("sim", expr("float_cosine(qv, cv)"))
+      .withColumn("sim", floatCosine(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
@@ -202,8 +191,8 @@ object Similarity {
     // unchanged: same (table, code) keys, same candidate set.
     def coded(df: DataFrame, id: String, vec: String): DataFrame = {
       val base = df.select(col(idCol).as(id), asDouble(col(vecCol)).as(vec))
-      val codesCol = exprCol(graft.functions.LshBucketCodes(
-        colExpr(col(vec)), planesPerTable, tables, dim, seed))
+      val codesCol =
+        lshBucketCodes(col(vec), planesPerTable, tables, dim, seed)
       base.select(col(id), col(vec),
         posexplode(codesCol).as(Seq("table", "code")))
     }
@@ -262,7 +251,6 @@ object Similarity {
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       planesPerTable: Int = 8, tables: Int = 6,
                       dim: Int = 64, seed: Long = 137L): DataFrame = {
-    graft.functions.FloatCosine.register(df.sparkSession)
     def pairs(base: DataFrame): DataFrame =
       lshNearDupPairsFlat(base, threshold, planesPerTable, tables, dim, seed)
     graft.dedup.Dedup.collapseExpand(df, vecCol, idCol,
@@ -270,7 +258,7 @@ object Similarity {
       flatPairs = () =>
         pairs(df.select(col(idCol).as("id"), col(vecCol).as("vf"))),
       intra = (intraPairs, reps) => intraPairs
-        .join(reps.withColumn("s0", expr("float_cosine(vf, vf)"))
+        .join(reps.withColumn("s0", floatCosine(col("vf"), col("vf")))
           .where(col("s0") >= threshold)
           .select(col("ek"), round(col("s0"), 6).as("sim")), "ek")
         .select(col("id_a"), col("id_b"), col("sim")),
@@ -284,8 +272,8 @@ object Similarity {
                       planesPerTable: Int = 8, tables: Int = 6,
                       dim: Int = 64, seed: Long = 137L): DataFrame = {
     val codes = base.select(col("id"),
-      posexplode(exprCol(graft.functions.LshBucketCodes(
-        colExpr(asDouble(col("vf"))), planesPerTable, tables, dim, seed)))
+      posexplode(lshBucketCodes(asDouble(col("vf")),
+        planesPerTable, tables, dim, seed))
         .as(Seq("table", "code")))
     val cands = codes.as("a").join(codes.as("b"),
         col("a.table") === col("b.table") && col("a.code") === col("b.code") &&
@@ -294,7 +282,7 @@ object Similarity {
       .distinct()
     cands.join(base.as("va"), col("id_a") === col("va.id"))
       .join(base.as("vb"), col("id_b") === col("vb.id"))
-      .withColumn("sim", expr("float_cosine(va.vf, vb.vf)"))
+      .withColumn("sim", floatCosine(col("va.vf"), col("vb.vf")))
       .where(col("sim") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
   }
@@ -317,7 +305,6 @@ object Similarity {
               centroids: Array[Array[Double]], k: Int, nprobe: Int = 2,
               idCol: String = "vec_id",
               vecCol: String = "embedding"): DataFrame = {
-    graft.functions.FloatCosine.register(queries.sparkSession)
     // the hardNegativesIvf shape (r18 ×100 fix applied here too): on a
     // FLOAT corpus the vectors stay float end to end — doubles exist
     // only inside the argmin cell expressions — and the rerank is the
@@ -341,8 +328,7 @@ object Similarity {
     val (c, q0) =
       if (isFloat) (
         corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-          .withColumn("cell", exprCol(graft.functions.IvfCell(
-            colExpr(asDouble(col("cv"))), centroids))),
+          .withColumn("cell", ivfCell(asDouble(col("cv")), centroids)),
         queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
       else (
         ivfAssign(corpus, centroids, idCol, vecCol)
@@ -351,14 +337,13 @@ object Similarity {
         queries.select(col(idCol).as("query_id"),
           asDouble(col(vecCol)).as("qv")))
     val qCells = q0.select(col("query_id"), col("qv"),
-      explode(exprCol(graft.functions.IvfCells(
-        colExpr(asDouble(col("qv"))), centroids, nprobe))).as("cell"))
+      explode(ivfCells(asDouble(col("qv")), centroids, nprobe)).as("cell"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
     c.join(broadcast(qCells), Seq("cell"))
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("sim",
-        if (isFloat) expr("float_cosine(qv, cv)")
+        if (isFloat) floatCosine(col("qv"), col("cv"))
         else cosine(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -399,8 +384,6 @@ object Similarity {
                     coarseK: Int = 50,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame = {
-    graft.functions.FloatCosine.register(queries.sparkSession)
-    graft.functions.IntDot.register(queries.sparkSession)
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qv"), quantize8(col(vecCol)).as("qq"))
     val c = corpus.select(col(idCol).as("neighbor_id"),
@@ -410,7 +393,7 @@ object Similarity {
     val cand = c.crossJoin(broadcast(q.select(col("query_id"), col("qq"))))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        expr("int_dot(qq, qc)").as("coarse"))
+        intDot(col("qq"), col("qc")).as("coarse"))
       .withColumn("crank", row_number().over(wc))
       .where(col("crank") <= coarseK)
       .select(col("query_id"), col("neighbor_id"))
@@ -420,7 +403,7 @@ object Similarity {
       .orderBy(col("sim").desc, col("neighbor_id"))
     fetch.join(broadcast(cand), Seq("neighbor_id"))
       .join(broadcast(q.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .withColumn("sim", expr("float_cosine(qv, cv)"))
+      .withColumn("sim", floatCosine(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(wr))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
@@ -564,14 +547,11 @@ object Similarity {
              k: Int, coarseK: Int = 50,
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
-    graft.functions.FloatCosine.register(queries.sparkSession)
-    graft.functions.IntDot.register(queries.sparkSession)
     val m = codebooks.length
     val sub = codebooks(0)(0).length
     val qcb = quantizePQ(codebooks)
     val codeCols = (0 until m).map { s =>
-      exprCol(graft.functions.IvfCell(
-        colExpr(slice(col("v"), s * sub + 1, sub)), codebooks(s))).as(s"c$s")
+      ivfCell(slice(col("v"), s * sub + 1, sub), codebooks(s)).as(s"c$s")
     }
     val recon = concat((0 until m).map { s =>
       element_at(typedlit(qcb(s).map(_.toSeq).toSeq), col(s"c$s") + 1)
@@ -580,7 +560,7 @@ object Similarity {
       .select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("v"))
       .select(col("neighbor_id") +: codeCols: _*)
       .withColumn("recon", recon)
-      .withColumn("rnorm2", expr("int_dot(recon, recon)"))
+      .withColumn("rnorm2", intDot(col("recon"), col("recon")))
       .select(col("neighbor_id"), col("recon"), col("rnorm2"))
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qv"), quantize8(col(vecCol)).as("qq"))
@@ -589,7 +569,7 @@ object Similarity {
     val cand = enc.crossJoin(broadcast(q.select(col("query_id"), col("qq"))))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (col("rnorm2") - lit(2L) * expr("int_dot(qq, recon)")).as("coarse"))
+        (col("rnorm2") - lit(2L) * intDot(col("qq"), col("recon"))).as("coarse"))
       .withColumn("crank", row_number().over(wc))
       .where(col("crank") <= coarseK)
       .select(col("query_id"), col("neighbor_id"))
@@ -599,7 +579,7 @@ object Similarity {
       .orderBy(col("sim").desc, col("neighbor_id"))
     fetch.join(broadcast(cand), Seq("neighbor_id"))
       .join(broadcast(q.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .withColumn("sim", expr("float_cosine(qv, cv)"))
+      .withColumn("sim", floatCosine(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(wr))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
@@ -667,8 +647,6 @@ object Similarity {
                 k: Int, nprobe: Int = 2, coarseK: Int = 50,
                 idCol: String = "vec_id",
                 vecCol: String = "embedding"): DataFrame = {
-    graft.functions.FloatCosine.register(queries.sparkSession)
-    graft.functions.IntDot.register(queries.sparkSession)
     val m = codebooks.length
     val sub = codebooks(0)(0).length
     val qcb = quantizePQ(codebooks)
@@ -677,8 +655,7 @@ object Similarity {
       .withColumn("r", zip_with(col("v"),
         element_at(centLit, col("cell") + 1), (a, b) => a - b))
     val codeCols = (0 until m).map { s =>
-      exprCol(graft.functions.IvfCell(
-        colExpr(slice(col("r"), s * sub + 1, sub)), codebooks(s))).as(s"c$s")
+      ivfCell(slice(col("r"), s * sub + 1, sub), codebooks(s)).as(s"c$s")
     }
     val recon = concat((0 until m).map { s =>
       element_at(typedlit(qcb(s).map(_.toSeq).toSeq), col(s"c$s") + 1)
@@ -686,25 +663,24 @@ object Similarity {
     val enc = assigned
       .select(Seq(col(idCol).as("neighbor_id"), col("cell")) ++ codeCols: _*)
       .withColumn("recon", recon)
-      .withColumn("rnorm2", expr("int_dot(recon, recon)"))
+      .withColumn("rnorm2", intDot(col("recon"), col("recon")))
       .select(col("neighbor_id"), col("cell"), col("recon"), col("rnorm2"))
     val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       asDouble(col(vecCol)).as("qd"))
     val qProbes = q0
       .select(col("query_id"), col("qd"),
-        explode(exprCol(graft.functions.IvfCells(
-          colExpr(col("qd")), centroids, nprobe))).as("cell"))
+        explode(ivfCells(col("qd"), centroids, nprobe)).as("cell"))
       .withColumn("qr", zip_with(col("qd"),
         element_at(centLit, col("cell") + 1), (a, b) => a - b))
       .withColumn("qq", quantize8(col("qr")))
-      .withColumn("qnorm2", expr("int_dot(qq, qq)"))
+      .withColumn("qnorm2", intDot(col("qq"), col("qq")))
       .select(col("query_id"), col("cell"), col("qq"), col("qnorm2"))
     val wc = Window.partitionBy(col("query_id"))
       .orderBy(col("coarse"), col("neighbor_id"))
     val cand = enc.join(broadcast(qProbes), Seq("cell"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        (col("qnorm2") - lit(2L) * expr("int_dot(qq, recon)")
+        (col("qnorm2") - lit(2L) * intDot(col("qq"), col("recon"))
           + col("rnorm2")).as("coarse"))
       .withColumn("crank", row_number().over(wc))
       .where(col("crank") <= coarseK)
@@ -715,7 +691,7 @@ object Similarity {
       .orderBy(col("sim").desc, col("neighbor_id"))
     fetch.join(broadcast(cand), Seq("neighbor_id"))
       .join(broadcast(q0.select(col("query_id"), col("qv"))), Seq("query_id"))
-      .withColumn("sim", expr("float_cosine(qv, cv)"))
+      .withColumn("sim", floatCosine(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(wr))
       .where(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
@@ -726,22 +702,6 @@ object Similarity {
     * `centroids` (tiny, broadcast). Centroids would come from a
     * sample-and-kmeans step in production; any fixed centroid set works
     * for the plumbing. */
-  /** The IvfCell argmin as a bare Column — for callers that need the
-    * cell WITHOUT ivfAssign's (id, v, cell) projection (e.g. s13 keeps
-    * a float copy of the vector alongside for the native cosine). */
-  def assignCell(v: Column, centroids: Array[Array[Double]]): Column =
-    exprCol(graft.functions.IvfCell(colExpr(v), centroids))
-
-  /** The IvfCells argmin-k as a bare Column: the `n` nearest cells in
-    * (squared distance asc, cell asc) order — element 0 is assignCell's
-    * argmin, element 1 the SECOND-nearest cell. s13's oversize-cell
-    * sub-bucketing keys on element 1 (a deterministic split that needs
-    * no extra training and that DuckDB mirrors as the rn=2 row of the
-    * same window the rn=1 assignment already uses). */
-  def assignCells(v: Column, centroids: Array[Array[Double]],
-                  n: Int): Column =
-    exprCol(graft.functions.IvfCells(colExpr(v), centroids, n))
-
   def ivfAssign(df: DataFrame, centroids: Array[Array[Double]],
                 idCol: String = "vec_id",
                 vecCol: String = "embedding"): DataFrame = {
@@ -750,7 +710,6 @@ object Similarity {
     // same accumulation order and strict-< first-wins tie rule, so
     // assignments — and the DuckDB oracle — are unchanged
     val withV = df.select(col(idCol), asDouble(col(vecCol)).as("v"))
-    withV.withColumn("cell",
-      exprCol(graft.functions.IvfCell(colExpr(col("v")), centroids)))
+    withV.withColumn("cell", ivfCell(col("v"), centroids))
   }
 }

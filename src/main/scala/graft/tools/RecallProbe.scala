@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native.{floatCosine, jaroWinkler}
+
 /** Independent recall cross-check for the LSH-fed near-dup closures
   * (t29 fuzzy text, s15 ANN cosine) — r13 verdict item 4.
   *
@@ -80,7 +82,6 @@ object RecallProbe {
     * The |len gap| ≤ 20 prefilter is sound (lev ≥ length gap), keeping
     * the probe's crossJoin affordable at real-×10 slice sizes. */
   def t29(spark: SparkSession, dir: String, n: Int, r: Int): Probe = {
-    graft.functions.JaroWinkler.register(spark)
     val slice = graft.queries.TextQueries.fuzzyCorpus(spark, dir)
       .where(sliceKey(col("doc_id"), n) === r)
     val p = slice.select(col("doc_id").as("id"),
@@ -91,7 +92,7 @@ object RecallProbe {
       .withColumn("dist", levenshtein(col("a.t"), col("b.t"), 20))
       .where(col("dist") >= 0)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"), col("dist"),
-        expr("jaro_winkler(a.t, b.t)")
+        jaroWinkler(col("a.t"), col("b.t"))
           .cast("decimal(28,6)").cast("double").as("jw"))
     val pipe = graft.queries.TextQueries.fuzzyNearDup(spark, dir)
       .where(sliceKey(col("id_a"), n) === r &&
@@ -102,13 +103,12 @@ object RecallProbe {
   /** s15: brute-force exact cosine ≥ 0.8 over a 1-in-N slice of the
     * exact s15 corpus vs the production pipeline. */
   def s15(spark: SparkSession, dir: String, n: Int, r: Int): Probe = {
-    graft.functions.FloatCosine.register(spark)
     val slice = graft.queries.SimilarityQueries.annCorpus(spark, dir)
       .where(sliceKey(col("vec_id"), n) === r)
     val v = slice.select(col("vec_id").as("id"), col("embedding").as("vf"))
     val truth = v.as("a").crossJoin(v.as("b"))
       .where(col("a.id") < col("b.id"))
-      .withColumn("sim", expr("float_cosine(a.vf, b.vf)"))
+      .withColumn("sim", floatCosine(col("a.vf"), col("b.vf")))
       .where(col("sim") >= 0.8)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         round(col("sim"), 6).as("sim"))

@@ -3,9 +3,9 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Expression ⇄ Column bridge for custom Catalyst expressions whose
-  * parameters are runtime values (seeded plane/centroid arrays) and so
-  * cannot go through the SQL function registry's literal-only builder.
+/** Expression ⇄ Column bridge: how [[graft.functions.Native]] calls
+  * graft's Catalyst expressions as Columns, with their runtime parameters
+  * (seeded planes, centroids, trained tables) as plain arguments.
   *
   * `classic.ExpressionUtils` is `private[sql]`; placing this one-file
   * shim in an `org.apache.spark.sql` subpackage is the standard pattern

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,6 +53,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     (out, stages)
   }
+
+  /** Registers graft's SQL surface ([[graft.functions.GraftExtensions]])
+    * on `s`, so a spec's SQL strings (`expr("float_cosine(a, b)")`)
+    * resolve there. The library itself never needs the names. */
+  def registerSqlFunctions(s: SparkSession = spark): Unit =
+    graft.functions.GraftExtensions.functions.foreach {
+      case (name, clazz, builder) =>
+        s.sessionState.functionRegistry.registerFunction(FunctionIdentifier(name),
+          new ExpressionInfo(clazz.getName, name), builder)
+    }
 
   override def afterAll(): Unit = {
     synchronized {

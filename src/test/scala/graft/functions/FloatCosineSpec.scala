@@ -9,7 +9,7 @@ class FloatCosineSpec extends SparkSpec {
   import spark.implicits._
 
   test("native expression matches the builtin double-fold bit-for-bit") {
-    FloatCosine.register(spark)
+    registerSqlFunctions()
     val emb = spark.read.parquet(s"$sf/embeddings.parquet").limit(100)
     val pairs = emb.select(col("vec_id").as("ia"), col("embedding").as("a"))
       .crossJoin(emb.select(col("vec_id").as("ib"), col("embedding").as("b")))
@@ -30,7 +30,7 @@ class FloatCosineSpec extends SparkSpec {
     (new GraftExtensions).apply(new org.apache.spark.sql.SparkSessionExtensions)
     val b = GraftExtensions.functions.map(f => f._1 -> f._3).toMap
     val s = Literal("x")
-    assert(b.size == 9)
+    assert(b.size == 12)
     assert(b("int_dot")(Seq(s, Literal("y")))
       .asInstanceOf[IntDot].left == s)
     // correct arity → the right expression with args in order
@@ -44,6 +44,10 @@ class FloatCosineSpec extends SparkSpec {
     assert(b("repetition_stats")(Seq(s)).isInstanceOf[RepetitionStats])
     assert(b("jaro_winkler")(Seq(s, Literal("y")))
       .asInstanceOf[JaroWinkler].left == s)
+    assert(b("tokens_of")(Seq(s)).asInstanceOf[TokensOf].child == s)
+    assert(b("token_stats")(Seq(s)) == TokenStats(s, TokenStats.enStopwords))
+    assert(b("stopword_counts")(Seq(s)) ==
+      StopwordCounts(s, StopwordCounts.langSets))
     val agg = b("topk_values")(Seq(s, Literal(5)))
       .asInstanceOf[AggregateExpression]
     assert(agg.aggregateFunction.asInstanceOf[SpaceSavingTopK].k == 5)
@@ -57,7 +61,7 @@ class FloatCosineSpec extends SparkSpec {
   }
 
   test("handles degenerate inputs via eval path") {
-    FloatCosine.register(spark)
+    registerSqlFunctions()
     val df = Seq((Array(1.0f, 0.0f), Array(1.0f, 0.0f)),
       (Array(1.0f, 2.0f), Array(-1.0f, -2.0f))).toDF("a", "b")
     val r = df.select(expr("float_cosine(a, b)").as("c")).as[Double].collect()
@@ -66,7 +70,7 @@ class FloatCosineSpec extends SparkSpec {
   }
 
   test("zero-norm and empty vectors yield NULL, never NaN (sort safety)") {
-    FloatCosine.register(spark)
+    registerSqlFunctions()
     val df = Seq(
       (Array(0.0f, 0.0f), Array(1.0f, 2.0f)),   // zero left
       (Array.empty[Float], Array.empty[Float]), // empty both
@@ -92,7 +96,7 @@ class FloatCosineSpec extends SparkSpec {
     // routes must hand a malformed (length-mismatched) vector the SAME
     // verdict — NULL, row filtered from top-k — or candidate membership
     // would differ by schema route (r19 advice item).
-    FloatCosine.register(spark)
+    registerSqlFunctions()
     val df = Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f, 5.0f)))
       .toDF("a", "b")
     val native = df.select(expr("float_cosine(a, b)").as("c")).collect()

@@ -8,7 +8,7 @@ class GramHashesSpec extends SparkSpec {
   import spark.implicits._
 
   test("ascending distinct hashes, one per distinct 5-gram") {
-    GramHashes.register(spark)
+    registerSqlFunctions()
     val text = "abcdefabcdef" // 8 positions, 6 distinct 5-grams
     val hs = Seq(Tuple1(text)).toDF("t")
       .select(expr("gram_hashes(t)").as("h")).as[Seq[Long]].collect().head
@@ -18,8 +18,7 @@ class GramHashesSpec extends SparkSpec {
   }
 
   test("Jaccard via gram_hashes + merge intersect equals string-set Jaccard") {
-    GramHashes.register(spark)
-    SortedIntersectSize.register(spark)
+    registerSqlFunctions()
     val (a, b) = ("the quick brown fox jumps", "the quick brown cat jumps")
     val row = Seq((a, b)).toDF("a", "b")
       .select(expr("intersect_size_sorted(gram_hashes(a), gram_hashes(b))")
@@ -36,7 +35,7 @@ class GramHashesSpec extends SparkSpec {
   }
 
   test("short strings contribute their whole text as one gram (builtin parity)") {
-    GramHashes.register(spark)
+    registerSqlFunctions()
     // rawShingles emits substr(1, k) of the whole short string — one gram;
     // the native path must agree or short-doc near-dup pairs differ by k
     val hs = Seq(Tuple1(""), Tuple1("abc"), Tuple1("abc"))

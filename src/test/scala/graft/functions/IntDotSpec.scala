@@ -8,7 +8,7 @@ class IntDotSpec extends SparkSpec {
   import spark.implicits._
 
   test("native int_dot matches the builtin long-fold exactly") {
-    IntDot.register(spark)
+    registerSqlFunctions()
     val pairs = Seq(
       (Seq(1, 2, 3), Seq(4, 5, 6)),           // 4+10+18 = 32
       (Seq(-127, 127, 0), Seq(127, 127, 9)),  // -16129+16129+0 = 0
@@ -25,7 +25,7 @@ class IntDotSpec extends SparkSpec {
   }
 
   test("length mismatch truncates; NULL input yields NULL") {
-    IntDot.register(spark)
+    registerSqlFunctions()
     val df = Seq(
       (1L, Some(Seq(2, 3, 99)), Some(Seq(10, 10))), // truncated: 20+30
       (2L, None: Option[Seq[Int]], Some(Seq(1)))
@@ -39,7 +39,7 @@ class IntDotSpec extends SparkSpec {
   test("worst-case int8 magnitudes cannot overflow the long accumulator") {
     // 64 products of ±127·±127 — the s14 shape's extreme; also the bound
     // that makes a DuckDB double dot product integer-exact (< 2^53)
-    IntDot.register(spark)
+    registerSqlFunctions()
     val a = Seq.fill(64)(127)
     val out = Seq((a, a)).toDF("a", "b")
       .select(expr("int_dot(a, b)").as("d")).head().getLong(0)

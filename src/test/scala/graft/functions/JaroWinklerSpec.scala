@@ -30,7 +30,7 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("SQL surface + codegen path agree with direct compute") {
-    JaroWinkler.register(spark)
+    registerSqlFunctions()
     val rnd = new scala.util.Random(5)
     def s(): String = Seq.fill(rnd.nextInt(15))(('a' + rnd.nextInt(4)).toChar).mkString
     val pairs = Seq.fill(300)((s(), s()))

@@ -8,7 +8,7 @@ class MinHashSigSpec extends SparkSpec {
   import spark.implicits._
 
   test("signature is 32 longs, deterministic, identical for identical text") {
-    MinHashSig.register(spark)
+    registerSqlFunctions()
     val df = Seq((1L, "the quick brown fox"), (2L, "the quick brown fox"),
       (3L, "totally different words here")).toDF("id", "t")
     val sigs = df.select(col("id"), expr("minhash_sig(t)").as("s"))
@@ -23,7 +23,7 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   test("near-dup texts agree on most signature components") {
-    MinHashSig.register(spark)
+    registerSqlFunctions()
     val df = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy cat")).toDF("id", "t")
     val s = df.select(expr("minhash_sig(t)").as("s")).as[Seq[Long]].collect()
@@ -32,7 +32,7 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   test("short and empty strings yield the sentinel signature, no crash") {
-    MinHashSig.register(spark)
+    registerSqlFunctions()
     val s = Seq(Tuple1(""), Tuple1("abc")).toDF("t")
       .select(expr("minhash_sig(t)").as("s")).as[Seq[Long]].collect()
     assert(s.forall(_.forall(_ == Long.MaxValue))) // no window of width 5

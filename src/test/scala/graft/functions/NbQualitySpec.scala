@@ -46,11 +46,10 @@ class NbQualitySpec extends SparkSpec {
   test("registered codegen scalar equals the plain-Scala score, " +
     "word-free text scores exactly the bias, null stays null") {
     val t = NbQuality.train(sample)
-    NbQuality.register(spark, t)
     val texts = Seq((1L, "alpha beta, ZORK! gamma"), (2L, "?!..."),
       (3L, ""), (4L, null))
     val got = texts.toDF("id", "text")
-      .selectExpr("id", "nb_quality_score(text) AS s")
+      .select(col("id"), Native.nbQualityScore(col("text"), t).as("s"))
       .collect()
       .map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap

@@ -9,7 +9,7 @@ class RepetitionStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def stats(text: String): (Int, Int, Int, Int) = {
-    RepetitionStats.register(spark)
+    registerSqlFunctions()
     val r = Seq(Tuple1(text)).toDF("t")
       .select(expr("repetition_stats(t)").as("rs"))
       .select("rs.total_line_chars", "rs.dup_line_chars", "rs.n_tokens",
@@ -37,7 +37,7 @@ class RepetitionStatsSpec extends SparkSpec {
   }
 
   test("native expression agrees with the declarative lambdas on real docs") {
-    RepetitionStats.register(spark)
+    registerSqlFunctions()
     val docs = spark.read.parquet(s"$sf/documents.parquet").limit(200)
     val both = docs.select(
       expr("repetition_stats(text)").as("rs"),

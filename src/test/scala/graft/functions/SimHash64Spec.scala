@@ -10,7 +10,7 @@ class SimHash64Spec extends SparkSpec {
   private def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   test("identical token multisets collide; token order matters not") {
-    SimHash64.register(spark)
+    registerSqlFunctions()
     val sh = Seq((1L, "alpha beta gamma"), (2L, "gamma  alpha\tbeta"),
       (3L, "completely unrelated stuff"))
       .toDF("id", "t")
@@ -21,7 +21,7 @@ class SimHash64Spec extends SparkSpec {
   }
 
   test("near-dup texts land within small Hamming distance, far texts do not") {
-    SimHash64.register(spark)
+    registerSqlFunctions()
     val base = "the quick brown fox jumps over the lazy dog again and again"
     val near = base.replace("dog", "cat")
     val far = "entirely different words compose this unrelated sentence body"
@@ -44,7 +44,7 @@ class SimHash64Spec extends SparkSpec {
   }
 
   test("empty / whitespace-only strings yield 0L, no crash") {
-    SimHash64.register(spark)
+    registerSqlFunctions()
     val s = Seq("", "   \t  ").map(Tuple1(_)).toDF("t")
       .select(expr("simhash64(t)").as("s")).as[Long].collect()
     assert(s.forall(_ == 0L))

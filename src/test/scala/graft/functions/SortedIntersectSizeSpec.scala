@@ -8,7 +8,7 @@ class SortedIntersectSizeSpec extends SparkSpec {
   import spark.implicits._
 
   test("merge scan equals size(array_intersect) on sorted distinct inputs") {
-    SortedIntersectSize.register(spark)
+    registerSqlFunctions()
     val rnd = new scala.util.Random(7)
     val rows = (1 to 200).map { _ =>
       val a = (1 to rnd.nextInt(50) + 1).map(_ => rnd.nextInt(100).toLong)
@@ -25,7 +25,7 @@ class SortedIntersectSizeSpec extends SparkSpec {
   }
 
   test("empty and disjoint arrays") {
-    SortedIntersectSize.register(spark)
+    registerSqlFunctions()
     val r = Seq((Seq.empty[Long], Seq(1L, 2L)), (Seq(1L, 3L), Seq(2L, 4L)),
       (Seq(5L), Seq(5L)))
       .toDF("a", "b")

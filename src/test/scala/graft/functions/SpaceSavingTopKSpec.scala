@@ -8,7 +8,7 @@ class SpaceSavingTopKSpec extends SparkSpec {
   import spark.implicits._
 
   test("recovers the exact top-k on skewed data, with honest error bounds") {
-    SpaceSavingTopK.register(spark)
+    registerSqlFunctions()
     // Zipf-ish: token i appears ~1000/i times; heavy hitters dominate
     val rows = (1 to 50).flatMap(i => Seq.fill(1000 / i)(s"tok$i"))
     val df = rows.toDF("t").repartition(8) // force partial+merge path
@@ -27,7 +27,7 @@ class SpaceSavingTopKSpec extends SparkSpec {
   }
 
   test("sketch state stays bounded: far more distinct values than capacity") {
-    SpaceSavingTopK.register(spark)
+    registerSqlFunctions()
     // 10k distinct values, capacity is 8*3=24 — must not OOM or crash,
     // and the guaranteed-heavy hitter must survive
     val rows = (1 to 10000).map(i => s"v$i") ++ Seq.fill(5000)("heavy")
@@ -40,7 +40,7 @@ class SpaceSavingTopKSpec extends SparkSpec {
   }
 
   test("heavy hitters over the documents corpus match exact counting") {
-    SpaceSavingTopK.register(spark)
+    registerSqlFunctions()
     val toks = spark.read.parquet(s"$sf/documents.parquet")
       .select(explode(graft.text.TextOps.tokens(col("text"))).as("t"))
     val sketch = toks.agg(expr("topk_values(t, 10)").as("top"))

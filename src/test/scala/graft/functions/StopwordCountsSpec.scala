@@ -19,7 +19,7 @@ class StopwordCountsSpec extends SparkSpec {
   }
 
   private def native(df: org.apache.spark.sql.DataFrame) = {
-    StopwordCounts.register(df.sparkSession)
+    registerSqlFunctions(df.sparkSession)
     df.select(col("text") +:
       TextOps.langStopwords.map(_._1).zipWithIndex.map { case (l, i) =>
         expr("stopword_counts(text)").getItem(i).as(s"s_$l")
@@ -50,7 +50,7 @@ class StopwordCountsSpec extends SparkSpec {
   test("interpreted eval agrees with codegen") {
     val sess = spark
     import sess.implicits._
-    StopwordCounts.register(spark)
+    registerSqlFunctions()
     def run() = Seq("the 的 el le der und").toDF("text")
       .select(expr("stopword_counts(text)")).collect().toSeq.map(_.getSeq[Long](0))
     val on = run()

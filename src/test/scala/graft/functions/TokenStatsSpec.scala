@@ -26,7 +26,7 @@ class TokenStatsSpec extends SparkSpec {
       length(col("text")).cast("long").as("n_chars"))
 
   private def native(df: org.apache.spark.sql.DataFrame) = {
-    TokenStats.register(df.sparkSession)
+    registerSqlFunctions(df.sparkSession)
     df.select(col("text"), col("ts.n_tokens"), col("ts.sum_tok_len"),
       col("ts.n_stop"), col("ts.n_punct"), col("ts.n_chars"))
   }
@@ -43,7 +43,7 @@ class TokenStatsSpec extends SparkSpec {
 
   test("parity with the declarative formulation on the sf corpus") {
     val docs = spark.read.parquet(s"$sf/documents.parquet").select("text")
-    TokenStats.register(spark)
+    registerSqlFunctions()
     val joined = declarative(docs).withColumn("ts", expr("token_stats(text)"))
     val diverging = joined.where(
       col("ts.n_tokens") =!= col("n_tokens") ||
@@ -76,7 +76,7 @@ class TokenStatsSpec extends SparkSpec {
   test("null text yields a null struct, exactly like the declarative path") {
     val sess = spark
     import sess.implicits._
-    TokenStats.register(spark)
+    registerSqlFunctions()
     val df = Seq[Option[String]](Some("a b"), None).toDF("text")
     val got = df.select(expr("token_stats(text)").as("ts"))
       .select(col("ts").isNull).collect().map(_.getBoolean(0)).toSeq
@@ -87,7 +87,7 @@ class TokenStatsSpec extends SparkSpec {
     val texts = Seq("the İ café and, of.", "", "one")
     val sess = spark
     import sess.implicits._
-    TokenStats.register(spark)
+    registerSqlFunctions()
     def run(): Seq[Row] = texts.toDF("text")
       .select(expr("token_stats(text)").as("ts")).select("ts.*")
       .collect().toSeq

@@ -12,7 +12,7 @@ import graft.text.TextOps
 class TokensOfSpec extends SparkSpec {
 
   private def bothForms(df: org.apache.spark.sql.DataFrame) = {
-    TokensOf.register(df.sparkSession)
+    registerSqlFunctions(df.sparkSession)
     df.select(TextOps.tokens(col("text")).as("d"),
       expr("tokens_of(text)").as("n"))
   }
@@ -47,7 +47,7 @@ class TokensOfSpec extends SparkSpec {
   test("null text yields null, exactly like the declarative path") {
     val sess = spark
     import sess.implicits._
-    TokensOf.register(spark)
+    registerSqlFunctions()
     val got = Seq[Option[String]](Some("a b"), None).toDF("text")
       .select(expr("tokens_of(text)").isNull).collect().map(_.getBoolean(0))
     assert(got.toSeq == Seq(false, true))
@@ -56,7 +56,7 @@ class TokensOfSpec extends SparkSpec {
   test("interpreted eval agrees with codegen") {
     val sess = spark
     import sess.implicits._
-    TokensOf.register(spark)
+    registerSqlFunctions()
     def run() = Seq("The Quick brown\tfox").toDF("text")
       .select(expr("tokens_of(text)")).collect().map(_.getSeq[String](0)).toSeq
     val on = run()

@@ -95,7 +95,7 @@ class CdcChunkSpec extends SparkSpec {
     // Σ (n_tokens × n_copies) over chunks == Σ tokens over the corpus
     val chunkTokens = out
       .selectExpr("sum(n_tokens * n_copies) AS s").collect()(0).getLong(0)
-    graft.functions.TokensOf.register(spark)
+    registerSqlFunctions()
     val corpusTokens = docs
       .selectExpr("sum(size(tokens_of(text))) AS s").collect()(0).getLong(0)
     assert(chunkTokens == corpusTokens,

@@ -47,7 +47,7 @@ class FuzzyCollapseSpec extends SparkSpec {
     * query's routed path): raw LSH candidates over docs ∪ perturbed,
     * prefix-200 Levenshtein + Jaro-Winkler, ≤ 20 filter. */
   private def flatExpected(sess: SparkSession, dir: String): DataFrame = {
-    graft.functions.JaroWinkler.register(sess)
+    registerSqlFunctions(sess)
     val docs = sess.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val pert = docs.select((col("doc_id") + 1000000).as("doc_id"),

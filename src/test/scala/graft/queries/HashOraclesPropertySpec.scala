@@ -36,8 +36,7 @@ class HashOraclesPropertySpec extends SparkSpec {
   }
 
   test("minhashSig + bandBuckets + simhash64 match the engine on 300 random strings") {
-    graft.functions.MinHashSig.register(spark)
-    graft.functions.SimHash64.register(spark)
+    registerSqlFunctions()
     val engine = cases.toDF("id", "t")
       .select(col("id"),
         expr("minhash_sig(lower(trim(t)))").as("sig"),

@@ -22,7 +22,7 @@ class HashOraclesSpec extends SparkSpec {
     (9004L, "  MiXeD Case\ttokens  here  "))
 
   test("minhashSig matches the native expression over the corpus + edges") {
-    graft.functions.MinHashSig.register(spark)
+    registerSqlFunctions()
     val rows = (corpus.toSeq ++ edges).toDF("doc_id", "text")
       .select(col("doc_id"),
         expr("minhash_sig(lower(trim(text)))").as("sig"))
@@ -34,7 +34,7 @@ class HashOraclesSpec extends SparkSpec {
   }
 
   test("bandBuckets matches the engine's xxhash64-slice banding") {
-    graft.functions.MinHashSig.register(spark)
+    registerSqlFunctions()
     val rows = corpus.toSeq.toDF("doc_id", "text")
       .select(col("doc_id"),
         graft.dedup.Dedup.bandHashes(
@@ -50,7 +50,7 @@ class HashOraclesSpec extends SparkSpec {
   }
 
   test("simhash64 matches the native expression over the corpus + edges") {
-    graft.functions.SimHash64.register(spark)
+    registerSqlFunctions()
     val rows = (corpus.toSeq ++ edges).toDF("doc_id", "text")
       .select(col("doc_id"), expr("simhash64(lower(trim(text)))").as("sh"))
       .as[(Long, Long)].collect().toMap

@@ -43,7 +43,7 @@ class NonAsciiFuzzySpec extends SparkSpec {
   }
 
   test("native jaro_winkler walks UTF-16 chars == codepoints on BMP") {
-    graft.functions.JaroWinkler.register(spark)
+    registerSqlFunctions()
     val sess = spark
     import sess.implicits._
     // byte-based JW of this pair is 0.976 (measured in DuckDB on the raw

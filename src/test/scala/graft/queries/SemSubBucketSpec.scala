@@ -81,7 +81,7 @@ class SemSubBucketSpec extends SparkSpec {
   test("split-active values match a plain-Scala brute force: n_sem_dups " +
     "and keep_flag over the planted hot cell, exactly") {
     val got = SimilarityQueries
-      .semanticDedupLayout(spark, hotCorpus, cents, cap = 50)
+      .semanticDedupLayout(hotCorpus, cents, cap = 50)
       .select("vec_id", "cell", "n_sem_dups", "keep_flag")
       .as[(Long, Int, Long, Int)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -147,7 +147,7 @@ class SemSubBucketSpec extends SparkSpec {
     val k = SimilarityQueries.semK(emb.count())
     val trained = Similarity.trainCentroids(emb, k = k,
       maxSample = math.max(1024, 16 * k))
-    val df = SimilarityQueries.semanticDedupLayout(spark, emb, trained,
+    val df = SimilarityQueries.semanticDedupLayout(emb, trained,
       SimilarityQueries.SemCellCap)
     df.collect()
     // AdaptiveSparkPlan prints the final plan AND the pre-AQE initial

@@ -362,7 +362,7 @@ class SimilaritySpec extends SparkSpec {
     // candidates retain. With 8 planes × 6 tables at planted cosine ≥
     // 0.997, per-table agreement ≈ 0.82 and the miss probability per pair
     // is ≈ 0.18^6 ≈ 3e-5 — deterministic under the fixed seed.
-    graft.functions.FloatCosine.register(spark)
+    registerSqlFunctions()
     val out = graft.queries.SimilarityQueries.annCosineNearDup(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val base = emb.select(col("vec_id"), col("embedding"))

@@ -53,7 +53,6 @@ class VectorCollapseSpec extends SparkSpec {
     val base = df.select(col("vec_id").as("id"), col("embedding").as("vf"))
     assert(Dedup.duplicationHeavy(base, "vf", Dedup.Identity.Vector),
       "planted corpus must trip the routing probe")
-    graft.functions.FloatCosine.register(spark)
     val routed = asSet(Similarity.lshNearDupPairs(df, threshold = 0.8))
     val flat = asSet(Similarity.lshNearDupPairsFlat(base, threshold = 0.8))
     assert(routed == flat,
@@ -77,7 +76,6 @@ class VectorCollapseSpec extends SparkSpec {
   test("identical zero vectors are dropped by both routes") {
     val df = corpus()
     val base = df.select(col("vec_id").as("id"), col("embedding").as("vf"))
-    graft.functions.FloatCosine.register(spark)
     val routed = asSet(Similarity.lshNearDupPairs(df, threshold = 0.8))
     val flat = asSet(Similarity.lshNearDupPairsFlat(base, threshold = 0.8))
     for (s <- Seq(routed, flat))

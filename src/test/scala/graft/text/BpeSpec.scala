@@ -1,7 +1,9 @@
 package graft.text
 
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
-import graft.functions.Bpe
+import graft.functions.{Bpe, Native}
 import graft.queries.TextQueries
 
 /** Trained-BPE tokenizer (t37): train determinism, the hand-worked apply
@@ -93,9 +95,8 @@ class BpeSpec extends SparkSpec {
       (5L, null))
     val merges = Bpe.train(texts.map(_._2).filter(_ != null), 50)
     val ranks = Bpe.toRanks(merges)
-    Bpe.register(spark, merges)
     val got = texts.toDF("doc_id", "text")
-      .selectExpr("doc_id", "bpe_doc_count(text) AS n")
+      .select(col("doc_id"), Native.bpeDocCount(col("text"), merges).as("n"))
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
     texts.foreach { case (id, t) =>
@@ -153,12 +154,11 @@ class BpeSpec extends SparkSpec {
     val merges = Bpe.train(texts.map(_._2), 50)
     val v = Bpe.vocab(merges)
     val ranks = Bpe.toRanks(merges)
-    Bpe.register(spark, merges)
-    import org.apache.spark.sql.functions._
     val rows = texts.toDF("doc_id", "text")
       .select(explode(split(lower(col("text")), "[^a-z0-9']+")).as("w"))
       .where(length(col("w")) > 0)
-      .selectExpr("w", "bpe_tokens(w) AS ids", "bpe_count(w) AS n")
+      .select(col("w"), Native.bpeTokens(col("w"), merges).as("ids"),
+        Native.bpeCount(col("w"), merges).as("n"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

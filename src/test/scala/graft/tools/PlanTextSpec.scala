@@ -16,6 +16,22 @@ class PlanTextSpec extends SparkSpec {
       "ReusedExchange [b#2], [plan_id=2]")
   }
 
+  test("RDD IDs renumber per plan; call-site lines and identity hashes are dropped") {
+    val line = "Arguments: [o_orderpriority#5, bucket#6L, bn#7L], " +
+      "MapPartitionsRDD[36] at localCheckpoint at EngineQueries.scala:314, " +
+      "ExistingRDD, UnknownPartitioning(0)"
+    assert(PlanText.renumberIds(line) ==
+      "Arguments: [o_orderpriority#1, bucket#2L, bn#3L], " +
+      "MapPartitionsRDD[1] at localCheckpoint at EngineQueries.scala, " +
+      "ExistingRDD, UnknownPartitioning(0)")
+    val objects = "Arguments: graft.multimodal.Multimodal$$$Lambda$5136/" +
+      "0x00007fec6d3fc400@6ff5eeed, obj#3: scala.Tuple2\n" +
+      "Output [1]: [ivfcells(v#12, [[D@3f2cc8ab, 2) AS cc#14]"
+    assert(PlanText.renumberIds(objects) ==
+      "Arguments: graft.multimodal.Multimodal$$$Lambda, obj#1: scala.Tuple2\n" +
+      "Output [1]: [ivfcells(v#2, [[D, 2) AS cc#3]")
+  }
+
   test("the same query built twice prints the same text") {
     import spark.implicits._
     def q = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
