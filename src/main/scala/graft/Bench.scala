@@ -68,8 +68,7 @@ object Bench {
     * which reproduced on a quiet box). Re-sampling ONLY the flagged set
     * is cheap (flagged queries are few) and makes a surviving min flag
     * require base+extra consecutive poisoned samples — the gate itself
-    * becomes episode-proof instead of relying on a human re-true.
-    * Override with SPARK_GRAFT_BENCH_RESAMPLE (0 disables). */
+    * becomes episode-proof instead of relying on a human re-true. */
   val DefaultResamplePasses = 4
 
   /** Regression floor: a query below this cost in BOTH runs is all
@@ -207,20 +206,18 @@ object Bench {
     // moment one quiet sample lands. The merged sample set feeds the
     // final medians/mins, so a resampled query's reported numbers carry
     // MORE evidence, not different methodology.
-    val resamplePasses = sys.env.get("SPARK_GRAFT_BENCH_RESAMPLE")
-      .map(_.toInt).getOrElse(DefaultResamplePasses).max(0)
     val provisionalMins = baseSamples.groupBy(_._1).map { case (n, ts) =>
       val vs = ts.map(_._2)
       n -> (if (vs.exists(_ < 0)) -1.0 else vs.min)
     }
     val flaggedSet = regressions(provisionalMins, refTimes).map(_._1).toSet
     val extraSamples =
-      if (flaggedSet.isEmpty || resamplePasses == 0) Seq.empty
+      if (flaggedSet.isEmpty) Seq.empty
       else {
         System.err.println(s"[bench] re-sampling min-flagged queries " +
-          s"(${resamplePasses} extra passes): " +
+          s"($DefaultResamplePasses extra passes): " +
           flaggedSet.toSeq.sorted.mkString(", "))
-        (1 to resamplePasses).flatMap { _ =>
+        (1 to DefaultResamplePasses).flatMap { _ =>
           selected.collect { case (name, fn) if flaggedSet(name) =>
             name -> timeOne(name, fn)
           }

@@ -69,6 +69,17 @@ object Verify {
     if (failed.nonEmpty)
       System.err.println(
         s"[verify] ${failed.size} queries FAILED: ${failed.map(_._1).sorted.mkString(", ")}")
+    dumpOracles(sfDir, outDir, selected)
+    spark.stop()
+    if (slice.nonEmpty && failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Writes `oracle_sql.json`: the oracle of every `selected` query, with
+    * trained constants read for `sfDir`. A query whose oracle cannot be
+    * built gets its failure sentinel ([[graft.queries.Registry.oracleSqlFor]]),
+    * so the file always carries every selected key. */
+  def dumpOracles(sfDir: String, outDir: String,
+                  selected: String => Boolean): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -81,17 +92,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // declare which dir this dump is FOR: trained-constant thunks resolve
-    // their per-dir caches through this instead of a last-run-wins global
-    // (two dirs in one JVM would otherwise embed the wrong dir's
-    // merges/centroids — r16 advice)
-    graft.queries.OracleDump.sfDir = Some(sfDir)
-    // filter BEFORE forcing oracle thunks: trained-state thunks for
-    // queries that did not run in this JVM throw by design
-    val json = graft.queries.Registry.oracleSqlFor(selected)
+    val json = graft.queries.Trained.dumpingFor(sfDir)(
+      graft.queries.Registry.oracleSqlFor(selected))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    if (slice.nonEmpty && failed.nonEmpty) sys.exit(1)
   }
 }

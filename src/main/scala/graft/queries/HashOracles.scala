@@ -37,26 +37,21 @@ import org.apache.spark.sql.SparkSession
   * ([[xxh64Long]]) rather than calling catalyst's `XXH64` — parity with
   * the engine's `bandHashes` is pinned in HashOraclesSpec.
   *
-  * Queries record their (session, dir) on each run; Verify dumps
-  * `oracle_sql.json` after every query has run, so the thunks see the
-  * final state (the s07 `lastTrained` contract). If a query never ran in
-  * this JVM the thunk emits a one-row SENTINEL SELECT whose values no
-  * engine run can produce ([[neverRanSql]]) — the compare fails LOUDLY
-  * against any engine output, including the empty one.
+  * Queries record their (session, dir) in a [[Trained]] memo on each run;
+  * Verify dumps `oracle_sql.json` after every query has run, so the
+  * thunks read the documents of the dir being dumped. A thunk whose query
+  * never ran for that dir throws, and the dump writes that query's
+  * failure sentinel ([[Registry.oracleSqlFor]]).
   */
 object HashOracles {
 
-  @volatile private var lastRun: Option[(SparkSession, String)] = None
-  private val runsByDir =
-    new scala.collection.concurrent.TrieMap[String, (SparkSession, String)]()
+  private val runs = new Trained[(SparkSession, String)]("documents session")
 
-  /** Called by s03/s04/t09 query builders on each run. Keyed by dir so a
+  /** Called by the near-dup query builders on each run. Keyed by dir so a
     * dump after runs against TWO dirs in one JVM embeds the right
-    * corpus's signatures (OracleDump contract, r16 advice). */
-  def record(spark: SparkSession, sfDir: String): Unit = {
-    lastRun = Some((spark, sfDir))
-    runsByDir.put(sfDir, (spark, sfDir))
-  }
+    * corpus's signatures. */
+  def record(spark: SparkSession, sfDir: String): Unit =
+    runs(sfDir)((spark, sfDir))
 
   // ---------------------------------------------------------------------
   // Plain-Scala reference implementations (byte-level, ASCII-exact twins
@@ -176,46 +171,16 @@ object HashOracles {
 
   /** (doc_id, text) off the raw documents parquet — 500 rows at every
     * shipped SF, collected once per dump. */
-  private def docs(): Option[Array[(Long, String)]] =
-    OracleDump.resolve(runsByDir, lastRun).map {
-      case (spark, sfDir) =>
-        graft.ops.CoreOps.scan(spark, sfDir, "documents")
-          .select("doc_id", "text").collect()
-          .map(r => (r.getLong(0), r.getString(1)))
-    }
+  private def docs(): Array[(Long, String)] = {
+    val (spark, sfDir) = runs.forDump
+    graft.ops.CoreOps.scan(spark, sfDir, "documents")
+      .select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+  }
 
   private def withPerturbed(base: Array[(Long, String)],
                             suffix: String): Array[(Long, String)] =
     base ++ base.map { case (id, t) => (id + 1000000L, t + suffix) }
-
-  /** Never-ran sentinels: if a query never ran in the dumping JVM, its
-    * oracle is a ONE-ROW literal SELECT whose values no engine run can
-    * produce (negative ids, negative jaccard/hamming, an impossible chunk
-    * text) — a guaranteed rows/values mismatch against ANY engine output,
-    * including the empty one. The earlier scheme (an impossible VALUES row
-    * feeding the real SQL) emptied the candidate set, which for t09
-    * degenerated to the exact-dedup-only pipeline and could SILENTLY
-    * coincide with the engine whenever the corpus has no Jaccard≥0.5 pairs
-    * among exact-dedup survivors. `package private` so the spec pins the
-    * shape. */
-  private[queries] val neverRanSql: Map[String, String] = Map(
-    "s03" -> ("SELECT CAST(-1 AS BIGINT) AS id_a, CAST(-1 AS BIGINT) AS id_b, " +
-      "CAST(-1 AS DOUBLE) AS jaccard"),
-    "s04" -> ("SELECT CAST(-1 AS BIGINT) AS id_a, CAST(-1 AS BIGINT) AS id_b, " +
-      "CAST(-1 AS INTEGER) AS hamming"),
-    "t09" -> ("SELECT CAST(-1 AS BIGINT) AS doc_id, CAST(-1 AS INTEGER) AS chunk_no, " +
-      "'ORACLE NEVER RAN: query did not execute in the dumping JVM' AS chunk"),
-    "t27" -> ("SELECT CAST(-1 AS BIGINT) AS batch_id, CAST(-1 AS BIGINT) AS corpus_id, " +
-      "CAST(-1 AS DOUBLE) AS jaccard"),
-    "t29" -> ("SELECT CAST(-1 AS BIGINT) AS id_a, CAST(-1 AS BIGINT) AS id_b, " +
-      "CAST(-1 AS INTEGER) AS dist, CAST(-1 AS DOUBLE) AS jw"),
-    "t41" -> ("SELECT CAST(-1 AS BIGINT) AS id, 'ORACLE NEVER RAN' AS text, " +
-      "CAST(-1 AS BIGINT) AS match_id, CAST(-1 AS DOUBLE) AS match_jaccard, " +
-      "CAST(-1 AS INTEGER) AS passed"),
-    "t48" -> ("SELECT 'ORACLE NEVER RAN' AS source, " +
-      "CAST(-1 AS BIGINT) AS n_docs, CAST(-1 AS BIGINT) AS n_exact_dup_docs, " +
-      "CAST(-1 AS BIGINT) AS n_neardup_docs, " +
-      "CAST(-1 AS BIGINT) AS n_cross_pairs"))
 
   private def bandValues(corpus: Array[(Long, String)]): String =
     corpus.flatMap { case (id, t) =>
@@ -241,10 +206,8 @@ object HashOracles {
 
   /** s03: candidates from embedded band buckets; Jaccard verify, filter,
     * and rounding recomputed by DuckDB from raw text. */
-  def minhashNearDupOracle: String = docs() match {
-    case None => neverRanSql("s03")
-    case Some(d) =>
-    val values = bandValues(withPerturbed(d, " perturbed tail"))
+  def minhashNearDupOracle: String = {
+    val values = bandValues(withPerturbed(docs(), " perturbed tail"))
     s"""WITH bb(id, band, bucket) AS (VALUES
        |  $values),
        |corpus(id, text) AS (
@@ -277,112 +240,109 @@ object HashOracles {
     * counts, cross-source pair counts per side, and corpus-wide exact-
     * duplicate membership via the same sha256 collapse key the engine
     * uses. */
-  def sourceDedupReportOracle: String = docs() match {
-    case None => neverRanSql("t48")
-    case Some(d) =>
-      val values = bandValues(withPerturbed(d, " perturbed tail"))
-      s"""WITH bb(id, band, bucket) AS (VALUES
-         |  $values),
-         |corpus(id, src, text) AS (
-         |  SELECT doc_id, source, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, 'perturbed', text || ' perturbed tail'
-         |  FROM documents),
-         |cand AS (
-         |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-         |  FROM bb a JOIN bb b
-         |    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id),
-         |g AS (SELECT id, ${gramsSql("text")} AS grams FROM corpus),
-         |j AS (
-         |  SELECT c.id_a, c.id_b,
-         |         CAST(len(list_intersect(ga.grams, gb.grams)) AS DOUBLE) /
-         |         CAST(len(ga.grams) + len(gb.grams)
-         |              - len(list_intersect(ga.grams, gb.grams)) AS DOUBLE)
-         |           AS jac
-         |  FROM cand c
-         |  JOIN g ga ON ga.id = c.id_a
-         |  JOIN g gb ON gb.id = c.id_b),
-         |p AS (SELECT id_a, id_b FROM j WHERE jac >= 0.5),
-         |ab AS (
-         |  SELECT p.id_a, p.id_b, ca.src AS src_a, cb.src AS src_b
-         |  FROM p JOIN corpus ca ON ca.id = p.id_a
-         |         JOIN corpus cb ON cb.id = p.id_b),
-         |touched AS (
-         |  SELECT src, count(DISTINCT id) AS n_neardup_docs FROM (
-         |    SELECT src_a AS src, id_a AS id FROM ab
-         |    UNION ALL SELECT src_b, id_b FROM ab) GROUP BY 1),
-         |crossp AS (
-         |  SELECT src, count(*) AS n_cross_pairs FROM (
-         |    SELECT src_a AS src FROM ab WHERE src_a <> src_b
-         |    UNION ALL SELECT src_b FROM ab WHERE src_a <> src_b)
-         |  GROUP BY 1),
-         |ek AS (
-         |  SELECT src, substr(sha256(lower(trim(text))), 1, 16) AS k
-         |  FROM corpus WHERE text IS NOT NULL),
-         |dup AS (SELECT k FROM ek GROUP BY k HAVING count(*) >= 2),
-         |exact AS (
-         |  SELECT src, count(*) AS n_exact FROM ek JOIN dup USING (k)
-         |  GROUP BY 1),
-         |base AS (SELECT src, count(*) AS n_docs FROM corpus GROUP BY 1)
-         |SELECT base.src AS source,
-         |       CAST(base.n_docs AS BIGINT) AS n_docs,
-         |       CAST(coalesce(exact.n_exact, 0) AS BIGINT)
-         |         AS n_exact_dup_docs,
-         |       CAST(coalesce(touched.n_neardup_docs, 0) AS BIGINT)
-         |         AS n_neardup_docs,
-         |       CAST(coalesce(crossp.n_cross_pairs, 0) AS BIGINT)
-         |         AS n_cross_pairs
-         |FROM base
-         |LEFT JOIN exact ON exact.src = base.src
-         |LEFT JOIN touched ON touched.src = base.src
-         |LEFT JOIN crossp ON crossp.src = base.src""".stripMargin
+  def sourceDedupReportOracle: String = {
+    val values = bandValues(withPerturbed(docs(), " perturbed tail"))
+    s"""WITH bb(id, band, bucket) AS (VALUES
+       |  $values),
+       |corpus(id, src, text) AS (
+       |  SELECT doc_id, source, text FROM documents
+       |  UNION ALL
+       |  SELECT doc_id + 1000000, 'perturbed', text || ' perturbed tail'
+       |  FROM documents),
+       |cand AS (
+       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
+       |  FROM bb a JOIN bb b
+       |    ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id),
+       |g AS (SELECT id, ${gramsSql("text")} AS grams FROM corpus),
+       |j AS (
+       |  SELECT c.id_a, c.id_b,
+       |         CAST(len(list_intersect(ga.grams, gb.grams)) AS DOUBLE) /
+       |         CAST(len(ga.grams) + len(gb.grams)
+       |              - len(list_intersect(ga.grams, gb.grams)) AS DOUBLE)
+       |           AS jac
+       |  FROM cand c
+       |  JOIN g ga ON ga.id = c.id_a
+       |  JOIN g gb ON gb.id = c.id_b),
+       |p AS (SELECT id_a, id_b FROM j WHERE jac >= 0.5),
+       |ab AS (
+       |  SELECT p.id_a, p.id_b, ca.src AS src_a, cb.src AS src_b
+       |  FROM p JOIN corpus ca ON ca.id = p.id_a
+       |         JOIN corpus cb ON cb.id = p.id_b),
+       |touched AS (
+       |  SELECT src, count(DISTINCT id) AS n_neardup_docs FROM (
+       |    SELECT src_a AS src, id_a AS id FROM ab
+       |    UNION ALL SELECT src_b, id_b FROM ab) GROUP BY 1),
+       |crossp AS (
+       |  SELECT src, count(*) AS n_cross_pairs FROM (
+       |    SELECT src_a AS src FROM ab WHERE src_a <> src_b
+       |    UNION ALL SELECT src_b FROM ab WHERE src_a <> src_b)
+       |  GROUP BY 1),
+       |ek AS (
+       |  SELECT src, substr(sha256(lower(trim(text))), 1, 16) AS k
+       |  FROM corpus WHERE text IS NOT NULL),
+       |dup AS (SELECT k FROM ek GROUP BY k HAVING count(*) >= 2),
+       |exact AS (
+       |  SELECT src, count(*) AS n_exact FROM ek JOIN dup USING (k)
+       |  GROUP BY 1),
+       |base AS (SELECT src, count(*) AS n_docs FROM corpus GROUP BY 1)
+       |SELECT base.src AS source,
+       |       CAST(base.n_docs AS BIGINT) AS n_docs,
+       |       CAST(coalesce(exact.n_exact, 0) AS BIGINT)
+       |         AS n_exact_dup_docs,
+       |       CAST(coalesce(touched.n_neardup_docs, 0) AS BIGINT)
+       |         AS n_neardup_docs,
+       |       CAST(coalesce(crossp.n_cross_pairs, 0) AS BIGINT)
+       |         AS n_cross_pairs
+       |FROM base
+       |LEFT JOIN exact ON exact.src = base.src
+       |LEFT JOIN touched ON touched.src = base.src
+       |LEFT JOIN crossp ON crossp.src = base.src""".stripMargin
   }
 
   /** t27: batch-vs-corpus candidates from embedded band buckets (both
     * slices' signatures recomputed at dump time by the plain-Scala
     * reference implementations); the asymmetric band join, Jaccard
     * verify, filter, and rounding recomputed by DuckDB from raw text. */
-  def incrementalNearDupOracle: String = docs() match {
-    case None => neverRanSql("t27")
-    case Some(d) =>
-      val corpusValues = bandValues(d)
-      def novelText(id: Long) =
-        s"zyq wubrak vexilo $id cromulent frobz nixplat gorvane thrubix"
-      val batchValues = bandValues(
-        d.filter(_._1 % 10 == 0)
-          .map { case (id, t) => (id + 1000000L, t + " nightly batch") } ++
-        d.filter(_._1 % 10 == 5)
-          .map { case (id, _) => (id + 2000000L, novelText(id + 2000000L)) })
-      s"""WITH bbc(id, band, bucket) AS (VALUES
-         |  $corpusValues),
-         |bbb(id, band, bucket) AS (VALUES
-         |  $batchValues),
-         |corpus(id, text) AS (SELECT doc_id, text FROM documents),
-         |batch(id, text) AS (
-         |  SELECT doc_id + 1000000, text || ' nightly batch'
-         |  FROM documents WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 2000000,
-         |         'zyq wubrak vexilo ' || (doc_id + 2000000)
-         |           || ' cromulent frobz nixplat gorvane thrubix'
-         |  FROM documents WHERE doc_id % 10 = 5),
-         |cand AS (
-         |  SELECT DISTINCT b.id AS batch_id, c.id AS corpus_id
-         |  FROM bbb b JOIN bbc c
-         |    ON b.band = c.band AND b.bucket = c.bucket),
-         |gc AS (SELECT id, ${gramsSql("text")} AS grams FROM corpus),
-         |gb AS (SELECT id, ${gramsSql("text")} AS grams FROM batch),
-         |j AS (
-         |  SELECT cd.batch_id, cd.corpus_id,
-         |         CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-         |         CAST(len(a.grams) + len(b.grams)
-         |              - len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-         |           AS jac
-         |  FROM cand cd
-         |  JOIN gc a ON a.id = cd.corpus_id
-         |  JOIN gb b ON b.id = cd.batch_id)
-         |SELECT batch_id, corpus_id, round(jac, 6) AS jaccard
-         |FROM j WHERE jac >= 0.5""".stripMargin
+  def incrementalNearDupOracle: String = {
+    val d = docs()
+    val corpusValues = bandValues(d)
+    def novelText(id: Long) =
+      s"zyq wubrak vexilo $id cromulent frobz nixplat gorvane thrubix"
+    val batchValues = bandValues(
+      d.filter(_._1 % 10 == 0)
+        .map { case (id, t) => (id + 1000000L, t + " nightly batch") } ++
+      d.filter(_._1 % 10 == 5)
+        .map { case (id, _) => (id + 2000000L, novelText(id + 2000000L)) })
+    s"""WITH bbc(id, band, bucket) AS (VALUES
+       |  $corpusValues),
+       |bbb(id, band, bucket) AS (VALUES
+       |  $batchValues),
+       |corpus(id, text) AS (SELECT doc_id, text FROM documents),
+       |batch(id, text) AS (
+       |  SELECT doc_id + 1000000, text || ' nightly batch'
+       |  FROM documents WHERE doc_id % 10 = 0
+       |  UNION ALL
+       |  SELECT doc_id + 2000000,
+       |         'zyq wubrak vexilo ' || (doc_id + 2000000)
+       |           || ' cromulent frobz nixplat gorvane thrubix'
+       |  FROM documents WHERE doc_id % 10 = 5),
+       |cand AS (
+       |  SELECT DISTINCT b.id AS batch_id, c.id AS corpus_id
+       |  FROM bbb b JOIN bbc c
+       |    ON b.band = c.band AND b.bucket = c.bucket),
+       |gc AS (SELECT id, ${gramsSql("text")} AS grams FROM corpus),
+       |gb AS (SELECT id, ${gramsSql("text")} AS grams FROM batch),
+       |j AS (
+       |  SELECT cd.batch_id, cd.corpus_id,
+       |         CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
+       |         CAST(len(a.grams) + len(b.grams)
+       |              - len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+       |           AS jac
+       |  FROM cand cd
+       |  JOIN gc a ON a.id = cd.corpus_id
+       |  JOIN gb b ON b.id = cd.batch_id)
+       |SELECT batch_id, corpus_id, round(jac, 6) AS jaccard
+       |FROM j WHERE jac >= 0.5""".stripMargin
   }
 
   /** t41: the streaming ingest gate's oracle — t27's embedded-signature
@@ -393,56 +353,55 @@ object HashOracles {
     * order, compared on the UNROUNDED jac so rounding can't flip a
     * near-tie) and the passed flag, with every batch doc surviving via
     * the LEFT JOIN exactly as the annotated sink keeps flagged rows. */
-  def streamIngestGateOracle: String = docs() match {
-    case None => neverRanSql("t41")
-    case Some(d) =>
-      val corpusValues = bandValues(d)
-      def novelText(id: Long) =
-        s"zyq wubrak vexilo $id cromulent frobz nixplat gorvane thrubix"
-      val batchValues = bandValues(
-        d.filter(_._1 % 10 == 0)
-          .map { case (id, t) => (id + 1000000L, t + " nightly batch") } ++
-        d.filter(_._1 % 10 == 5)
-          .map { case (id, _) => (id + 2000000L, novelText(id + 2000000L)) })
-      s"""WITH bbc(id, band, bucket) AS (VALUES
-         |  $corpusValues),
-         |bbb(id, band, bucket) AS (VALUES
-         |  $batchValues),
-         |corpus(id, text) AS (SELECT doc_id, text FROM documents),
-         |batch(id, text) AS (
-         |  SELECT doc_id + 1000000, text || ' nightly batch'
-         |  FROM documents WHERE doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 2000000,
-         |         'zyq wubrak vexilo ' || (doc_id + 2000000)
-         |           || ' cromulent frobz nixplat gorvane thrubix'
-         |  FROM documents WHERE doc_id % 10 = 5),
-         |cand AS (
-         |  SELECT DISTINCT b.id AS batch_id, c.id AS corpus_id
-         |  FROM bbb b JOIN bbc c
-         |    ON b.band = c.band AND b.bucket = c.bucket),
-         |gc AS (SELECT id, ${gramsSql("text")} AS grams FROM corpus),
-         |gb AS (SELECT id, ${gramsSql("text")} AS grams FROM batch),
-         |j AS (
-         |  SELECT cd.batch_id, cd.corpus_id,
-         |         CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-         |         CAST(len(a.grams) + len(b.grams)
-         |              - len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-         |           AS jac
-         |  FROM cand cd
-         |  JOIN gc a ON a.id = cd.corpus_id
-         |  JOIN gb b ON b.id = cd.batch_id),
-         |best AS (
-         |  SELECT batch_id, corpus_id AS match_id,
-         |         round(jac, 6) AS match_jaccard
-         |  FROM (SELECT batch_id, corpus_id, jac,
-         |               row_number() OVER (PARTITION BY batch_id
-         |                                  ORDER BY jac DESC, corpus_id) AS rn
-         |        FROM j WHERE jac >= 0.5)
-         |  WHERE rn = 1)
-         |SELECT b.id, b.text, best.match_id, best.match_jaccard,
-         |       CASE WHEN best.match_id IS NULL THEN 1 ELSE 0 END AS passed
-         |FROM batch b LEFT JOIN best ON b.id = best.batch_id""".stripMargin
+  def streamIngestGateOracle: String = {
+    val d = docs()
+    val corpusValues = bandValues(d)
+    def novelText(id: Long) =
+      s"zyq wubrak vexilo $id cromulent frobz nixplat gorvane thrubix"
+    val batchValues = bandValues(
+      d.filter(_._1 % 10 == 0)
+        .map { case (id, t) => (id + 1000000L, t + " nightly batch") } ++
+      d.filter(_._1 % 10 == 5)
+        .map { case (id, _) => (id + 2000000L, novelText(id + 2000000L)) })
+    s"""WITH bbc(id, band, bucket) AS (VALUES
+       |  $corpusValues),
+       |bbb(id, band, bucket) AS (VALUES
+       |  $batchValues),
+       |corpus(id, text) AS (SELECT doc_id, text FROM documents),
+       |batch(id, text) AS (
+       |  SELECT doc_id + 1000000, text || ' nightly batch'
+       |  FROM documents WHERE doc_id % 10 = 0
+       |  UNION ALL
+       |  SELECT doc_id + 2000000,
+       |         'zyq wubrak vexilo ' || (doc_id + 2000000)
+       |           || ' cromulent frobz nixplat gorvane thrubix'
+       |  FROM documents WHERE doc_id % 10 = 5),
+       |cand AS (
+       |  SELECT DISTINCT b.id AS batch_id, c.id AS corpus_id
+       |  FROM bbb b JOIN bbc c
+       |    ON b.band = c.band AND b.bucket = c.bucket),
+       |gc AS (SELECT id, ${gramsSql("text")} AS grams FROM corpus),
+       |gb AS (SELECT id, ${gramsSql("text")} AS grams FROM batch),
+       |j AS (
+       |  SELECT cd.batch_id, cd.corpus_id,
+       |         CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
+       |         CAST(len(a.grams) + len(b.grams)
+       |              - len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+       |           AS jac
+       |  FROM cand cd
+       |  JOIN gc a ON a.id = cd.corpus_id
+       |  JOIN gb b ON b.id = cd.batch_id),
+       |best AS (
+       |  SELECT batch_id, corpus_id AS match_id,
+       |         round(jac, 6) AS match_jaccard
+       |  FROM (SELECT batch_id, corpus_id, jac,
+       |               row_number() OVER (PARTITION BY batch_id
+       |                                  ORDER BY jac DESC, corpus_id) AS rn
+       |        FROM j WHERE jac >= 0.5)
+       |  WHERE rn = 1)
+       |SELECT b.id, b.text, best.match_id, best.match_jaccard,
+       |       CASE WHEN best.match_id IS NULL THEN 1 ELSE 0 END AS passed
+       |FROM batch b LEFT JOIN best ON b.id = best.batch_id""".stripMargin
   }
 
   /** t29: the candidates-fed fuzzy verify. Candidates from embedded band
@@ -463,8 +422,7 @@ object HashOracles {
   private[queries] val FuzzyBruteForceMaxDocs = 600
 
   def fuzzyNearDupOracle: String = docs() match {
-    case None => neverRanSql("t29")
-    case Some(d) if d.length <= FuzzyBruteForceMaxDocs =>
+    case d if d.length <= FuzzyBruteForceMaxDocs =>
       // RECALL-COMPLETE brute force (r14 verdict item 5, the s16/s15
       // pattern): all pairs under a sound length-gap prefilter
       // (lev >= |len gap|, so no qualifying pair is pruned), NO shared
@@ -492,7 +450,7 @@ object HashOracles {
          |SELECT id_a, id_b, CAST(dist AS INTEGER) AS dist,
          |       CAST(CAST(jw AS DECIMAL(28,6)) AS DOUBLE) AS jw
          |FROM j WHERE dist <= 20""".stripMargin
-    case Some(d) =>
+    case d =>
       // scaled-world form: candidates from embedded band buckets (same
       // machinery as s03) — planted multibyte rows join the band VALUES
       // (signatures from the same plain-Scala byte-walk; both sides
@@ -531,10 +489,8 @@ object HashOracles {
     * recomputed by DuckDB from the embedded fingerprints (arithmetic `>>`
     * plus the &65535 mask make sign-fill irrelevant, matching Spark's
     * shiftright). */
-  def simhashNearDupOracle: String = docs() match {
-    case None => neverRanSql("s04")
-    case Some(d) =>
-    val values = simhashValues(withPerturbed(d, " zz"))
+  def simhashNearDupOracle: String = {
+    val values = simhashValues(withPerturbed(docs(), " zz"))
     s"""WITH sh(id, h) AS (VALUES
        |  $values),
        |chunks AS (
@@ -550,10 +506,8 @@ object HashOracles {
   /** t09: the full composite pipeline. Connected components as a
     * recursive CTE: reach(src, dst) closes over the verified-pair edges,
     * min(dst) per src is exactly clusterAssign's min-label fixpoint. */
-  def trainingPipelineOracle: String = docs() match {
-    case None => neverRanSql("t09")
-    case Some(d) =>
-    val values = bandValues(d)
+  def trainingPipelineOracle: String = {
+    val values = bandValues(docs())
     s"""WITH RECURSIVE bb(id, band, bucket) AS (VALUES
        |  $values),
        |kept AS (

@@ -27,10 +27,26 @@ object Registry {
 
   def oracleSql: Map[String, String] = oracleSqlFor(_ => true)
 
+  /** The one column of a failed oracle's sentinel; no query outputs it. */
+  val OracleFailedColumn = "__graft_oracle_failed"
+
   /** Oracles of the queries `keep` selects; the filter runs before any
-    * dump-time thunk is forced. */
-  def oracleSqlFor(keep: String => Boolean): Map[String, String] =
-    all.filter(q => keep(q.name)).flatMap(q =>
-      q.oracleFn.map(f => q.name -> f())
+    * dump-time thunk is forced. A thunk that throws (its query never ran
+    * for the dir being dumped, say) yields a one-row sentinel SELECT of
+    * [[OracleFailedColumn]] naming the query and the error, also printed
+    * to stderr: that query's compare fails loudly and every other oracle
+    * is still written. */
+  def oracleSqlFor(keep: String => Boolean,
+                   queries: Seq[NamedQuery] = all): Map[String, String] =
+    queries.filter(q => keep(q.name)).flatMap(q =>
+      q.oracleFn.map(f => q.name -> guarded(q.name, f))
         .orElse(q.oracle.map(q.name -> _))).toMap
+
+  private def guarded(name: String, thunk: () => String): String =
+    try thunk()
+    catch { case scala.util.control.NonFatal(e) =>
+      val msg = s"$name: $e".linesIterator.mkString(" | ")
+      System.err.println(s"[oracle] FAILED $msg")
+      s"SELECT '${msg.replace("'", "''")}' AS $OracleFailedColumn"
+    }
 }

@@ -361,19 +361,13 @@ object SimilarityQueries {
   }
 
   /** Per-dir memo of the trained coarse quantizer: training reads a
-    * bounded sample once per JVM per data dir, not once per query run;
-    * `lastTrained` is what the oracle thunk embeds. */
-  private val trainedCache =
-    new scala.collection.concurrent.TrieMap[String, Array[Array[Double]]]()
-  @volatile private var lastTrained: Option[Array[Array[Double]]] = None
+    * bounded sample once per JVM per data dir, not once per query run. */
+  private val centroids = new Trained[Array[Array[Double]]]("IVF centroids")
 
   private def trainedCentroids(spark: SparkSession,
-                               sfDir: String): Array[Array[Double]] = {
-    val cents = trainedCache.getOrElseUpdate(sfDir,
+                               sfDir: String): Array[Array[Double]] =
+    centroids(sfDir)(
       Similarity.trainCentroids(scan(spark, sfDir, "embeddings"), k = 8))
-    lastTrained = Some(cents)
-    cents
-  }
 
   /** s20 — cluster-balanced sampling: cap every embedding-space cluster
     * at a fixed quota, keeping a deterministic uniform slice of the
@@ -410,17 +404,10 @@ object SimilarityQueries {
   val BalancedQuota = 55
 
   /** DuckDB twin of s20: same trained centroids (dump-time VALUES, the
-    * s07 thunk pattern — loud if s20 never ran), same strict-< argmin
-    * (row_number ties → lowest cell), same LCG in-cell rank. */
+    * s07 thunk pattern), same strict-< argmin (row_number ties → lowest
+    * cell), same LCG in-cell rank. */
   private def clusterBalancedSampleOracle: String = {
-    val cents = OracleDump.resolve(trainedCache, lastTrained).getOrElse {
-      System.err.println(
-        "[graft] WARNING: clusterBalancedSampleOracle dumped with " +
-          "UNTRAINED (seeded) centroids — s20 never ran in this JVM; " +
-          "run the query before dumping its oracle.")
-      Similarity.hyperplanes(8, 64, 11L)
-    }
-    val rows = cents.zipWithIndex.map {
+    val rows = centroids.forDump.zipWithIndex.map {
       case (c, i) => s"($i, ${vecLit(c)})"
     }
     s"""WITH cents(cell, c) AS (VALUES
@@ -448,20 +435,9 @@ object SimilarityQueries {
     * probe order (dist, cell), same in-cell cosine top-k. list_distance is
     * the square root of the Spark side's squared distance — monotonic, so
     * the argmin/probe ordering is identical. Built at dump time from the
-    * centroids the query actually trained (falling back to the seeded set
-    * only if s07 never ran in this JVM). */
+    * centroids the query actually trained. */
   private def annIvfOracle: String = {
-    val cents = OracleDump.resolve(trainedCache, lastTrained).getOrElse {
-      // loud, not silent (r15 advice, fixed alongside the s17 twin): an
-      // oracle dumped before s07 ran embeds the SEEDED centroid set and
-      // verification fails as a confusing numeric diff
-      System.err.println(
-        "[graft] WARNING: annIvfOracle dumped with UNTRAINED (seeded) " +
-          "centroids — s07_ann_ivf never ran in this JVM; run the query " +
-          "before dumping its oracle.")
-      Similarity.hyperplanes(8, 64, 11L)
-    }
-    val rows = cents.zipWithIndex.map {
+    val rows = centroids.forDump.zipWithIndex.map {
       case (c, i) => s"($i, ${vecLit(c)})"
     }
     s"""WITH cents(cell, c) AS (VALUES
@@ -527,19 +503,13 @@ object SimilarityQueries {
   }
 
   /** Per-dir memo of the trained PQ codebooks (the trainedCentroids
-    * contract: one bounded collect per JVM per dir; `lastPQ` is what the
-    * oracle thunk embeds). */
-  private val pqCache =
-    new scala.collection.concurrent.TrieMap[String, Array[Array[Array[Double]]]]()
-  @volatile private var lastPQ: Option[Array[Array[Array[Double]]]] = None
+    * contract: one bounded collect per JVM per dir). */
+  private val pqBooks = new Trained[Array[Array[Array[Double]]]]("PQ codebooks")
 
   private def trainedPQBooks(spark: SparkSession,
-                             sfDir: String): Array[Array[Array[Double]]] = {
-    val cbs = pqCache.getOrElseUpdate(sfDir,
+                             sfDir: String): Array[Array[Array[Double]]] =
+    pqBooks(sfDir)(
       Similarity.trainPQ(scan(spark, sfDir, "embeddings"), m = PqM, k = PqK))
-    lastPQ = Some(cbs)
-    cbs
-  }
 
   private def intLit(p: Array[Int]): String =
     p.mkString("[", ", ", "]::INT[]")
@@ -551,22 +521,9 @@ object SimilarityQueries {
     * accumulation of list_dot_product is EXACT — the ranking is
     * bit-stable), same crank ≤ PqCoarseK boundary and exact-cosine rerank with
     * neighbor_id tie-breaks. Built at dump time from the codebooks the
-    * query actually trained (seeded fallback only if s17 never ran in
-    * this JVM). */
+    * query actually trained. */
   private def annPqOracle: String = {
-    val cbs = OracleDump.resolve(pqCache, lastPQ).getOrElse {
-      // loud, not silent (r15 advice): a dump that never ran s17 in this
-      // JVM embeds SEEDED codebooks, and the resulting verify failure
-      // reads as an inscrutable numeric diff instead of what it is — a
-      // dump-ordering bug. Verify.scala runs every query before dumping
-      // oracles, so this path firing outside ad-hoc tooling IS the bug.
-      System.err.println(
-        "[graft] WARNING: annPqOracle dumped with UNTRAINED (seeded) PQ " +
-          "codebooks — s17_ann_pq never ran in this JVM; the oracle will " +
-          "NOT match a run that trains on real data. Run the query before " +
-          "dumping its oracle.")
-      Array.tabulate(PqM)(s => Similarity.hyperplanes(PqK, 64 / PqM, 13L + s))
-    }
+    val cbs = pqBooks.forDump
     val qcb = Similarity.quantizePQ(cbs)
     val sub = cbs(0)(0).length
     val rows = for { s <- cbs.indices; code <- cbs(s).indices }
@@ -632,35 +589,26 @@ object SimilarityQueries {
       k = 10, nprobe = 2, coarseK = PqCoarseK)
   }
 
-  private val ivfPqCache = new scala.collection.concurrent.TrieMap[
-    String, (Array[Array[Double]], Array[Array[Array[Double]]])]()
-  @volatile private var lastIvfPq:
-      Option[(Array[Array[Double]], Array[Array[Array[Double]]])] = None
+  private val ivfPq = new Trained[
+    (Array[Array[Double]], Array[Array[Array[Double]]])]("IVF-PQ codebooks")
 
   private def trainedIvfPq(spark: SparkSession, sfDir: String)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val pair = ivfPqCache.getOrElseUpdate(sfDir, {
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) =
+    ivfPq(sfDir) {
       val cents = trainedCentroids(spark, sfDir) // s07's memo, shared
       val cbs = Similarity.trainResidualPQ(
         scan(spark, sfDir, "embeddings"), cents, m = PqM, k = PqK)
       (cents, cbs)
-    })
-    lastIvfPq = Some(pair)
-    pair
-  }
+    }
 
   /** DuckDB twin of ivfPqTopK — the s07 assignment/probe SQL composed
     * with the s17 subspace-argmin/integer-ADC SQL, on residuals. The
     * coarse score carries qnorm2 (it varies per probed cell — see the
     * ivfPqTopK scaladoc), every dot product CASTs to BIGINT under the
     * s17 exactness bound, and ties break (coarse, neighbor_id) /
-    * (sim DESC, neighbor_id). Dumping before s19 ran fails fast (r15
-    * advice: loud beats a confusing numeric diff). */
+    * (sim DESC, neighbor_id). */
   private def annIvfPqOracle: String = {
-    val (cents, cbs) = OracleDump.resolve(ivfPqCache, lastIvfPq)
-      .getOrElse(throw new IllegalStateException(
-      "s19 oracle dumped before s19_ann_ivfpq ran in this JVM — run the " +
-        "query first (Verify does; ad-hoc dumps must too)"))
+    val (cents, cbs) = ivfPq.forDump
     val qcb = Similarity.quantizePQ(cbs)
     val sub = cbs(0)(0).length
     val centRows = cents.zipWithIndex
@@ -1076,9 +1024,8 @@ object SimilarityQueries {
     * k=8, ~400M at the adaptive k=200). k depends only on the corpus
     * count — deterministic, and the oracle embeds whatever was
     * trained. */
-  private val semCache =
-    new scala.collection.concurrent.TrieMap[String, Array[Array[Double]]]()
-  @volatile private var lastTrainedSem: Option[Array[Array[Double]]] = None
+  private val semCentroidsByDir =
+    new Trained[Array[Array[Double]]]("SemDeDup centroids")
 
   /** The adaptive cluster count: cells stay ~1000-membered, so the
     * in-cell quadratic is corpus-linear until the 1024 cap (~1M
@@ -1091,16 +1038,13 @@ object SimilarityQueries {
     math.max(8L, math.min(1024L, n / 1000L)).toInt
 
   private def semCentroids(spark: SparkSession,
-                           sfDir: String): Array[Array[Double]] = {
-    val cents = semCache.getOrElseUpdate(sfDir, {
+                           sfDir: String): Array[Array[Double]] =
+    semCentroidsByDir(sfDir) {
       val emb = scan(spark, sfDir, "embeddings")
       val k = semK(emb.count())
       Similarity.trainCentroids(emb, k = k,
         maxSample = math.max(1024, 16 * k))
-    })
-    lastTrainedSem = Some(cents)
-    cents
-  }
+    }
 
   /** Oversize-cell cap: cells whose membership exceeds this split by
     * SECOND-nearest centroid before the in-cell quadratic. The adaptive
@@ -1212,17 +1156,15 @@ object SimilarityQueries {
   }
 
   /** DuckDB twin of semanticDedup, built at dump time from the
-    * adaptively-sized trained centroids (the s07 `lastTrained` contract,
-    * separate cache): assignment
+    * adaptively-sized trained centroids (the s07 dump-time pattern,
+    * separate memo): assignment
     * argmin (ties → lowest cell, matching IvfCell's strict <), the
     * planted +0.1 replicas, the oversize-cell second-nearest split (the
     * rn=2 row of the SAME (dist, cell) window — IvfCells' probe order),
     * in-(cell, sub) lower-id pair counts, the 0.8 threshold, and the
     * keep flag — all recomputed independently. */
   private def semanticDedupOracle: String = {
-    val cents = OracleDump.resolve(semCache, lastTrainedSem)
-      .getOrElse(Similarity.hyperplanes(8, 64, 11L))
-    val rows = cents.zipWithIndex.map {
+    val rows = semCentroidsByDir.forDump.zipWithIndex.map {
       case (c, i) => s"($i, ${vecLit(c)})"
     }
     s"""WITH cents(cell, c) AS (VALUES
@@ -1577,14 +1519,7 @@ object SimilarityQueries {
     * row_number ties → lowest cell, same (dist, cell) probe order)
     * composed with s21's label-exclusion and per-query cosine top-k. */
   private def hardNegativesIvfOracle: String = {
-    val cents = OracleDump.resolve(trainedCache, lastTrained).getOrElse {
-      System.err.println(
-        "[graft] WARNING: hardNegativesIvfOracle dumped with UNTRAINED " +
-          "(seeded) centroids — s22 never ran in this JVM; run the query " +
-          "before dumping its oracle.")
-      Similarity.hyperplanes(8, 64, 11L)
-    }
-    val rows = cents.zipWithIndex.map {
+    val rows = centroids.forDump.zipWithIndex.map {
       case (c, i) => s"($i, ${vecLit(c)})"
     }
     s"""WITH cents(cell, c) AS (VALUES

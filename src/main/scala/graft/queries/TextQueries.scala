@@ -2070,13 +2070,11 @@ object TextQueries {
   val BpeNumMerges = 1000
   val BpeMaxSample = 2048
 
-  private val bpeCache =
-    new scala.collection.concurrent.TrieMap[String, Seq[(String, String)]]()
-  @volatile private var lastBpe: Option[Seq[(String, String)]] = None
+  private val bpeMerges = new Trained[Seq[(String, String)]]("BPE merges")
 
   private[queries] def trainedBpe(spark: SparkSession,
-                         sfDir: String): Seq[(String, String)] = {
-    val ms = bpeCache.getOrElseUpdate(sfDir, {
+                         sfDir: String): Seq[(String, String)] =
+    bpeMerges(sfDir) {
       // bounded deterministic sample: 1/4 hash slice, id-ordered cap —
       // the boundedSample contract (see Similarity.trainCentroids)
       val texts = scan(spark, sfDir, "documents")
@@ -2086,10 +2084,7 @@ object TextQueries {
         .sort(col("id")).limit(BpeMaxSample)
         .collect().map(_.getString(1)).toSeq
       graft.functions.Bpe.train(texts, BpeNumMerges)
-    })
-    lastBpe = Some(ms)
-    ms
-  }
+    }
 
   /** The apply core behind [[bpeTokenCount]], public for specs: input
     * (doc_id, text), output (doc_id, n_words, n_bpe_tokens). */
@@ -2111,14 +2106,9 @@ object TextQueries {
 
   /** Trained merge table as a VALUES CTE — shared by every trained-BPE
     * oracle (t24/t26/t37), embedded at dump time from the merges the
-    * queries actually trained (the s07/s17 pattern). Dumping before any
-    * BPE query ran is a dump-ordering bug and fails fast (r15 advice:
-    * loud beats a confusing diff). */
+    * queries actually trained (the s07/s17 pattern). */
   private def bpeMergesCte(caller: String): String = {
-    val merges = OracleDump.resolve(bpeCache, lastBpe)
-      .getOrElse(throw new IllegalStateException(
-        s"$caller oracle dumped before any trained-BPE query ran in this " +
-          "JVM — run the query first (Verify does; ad-hoc dumps must too)"))
+    val merges = bpeMerges.forDump
     // Bpe.train legitimately returns ZERO merges when no pair repeats in
     // the sample (BpeSpec pins that); `VALUES` with no rows is a SYNTAX
     // error, so a degenerate corpus must fail loudly here, not as an
@@ -2666,9 +2656,7 @@ object TextQueries {
     * id-ordered cap). */
   val NbMaxSample = 512
 
-  private val nbCache =
-    new scala.collection.concurrent.TrieMap[String, graft.functions.NbTable]()
-  @volatile private var lastNb: Option[graft.functions.NbTable] = None
+  private val nbTable = new Trained[graft.functions.NbTable]("NB table")
 
   /** Labels: `lang = 'en'` — the reference-distribution-vs-rest framing
     * of the GPT-3 classifier filter (train on a slice labeled by a
@@ -2678,8 +2666,8 @@ object TextQueries {
     * separation on a planted separable corpus; this binding proves the
     * corpus-scale plumbing and the oracle. */
   private def trainedNb(spark: SparkSession,
-                        sfDir: String): graft.functions.NbTable = {
-    val t = nbCache.getOrElseUpdate(sfDir, {
+                        sfDir: String): graft.functions.NbTable =
+    nbTable(sfDir) {
       val sample = scan(spark, sfDir, "documents")
         .where(pmod(xxhash64(col("doc_id")), lit(4L)) === 0)
         .where(col("text").isNotNull)
@@ -2688,10 +2676,7 @@ object TextQueries {
         .sort(col("id")).limit(NbMaxSample)
         .collect().map(r => (r.getString(1), r.getBoolean(2))).toSeq
       graft.functions.NbQuality.train(sample)
-    })
-    lastNb = Some(t)
-    t
-  }
+    }
 
   /** t40 — the trained classifier-filter stage (fastText-shape hashed
     * unigram+bigram Naive Bayes; see [[graft.functions.NbQuality]]):
@@ -2718,10 +2703,7 @@ object TextQueries {
     * formation over the FILTERED word list, the same base-31 rolling
     * hash mod 1048573 folded to 4096, integer sums, strict sign gate. */
   private def qualityClassifierOracle: String = {
-    val t = OracleDump.resolve(nbCache, lastNb)
-      .getOrElse(throw new IllegalStateException(
-        "t40 oracle dumped before t40_quality_classifier ran in this " +
-          "JVM — run the query first (Verify does; ad-hoc dumps must too)"))
+    val t = nbTable.forDump
     val rows = t.weights.zipWithIndex.map { case (w, b) => s"($b, $w)" }
     s"""WITH wv(b, w) AS (VALUES
        |  ${rows.mkString(",\n  ")}),
@@ -3195,13 +3177,11 @@ object TextQueries {
   val UniVocabSize = 400
   val UniRounds = 2
 
-  private val uniCache =
-    new scala.collection.concurrent.TrieMap[String, Seq[(String, Long)]]()
-  @volatile private var lastUni: Option[Seq[(String, Long)]] = None
+  private val unigramVocab = new Trained[Seq[(String, Long)]]("unigram vocab")
 
   private[queries] def trainedUnigram(spark: SparkSession,
-                                      sfDir: String): Seq[(String, Long)] = {
-    val v = uniCache.getOrElseUpdate(sfDir, {
+                                      sfDir: String): Seq[(String, Long)] =
+    unigramVocab(sfDir) {
       // the trainedBpe sample contract: bounded deterministic 1/4 hash
       // slice, id-ordered cap — SAME sample, so the two tokenizer
       // families train on identical text and their fertility compares
@@ -3213,10 +3193,7 @@ object TextQueries {
         .sort(col("id")).limit(BpeMaxSample)
         .collect().map(_.getString(1)).toSeq
       graft.functions.UnigramLm.train(texts, UniVocabSize, UniRounds)
-    })
-    lastUni = Some(v)
-    v
-  }
+    }
 
   /** t47 — token counting under the SECOND trained tokenizer family
     * (r17 verdict item 6): the unigram-LM (SentencePiece) model of Kudo
@@ -3255,11 +3232,8 @@ object TextQueries {
     * min(pieces | cost = min) — the aggregates the engine's Viterbi
     * computes in O(|w|·maxLen). */
   private def unigramTokenCountOracle: String = {
-    val vocab = OracleDump.resolve(uniCache, lastUni)
-      .getOrElse(throw new IllegalStateException(
-        "t47 oracle dumped before t47_unigram_token_count ran in this " +
-          "JVM — run the query first (Verify does; ad-hoc dumps must too)"))
-    val rows = vocab.map { case (p, c) => s"(${sqlStr(p)}, $c)" }
+    val rows =
+      unigramVocab.forDump.map { case (p, c) => s"(${sqlStr(p)}, $c)" }
     s"""WITH RECURSIVE v(piece, cost) AS (VALUES
        |  ${rows.mkString(",\n  ")}),
        |tok AS (

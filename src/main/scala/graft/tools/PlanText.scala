@@ -22,12 +22,15 @@ object PlanText {
 
   /** Run-dependent text that is not an ID, with its replacement: the line
     * of a `Scan ExistingRDD` call site (`at EngineQueries.scala:314`),
-    * which moves with every edit above the call, lambda class numbers and
-    * identity hash codes (`[[D@3d4ea4cf`). */
+    * which moves with every edit above the call, lambda class numbers,
+    * identity hash codes (`[[D@3d4ea4cf`) and a file scan's location,
+    * which names a temp dir or the checkout (`InMemoryFileIndex
+    * [file:/tmp/graft_xml_roundtrip_812]`). */
   private val Noise = Seq(
     """(\.scala):\d+""" -> "$1",
     """\$\$Lambda[^@\s,]*""" -> """\$\$Lambda""",
-    """(?<=[\w$\[])@\p{XDigit}+\b""" -> "")
+    """(?<=[\w$\[])@\p{XDigit}+\b""" -> "",
+    """((?:InMemory|Catalog)FileIndex[^\[\n]*)\[[^\]\n]*\]""" -> "$1[<path>]")
 
   /** Renumbers expression IDs (`#1234`; the type suffix of `#1234L` is
     * kept), `plan_id=` values and RDD IDs (`RDD[36]`) densely from 1, each

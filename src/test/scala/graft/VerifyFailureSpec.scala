@@ -37,4 +37,29 @@ class VerifyFailureSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(s"$out/zz_fine.FAILED")))
     assert(spark.read.parquet(s"$out/zz_fine").count() == 3)
   }
+
+  test("an unresolvable oracle still dumps every key") {
+    // t40 trains for `sf`; nothing trains for `untrained`, so every
+    // trained thunk of a dump declared for it cannot resolve
+    graft.queries.Registry.queries("t40_quality_classifier")(spark, sf)
+    val untrained = tmp()
+    val slice = Set("p01_flagship", "s19_ann_ivfpq", "s03_minhash_neardup",
+      "t40_quality_classifier")
+    def dump(sfDir: String): Map[String, String] = {
+      val out = tmp()
+      Verify.dumpOracles(sfDir, out, slice)
+      val row = spark.read.option("multiLine", "true")
+        .json(s"$out/oracle_sql.json").head()
+      row.schema.fieldNames.map(k => k -> row.getAs[String](k)).toMap
+    }
+    val failed = graft.queries.Registry.OracleFailedColumn
+    val blind = dump(untrained)
+    assert(blind.keySet == slice)
+    assert(!blind("p01_flagship").contains(failed))
+    Seq("s19_ann_ivfpq", "s03_minhash_neardup", "t40_quality_classifier")
+      .foreach(k => assert(blind(k).contains(failed) && blind(k).contains(k),
+        s"$k: expected its failure sentinel, got ${blind(k).take(200)}"))
+    assert(!dump(sf)("t40_quality_classifier").contains(failed),
+      "t40 trained for sf, so its oracle must resolve there")
+  }
 }

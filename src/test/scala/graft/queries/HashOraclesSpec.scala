@@ -59,45 +59,4 @@ class HashOraclesSpec extends SparkSpec {
         s"simhash drift for doc $id")
     }
   }
-
-  test("oracle thunks degrade loudly when the query never ran") {
-    // fresh-JVM state can't be simulated here (record() may have run), so
-    // the contract is pinned on the sentinel SQL itself: ONE row whose
-    // values no engine run can produce — a guaranteed rows/values
-    // mismatch against any engine output, including the empty one (the
-    // old empty-candidates degradation silently coincided with the
-    // engine for t09 on corpora without near-dup pairs). The sentinels
-    // are ANSI enough to execute under Spark, so schema and values are
-    // asserted by running them.
-    val wantCols = Map(
-      "s03" -> Seq("id_a", "id_b", "jaccard"),
-      "s04" -> Seq("id_a", "id_b", "hamming"),
-      "t09" -> Seq("doc_id", "chunk_no", "chunk"),
-      "t27" -> Seq("batch_id", "corpus_id", "jaccard"),
-      "t29" -> Seq("id_a", "id_b", "dist", "jw"),
-      "t41" -> Seq("id", "text", "match_id", "match_jaccard", "passed"),
-      "t48" -> Seq("source", "n_docs", "n_exact_dup_docs",
-        "n_neardup_docs", "n_cross_pairs"))
-    HashOracles.neverRanSql.foreach { case (q, sql) =>
-      val df = spark.sql(sql)
-      assert(df.columns.toSeq == wantCols(q),
-        s"$q sentinel columns must match the query output schema")
-      val rows = df.collect()
-      assert(rows.length == 1, s"$q sentinel must be exactly one row")
-      // the sentinel's leading value is impossible for any engine run:
-      // ids are non-negative in every corpus (raw doc_id ≥ 0, perturbed
-      // += 1e6), and t48's doc counts are non-negative with a source
-      // string no corpus contains
-      if (q == "t48")
-        assert(rows.head.getString(0) == "ORACLE NEVER RAN" &&
-          rows.head.getLong(1) == -1L,
-          s"$q sentinel values must be impossible")
-      else
-        assert(rows.head.getLong(0) == -1L,
-          s"$q sentinel id must be impossible")
-    }
-    assert(HashOracles.minhashNearDupOracle.nonEmpty)
-    assert(HashOracles.simhashNearDupOracle.nonEmpty)
-    assert(HashOracles.trainingPipelineOracle.nonEmpty)
-  }
 }

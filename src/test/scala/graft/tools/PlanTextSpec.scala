@@ -32,6 +32,20 @@ class PlanTextSpec extends SparkSpec {
       "Output [1]: [ivfcells(v#2, [[D, 2) AS cc#3]")
   }
 
+  test("file scan locations print as one token in every run and checkout") {
+    val xml = "Location: InMemoryFileIndex [file:/tmp/graft_xml_roundtrip_8123]"
+    val catalog = "Location: InMemoryFileIndex [file:/home/dev/graft/" +
+      "spark-warehouse/graft_wh.db/lineitem_ds_d178f9eb/ds=19960102]\n" +
+      "PartitionFilters: [isnotnull(ds#41), (ds#41 = 19960102)]"
+    assert(PlanText.renumberIds(xml) == "Location: InMemoryFileIndex [<path>]")
+    assert(PlanText.renumberIds(catalog) ==
+      "Location: InMemoryFileIndex [<path>]\n" +
+      "PartitionFilters: [isnotnull(ds#1), (ds#1 = 19960102)]")
+    assert(PlanText.renumberIds("Location: CatalogFileIndex(2 paths)" +
+      "[file:/a/t/ds=1, file:/a/t/ds=2]") ==
+      "Location: CatalogFileIndex(2 paths)[<path>]")
+  }
+
   test("the same query built twice prints the same text") {
     import spark.implicits._
     def q = Seq((1L, "x"), (2L, "y")).toDF("k", "v")

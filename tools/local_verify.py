@@ -38,6 +38,9 @@ for name in sorted(oracles):
         duck_df = con.sql(sql).df()
     except Exception as e:
         results[name] = f'ORACLE-FAIL {type(e).__name__} {e}'; continue
+    if list(duck_df.columns) == ['__graft_oracle_failed']:
+        # the dump could not build this query's oracle (Registry.oracleSqlFor)
+        results[name] = f'ORACLE-FAILED {duck_df.iloc[0, 0]}'; continue
     s = spark_df[sorted(spark_df.columns)]
     d = duck_df[sorted(duck_df.columns)]
     if list(s.columns) != list(d.columns):
