@@ -1,8 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.Native.{
   gramHashes, intersectSizeSorted, minhashSig, simhash64}
@@ -358,9 +361,9 @@ object Dedup {
                        spreadCands: Boolean = true): DataFrame = {
     val rawCands = minhashCandidates(df, textCol, idCol, k, numHashes, bands)
     // `spreadCands = false` for callers whose candidate set is small and
-    // whose OUTPUT feeds an iterative consumer (t09's clusterAssign): the
-    // spread's 32 partitions ride into every downstream join/checkpoint
-    // and the per-iteration task overhead outweighs the verify
+    // whose OUTPUT is checkpointed and re-read (t09's clusterAssign): the
+    // spread's 32 partitions ride into every downstream job/checkpoint
+    // and the per-job task overhead outweighs the verify
     // parallelism — measured r22 cold-JVM A/B, t09 medians 2.15 s flat vs
     // 3.51 s spread (the r21 driver run agreed: 3.69 -> 4.20 s when the
     // spread was added). Dense-candidate callers (s03, t48, t29's twin)
@@ -617,34 +620,92 @@ object Dedup {
 
   /** Connected components over a near-dup pair graph: every doc gets the
     * min doc-id of its component as `cluster_id`, so survivor selection
-    * is `doc_id == cluster_id`.
+    * is `id == cluster_id`. Every pair endpoint must be an id of
+    * `allIds`; ids in no pair label themselves. Other columns of `allIds`
+    * pass through, so a caller can label its rows in place instead of
+    * joining the labels back.
     *
-    * Each iteration combines min-label propagation over the edges with a
-    * POINTER JUMP (`label ← label[label]`, the path-doubling step of
-    * Kiveris et al.'s star algorithms): labels are always node ids, so the
-    * self-join is total, and a label that reached distance d from the
-    * component min reaches ~2d+1 next round. Convergence is
-    * O(log diameter) iterations instead of O(diameter) — maxIter=10
-    * covers chains far beyond any real duplicate cluster (≥2^10 hops).
+    * The pairs are materialized ONCE (an eager local checkpoint — without
+    * it the whole upstream pair-generation plan, LSH candidates + verify,
+    * would recompute on every read), and that job also counts them. The
+    * count picks the route:
     *
-    * If `changed > 0` still holds at `maxIter`, the result would silently
-    * split components — so this THROWS GraftError.Other (exit contract
-    * 9999) rather than returning wrong clusters. */
+    *   - DRIVER route, when the pairs fit the session's broadcast rule:
+    *     count ≤ `spark.sql.autoBroadcastJoinThreshold` / 16 bytes per
+    *     (src, dst) long pair, the bound the session already puts on what
+    *     the driver collects and ships. They are collected (one job),
+    *     labeled by a union-find with min-id roots and path compression,
+    *     and the non-root labels are broadcast into the `allIds` join: no
+    *     propagation loop, no per-iteration jobs or codegen. Driver memory
+    *     is linear in that bound (the collected rows plus one map entry
+    *     per endpoint). A threshold ≤ 0 (broadcast disabled) never takes
+    *     it.
+    *   - DISTRIBUTED route, for larger graphs: iterative min-label
+    *     propagation over the edge endpoints only (only they can change
+    *     label), each iteration combined with a POINTER JUMP
+    *     (`label ← label[label]`, the path-doubling step of Kiveris et
+    *     al.'s star algorithms): labels are always node ids, so the
+    *     self-join is total, and a label that reached distance d from the
+    *     component min reaches ~2d+1 next round. Convergence is
+    *     O(log diameter) iterations instead of O(diameter) — maxIter=10
+    *     covers chains far beyond any real duplicate cluster (≥2^10 hops).
+    *     If `changed > 0` still holds at `maxIter`, the result would
+    *     silently split components — so this route THROWS
+    *     GraftError.Other (exit contract 9999) rather than returning wrong
+    *     clusters. The driver route always converges, so the guard (and
+    *     `maxIter`) covers this route only.
+    *
+    * Both routes end in the same `allIds` left join: an endpoint takes its
+    * component's min id, every other id keeps its own. DedupSpec pins the
+    * two routes to identical labels. */
   def clusterAssign(pairs: DataFrame, allIds: DataFrame,
                     maxIter: Int = 10): DataFrame = {
-    // undirected edges both ways; materialized ONCE — without this the
-    // whole upstream pair-generation plan (LSH candidates + verify) would
-    // recompute on every propagation iteration
+    val spark = pairs.sparkSession
+    val counted = org.apache.spark.sql.Observation()
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .observe(counted, count(lit(1)).as("n"))
       .localCheckpoint(true)
-    var labels = allIds.select(col("id"), col("id").as("cluster_id"))
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    // re-executed stages can only over-count, which only sends a graph
+    // that would have fit to the distributed route
+    val fits = threshold > 0 && counted.get.get("n")
+      .exists(_.asInstanceOf[Long] <= threshold / 16)
+    if (fits) {
+      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+      def find(x: Long): Long = {
+        var root = x
+        while (parent.getOrElse(root, root) != root) root = parent(root)
+        var c = x
+        while (c != root) { val up = parent(c); parent(c) = root; c = up }
+        root
+      }
+      edges.collect().foreach { r =>
+        val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
+        if (a != b) parent(math.max(a, b)) = math.min(a, b)
+      }
+      // the roots are exactly the ids absent from `parent`: they keep
+      // their own id in the join, so only non-roots are shipped
+      val labels = spark.createDataFrame(
+        parent.keys.toSeq.map(x => Row(x, find(x))).asJava,
+        StructType(Seq(StructField("id", LongType), StructField("label", LongType))))
+      relabel(allIds, broadcast(labels))
+    } else relabel(allIds, propagateLabels(edges, maxIter))
+  }
+
+  /** The distributed route of [[clusterAssign]]: min-label propagation +
+    * pointer jumping over the endpoints of `edges` (one direction per
+    * pair). Returns (`id`, `label`) for every endpoint. */
+  private def propagateLabels(edges: DataFrame, maxIter: Int): DataFrame = {
+    // undirected: both directions of the checkpointed pairs
+    val both = edges.unionAll(edges.select(col("dst"), col("src")))
+    var labels = both.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("cluster_id"))
       .localCheckpoint(true)
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIter) {
       // each node adopts the min cluster label among itself + neighbors
-      val viaEdges = edges
+      val viaEdges = both
         .join(labels.withColumnRenamed("id", "dst")
           .withColumnRenamed("cluster_id", "nbr_label"), "dst")
         .groupBy(col("src").as("id"))
@@ -683,8 +744,15 @@ object Dedup {
       throw graft.GraftError.Other(
         s"clusterAssign did not converge in $maxIter iterations — " +
           "raise maxIter; returning would silently split components")
-    labels
+    labels.select(col("id"), col("cluster_id").as("label"))
   }
+
+  /** Both routes' last step: `labels` (`id`, `label`) covers pair
+    * endpoints only; every other id of `allIds` is its own cluster. */
+  private def relabel(allIds: DataFrame, labels: DataFrame): DataFrame =
+    allIds.join(labels, Seq("id"), "left")
+      .withColumn("cluster_id", coalesce(col("label"), col("id")))
+      .drop("label")
 
   /** SimHash candidate pairs by the standard 4×16-bit chunk trick, behind
     * the same ADAPTIVE exact-collapse pre-pass as [[nearDupPairs]]

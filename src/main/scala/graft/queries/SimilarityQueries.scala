@@ -222,15 +222,15 @@ object SimilarityQueries {
     * 0.5 among a bounded slice, oracled in DuckDB. (Random embeddings
     * make high-cosine pairs rare — 0.5 keeps the check meaningful while
     * still usually yielding zero rows at small SF, which the oracle
-    * confirms exactly.) */
+    * confirms exactly.) Scored by the native FloatCosine on the raw
+    * floats: one fused loop per pair, bit-identical to the double fold
+    * and to DuckDB's `list_cosine_similarity` over `::DOUBLE[]`. */
   def cosineNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = scan(spark, sfDir, "embeddings").where(col("vec_id") < 200)
-    val a = emb.select(col("vec_id").as("id_a"),
-      Similarity.asDouble(col("embedding")).as("va"))
-    val b = emb.select(col("vec_id").as("id_b"),
-      Similarity.asDouble(col("embedding")).as("vb"))
+    val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("va"))
+    val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
     a.crossJoin(b).where(col("id_a") < col("id_b"))
-      .withColumn("sim", Similarity.cosine(col("va"), col("vb")))
+      .withColumn("sim", floatCosine(col("va"), col("vb")))
       .where(col("sim") >= 0.5)
       .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
   }

@@ -241,16 +241,15 @@ object TextQueries {
     // DedupSpec-pinned equivalence)
     val pairs = Dedup.nearDupPairsFlat(exact, "text", "doc_id", threshold = 0.5,
       // no candidate spread: the post-exact-dedup candidate set is small
-      // and the pairs feed clusterAssign's ITERATIVE joins — the spread's
-      // partition count multiplies per-iteration task overhead (measured
+      // and the pairs feed clusterAssign's checkpoint and reads (every
+      // propagation iteration, past its broadcast bound) — the spread's
+      // partition count multiplies their task overhead (measured
       // r22 A/B: t09 medians 2.15 s flat vs 3.51 s spread; the r21 driver
       // run agreed, 3.69 -> 4.20 s). See nearDupPairsFlat's scaladoc.
       spreadCands = false)
-    val clusters = Dedup.clusterAssign(
-      pairs, exact.select(col("doc_id").as("id")))
-    val survivors = exact
-      .join(clusters.withColumnRenamed("id", "doc_id"), "doc_id")
-      .where(col("doc_id") === col("cluster_id"))
+    val survivors = Dedup.clusterAssign(pairs, exact.withColumnRenamed("doc_id", "id"))
+      .where(col("id") === col("cluster_id"))
+      .withColumnRenamed("id", "doc_id")
     // quality floor via the native one-pass token_stats (no token array
     // materialized just to count it)
     val quality = survivors

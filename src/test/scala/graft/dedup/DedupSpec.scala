@@ -1,5 +1,6 @@
 package graft.dedup
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -154,22 +155,47 @@ class DedupSpec extends SparkSpec {
     Dedup.simhashCandidates(docs, "text", "doc_id", maxHamming = 3)
   }
 
+  /** A session whose broadcast is disabled: clusterAssign takes its
+    * distributed route there whatever the graph's size. The default
+    * session's 10 MB threshold sends every graph below to the driver. */
+  private lazy val distributed: SparkSession = sessionWithThreshold(-1)
+
+  private def sessionWithThreshold(bytes: Long): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", bytes.toString)
+    s
+  }
+
+  private def assignOn(s: SparkSession, pairs: Seq[(Long, Long)],
+                       ids: Seq[Long], maxIter: Int = 10): DataFrame = {
+    import s.implicits._
+    Dedup.clusterAssign(pairs.toDF("id_a", "id_b"), ids.toDF("id"), maxIter)
+  }
+
+  private def labelsOf(df: DataFrame): Map[Long, Long] =
+    df.as[(Long, Long)].collect().toMap
+
+  /** clusterAssign's labels, asserted identical on both routes. */
+  private def clusterLabels(pairs: Seq[(Long, Long)], ids: Seq[Long],
+                            maxIter: Int = 10): Map[Long, Long] = {
+    val viaDriver = labelsOf(assignOn(spark, pairs, ids, maxIter))
+    val viaPropagation = labelsOf(assignOn(distributed, pairs, ids, maxIter))
+    assert(viaDriver == viaPropagation,
+      s"driver route $viaDriver != distributed route $viaPropagation")
+    viaDriver
+  }
+
   test("cluster assignment labels each component with its min id") {
     // components: {1,2,3} (chain), {4,5}, {6} singleton
-    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("id_a", "id_b")
-    val ids = (1L to 6L).toDF("id")
-    val labels = Dedup.clusterAssign(pairs, ids)
-      .as[(Long, Long)].collect().toMap
+    val labels = clusterLabels(Seq((1L, 2L), (2L, 3L), (4L, 5L)), 1L to 6L)
     assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       4L -> 4L, 5L -> 4L, 6L -> 6L))
   }
 
   test("cluster assignment converges on a long chain within maxIter hops") {
     // chain 1-2-3-...-9: min label must travel the whole chain
-    val pairs = (1L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val ids = (1L to 9L).toDF("id")
-    val labels = Dedup.clusterAssign(pairs, ids, maxIter = 20)
-      .as[(Long, Long)].collect().toMap
+    val labels = clusterLabels((1L until 9L).map(i => (i, i + 1)), 1L to 9L,
+      maxIter = 20)
     assert(labels.values.toSet == Set(1L))
   }
 
@@ -177,20 +203,65 @@ class DedupSpec extends SparkSpec {
     // plain one-hop propagation needs 40 iterations here (> default 10)
     // and used to return silently SPLIT labels; path doubling covers
     // distance ~2^maxIter, so the default must now label the whole chain
-    val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val ids = (1L to 40L).toDF("id")
-    val labels = Dedup.clusterAssign(pairs, ids) // default maxIter = 10
-      .as[(Long, Long)].collect().toMap
+    val labels = clusterLabels((1L until 40L).map(i => (i, i + 1)), 1L to 40L)
     assert(labels.values.toSet == Set(1L))
   }
 
   test("unconverged clusterAssign throws instead of returning split labels") {
-    val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val ids = (1L to 40L).toDF("id")
+    // only the distributed route iterates (the driver route's union-find
+    // cannot fail to converge), so broadcast is disabled here
     val e = intercept[graft.GraftError.Other] {
-      Dedup.clusterAssign(pairs, ids, maxIter = 2)
+      assignOn(distributed, (1L until 40L).map(i => (i, i + 1)), 1L to 40L,
+        maxIter = 2)
     }
     assert(e.code == 9999 && e.getMessage.contains("did not converge"))
+  }
+
+  test("clusterAssign with no pairs labels every id with itself") {
+    assert(clusterLabels(Seq.empty, 1L to 4L) == (1L to 4L).map(i => i -> i).toMap)
+  }
+
+  test("both clusterAssign routes match a plain-Scala reference on a " +
+    "seeded random graph with many components") {
+    val rnd = new scala.util.Random(7L)
+    val ids = 1L to 300L
+    // ~0.6 edges per node, either orientation, self-loops and repeats
+    // included: a forest of small trees plus a few larger components
+    val pairs = Seq.fill(180)((1L + rnd.nextInt(300), 1L + rnd.nextInt(300)))
+    val adj = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+    val expected = scala.collection.mutable.Map.empty[Long, Long]
+    // ascending starts: the first id to reach a component is its min
+    for (start <- ids if !expected.contains(start)) {
+      var frontier = List(start)
+      expected(start) = start
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(adj.getOrElse(_, Nil))
+          .filterNot(expected.contains).distinct
+        frontier.foreach(expected(_) = start)
+      }
+    }
+    assert(expected.values.toSet.size > 100, "the graph must have many components")
+    assert(clusterLabels(pairs, ids) == expected.toMap)
+  }
+
+  test("the broadcast bound picks clusterAssign's route") {
+    // 5 pairs: a threshold of 80 bytes (16 per pair) fits them, 64 does not
+    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 7L), (7L, 8L))
+    val ids = 1L to 9L
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L,
+      6L -> 6L, 7L -> 6L, 8L -> 6L, 9L -> 9L)
+    val fits = sessionWithThreshold(80)
+    // the driver route: the pair checkpoint and one collect, every time
+    val (viaDriver, driverJobs) = jobsStartedBy(assignOn(fits, pairs, ids))
+    val (_, againJobs) = jobsStartedBy(assignOn(fits, pairs, ids))
+    assert(driverJobs.size == 2 && againJobs.size == 2,
+      s"driver route jobs: $driverJobs then $againJobs")
+    assert(labelsOf(viaDriver) == expected)
+    // a bound of 4 pairs: the propagation loop runs, same labels
+    val (viaLoop, loopJobs) =
+      jobsStartedBy(assignOn(sessionWithThreshold(64), pairs, ids))
+    assert(loopJobs.size > 2, s"distributed route jobs: $loopJobs")
+    assert(labelsOf(viaLoop) == expected)
   }
 
   test("nearDupAgainst finds every planted batch-vs-corpus match, nothing else") {
