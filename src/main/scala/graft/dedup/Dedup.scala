@@ -48,9 +48,9 @@ object Dedup {
   def shingles(text: Column, k: Int = 5): Column =
     array_distinct(rawShingles(text, k))
 
-  /** All k-gram positions, duplicates included — enough for MinHash (the
-    * min over a multiset equals the min over its set), skipping the
-    * per-doc string-array distinct. */
+  /** All k-gram positions of the normalized text, duplicates included —
+    * the positions [[shingles]] distincts. A text shorter than k yields
+    * one gram, itself (the rule the native GramHashes keeps). */
   def rawShingles(text: Column, k: Int = 5): Column = {
     val norm = lower(trim(text))
     transform(
@@ -58,44 +58,26 @@ object Dedup {
       i => norm.substr(i, lit(k)))
   }
 
-  /** MinHash signatures via explode + groupBy-min: one row per (doc,
-    * shingle), the expensive string hash runs ONCE per shingle, then each
-    * of the `numHashes` functions is a cheap fixed-width rehash
-    * xxhash64(h, i) (ANSI-safe — no overflowing multiply). The min
-    * aggregation partial-combines map-side, so the shuffle carries only
-    * numHashes longs per doc — the 100 TB-safe shape (the alternative,
-    * nested array lambdas, recomputes the shingle set per hash function
-    * because Catalyst collapses the projections). */
-  def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
-                        k: Int = 5, numHashes: Int = 32): DataFrame = {
-    val exploded = df.select(col(idCol).as("id"),
-        explode(rawShingles(col(textCol), k)).as("s"))
-      .select(col("id"), xxhash64(col("s")).as("h"))
-    val mins = (0 until numHashes).map(i =>
-      min(xxhash64(col("h"), lit(i))).as(s"m$i"))
-    exploded.groupBy(col("id"))
-      .agg(mins.head, mins.tail.toIndexedSeq: _*)
-      .select(col("id"),
-        array((0 until numHashes).map(i => col(s"m$i")).toIndexedSeq: _*).as("sig"))
-  }
+  private val Bands = 8
+  private val RowsPerBand = 4
 
-  /** LSH banding: split the signature into `bands` bands of
-    * numHashes/bands rows each; docs sharing ANY band hash become
+  /** LSH banding of a [[graft.functions.MinHashSig]] signature (32 minima
+    * over 5-byte shingles) into 8 bands of 4 rows — the one fixed shape
+    * every near-dup query runs: docs sharing ANY band hash become
     * candidates. With b bands of r rows, P(candidate) = 1-(1-j^r)^b —
     * b=8,r=4 puts the S-curve threshold near j≈0.6. */
-  def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
+  def bandHashes(sig: Column): Column =
+    transform(sequence(lit(0), lit(Bands - 1)),
       b => struct(b.as("band"),
-        xxhash64(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))).as("bucket")))
+        xxhash64(slice(sig, b * RowsPerBand + 1, lit(RowsPerBand))).as("bucket")))
 
   /** Candidate near-dup pairs via banded MinHash. Returns (id_a, id_b)
     * with id_a < id_b, distinct. The join is an equi-join on
     * (band, bucket): at 100 TB this shuffles signature rows once and never
     * compares across buckets. */
-  def minhashCandidates(df: DataFrame, textCol: String, idCol: String,
-                        k: Int = 5, numHashes: Int = 32,
-                        bands: Int = 8): DataFrame = {
-    val sigs = bandsOf(df, textCol, idCol, "id", k, numHashes, bands)
+  def minhashCandidates(df: DataFrame, textCol: String,
+                        idCol: String): DataFrame = {
+    val sigs = bandsOf(df, textCol, idCol, "id")
     val a = sigs.as("a"); val b = sigs.as("b")
     a.join(b, col("a.band") === col("b.band") &&
         col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
@@ -143,13 +125,10 @@ object Dedup {
     * collapsed on a planted duplicate-heavy corpus and the routing
     * decision on both corpus shapes. */
   def nearDupPairs(df: DataFrame, textCol: String, idCol: String,
-                   threshold: Double, k: Int = 5, numHashes: Int = 32,
-                   bands: Int = 8): DataFrame =
+                   threshold: Double): DataFrame =
     collapseExpand(df, textCol, idCol, Identity.NormalizedText,
-      reps => nearDupPairsFlat(reps, "__text", "id",
-        threshold, k, numHashes, bands),
-      flatPairs = () =>
-        nearDupPairsFlat(df, textCol, idCol, threshold, k, numHashes, bands),
+      reps => nearDupPairsFlat(reps, "__text", "id", threshold),
+      flatPairs = () => nearDupPairsFlat(df, textCol, idCol, threshold),
       intra = (pairs, _) => pairs.select(col("id_a"), col("id_b"),
         lit(1.0).as("jaccard")).where(lit(1.0) >= threshold))
 
@@ -356,10 +335,9 @@ object Dedup {
     * text; [[nearDupPairs]] bounds that by collapsing exact duplicates
     * first and is the operator callers should use. */
   def nearDupPairsFlat(df: DataFrame, textCol: String, idCol: String,
-                       threshold: Double, k: Int = 5, numHashes: Int = 32,
-                       bands: Int = 8,
+                       threshold: Double,
                        spreadCands: Boolean = true): DataFrame = {
-    val rawCands = minhashCandidates(df, textCol, idCol, k, numHashes, bands)
+    val rawCands = minhashCandidates(df, textCol, idCol)
     // `spreadCands = false` for callers whose candidate set is small and
     // whose OUTPUT is checkpointed and re-read (t09's clusterAssign): the
     // spread's 32 partitions ride into every downstream job/checkpoint
@@ -369,7 +347,7 @@ object Dedup {
     // spread was added). Dense-candidate callers (s03, t48, t29's twin)
     // keep the spread: s03 min 0.99 s spread vs 1.70 s flat.
     val cands = if (spreadCands) CoreOps.cpuSpread(rawCands) else rawCands
-    val grams = gramsOf(df, textCol, idCol, "id", "grams", "n", k)
+    val grams = gramsOf(df, textCol, idCol, "id", "grams", "n")
     // identical subtree on both sides of the two joins -> Spark reuses the
     // exchange instead of recomputing shingle hashes twice
     verifyJaccard(cands
@@ -408,11 +386,10 @@ object Dedup {
     * batch-vs-corpus edge only. */
   def nearDupAgainst(corpus: DataFrame, batch: DataFrame,
                      textCol: String, idCol: String,
-                     threshold: Double, k: Int = 5,
-                     numHashes: Int = 32, bands: Int = 8): DataFrame =
+                     threshold: Double): DataFrame =
     nearDupAgainstIndexed(
-      indexCorpus(corpus, textCol, idCol, persist = false, k, numHashes, bands),
-      batch, textCol, idCol, threshold, k, numHashes, bands)
+      indexCorpus(corpus, textCol, idCol, persist = false),
+      batch, textCol, idCol, threshold)
 
   /** The CORPUS-SIDE INVARIANTS of the incremental gate, computed once:
     * the collapse-routing probe verdict plus the corpus's DERIVED gate
@@ -433,9 +410,6 @@ object Dedup {
     * the stream stops. */
   final case class GateCorpusIndex private[dedup] (
       collapsed: Boolean,
-      private[dedup] val k: Int,
-      private[dedup] val numHashes: Int,
-      private[dedup] val bands: Int,
       private[dedup] val cBands: DataFrame,
       private[dedup] val cGrams: DataFrame,
       private[dedup] val kc: DataFrame,
@@ -446,30 +420,25 @@ object Dedup {
   }
 
   def indexCorpus(corpus: DataFrame, textCol: String, idCol: String,
-                  persist: Boolean, k: Int = 5, numHashes: Int = 32,
-                  bands: Int = 8): GateCorpusIndex = {
+                  persist: Boolean): GateCorpusIndex = {
     def maybe(df: DataFrame): DataFrame =
       if (persist)
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else df
     if (!duplicationHeavy(corpus, textCol)) {
-      val cb = maybe(bandsOf(corpus, textCol, idCol, "corpus_id",
-        k, numHashes, bands))
-      val cg = maybe(gramsOf(corpus, textCol, idCol, "corpus_id",
-        "gc", "nc", k))
-      GateCorpusIndex(collapsed = false, k, numHashes, bands, cb, cg,
-        null, null, if (persist) Seq(cb, cg) else Seq.empty)
+      val cb = maybe(bandsOf(corpus, textCol, idCol, "corpus_id"))
+      val cg = maybe(gramsOf(corpus, textCol, idCol, "corpus_id", "gc", "nc"))
+      GateCorpusIndex(collapsed = false, cb, cg, null, null,
+        if (persist) Seq(cb, cg) else Seq.empty)
     } else {
       val kc = maybe(keyedBy(corpus, textCol, idCol, Identity.NormalizedText))
       val reps = repsOf(kc)
-      val cb = maybe(bandsOf(reps, "__text", "id", "corpus_id",
-        k, numHashes, bands))
-      val cg = maybe(gramsOf(reps, "__text", "id", "corpus_id",
-        "gc", "nc", k))
+      val cb = maybe(bandsOf(reps, "__text", "id", "corpus_id"))
+      val cg = maybe(gramsOf(reps, "__text", "id", "corpus_id", "gc", "nc"))
       val repC = maybe(reps.select(col("id").as("crid"),
         col("ek").as("cek")))
-      GateCorpusIndex(collapsed = true, k, numHashes, bands, cb, cg,
-        kc, repC, if (persist) Seq(kc, cb, cg, repC) else Seq.empty)
+      GateCorpusIndex(collapsed = true, cb, cg, kc, repC,
+        if (persist) Seq(kc, cb, cg, repC) else Seq.empty)
     }
   }
 
@@ -478,21 +447,14 @@ object Dedup {
     * corpus signature/gram recomputation. */
   def nearDupAgainstIndexed(idx: GateCorpusIndex, batch: DataFrame,
                             textCol: String, idCol: String,
-                            threshold: Double, k: Int = 5,
-                            numHashes: Int = 32,
-                            bands: Int = 8): DataFrame = {
-    require(k == idx.k && numHashes == idx.numHashes && bands == idx.bands,
-      s"gate params (k=$k, numHashes=$numHashes, bands=$bands) must match " +
-        s"the index (k=${idx.k}, numHashes=${idx.numHashes}, " +
-        s"bands=${idx.bands}) — the corpus band/gram tables were built " +
-        "with the index's parameters")
+                            threshold: Double): DataFrame = {
     if (!idx.collapsed)
       return nearDupAgainstPrebuilt(idx.cBands, idx.cGrams, batch,
-        textCol, idCol, threshold, k, numHashes, bands)
+        textCol, idCol, threshold)
     val kb = keyedBy(batch, textCol, idCol, Identity.NormalizedText)
     val rp = nearDupAgainstPrebuilt(idx.cBands, idx.cGrams,
       repsOf(kb).select(col("id"), col("__text")),
-      "__text", "id", threshold, k, numHashes, bands)
+      "__text", "id", threshold)
     // expansion: rep pair -> every member combination. The batch-side
     // maps are broadcast (nightly-batch contract); the corpus member map
     // is id/ek only — fixed width, no text.
@@ -520,53 +482,33 @@ object Dedup {
     * should use. */
   def nearDupAgainstFlat(corpus: DataFrame, batch: DataFrame,
                      textCol: String, idCol: String,
-                     threshold: Double, k: Int = 5,
-                     numHashes: Int = 32, bands: Int = 8): DataFrame = {
+                     threshold: Double): DataFrame =
     nearDupAgainstPrebuilt(
-      bandsOf(corpus, textCol, idCol, "corpus_id", k, numHashes, bands),
-      gramsOf(corpus, textCol, idCol, "corpus_id", "gc", "nc", k),
-      batch, textCol, idCol, threshold, k, numHashes, bands)
-  }
+      bandsOf(corpus, textCol, idCol, "corpus_id"),
+      gramsOf(corpus, textCol, idCol, "corpus_id", "gc", "nc"),
+      batch, textCol, idCol, threshold)
 
   /** Banded MinHash rows (`idAs`, band, bucket) of one side — the
     * candidate-join input of [[minhashCandidates]], the gate's inline
     * flat form and the prebuilt corpus index. */
   private def bandsOf(df: DataFrame, textCol: String, idCol: String,
-                      idAs: String, k: Int, numHashes: Int,
-                      bands: Int): DataFrame = {
-    // bands > numHashes would make every band an empty slice -> identical
-    // bucket hash for all docs -> the equi-join degenerates to all-pairs;
-    // non-divisible values would silently ignore trailing signature rows
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    val r = numHashes / bands
-    // default shape goes through the native fused-loop expression (pure
-    // narrow map, no shuffle); non-default params use the aggregation form
-    val base =
-      if (k == 5 && numHashes == 32)
-        df.select(col(idCol).as(idAs),
-          minhashSig(lower(trim(col(textCol)))).as("sig"))
-      else minhashSignatures(df, textCol, idCol, k, numHashes)
-        .withColumnRenamed("id", idAs)
-    base.withColumn("bh", explode(bandHashes(col("sig"), bands, r)))
+                      idAs: String): DataFrame =
+    // the native fused-loop signature: a pure narrow map, no shuffle
+    df.select(col(idCol).as(idAs),
+        minhashSig(lower(trim(col(textCol)))).as("sig"))
+      .withColumn("bh", explode(bandHashes(col("sig"))))
       .select(col(idAs), col("bh.band").as("band"),
         col("bh.bucket").as("bucket"))
-  }
 
   /** Sorted distinct hashed-gram arrays (`idAs`, `gAs`, `nAs`) of one
-    * side — the verify input, shared like [[bandsOf]]. Default k goes
-    * through the native zero-alloc GramHashes expression (one byte pass,
-    * primitive sort+dedupe); other k use the builtin string-shingle
-    * formulation. */
+    * side — the verify input, shared like [[bandsOf]]: the native
+    * zero-alloc GramHashes expression (one byte pass, primitive
+    * sort+dedupe). */
   private def gramsOf(df: DataFrame, textCol: String, idCol: String,
-                      idAs: String, gAs: String, nAs: String,
-                      k: Int): DataFrame = {
-    val g = if (k == 5) gramHashes(lower(trim(col(textCol))))
-    else sort_array(array_distinct(
-      transform(rawShingles(col(textCol), k), s => xxhash64(s))))
-    df.select(col(idCol).as(idAs), g.as(gAs))
+                      idAs: String, gAs: String, nAs: String): DataFrame =
+    df.select(col(idCol).as(idAs),
+        gramHashes(lower(trim(col(textCol)))).as(gAs))
       .withColumn(nAs, size(col(gAs)))
-  }
 
   /** The gate core against PREBUILT corpus band/gram tables: batch side
     * banded+grammed fresh (it is new data), broadcast into the corpus's
@@ -578,17 +520,15 @@ object Dedup {
   private def nearDupAgainstPrebuilt(corpusBands: DataFrame,
                                      corpusGrams: DataFrame,
                                      batch: DataFrame, textCol: String,
-                                     idCol: String, threshold: Double,
-                                     k: Int, numHashes: Int,
-                                     bands: Int): DataFrame = {
+                                     idCol: String, threshold: Double): DataFrame = {
     val cand = corpusBands
-      .join(broadcast(bandsOf(batch, textCol, idCol, "batch_id",
-        k, numHashes, bands)), Seq("band", "bucket"))
+      .join(broadcast(bandsOf(batch, textCol, idCol, "batch_id")),
+        Seq("band", "bucket"))
       .select(col("batch_id"), col("corpus_id")).distinct()
     verifyJaccard(cand
       .join(corpusGrams, "corpus_id")
       .join(broadcast(gramsOf(batch, textCol, idCol, "batch_id",
-        "gb", "nb", k)), "batch_id"),
+        "gb", "nb")), "batch_id"),
       "gc", "gb", "nc", "nb", threshold, "batch_id", "corpus_id")
   }
 
@@ -764,28 +704,24 @@ object Dedup {
     * back with hamming 0 (intra) or their representatives' hamming
     * (cross). Output-identical to [[simhashCandidatesFlat]]
     * (DedupSpec-pinned). */
-  def simhashCandidates(df: DataFrame, textCol: String, idCol: String,
-                        maxHamming: Int = 3): DataFrame =
+  def simhashCandidates(df: DataFrame, textCol: String, idCol: String): DataFrame =
     collapseExpand(df, textCol, idCol, Identity.NormalizedText,
-      reps => simhashCandidatesFlat(reps, "__text", "id", maxHamming),
-      flatPairs = () => simhashCandidatesFlat(df, textCol, idCol, maxHamming),
+      reps => simhashCandidatesFlat(reps, "__text", "id"),
+      flatPairs = () => simhashCandidatesFlat(df, textCol, idCol),
       intra = (pairs, _) => pairs.select(col("id_a"), col("id_b"),
-        lit(0).as("hamming")).where(lit(0) <= maxHamming))
+        lit(0).as("hamming")))
 
-  /** The flat SimHash candidate formulation: two 64-bit prints within
-    * Hamming distance 3 must agree exactly on at least one of the 4
-    * 16-bit chunks, so candidates come from an equi-join on
-    * (chunk index, chunk value) — never all-pairs. */
-  def simhashCandidatesFlat(df: DataFrame, textCol: String, idCol: String,
-                            maxHamming: Int = 3): DataFrame = {
-    // the 4-chunk pigeonhole only guarantees candidate generation up to
-    // Hamming 3 (4 differing bits can land one per chunk and never share
-    // an equi-join key); a larger radius would SILENTLY lose pairs that
-    // the final hamming filter means to keep — fail loudly instead
-    require(maxHamming <= 3,
-      s"simhashCandidates: maxHamming=$maxHamming exceeds the lossless " +
-        "radius of the 4x16-bit chunk join (3); use more/narrower chunks " +
-        "for a larger radius")
+  /** The SimHash near-dup radius. Two 64-bit prints within Hamming 3 must
+    * agree exactly on at least one of the 4 16-bit chunks (pigeonhole),
+    * which is what makes the chunk equi-join lossless; at 4 differing
+    * bits one can land in each chunk, and the pair never shares a key. */
+  private val MaxHamming = 3
+
+  /** The flat SimHash candidate formulation: candidates come from an
+    * equi-join on (chunk index, chunk value) — never all-pairs — and keep
+    * Hamming ≤ `MaxHamming`. */
+  def simhashCandidatesFlat(df: DataFrame, textCol: String,
+                            idCol: String): DataFrame = {
     val sh = simhashes(df, textCol, idCol)
       .select(col("id"), col("simhash").as("sh"))
     val chunked = sh.withColumn("chunk", explode(expr(
@@ -799,6 +735,6 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         expr("bit_count(a.sh ^ b.sh)").as("hamming"))
       .distinct()
-      .where(col("hamming") <= maxHamming)
+      .where(col("hamming") <= MaxHamming)
   }
 }

@@ -21,10 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * is deterministic for any input and equivalent to char-level for ASCII
   * corpora.
   *
-  * vs the aggregation-shaped `Dedup.minhashSignatures` (explode + 32
-  * min-aggregates): same LSH banding downstream, but this form is a
-  * narrow map — the 100 TB shuffle disappears entirely and per-doc cost
-  * drops to one pass over the bytes.
+  * A narrow map, where an explode + 32 min-aggregates form would shuffle
+  * one row per (doc, shingle): per-doc cost is one pass over the bytes.
+  * `Dedup` bands this signature at its default shape (k = 5, 32 hashes).
   */
 case class MinHashSig(child: Expression, k: Int = 5, numHashes: Int = 32)
     extends UnaryExpression {

@@ -404,14 +404,6 @@ object HashOracles {
        |FROM batch b LEFT JOIN best ON b.id = best.batch_id""".stripMargin
   }
 
-  /** t29: the candidates-fed fuzzy verify. Candidates from embedded band
-    * buckets (same machinery as s03); the 200-char prefix, the Levenshtein
-    * DP, the Jaro-Winkler similarity, the ≤ 20 threshold, and the decimal
-    * rounding all recomputed by DuckDB from raw text. DuckDB levenshtein
-    * counts bytes where Spark counts codepoints — equivalent on the pure-
-    * ASCII harness corpora (the t18 caveat); jaro_winkler_similarity is
-    * DuckDB's independent implementation, bit-identical to the native
-    * expression (validated on 7k random pairs in JaroWinklerSpec). */
   /** Corpus-size ceiling for t29's recall-complete brute-force oracle:
     * every shipped harness SF (500 docs at sf0.01, fewer below) sits
     * under it, so the DRIVER GATE always runs the candidate-independent
@@ -421,6 +413,15 @@ object HashOracles {
     * recall is covered by RecallProbe/ScaledRecallSpec instead. */
   private[queries] val FuzzyBruteForceMaxDocs = 600
 
+  /** t29: the fuzzy verify over all length-gap-filtered pairs, or past
+    * [[FuzzyBruteForceMaxDocs]] over candidates from embedded band
+    * buckets (same machinery as s03); the 200-char prefix, the Levenshtein
+    * DP, the Jaro-Winkler similarity, the ≤ 20 threshold, and the decimal
+    * rounding all recomputed by DuckDB from raw text. DuckDB levenshtein
+    * counts bytes where Spark counts codepoints — equivalent on the pure-
+    * ASCII harness corpora (the t18 caveat); jaro_winkler_similarity is
+    * DuckDB's independent implementation, bit-identical to the native
+    * expression (validated on 7k random pairs in JaroWinklerSpec). */
   def fuzzyNearDupOracle: String = docs() match {
     case d if d.length <= FuzzyBruteForceMaxDocs =>
       // RECALL-COMPLETE brute force (r14 verdict item 5, the s16/s15

@@ -119,7 +119,7 @@ object SimilarityQueries {
     * how many of its pairs cross a source boundary (counted once per
     * side — the contamination-direction view). Composes the EXISTING
     * s03 pair machinery ([[Dedup.nearDupPairs]], unchanged band/verify
-    * shuffles) with three small post-aggregations on the narrow
+    * shuffles) with one small post-aggregation on the narrow
     * (id_a, id_b) pair table — no new shuffle shapes; at 100 TB the
     * report costs what the dedup pass already paid, plus shuffle joins
     * of the narrow pair table against the two-column id→source
@@ -139,45 +139,20 @@ object SimilarityQueries {
         threshold = 0.5)
       .select(col("id_a"), col("id_b"))
     val srcOf = corpus.select(col("doc_id"), col("source"))
-    // The annotated pair table feeds FOUR downstream branches (touched's
-    // two union arms, crossp's two) — without materialization each branch
-    // re-evaluates the whole upstream LSH band join + gram verify, and the
-    // branches prune different columns so ReuseExchange cannot unify them
-    // (the r21 before-plan: 62 Exchanges / 4 copies of the pair machinery).
-    // One LAZY localCheckpoint of the narrow (id_a, id_b, src_a, src_b)
-    // table pays the dedup pass exactly once; at 100 TB it is |pairs|-
-    // scale fixed-width rows — the query's own output order of magnitude,
-    // strictly cheaper than re-running the band/verify shuffles per branch.
-    // Lazy (r21 advice): eager ran the whole pipeline INCLUDING a count
-    // action at DataFrame construction. Lazy is only a partial fix under
-    // AQE: Dataset.checkpoint still calls physicalPlan.execute() at
-    // construction, and AdaptiveSparkPlanExec.execute() materializes
-    // every non-final query stage — so plan-only consumers (explain,
-    // plan audits, PlanSnap) skip the count and the final stage but
-    // still pay the upstream exchange jobs. Accepted: the alternative
-    // (persist) cannot truncate the 4-consumer plan the same way, and
-    // the construction cost is bounded by the pair machinery that the
-    // query itself needs on first action anyway.
-    // Caveat carried from the advice: localCheckpoint is non-reliable —
-    // executor loss recomputes from nothing and kills the query on a real
-    // cluster; the 100 TB story accepts a query retry there (the
-    // checkpoint is |pairs|-scale, rebuilt in one pass).
-    val ab = pairs
-      .join(srcOf.select(col("doc_id").as("id_a"),
-        col("source").as("src_a")), Seq("id_a"))
-      .join(srcOf.select(col("doc_id").as("id_b"),
-        col("source").as("src_b")), Seq("id_b"))
-      .localCheckpoint(false)
-    val touched = ab.select(col("id_a").as("doc_id"),
-        col("src_a").as("source"))
-      .unionAll(ab.select(col("id_b"), col("src_b")))
-      .groupBy(col("source"))
-      .agg(countDistinct(col("doc_id")).as("n_neardup_docs"))
-    val crossp = ab.where(col("src_a") =!= col("src_b"))
-      .select(col("src_a").as("source"))
-      .unionAll(ab.where(col("src_a") =!= col("src_b"))
-        .select(col("src_b").as("source")))
-      .groupBy(col("source")).agg(count(lit(1)).as("n_cross_pairs"))
+    // one row per pair side, (source, doc_id, cross): both per-source
+    // counts come out of ONE aggregation, so the annotated pair table has
+    // a single consumer and the pair machinery runs once, unmaterialized
+    val sides = pairs
+      .join(srcOf.toDF("id_a", "src_a"), Seq("id_a"))
+      .join(srcOf.toDF("id_b", "src_b"), Seq("id_b"))
+      .select(explode(array(
+          struct(col("src_a").as("source"), col("id_a").as("doc_id")),
+          struct(col("src_b").as("source"), col("id_b").as("doc_id"))))
+          .as("side"),
+        (col("src_a") =!= col("src_b")).as("cross"))
+    val touched = sides.groupBy(col("side.source").as("source"))
+      .agg(countDistinct(col("side.doc_id")).as("n_neardup_docs"),
+        count(when(col("cross"), 1)).as("n_cross_pairs"))
     // Two-level aggregation instead of a corpus-wide row-level WindowExec
     // (guide §2.3 "aggregate before you shuffle"): the per-(ek, source)
     // count partial-combines map-side, so on a duplicate-heavy corpus the
@@ -199,7 +174,6 @@ object SimilarityQueries {
     corpus.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
       .join(exact, Seq("source"), "left_outer")
       .join(touched, Seq("source"), "left_outer")
-      .join(crossp, Seq("source"), "left_outer")
       .select(col("source"), col("n_docs"),
         coalesce(col("n_exact_dup_docs"), lit(0L)).as("n_exact_dup_docs"),
         coalesce(col("n_neardup_docs"), lit(0L)).as("n_neardup_docs"),
@@ -984,38 +958,6 @@ object SimilarityQueries {
       |       CAST(list_max(qv) AS BIGINT) AS q_max
       |FROM q""".stripMargin
 
-  /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
-    * web-scale through semantic deduplication"): pairwise cosine runs
-    * only WITHIN coarse k-means cells — the cluster count is what
-    * bounds the quadratic (the paper runs ~10⁵ clusters at 5B docs;
-    * here the s07-shared k=8 quantizer). A vector is a semantic
-    * duplicate when some LOWER-id member of its cell has cosine ≥ 0.8
-    * with it (min-id survivor, t01's rule); the documented SemDeDup
-    * blind spot — near-dups split across a cell boundary are never
-    * compared — applies identically to engine and oracle.
-    *
-    * The shipped embeddings are random (max corpus cosine ≈ 0.48), so
-    * like s04 the query plants its own positives: each vector gets a
-    * +0.01-per-component replica (id + 1000000; the embeddings are
-    * unit-norm, so the +0.1 first cut dipped to cosine 0.675 — +0.01
-    * keeps self-cosine ≥ 0.997, ≈ 0 to everything else) — the 0.8 threshold
-    * sits in a wide gap, so engine/DuckDB last-ulp cosine divergence
-    * cannot flip a pair.
-    *
-    * The 100 TB shape: assignment is one narrow pass (native IvfCells
-    * argmin-2, centroids broadcast inside the expression) feeding ONE
-    * cell-keyed corpus exchange that everything downstream reuses —
-    * HashPartitioning(cell) satisfies the pair join's (cell, sub)
-    * clustering AND the final (id, cell) aggregation's, so the split
-    * sizes (partition-local count window over ~cell-sized runs), the
-    * self-join, and the keep-flag aggregation all run on that single
-    * materialized stage with zero further corpus shuffles (ReusedExchange,
-    * spec-pinned). The in-cell quadratic is bounded by cell size, which
-    * the adaptive cluster count controls until its 1024 ceiling and the
-    * [[SemCellCap]] second-nearest split bounds past it. Oracled via the s07 dump-time pattern: the trained
-    * centroids are embedded as VALUES and DuckDB recomputes assignment,
-    * the split, in-cell pairs, cosine, and the survivor rule
-    * independently. */
   /** s13's own quantizer cache: unlike s07's fixed k=8 (whose 64-vs-4096
     * plan pins depend on that contract), the SemDeDup cluster count is
     * THE scale knob — k = clamp(8, 1024, N/1000), so cells stay
@@ -1116,6 +1058,38 @@ object SimilarityQueries {
         col("vf"))
   }
 
+  /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
+    * web-scale through semantic deduplication"): pairwise cosine runs
+    * only WITHIN coarse k-means cells — the cluster count is what
+    * bounds the quadratic (the paper runs ~10⁵ clusters at 5B docs;
+    * here the s07-shared k=8 quantizer). A vector is a semantic
+    * duplicate when some LOWER-id member of its cell has cosine ≥ 0.8
+    * with it (min-id survivor, t01's rule); the documented SemDeDup
+    * blind spot — near-dups split across a cell boundary are never
+    * compared — applies identically to engine and oracle.
+    *
+    * The shipped embeddings are random (max corpus cosine ≈ 0.48), so
+    * like s04 the query plants its own positives: each vector gets a
+    * +0.01-per-component replica (id + 1000000; the embeddings are
+    * unit-norm, so the +0.1 first cut dipped to cosine 0.675 — +0.01
+    * keeps self-cosine ≥ 0.997, ≈ 0 to everything else) — the 0.8 threshold
+    * sits in a wide gap, so engine/DuckDB last-ulp cosine divergence
+    * cannot flip a pair.
+    *
+    * The 100 TB shape: assignment is one narrow pass (native IvfCells
+    * argmin-2, centroids broadcast inside the expression) feeding ONE
+    * cell-keyed corpus exchange that everything downstream reuses —
+    * HashPartitioning(cell) satisfies the pair join's (cell, sub)
+    * clustering AND the final (id, cell) aggregation's, so the split
+    * sizes (partition-local count window over ~cell-sized runs), the
+    * self-join, and the keep-flag aggregation all run on that single
+    * materialized stage with zero further corpus shuffles (ReusedExchange,
+    * spec-pinned). The in-cell quadratic is bounded by cell size, which
+    * the adaptive cluster count controls until its 1024 ceiling and the
+    * [[SemCellCap]] second-nearest split bounds past it. Oracled via the s07 dump-time pattern: the trained
+    * centroids are embedded as VALUES and DuckDB recomputes assignment,
+    * the split, in-cell pairs, cosine, and the survivor rule
+    * independently. */
   def semanticDedup(spark: SparkSession, sfDir: String): DataFrame =
     semanticDedupLayout(scan(spark, sfDir, "embeddings"),
       semCentroids(spark, sfDir), SemCellCap)
@@ -1209,20 +1183,6 @@ object SimilarityQueries {
        |FROM assign a LEFT JOIN p USING (vec_id)""".stripMargin
   }
 
-  /** ANN-fed cosine near-dup — the SCALE SHAPE whose bounded all-pairs
-    * primitive is s05: LSH bucket candidates ([[Similarity.lshNearDupPairs]],
-    * a (table, code) equi-join — no crossJoin anywhere in the plan) feed
-    * the exact cosine threshold. Like s13 the query plants its own
-    * positives (+0.01-per-component replicas at id+1e6, self-cosine ≥
-    * 0.997 on the unit-norm corpus, ≈0 to everything else — the 0.8
-    * threshold sits in a wide gap, so last-ulp engine divergence cannot
-    * flip a pair). The oracle is class-load deterministic (seeded
-    * hyperplanes as VALUES, like s02): DuckDB rebuilds the codes with the
-    * same sign-bit arithmetic, the candidate equi-join, the float
-    * round-trip of the replicas, the cosine, and the threshold —
-    * a candidate pair missed by LSH is missed identically on both sides,
-    * so the oracle is exact regardless of recall; SimilaritySpec pins
-    * recall separately against the all-pairs exact set (s05's shape). */
   /** s15's corpus: embeddings ∪ +0.01-per-component replicas — extracted
     * so the independent recall probe ([[graft.tools.RecallProbe]])
     * brute-forces ground truth over the EXACT corpus the LSH pipeline
@@ -1237,6 +1197,20 @@ object SimilarityQueries {
     base.unionByName(planted)
   }
 
+  /** ANN-fed cosine near-dup — the SCALE SHAPE whose bounded all-pairs
+    * primitive is s05: LSH bucket candidates ([[Similarity.lshNearDupPairs]],
+    * a (table, code) equi-join — no crossJoin anywhere in the plan) feed
+    * the exact cosine threshold. Like s13 the query plants its own
+    * positives (+0.01-per-component replicas at id+1e6, self-cosine ≥
+    * 0.997 on the unit-norm corpus, ≈0 to everything else — the 0.8
+    * threshold sits in a wide gap, so last-ulp engine divergence cannot
+    * flip a pair). The oracle is class-load deterministic (seeded
+    * hyperplanes as VALUES, like s02): DuckDB rebuilds the codes with the
+    * same sign-bit arithmetic, the candidate equi-join, the float
+    * round-trip of the replicas, the cosine, and the threshold —
+    * a candidate pair missed by LSH is missed identically on both sides,
+    * so the oracle is exact regardless of recall; SimilaritySpec pins
+    * recall separately against the all-pairs exact set (s05's shape). */
   def annCosineNearDup(spark: SparkSession, sfDir: String): DataFrame =
     Similarity.lshNearDupPairs(annCorpus(spark, sfDir), threshold = 0.8)
 
@@ -1481,6 +1455,17 @@ object SimilarityQueries {
       |       round(sim, 6) AS sim
       |FROM r WHERE rank <= $S22K""".stripMargin
 
+  /** s22's k and nprobe, interpolated into BOTH the registry call and
+    * the oracle SQL (the MixBudget pattern) — editing one without the
+    * other is impossible. */
+  private[queries] val S22K = 5
+  private[queries] val S22Nprobe = 4
+
+  /** The mining-slice modulus, shared with the oracle like S22K/S22Nprobe:
+    * both sides must select the SAME anchor set or the gate compares
+    * different queries. */
+  private[queries] val S22SliceMod = 97
+
   /** s22 — s21's mining at the corpus-scale shape (r17 verdict item 1):
     * candidate generation through s07's TRAINED IVF cells (shared
     * per-dir memo, so the geometry is identical across s07/s13/s19/s20/
@@ -1493,17 +1478,6 @@ object SimilarityQueries {
     * 8 cells). s21's brute force is the recall oracle — HardNegativesIvfSpec pins recall
     * ≥ 0.9 on a clustered corpus, and the plan pin shows no crossJoin
     * with vectors pruned off the top-k exchange. */
-  /** s22's k and nprobe, interpolated into BOTH the registry call and
-    * the oracle SQL (the MixBudget pattern) — editing one without the
-    * other is impossible. */
-  private[queries] val S22K = 5
-  private[queries] val S22Nprobe = 4
-
-  /** The mining-slice modulus, shared with the oracle like S22K/S22Nprobe:
-    * both sides must select the SAME anchor set or the gate compares
-    * different queries. */
-  private[queries] val S22SliceMod = 97
-
   def hardNegativesIvf(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = scan(spark, sfDir, "embeddings")
     // query side: a bounded mining slice (vec_id % S22SliceMod) — the

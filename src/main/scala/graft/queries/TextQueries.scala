@@ -788,6 +788,22 @@ object TextQueries {
         col("jw").cast("decimal(28,6)").cast("double").as("jw"))
   }
 
+  /** t29's corpus: documents ∪ tail-perturbed copies ∪ planted multibyte
+    * rows — extracted so the independent recall probe
+    * ([[graft.tools.RecallProbe]]) brute-forces ground truth over the
+    * EXACT corpus the LSH pipeline sees (a drifted reconstruction would
+    * make the recall check vacuous). */
+  private[graft] def fuzzyCorpus(spark: SparkSession,
+                                 sfDir: String): DataFrame = {
+    val docs = scan(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"))
+    val pert = docs.select((col("doc_id") + 1000000).as("doc_id"),
+      concat(col("text"), lit(" fuzzy tail")).as("text"))
+    // planted multibyte rows ride the full LSH->verify path: band-bucket
+    // candidates, then codepoint Levenshtein/JW (see PlantedFuzzy)
+    docs.unionAll(pert).unionAll(PlantedFuzzy.df(spark))
+  }
+
   /** Candidates-fed fuzzy verify — the SCALE SHAPE of fuzzy dedup, closing
     * the gap the bounded-slice primitives (t18/t20) leave open: LSH
     * candidate generation ([[Dedup.minhashCandidates]] — a (band, bucket)
@@ -809,22 +825,6 @@ object TextQueries {
     * independently. The byte-vs-codepoint caveat is load-bearing here:
     * planted multibyte rows ([[PlantedFuzzy]]) ride the full path and
     * the oracle transcodes them to codepoint semantics. */
-  /** t29's corpus: documents ∪ tail-perturbed copies ∪ planted multibyte
-    * rows — extracted so the independent recall probe
-    * ([[graft.tools.RecallProbe]]) brute-forces ground truth over the
-    * EXACT corpus the LSH pipeline sees (a drifted reconstruction would
-    * make the recall check vacuous). */
-  private[graft] def fuzzyCorpus(spark: SparkSession,
-                                 sfDir: String): DataFrame = {
-    val docs = scan(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text"))
-    val pert = docs.select((col("doc_id") + 1000000).as("doc_id"),
-      concat(col("text"), lit(" fuzzy tail")).as("text"))
-    // planted multibyte rows ride the full LSH->verify path: band-bucket
-    // candidates, then codepoint Levenshtein/JW (see PlantedFuzzy)
-    docs.unionAll(pert).unionAll(PlantedFuzzy.df(spark))
-  }
-
   def fuzzyNearDup(spark: SparkSession, sfDir: String): DataFrame = {
     HashOracles.record(spark, sfDir)
     // No LevenshteinPrefilter.install here: the rule explicitly skips the
@@ -1589,26 +1589,6 @@ object TextQueries {
       |FROM p WHERE jw >= 0.9""".stripMargin
   }
 
-  /** Exact substring-window dedup (the scalable stand-in for
-    * suffix-array substring dedup, Lee et al. 2021 "Deduplicating
-    * Training Data Makes Language Models Better"): every W-token
-    * sliding window is hashed; a window OCCURRENCE is duplicated when
-    * its window text occurs more than once corpus-wide (same doc or
-    * not), and a document whose duplicated-occurrence fraction reaches
-    * 0.5 is flagged for drop. W = 4 here — sized to the synthetic
-    * corpus's ~30-word vocabulary so the signal is non-vacuous
-    * (real pipelines use ~50-token windows on natural text).
-    *
-    * The 100 TB shape: the window explode is narrow (higher-order
-    * `transform` over the token split, codegen'd, one xxhash64 per
-    * window — text itself never leaves the scan); everything after
-    * moves only 8-byte hashes. Both aggregates are map-side combined,
-    * and the global-count join is a shuffle join on the hash key —
-    * deliberately NOT a `count(*) OVER (PARTITION BY w)` window, which
-    * would buffer an entire boilerplate-hot window's occurrence list in
-    * one task; hot keys here hit AQE's skew-split instead. Corpus-wide
-    * counts compare equal to the oracle's string-keyed counts under the
-    * repo's documented 64-bit no-collision assumption (exactKey's). */
   /** Deterministic epoch shuffle + sharding — the training-export layout
     * pass: every epoch re-permutes the corpus under a fresh key and lays
     * it out as `shards` independently-ordered shards, the shape a data
@@ -1664,6 +1644,26 @@ object TextQueries {
       |       doc_id
       |FROM s""".stripMargin
 
+  /** Exact substring-window dedup (the scalable stand-in for
+    * suffix-array substring dedup, Lee et al. 2021 "Deduplicating
+    * Training Data Makes Language Models Better"): every W-token
+    * sliding window is hashed; a window OCCURRENCE is duplicated when
+    * its window text occurs more than once corpus-wide (same doc or
+    * not), and a document whose duplicated-occurrence fraction reaches
+    * 0.5 is flagged for drop. W = 4 here — sized to the synthetic
+    * corpus's ~30-word vocabulary so the signal is non-vacuous
+    * (real pipelines use ~50-token windows on natural text).
+    *
+    * The 100 TB shape: the window explode is narrow (higher-order
+    * `transform` over the token split, codegen'd, one xxhash64 per
+    * window — text itself never leaves the scan); everything after
+    * moves only 8-byte hashes. Both aggregates are map-side combined,
+    * and the global-count join is a shuffle join on the hash key —
+    * deliberately NOT a `count(*) OVER (PARTITION BY w)` window, which
+    * would buffer an entire boilerplate-hot window's occurrence list in
+    * one task; hot keys here hit AQE's skew-split instead. Corpus-wide
+    * counts compare equal to the oracle's string-keyed counts under the
+    * repo's documented 64-bit no-collision assumption (exactKey's). */
   def spanDedup(spark: SparkSession, sfDir: String): DataFrame =
     // NOT spread (r22, reverting the r21 spreadSmallScan here): unlike
     // t38/t49, whose heavy work is a pure scan-side projection, t25's
@@ -2738,6 +2738,10 @@ object TextQueries {
   // t42 — temperature-weighted source mixing allocation
   // -----------------------------------------------------------------
 
+  /** The one token budget both the registered query and its oracle use —
+    * a single definition (r17 advice) so a change can't desync them. */
+  private val MixBudget = 1000000L
+
   /** t42 — the data-mixing WEIGHTS stage (the alpha/temperature
     * sampling of multilingual C4 — Xue et al. 2021, §3.1 — and the
     * Pile/LLaMA source mixes; t26 is the per-source admission stage
@@ -2764,10 +2768,6 @@ object TextQueries {
     * NOT agg + crossJoin re-references, which would fork the lineage
     * into three corpus scans unless exchange reuse holds — the t23
     * pruning trap); the single-partition windows see |sources| rows. */
-  /** The one token budget both the registered query and its oracle use —
-    * a single definition (r17 advice) so a change can't desync them. */
-  private val MixBudget = 1000000L
-
   def sourceMixAlloc(spark: SparkSession, sfDir: String): DataFrame =
     mixAllocLayout(scan(spark, sfDir, "documents"), budget = MixBudget)
 

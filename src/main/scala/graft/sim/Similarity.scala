@@ -170,8 +170,9 @@ object Similarity {
 
   /** LSH-bucketed ANN: join query and corpus on bucket code (per table),
     * exact cosine within buckets, global top-k per query across tables.
-    * With t tables of p planes, recall rises as 1-(1-(1-θ/π)^p)^t. */
-  /** Default 3 planes × 10 tables suits a low-similarity corpus (random
+    * With t tables of p planes, recall rises as 1-(1-(1-θ/π)^p)^t.
+    *
+    * Default 3 planes × 10 tables suits a low-similarity corpus (random
     * embeddings: top neighbors at cos≈0.2 ⇒ per-plane agreement ≈0.57,
     * so 3 planes ⇒ ~0.19/table ⇒ ~0.88 recall over 10 tables). For
     * true near-dup corpora (cos ≥ 0.9) raise planesPerTable to 8-16 to shrink
@@ -220,12 +221,13 @@ object Similarity {
     * only (table, code, id) triples — the vectors do NOT ride through the
     * band shuffle — and the verify join fetches vectors by id afterwards.
     *
-    * Parameter shape differs from [[lshTopK]] deliberately: ANN retrieval
+    * The shape is fixed — 8 planes × 6 tables over 64-wide vectors,
+    * seed 137 — and differs from [[lshTopK]]'s on purpose: ANN retrieval
     * wants big buckets (few planes) for recall at cos≈0.2; near-dup
     * detection targets cos ≥ threshold≈0.8-1.0 where per-plane agreement
-    * is ≈1-acos(c)/π ≥ 0.9, so MORE planes (default 8) shrink buckets —
-    * candidate volume stays corpus-linear — while multiple tables keep
-    * pair recall: at cos 0.997 (a planted near-dup), 8 planes agree with
+    * is ≈1-acos(c)/π ≥ 0.9, so MORE planes shrink buckets — candidate
+    * volume stays corpus-linear — while multiple tables keep pair
+    * recall: at cos 0.997 (a planted near-dup), 8 planes agree with
     * p≈0.82 per table and 6 tables push recall past 0.9999.
     *
     * `vecCol` must be `array<float>`: codes are computed on its double
@@ -248,11 +250,9 @@ object Similarity {
     * contract) is dropped exactly like the flat route drops it.
     * Output-identical to the flat form (VectorCollapseSpec). */
   def lshNearDupPairs(df: DataFrame, threshold: Double,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      planesPerTable: Int = 8, tables: Int = 6,
-                      dim: Int = 64, seed: Long = 137L): DataFrame = {
-    def pairs(base: DataFrame): DataFrame =
-      lshNearDupPairsFlat(base, threshold, planesPerTable, tables, dim, seed)
+                      idCol: String = "vec_id",
+                      vecCol: String = "embedding"): DataFrame = {
+    def pairs(base: DataFrame): DataFrame = lshNearDupPairsFlat(base, threshold)
     graft.dedup.Dedup.collapseExpand(df, vecCol, idCol,
       graft.dedup.Dedup.Identity.Vector, pairs,
       flatPairs = () =>
@@ -268,12 +268,11 @@ object Similarity {
   /** The flat (no collapse) LSH near-dup formulation over a prepared
     * (id, vf) frame — see [[lshNearDupPairs]], which routes here for
     * distinct corpora and feeds representatives through here otherwise. */
-  private[graft] def lshNearDupPairsFlat(base: DataFrame, threshold: Double,
-                      planesPerTable: Int = 8, tables: Int = 6,
-                      dim: Int = 64, seed: Long = 137L): DataFrame = {
+  private[graft] def lshNearDupPairsFlat(base: DataFrame,
+                                         threshold: Double): DataFrame = {
     val codes = base.select(col("id"),
       posexplode(lshBucketCodes(asDouble(col("vf")),
-        planesPerTable, tables, dim, seed))
+        planesPerTable = 8, tables = 6, dim = 64, seed = 137L))
         .as(Seq("table", "code")))
     val cands = codes.as("a").join(codes.as("b"),
         col("a.table") === col("b.table") && col("a.code") === col("b.code") &&

@@ -58,7 +58,7 @@ object PlanDump {
     "s22_hard_negatives_ivf" -> "corpus-scale hard-negative mining: trained-IVF cell equi-join candidates (query side broadcast with its nprobe=4 probe cells — one is burned on the query's own same-label cluster), label exclusion IN the candidate join before any cosine, vectors pruned off the top-k exchange — s21's brute force demoted to recall oracle",
     "t46_rrf_fusion" -> "hybrid retrieval fusion: each branch keeps its own scale story (t45's postings-filtered exchange, s01's broadcast baseline), the fusion itself is a full-outer join of two k-row lists with integer floor-div RRF scores — no float sum at the cut boundary",
     "t47_unigram_token_count" -> "unigram-LM (SentencePiece) token accounting: Viterbi min-cost apply as ONE codegen scalar, trained piece vocab in the task closure, per-distinct-word memo — ZERO exchanges, text dies in the scan-side projection (the BpeDocCount contract, second tokenizer family)",
-    "t48_source_dedup_report" -> "per-source dedup/contamination report: the existing s03 pair machinery (exact-collapse routing, band join, merge-scan verify) plus three |pairs|-scale post-aggregations; the exact-dup branch pre-aggregates per (sha256-key, source) cell map-side so the key-partitioned window runs over distinct cells, not documents — no new shuffle shapes",
+    "t48_source_dedup_report" -> "per-source dedup/contamination report: the existing s03 pair machinery (exact-collapse routing, band join, merge-scan verify) plus ONE |pairs|-scale post-aggregation over the exploded pair sides (near-dup docs and cross-source pairs together), so the pair table has one consumer and is never checkpointed; the exact-dup branch pre-aggregates per (sha256-key, source) cell map-side so the key-partitioned window runs over distinct cells, not documents — no new shuffle shapes",
     "t49_html_extract" -> "jusText-class HTML boilerplate extraction: block split, integer link-density/length classification, tag strip + entity unescape in ONE narrow projection over codegen'd regexp/array builtins — ZERO exchanges, the pre-dedup stage feeding t04/t16/t40",
     "p14_catalog_scan" -> "metastore-addressed read (the reference's hive_db.hive_table form): the ds= predicate resolves against catalog PARTITION METADATA at planning time — partitionFilters, not dataFilters, so exactly one partition's files are planned (the path-based twin is p01)",
   )

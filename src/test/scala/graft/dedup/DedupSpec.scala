@@ -142,19 +142,6 @@ class DedupSpec extends SparkSpec {
     assert(cands.contains((1L, 2L)))
   }
 
-  test("simhashCandidates rejects a radius beyond the 4-chunk join's " +
-    "lossless bound instead of silently losing pairs") {
-    // 4 differing bits can land one per 16-bit chunk and never share an
-    // equi-join key — maxHamming 4 would drop pairs the hamming filter
-    // means to keep, so the operator must fail loudly
-    val e = intercept[IllegalArgumentException] {
-      Dedup.simhashCandidates(docs, "text", "doc_id", maxHamming = 4)
-    }
-    assert(e.getMessage.contains("lossless radius"))
-    // radius 3 (the bound itself) stays accepted
-    Dedup.simhashCandidates(docs, "text", "doc_id", maxHamming = 3)
-  }
-
   /** A session whose broadcast is disabled: clusterAssign takes its
     * distributed route there whatever the graph's size. The default
     * session's 10 MB threshold sends every graph below to the driver. */
@@ -303,30 +290,6 @@ class DedupSpec extends SparkSpec {
       assert(r._3 < parent._3,
         s"non-parent match ${r} must verify below the parent ${parent}")
     }
-  }
-
-  test("nearDupAgainst honors non-default k/numHashes/bands (r21 advice: " +
-      "the index was built with defaults while the require checked the " +
-      "caller's values)") {
-    import spark.implicits._
-    val corpus = (0L until 20L).map(i =>
-        (i, s"corpus document number $i with a long shared scaffold of " +
-          s"words that makes gram sets rich enough to band plus salt $i"))
-      .toDF("doc_id", "text")
-    val batch = Seq(
-      (1000000L, "corpus document number 7 with a long shared scaffold of " +
-        "words that makes gram sets rich enough to band plus salt 7 EDIT"))
-      .toDF("doc_id", "text")
-    // pre-fix this threw IllegalArgumentException from the index require
-    val got = Dedup.nearDupAgainst(corpus, batch, "text", "doc_id",
-        threshold = 0.4, k = 4, numHashes = 24, bands = 6)
-      .as[(Long, Long, Double)].collect().toSet
-    val want = Dedup.nearDupAgainstFlat(corpus, batch, "text", "doc_id",
-        threshold = 0.4, k = 4, numHashes = 24, bands = 6)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(got == want)
-    assert(got.exists(p => p._1 == 1000000L && p._2 == 7L),
-      s"planted edit must match its parent under non-default params: $got")
   }
 
   test("nearDupAgainst collapsed == flat on a duplicate-heavy corpus + batch") {

@@ -40,8 +40,7 @@ class HashOraclesPropertySpec extends SparkSpec {
     val engine = cases.toDF("id", "t")
       .select(col("id"),
         expr("minhash_sig(lower(trim(t)))").as("sig"),
-        graft.dedup.Dedup.bandHashes(
-          expr("minhash_sig(lower(trim(t)))"), bands = 8, rowsPerBand = 4)
+        graft.dedup.Dedup.bandHashes(expr("minhash_sig(lower(trim(t)))"))
           .getField("bucket").as("buckets"),
         expr("simhash64(lower(trim(t)))").as("sh"))
       .as[(Long, Seq[Long], Seq[Long], Long)].collect()

@@ -37,8 +37,7 @@ class HashOraclesSpec extends SparkSpec {
     registerSqlFunctions()
     val rows = corpus.toSeq.toDF("doc_id", "text")
       .select(col("doc_id"),
-        graft.dedup.Dedup.bandHashes(
-          expr("minhash_sig(lower(trim(text)))"), bands = 8, rowsPerBand = 4)
+        graft.dedup.Dedup.bandHashes(expr("minhash_sig(lower(trim(text)))"))
           .as("bh"))
       .select(col("doc_id"), col("bh.bucket").as("buckets"))
       .as[(Long, Seq[Long])].collect().toMap

@@ -51,6 +51,19 @@ class SourceDedupReportSpec extends SparkSpec {
     }
   }
 
+  test("building t48 runs only the duplication probe's jobs") {
+    // the pair table has one consumer, so nothing is materialized while
+    // the plan is built: the exact-collapse routing probe is the only
+    // eager work, for plan-only callers (explain, PlanSnap) too
+    val build = Registry.queries("t48_source_dedup_report")
+    build(spark, sf) // warm-up: per-dir memos and scan schemas
+    val c = corpus
+    val (_, buildJobs) = jobsStartedBy(build(spark, sf))
+    val (_, probeJobs) = jobsStartedBy(Dedup.duplicationHeavy(c, "text"))
+    assert(buildJobs.size == probeJobs.size,
+      s"t48 build ran $buildJobs; the probe alone runs $probeJobs")
+  }
+
   test("conservation: doc counts cover the planted corpus; cross-pair " +
     "sides sum even; the perturbed source is fully near-dup") {
     val total = report.values.map(_._1).sum

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate: load each Verify
 parquet output, run the oracle SQL in DuckDB over the same tables, compare
-rows (sorted columns by name, sorted rows)."""
+rows (sorted columns by name, sorted rows). Exits 1 when any query does
+not PASS, 0 otherwise."""
 import sys, json, glob, math, os
 import duckdb, pandas as pd
 
@@ -74,3 +75,4 @@ nok = sum(1 for v in results.values() if v == 'OK')
 for k, v in results.items():
     print(('PASS ' if v=='OK' else 'FAIL ') + k + ('' if v=='OK' else '  ' + v))
 print(f'== {nok}/{len(results)} oracled queries pass')
+sys.exit(0 if nok == len(results) else 1)
