@@ -13,8 +13,9 @@ import org.apache.spark.sql.types._
   * `aggregate(zip_with(a, b, (x,y) -> x*y), 0D, (s,x) -> s+x)` allocates
   * an intermediate array and evaluates interpreted lambdas per element —
   * fine semantically, ~10× slower on a 100 TB ANN scan. This expression
-  * compiles to a single fused loop over the underlying `ArrayData` with
-  * no allocation.
+  * runs one loop over the underlying `ArrayData` ([[FloatCosine.compute]],
+  * the one kernel eval and generated code both call); its only allocation
+  * is the boxed result.
   *
   * Numerics: elements are widened to double and accumulated left-to-right
   * — bit-identical to the builtin double-fold (and to DuckDB's
@@ -54,10 +55,29 @@ case class FloatCosine(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): FloatCosine =
     copy(left = newLeft, right = newRight)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    if (x.numElements() != y.numElements()) return null
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FloatCosine.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val r = ctx.freshName("cos")
+      s"""
+         |java.lang.Double $r = graft.functions.FloatCosine.compute($a, $b);
+         |if ($r == null) ${ev.isNull} = true;
+         |else ${ev.value} = $r.doubleValue();
+       """.stripMargin
+    })
+}
+
+object FloatCosine {
+  val name = "float_cosine"
+
+  /** The cosine, or null (SQL NULL) for a zero-norm or length-mismatched
+    * pair. A NaN element gives NaN, so NULL needs a signal of its own:
+    * the result is boxed. */
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
+    if (n != y.numElements()) return null
     var dot = 0.0; var nx = 0.0; var ny = 0.0
     var i = 0
     while (i < n) {
@@ -69,39 +89,6 @@ case class FloatCosine(left: Expression, right: Expression)
     val denom = math.sqrt(nx) * math.sqrt(ny)
     if (denom == 0.0) null else dot / denom
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val denom = ctx.freshName("denom")
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $dot = 0.0; double $nx = 0.0; double $ny = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double x = (double) $a.getFloat($i);
-         |    double y = (double) $b.getFloat($i);
-         |    $dot += x * y; $nx += x * x; $ny += y * y;
-         |  }
-         |  double $denom = java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny);
-         |  if ($denom == 0.0) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / $denom;
-         |  }
-         |}
-       """.stripMargin
-    })
-}
-
-object FloatCosine {
-  val name = "float_cosine"
 
   /** The SQL builder [[GraftExtensions]] injects; strict arity (silently
     * dropping extra args would return wrong results with no error). */

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -38,26 +38,29 @@ case class GramHashes(child: Expression, k: Int = 5)
   override protected def withNewChildInternal(newChild: Expression): GramHashes =
     copy(child = newChild)
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
+  override def nullSafeEval(input: Any): Any =
+    GramHashes.compute(input.asInstanceOf[UTF8String], k)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, s => s"graft.functions.GramHashes.compute($s, $k)")
+}
+
+object GramHashes {
+  val name = "gram_hashes"
+
+  def compute(s: UTF8String, k: Int): ArrayData = {
     val n = s.numBytes()
     // a string shorter than k contributes its WHOLE text as one gram —
     // matching the builtin rawShingles (sequence(1, greatest(n-k+1, 1)));
-    // an empty-gram set would silently drop short-doc near-dup pairs on
-    // this path only
-    if (n < k) {
-      var h = 0L
-      var j = 0
-      while (j < n) { h = h * 131L + s.getByte(j); j += 1 }
-      return new GenericArrayData(Array(MinHashSig.fmix64(h)))
-    }
-    val m = n - k + 1
+    // an empty-gram set would silently drop short-doc near-dup pairs
+    val win = math.min(n, k)
+    val m = n - win + 1
     val hs = new Array[Long](m)
     var p = 0
     while (p < m) {
       var h = 0L
       var j = 0
-      while (j < k) { h = h * 131L + s.getByte(p + j); j += 1 }
+      while (j < win) { h = h * 131L + s.getByte(p + j); j += 1 }
       hs(p) = MinHashSig.fmix64(h)
       p += 1
     }
@@ -70,47 +73,6 @@ case class GramHashes(child: Expression, k: Int = 5)
     }
     new GenericArrayData(java.util.Arrays.copyOf(hs, w))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val hs = ctx.freshName("hs")
-      val p = ctx.freshName("p")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      val w = ctx.freshName("w")
-      val i = ctx.freshName("i")
-      val win = ctx.freshName("win")
-      s"""
-         |int $n = $input.numBytes();
-         |// short string: its whole text is the single gram (matches the
-         |// builtin rawShingles sequence(1, greatest(n-k+1, 1)) form)
-         |int $m = ($n < $k) ? 1 : ($n - $k + 1);
-         |int $win = ($n < $k) ? $n : $k;
-         |long[] $hs = new long[$m];
-         |for (int $p = 0; $p < $m; $p++) {
-         |  long $h = 0L;
-         |  for (int $j = 0; $j < $win; $j++) {
-         |    $h = $h * 131L + $input.getByte($p + $j);
-         |  }
-         |  $h = ($h ^ ($h >>> 33)) * ${0xff51afd7ed558ccdL}L;
-         |  $h = ($h ^ ($h >>> 33)) * ${0xc4ceb9fe1a85ec53L}L;
-         |  $hs[$p] = $h ^ ($h >>> 33);
-         |}
-         |java.util.Arrays.sort($hs);
-         |int $w = 0;
-         |for (int $i = 0; $i < $m; $i++) {
-         |  if ($w == 0 || $hs[$i] != $hs[$w - 1]) { $hs[$w] = $hs[$i]; $w++; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  java.util.Arrays.copyOf($hs, $w));
-       """.stripMargin
-    })
-}
-
-object GramHashes {
-  val name = "gram_hashes"
 
   /** Strict-arity SQL builder (see FloatCosine.builder): `gram_hashes(text)`
     * with the default k=5. */

@@ -12,8 +12,8 @@ import org.apache.spark.sql.types._
   * Why native (FloatCosine's argument, same hot shape): the builtin
   * `aggregate(zip_with(a, b, (x,y) -> x*y), 0L, (s,v) -> s+v)` evaluates
   * interpreted lambdas per element and allocates the zipped array — per
-  * corpus row, per query. This compiles to one fused loop over the raw
-  * `ArrayData` with no allocation.
+  * corpus row, per query. This runs one loop over the raw `ArrayData`
+  * with no allocation.
   *
   * Numerics are EXACT, not approximate: int8-range inputs (|x| ≤ 127,
   * dim ≤ 64) keep every product ≤ 16129 and every 64-term sum far below
@@ -46,8 +46,17 @@ case class IntDot(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): IntDot =
     copy(left = newLeft, right = newRight)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any, b: Any): Any =
+    IntDot.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.IntDot.compute($a, $b)")
+}
+
+object IntDot {
+  val name = "int_dot"
+
+  def compute(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0L
     var i = 0
@@ -57,25 +66,6 @@ case class IntDot(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += (long) $a.getInt($i) * (long) $b.getInt($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-}
-
-object IntDot {
-  val name = "int_dot"
 
   /** Strict-arity SQL builder (see FloatCosine.builder). */
   val builder: Seq[Expression] => Expression = {

@@ -58,9 +58,6 @@ object Native {
   def nbQualityScore(text: Column, table: NbTable): Column =
     column(NbQualityScore(e(text), table))
 
-  def unigramStats(word: Column, vocab: Seq[(String, Long)]): Column =
-    column(UnigramStats(e(word), vocab))
-
   def unigramDocStats(text: Column, vocab: Seq[(String, Long)]): Column =
     column(UnigramDocStats(e(text), vocab))
 

@@ -38,16 +38,25 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
+  override def nullSafeEval(input: Any): Any =
+    SimHash64.compute(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, s => s"graft.functions.SimHash64.compute($s)")
+}
+
+object SimHash64 {
+  val name = "simhash64"
+
+  def compute(s: UTF8String): Long = {
     val n = s.numBytes()
     val counts = new Array[Int](64)
     var p = 0
     while (p < n) {
-      while (p < n && SimHash64.isSpace(s.getByte(p))) p += 1
+      while (p < n && isSpace(s.getByte(p))) p += 1
       if (p < n) {
         var h = 0L
-        while (p < n && !SimHash64.isSpace(s.getByte(p))) {
+        while (p < n && !isSpace(s.getByte(p))) {
           h = h * 131L + s.getByte(p); p += 1
         }
         h = MinHashSig.fmix64(h)
@@ -63,49 +72,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     while (i < 64) { if (counts(i) > 0) out |= (1L << i); i += 1 }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, input => {
-      val n = ctx.freshName("n")
-      val counts = ctx.freshName("counts")
-      val p = ctx.freshName("p")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val out = ctx.freshName("out")
-      val sp = (v: String) =>
-        s"($v == 32 || $v == 9 || $v == 10 || $v == 13 || $v == 12 || $v == 11)"
-      s"""
-         |int $n = $input.numBytes();
-         |int[] $counts = new int[64];
-         |int $p = 0;
-         |while ($p < $n) {
-         |  byte $b = $input.getByte($p);
-         |  if (${sp(b)}) { $p++; continue; }
-         |  long $h = 0L;
-         |  while ($p < $n) {
-         |    $b = $input.getByte($p);
-         |    if (${sp(b)}) break;
-         |    $h = $h * 131L + $b; $p++;
-         |  }
-         |  $h = ($h ^ ($h >>> 33)) * ${0xff51afd7ed558ccdL}L;
-         |  $h = ($h ^ ($h >>> 33)) * ${0xc4ceb9fe1a85ec53L}L;
-         |  $h = $h ^ ($h >>> 33);
-         |  for (int $i = 0; $i < 64; $i++) {
-         |    $counts[$i] += ((($h >>> $i) & 1L) == 1L) ? 1 : -1;
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $i = 0; $i < 64; $i++) {
-         |  if ($counts[$i] > 0) $out |= (1L << $i);
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-}
-
-object SimHash64 {
-  val name = "simhash64"
 
   def isSpace(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f' || b == 0x0B

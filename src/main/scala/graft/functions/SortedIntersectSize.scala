@@ -35,8 +35,19 @@ case class SortedIntersectSize(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): SortedIntersectSize =
     copy(left = newLeft, right = newRight)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SortedIntersectSize.compute(
+      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      s"graft.functions.SortedIntersectSize.compute($a, $b)")
+}
+
+object SortedIntersectSize {
+  val name = "intersect_size_sorted"
+
+  def compute(x: ArrayData, y: ArrayData): Int = {
     val (nx, ny) = (x.numElements(), y.numElements())
     var i = 0; var j = 0; var c = 0
     while (i < nx && j < ny) {
@@ -47,28 +58,6 @@ case class SortedIntersectSize(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |int $nx = $a.numElements(); int $ny = $b.numElements();
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $nx && $j < $ny) {
-         |  long $xv = $a.getLong($i); long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $c++; $i++; $j++; }
-         |  else if ($xv < $yv) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-}
-
-object SortedIntersectSize {
-  val name = "intersect_size_sorted"
 
   /** Strict-arity SQL builder (see FloatCosine.builder). */
   val builder: Seq[Expression] => Expression = {

@@ -37,41 +37,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * time (the s07/BPE pattern).
   *
   * 100 TB shape: the BPE contract — training is one bounded
-  * deterministic collect; apply is a per-row codegen scalar, the vocab
-  * rides task broadcast as a reference object, no join, no shuffle, and
-  * the doc-level form keeps text scan-side with zero explode. */
-case class UnigramStats(child: Expression, vocab: Seq[(String, Long)])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"${UnigramLm.name} requires a string argument, got " +
-        child.dataType.simpleString)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def prettyName: String = UnigramLm.name
-
-  override protected def withNewChildInternal(newChild: Expression): UnigramStats =
-    copy(child = newChild)
-
-  @transient private lazy val table: UnigramTable = new UnigramTable(vocab)
-
-  override def nullSafeEval(input: Any): Any =
-    UnigramLm.wordStats(input.asInstanceOf[UTF8String].toString, table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val t = ctx.addReferenceObj("uniTable", table, "graft.functions.UnigramTable")
-    nullSafeCodeGen(ctx, ev, input =>
-      s"${ev.value} = graft.functions.UnigramLm.wordStats($input.toString(), $t);")
-  }
-}
-
-/** Whole-document unigram stats in ONE codegen scalar (the BpeDocCount
-  * shape): pre-tokenize, Viterbi every word (memoized per distinct word
-  * per executor), return [n_words, n_pieces, total_cost] — text never
-  * leaves the scan-side map, no explode. */
+  * deterministic collect; apply is ONE per-row codegen scalar over the
+  * whole document (the BpeDocCount shape): pre-tokenize, Viterbi every
+  * word (memoized per distinct word per executor), return [n_words,
+  * n_pieces, total_cost]. The vocab rides task broadcast as a reference
+  * object: no join, no shuffle, no explode — text never leaves the
+  * scan-side map. */
 case class UnigramDocStats(child: Expression, vocab: Seq[(String, Long)])
     extends UnaryExpression {
 
@@ -115,7 +86,6 @@ final class UnigramTable(val vocab: Seq[(String, Long)]) extends Serializable {
 }
 
 object UnigramLm {
-  val name = "unigram_stats"
   val docName = "unigram_doc_stats"
 
   /** Longest candidate piece considered at train time. */
@@ -218,14 +188,6 @@ object UnigramLm {
     val a = Array(c, n)
     if (t.memo.size() < CacheCap) t.memo.putIfAbsent(word, a)
     a
-  }
-
-  /** [[UnigramStats]] entry point: [total_cost, n_pieces] for one word. */
-  def wordStats(word: String, t: UnigramTable)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
-    val a = memoized(word, t)
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(Array(a(0), a(1)))
   }
 
   /** [[UnigramDocStats]] entry point: [n_words, n_pieces, total_cost]

@@ -2629,16 +2629,14 @@ object TextQueries {
       val corpus = scan(r.session, sfDir, "documents")
         .select(col("doc_id"), col("text"))
       val mem = MemoryStream[(Long, String)](r.session)
-      // caller-managed index: the persisted corpus projection registers in
-      // the session CacheManager and would silently substitute into OTHER
-      // queries' plans after this replay finishes — unpersist at teardown
-      // so the harness leaves the session as it found it
-      val idx = graft.dedup.Dedup.indexCorpus(corpus, "text", "doc_id",
-        persist = true)
-      r.onCleanup(idx.unpersist())
-      val q = graft.streaming.StreamOps.startNearDupGateIndexed(
-        mem.toDF().toDF("doc_id", "text"), idx, "text", "doc_id",
+      // the gate persists its corpus index, which registers in the session
+      // CacheManager and would silently substitute into OTHER queries'
+      // plans after this replay finishes — stop() unpersists it, so the
+      // harness leaves the session as it found it
+      val q = graft.streaming.StreamOps.startNearDupGate(
+        mem.toDF().toDF("doc_id", "text"), corpus, "text", "doc_id",
         threshold = 0.5, path = sinkDir, checkpoint = ckptDir)
+      r.onCleanup(q.stop())
       feed.foreach { b => mem.addData(b); q.processAllAvailable() }
       r.session.read.parquet(sinkDir)
         .select(col("id"), col("text"), col("match_id"),

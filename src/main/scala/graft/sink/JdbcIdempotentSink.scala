@@ -43,6 +43,9 @@ object JdbcIdempotentSink {
             connProps: Properties = new Properties(),
             batchSize: Int = 100,
             deleteBeforeDump: Boolean = true): Unit = {
+    // Spark's JDBC writer rejects this too, but only after the DELETE ran
+    if (batchSize < 1)
+      throw graft.GraftError.Other(s"batchsize must be at least 1, got $batchSize")
     if (deleteBeforeDump) preDelete(url, table, keys, connProps)
     df.write
       .mode(SaveMode.Append)

@@ -241,19 +241,18 @@ object StreamOps {
     * corpus, representative table) is indexed ONCE here and persisted —
     * per-batch work is proportional to the batch, never the corpus.
     * Returns a [[GateQuery]] handle owning BOTH the stream and the index
-    * this overload built: `handle.stop()` stops the stream and
-    * unpersists the cached corpus blocks, releasing their CacheManager
-    * registration (see [[startNearDupGateIndexed]] for why that
-    * registration must not outlive the gate). Callers managing the index
-    * lifetime themselves use [[startNearDupGateIndexed]] directly. */
+    * built here: `handle.stop()` stops the stream and unpersists the
+    * cached corpus blocks, releasing their CacheManager registration (see
+    * [[startGateStream]] for why that registration must not outlive the
+    * gate). */
   def startNearDupGate(docs: DataFrame, corpus: DataFrame,
                        textCol: String, idCol: String, threshold: Double,
                        path: String, checkpoint: String): GateQuery = {
     val idx =
       graft.dedup.Dedup.indexCorpus(corpus, textCol, idCol, persist = true)
     try GateQuery(
-      startNearDupGateIndexed(docs, idx, textCol, idCol, threshold,
-        path, checkpoint),
+      startGateStream(docs, idx, textCol, idCol, threshold, path,
+        checkpoint),
       idx)
     catch {
       // start refused (e.g. the sink-layout guard): release the blocks we
@@ -263,11 +262,11 @@ object StreamOps {
   }
 
   /** The running near-dup gate plus the corpus index
-    * [[startNearDupGate]] built on the caller's behalf — so the
-    * convenience overload's persisted blocks (and their CacheManager
-    * sameResult substitution scope) have a releasable lifetime instead
-    * of lasting until session end. `stop()` tears BOTH down; the raw
-    * query stays reachable for progress introspection. */
+    * [[startNearDupGate]] built on the caller's behalf — so the persisted
+    * blocks (and their CacheManager sameResult substitution scope) have a
+    * releasable lifetime instead of lasting until session end. `stop()`
+    * tears BOTH down; the raw query stays reachable for progress
+    * introspection. */
   final case class GateQuery(
       query: org.apache.spark.sql.streaming.StreamingQuery,
       index: graft.dedup.Dedup.GateCorpusIndex) {
@@ -283,16 +282,16 @@ object StreamOps {
     }
   }
 
-  /** [[startNearDupGate]] with a CALLER-MANAGED corpus index. Lifetime
-    * matters beyond memory: a persisted index registers its corpus
-    * projection in the session's CacheManager, which substitutes an
-    * InMemoryRelation into ANY later query containing a sameResult
+  /** The gate's stream over an already-built corpus index. The index's
+    * lifetime matters beyond memory: a persisted index registers its
+    * corpus projection in the session's CacheManager, which substitutes
+    * an InMemoryRelation into ANY later query containing a sameResult
     * subtree — harmless-to-helpful in production, but a replay harness
     * that runs a gate and then other queries in one session must
-    * `idx.unpersist()` after `q.stop()` or those queries silently plan
-    * against the cache (caught by the t38 plan pin when the convenience
-    * overload persisted unconditionally). */
-  def startNearDupGateIndexed(docs: DataFrame,
+    * unpersist the index after the stream stops or those queries silently
+    * plan against the cache (caught by the t38 plan pin when the gate's
+    * index outlived it). [[GateQuery.stop]] does both. */
+  private def startGateStream(docs: DataFrame,
                               idx: graft.dedup.Dedup.GateCorpusIndex,
                               textCol: String, idCol: String,
                               threshold: Double,

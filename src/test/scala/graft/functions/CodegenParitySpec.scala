@@ -8,15 +8,15 @@ import graft.SparkSpec
 
 /** Interpreted-vs-codegen parity for every native expression.
   *
-  * Each expression carries TWO implementations of its semantics: the
-  * `eval` path (used whenever Spark falls back to interpreted projection —
-  * `spark.sql.codegen.factoryMode=NO_CODEGEN`, compile failures, constant
-  * folding in the optimizer) and the `doGenCode` template (the whole-stage
-  * hot path). The static kernels are shared, but the codegen STRINGS —
-  * argument order, reference-object wiring, null slots, boxing — are not
-  * exercised by unit tests that call `eval` directly. A divergence here is
-  * the worst kind of bug: results silently depend on which execution path
-  * the planner happened to pick.
+  * Each expression has one kernel, a static method on its companion that
+  * both `eval` (used whenever Spark falls back to interpreted projection
+  * — `spark.sql.codegen.factoryMode=NO_CODEGEN`, compile failures,
+  * constant folding in the optimizer) and the `doGenCode` call (the
+  * whole-stage hot path) run. What the two paths do NOT share is the
+  * wiring around that call — argument order, reference-object slots, null
+  * slots, boxing — which unit tests that call `eval` directly never
+  * exercise. A divergence there is the worst kind of bug: results
+  * silently depend on which execution path the planner happened to pick.
   *
   * Each case runs the same plan twice — once forced through codegen
   * (`CODEGEN_ONLY` + whole-stage on), once forced interpreted
@@ -151,8 +151,8 @@ class CodegenParitySpec extends SparkSpec with graft.IsolatedSession {
   }
 
   test("GramHashes k=20 (t21's decontamination width): codegen == interpreted") {
-    // k is interpolated into the generated Java; a wide window exercises
-    // the short-text whole-gram branch on every row of `texts`
+    // k is a literal argument of the generated call; a wide window makes
+    // every row of `texts` a short text (one whole-text gram)
     assertParity("gram_hashes_20",
       texts.select(col("id"),
         exprCol(GramHashes(ColumnBridge.expression(col("t")), k = 20)).as("r")))
@@ -161,8 +161,7 @@ class CodegenParitySpec extends SparkSpec with graft.IsolatedSession {
   test("MinHashSig: codegen == interpreted") {
     assertParity("minhash_sig",
       texts.select(col("id"),
-        exprCol(MinHashSig(ColumnBridge.expression(col("t")),
-          k = 3, numHashes = 8)).as("r")))
+        exprCol(MinHashSig(ColumnBridge.expression(col("t")))).as("r")))
   }
 
   test("SimHash64: codegen == interpreted") {
@@ -231,11 +230,10 @@ class CodegenParitySpec extends SparkSpec with graft.IsolatedSession {
           nprobe = 3)).as("r")))
   }
 
-  // ── shared-kernel expressions ──────────────────────────────────────
-  // These route both eval and doGenCode through one static kernel, so the
-  // arithmetic cannot diverge — but the codegen string still carries the
-  // reference-object wiring (addReferenceObj of the stopword/merge/vocab
-  // tables) and the null slot, which only a forced-codegen run exercises.
+  // ── text-table expressions ─────────────────────────────────────────
+  // Most of these pass a table to their kernel through addReferenceObj
+  // (stopwords, BPE merges, unigram vocab, NB weights): wiring only a
+  // forced-codegen run exercises.
 
   test("TokenStats: codegen == interpreted (reference-object stopwords)") {
     assertParity("token_stats",
@@ -287,16 +285,9 @@ class CodegenParitySpec extends SparkSpec with graft.IsolatedSession {
         exprCol(BpeTokens(ColumnBridge.expression(col("t")), merges)).as("r")))
   }
 
-  test("UnigramStats/UnigramDocStats: codegen == interpreted (vocab ref)") {
+  test("UnigramDocStats: codegen == interpreted (vocab ref)") {
     val vocab = UnigramLm.train(Seq("the quick brown fox",
       "the quick lazy dog", "the the quick quick"), vocabSize = 50, rounds = 1)
-    import spark.implicits._
-    val words = Seq((1L, Some("the")), (2L, Some("quick")),
-      (3L, Some("zzz")), (4L, None: Option[String]), (5L, Some("")))
-      .toDF("id", "t")
-    assertParity("unigram_stats",
-      words.select(col("id"),
-        exprCol(UnigramStats(ColumnBridge.expression(col("t")), vocab)).as("r")))
     assertParity("unigram_doc_stats",
       texts.select(col("id"),
         exprCol(UnigramDocStats(ColumnBridge.expression(col("t")), vocab)).as("r")))

@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -68,6 +71,18 @@ class NativeSpec extends SparkSpec {
       val byColumn = input(fresh).orderBy("id").select(native.as("r")).collect()
       val bySql = input(spark).orderBy("id").select(expr(sql).as("r")).collect()
       assert(byColumn.toSeq == bySql.toSeq, s"$sql differs")
+    }
+  }
+
+  test("every stateless native expression's generated code calls its kernel") {
+    stateless.foreach { case (sql, native) =>
+      val Project(Seq(Alias(e, _)), child) =
+        input(spark).select(native.as("r")).queryExecution.analyzed
+      val code = BindReferences.bindReference(e, child.output)
+        .genCode(new CodegenContext).code.toString
+      assert(code.contains("graft.functions."), s"$sql calls no kernel:\n$code")
+      assert(!code.contains("for (") && !code.contains("while ("),
+        s"$sql generates a loop of its own:\n$code")
     }
   }
 

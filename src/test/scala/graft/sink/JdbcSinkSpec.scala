@@ -33,6 +33,25 @@ class JdbcSinkSpec extends SparkSpec {
       (9, "z", "20240101"), (3, "c", "20240102")))
   }
 
+  test("a batchsize below 1 fails before the keyed DELETE") {
+    import spark.implicits._
+    val conn = java.sql.DriverManager.getConnection(url)
+    conn.createStatement().execute(
+      "CREATE TABLE sink_b (id INT, v VARCHAR(20), ds VARCHAR(8))")
+    conn.close()
+    def load(rows: Seq[(Int, String)], batchSize: Int): Unit =
+      JdbcIdempotentSink.write(
+        rows.map { case (i, v) => (i, v, "20240101") }.toDF("id", "v", "ds"),
+        url, "sink_b", keys = Seq("ds" -> "20240101"), batchSize = batchSize)
+
+    load(Seq(1 -> "a", 2 -> "b"), batchSize = 2)
+    val err = intercept[Exception](load(Seq(3 -> "c"), batchSize = 0))
+    val out = spark.read.jdbc(url, "sink_b", new java.util.Properties())
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSet
+    assert(out == Set((1, "a"), (2, "b")))
+    assert(err.isInstanceOf[graft.GraftError.Other], err)
+  }
+
   test("no constants -> no delete (reference: delete only on mapped constants)") {
     assert(JdbcIdempotentSink.deleteStatement("t", Nil).isEmpty)
     val Some((sql, params)) =
