@@ -20,25 +20,52 @@ import graft.sink.{JdbcIdempotentSink, SqlGenSink}
   * (stage-B artifact, inspectable exactly like the reference's dump.sql).
   *
   * Failures exit with the reference's scheduler contract: 0 ok, 9995-9999
-  * per GraftError.
+  * per GraftError. Either way the last stdout line is a one-line JSON run
+  * report ([[RunReport]]).
   */
 object Main {
   def main(args: Array[String]): Unit = {
-    val confPath = args.headOption.getOrElse("dump.conf")
-    val code =
-      try {
-        run(confPath)
-        0
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[graft] FAILED: ${e.getMessage}")
-          GraftError.exitCode(e)
-      }
-    if (code != 0) sys.exit(code)
+    val r = report(args.headOption.getOrElse("dump.conf"))
+    println(r.json)
+    if (r.exitCode != 0) sys.exit(r.exitCode)
   }
 
-  def run(confPath: String, sparkOpt: Option[SparkSession] = None): Long = {
-    val conf = DumpConf.parseString(Files.readString(Paths.get(confPath)))
+  /** What one run did: the partition it imported (None when the conf could
+    * not be read), the rows it counted, its wall time and its exit code. */
+  final case class RunReport(ds: Option[String], rows: Long, elapsedS: Double,
+                             exitCode: Int) {
+    def json: String = {
+      val dsJson = ds.fold("null")(d => "\"" + new String(
+        com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance
+          .quoteAsString(d)) + "\"")
+      val elapsed = math.round(elapsedS * 1000) / 1000.0
+      s"""{"ds":$dsJson,"rows":$rows,"elapsed_s":$elapsed,""" +
+        s""""exit_code":$exitCode}"""
+    }
+  }
+
+  /** [[run]], with any failure mapped to its exit code instead of thrown. */
+  def report(confPath: String, sparkOpt: Option[SparkSession] = None): RunReport = {
+    val start = System.nanoTime()
+    def done(ds: Option[String], rows: Long, code: Int) =
+      RunReport(ds, rows, (System.nanoTime() - start) / 1e9, code)
+    val conf = scala.util.Try(readConf(confPath))
+    val ds = conf.flatMap(c => scala.util.Try(c.ds())).toOption
+    try done(ds, runConf(conf.get, sparkOpt), 0)
+    catch {
+      case e: Throwable =>
+        System.err.println(s"[graft] FAILED: ${e.getMessage}")
+        done(ds, 0L, GraftError.exitCode(e))
+    }
+  }
+
+  private def readConf(confPath: String): DumpConf =
+    DumpConf.parseString(Files.readString(Paths.get(confPath)))
+
+  def run(confPath: String, sparkOpt: Option[SparkSession] = None): Long =
+    runConf(readConf(confPath), sparkOpt)
+
+  private def runConf(conf: DumpConf, sparkOpt: Option[SparkSession]): Long = {
     val mapPath = conf.raw.getOrElse("dump_map_file", "dump.map")
     val mapping = FieldMapping.parseString(Files.readString(Paths.get(mapPath)))
 

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 
 import graft.conf.{DumpConf, FieldMapping}
 import graft.ops.CoreOps
@@ -58,12 +59,34 @@ object Pipeline {
       // write was tried in its place and measured slower: etl_daily
       // op_p50_s 0.298 -> 0.320 s (seed 21), because the append then
       // re-scans the 600k-row source file, ~100 ms more than reading the
-      // cache. The benchmark's traced run also splits plan from count on
-      // this `count` action and waits 5 s per op when none arrives.
+      // cache.
+      //
+      // The count is a plain RDD count of the cached plan, not
+      // `Dataset.count`. That plans a partial aggregate, an Exchange
+      // SinglePartition and a final aggregate over the InMemoryTableScan,
+      // which AQE runs as 3 jobs (cache fill, map stage, final stage) and
+      // a shuffle, for one number. Counting the cached plan's rows fills
+      // the cache on 1 job with no exchange, so AQE does not wrap it; at
+      // any partition count each task returns its partition's count and
+      // the job adds them up. A data day then runs 2 jobs instead of 4 and
+      // an empty day 1 instead of 3 (PipelineSpec pins both). On a 4-core
+      // box, etl_daily's heap_live_peak_mb went 83.5 -> 74.9 MB and
+      // op_p50_s 0.211 -> 0.164 s (medians of 10 pairs), its traced
+      // pipeline.count_s 0.120 -> 0.084 s.
+      //
+      // The fresh QueryExecution is planned after the persist, so its plan
+      // is the InMemoryRelation: counting `df` as planned before it would
+      // scan the source and leave the sink to scan it again. It runs as a
+      // SQL execution named `count`, as `Dataset.count` does:
+      // `rdd.count()` reports no SQL action, and the benchmark's traced
+      // run splits plan from count on this `count` action and waits 5 s
+      // per op when none arrives.
       val cached = df.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val n = cached.count()
+        val qe = spark.sessionState.executePlan(cached.queryExecution.analyzed)
+        val n = SQLExecution.withNewExecutionId(qe, Some("count"))(
+          qe.executedPlan.execute().count())
         if (n == 0 && conf.emptyDataPolicy == graft.conf.EmptyDataPolicy.Fail)
           throw graft.GraftError.NoData("pipeline produced zero rows")
         if (!conf.skipSink && n > 0) sink(cached)

@@ -117,4 +117,23 @@ class MainSpec extends SparkSpec {
     val rows = spark.read.jdbc(url, "main_t", new java.util.Properties()).count()
     assert(rows == n1)
   }
+
+  test("the run report carries ds, rows, elapsed time and the exit code") {
+    val data = Main.report(writeConf(trackedTempDir("graft_main")), Some(spark))
+    assert(data.ds.contains("19960102") && data.rows >= 1 &&
+      data.exitCode == 0 && data.elapsedS > 0, data)
+    assert(data.json.matches(s"""\\{"ds":"19960102","rows":${data.rows},""" +
+      """"elapsed_s":[0-9.]+,"exit_code":0}"""), data.json)
+    val empty = Main.report(writeConf(trackedTempDir("graft_main"),
+      "ds=19000101\nerror_if_none_data=true"), Some(spark))
+    assert(empty.ds.contains("19000101") && empty.rows == 0 &&
+      empty.exitCode == 9998, empty)
+    val missing = Main.report(s"${trackedTempDir("graft_main")}/absent.conf",
+      Some(spark))
+    assert(missing.ds.isEmpty && missing.rows == 0 &&
+      missing.exitCode == 9999, missing)
+    assert(missing.json.matches(
+      """\{"ds":null,"rows":0,"elapsed_s":[0-9.]+,"exit_code":9999}"""),
+      missing.json)
+  }
 }

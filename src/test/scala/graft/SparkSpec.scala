@@ -30,28 +30,57 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** `body`'s result and the names of the first stage of each Spark job it
-    * starts in this thread, in job order. Job-start events reach the status
-    * tracker asynchronously, so a sentinel job runs afterwards in its own
-    * group and is awaited: events are delivered in order, so once the
-    * sentinel is visible every job `body` started is too. */
+    * starts in this thread, in job order. */
   def jobsStartedBy[T](body: => T): (T, Seq[String]) = {
+    val (out, work) = sparkWorkOf(body)
+    (out, work.jobs)
+  }
+
+  /** `body`'s result and the Spark work it runs in this thread: the name of
+    * the first stage of each job it starts, in job order, and the end event
+    * of each task of those jobs. A listener keeps the events of the job
+    * group `body` runs in. Events reach it asynchronously, so a sentinel
+    * job runs afterwards in its own group and is awaited: events are
+    * delivered in order, so once the sentinel's end is seen, every job and
+    * task of `body` is too. */
+  def sparkWorkOf[T](body: => T): (T, SparkSpec.Work) = {
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue,
+      CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
     val group = s"jobs-${getClass.getSimpleName}-${System.nanoTime()}"
-    sc.setJobGroup(group, "counted")
-    val out = try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$group-sentinel", "sentinel")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val tracker = sc.statusTracker
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (tracker.getJobIdsForGroup(s"$group-sentinel").isEmpty &&
-           System.nanoTime() < deadline) Thread.sleep(20)
-    assert(tracker.getJobIdsForGroup(s"$group-sentinel").nonEmpty,
-      "sentinel job never reached the status tracker")
-    val stages = tracker.getJobIdsForGroup(group).sorted.toSeq.map { id =>
-      tracker.getJobInfo(id).flatMap(_.stageIds.minOption)
-        .flatMap(tracker.getStageInfo).fold("?")(_.name)
+    val sentinel = s"$group-sentinel"
+    val jobs = new ConcurrentHashMap[Int, String]()
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new ConcurrentLinkedQueue[SparkListenerTaskEnd]()
+    val sentinelJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val sentinelEnded = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) =>
+            jobs.put(e.jobId, e.stageInfos.minBy(_.stageId).name)
+            e.stageIds.foreach(stages.add)
+          case Some(`sentinel`) => sentinelJob.set(e.jobId)
+          case _ => ()
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) tasks.add(e)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelJob.get) sentinelEnded.countDown()
     }
-    (out, stages)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinelEnded.await(30, TimeUnit.SECONDS),
+        "sentinel job never reached the listener")
+      (out, SparkSpec.Work(jobs.asScala.toSeq.sortBy(_._1).map(_._2),
+        tasks.asScala.toSeq))
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Registers graft's SQL surface ([[graft.functions.GraftExtensions]])
@@ -88,6 +117,11 @@ trait IsolatedSession extends SparkSpec {
 }
 
 object SparkSpec {
+  /** What [[SparkSpec.sparkWorkOf]] saw: the first stage name of each job,
+    * in job order, and the end event of each of their tasks. */
+  final case class Work(jobs: Seq[String],
+                        tasks: Seq[org.apache.spark.scheduler.SparkListenerTaskEnd])
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -32,10 +32,9 @@ class CoreOpsSpec extends SparkSpec {
     assert(out.map(_.getInt(2)).toSet == Set(1, 2))
   }
 
-  // The §2 row 15 empty-data check lives only in Pipeline.run now (the
-  // CoreOps.checkNonEmpty copy is gone); this case keeps its old name and
-  // checks both policies on one empty day through that single check.
-  test("checkNonEmpty raises 9998 under Fail, passes data through under Ok") {
+  // The §2 row 15 empty-data check lives only in Pipeline.run: both
+  // policies on one empty day.
+  test("empty day: 9998 under Fail, 0 and no sink call under Ok") {
     val m = FieldMapping.parseString("id=l_orderkey")
     def runEmpty(conf: DumpConf): Long =
       graft.pipeline.Pipeline.run(spark, sf, "lineitem", "l_shipdate",
@@ -144,5 +143,85 @@ class PipelineSpec extends SparkSpec {
     val n = graft.pipeline.Pipeline.run(spark, sf, "lineitem", "l_shipdate",
       conf, m)(_ => sunk = true)
     assert(n >= 1 && !sunk)
+  }
+
+  private val lineitemMap = FieldMapping.parseString("id=l_orderkey\nds=$ds")
+  private val dataDay = DumpConf(Map("ds" -> "19960102"))
+  private val emptyDay = DumpConf(Map("ds" -> "19000101",
+    "error_if_none_data" -> "false"))
+
+  private def importDay(conf: DumpConf,
+                        session: org.apache.spark.sql.SparkSession = spark)
+                       (sink: org.apache.spark.sql.DataFrame => Unit): Long =
+    graft.pipeline.Pipeline.run(session, sf, "lineitem", "l_shipdate",
+      conf, lineitemMap)(sink)
+
+  private def forceNoop(df: org.apache.spark.sql.DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  test("a data day runs 2 Spark jobs and no shuffle; an empty day runs 1") {
+    importDay(dataDay)(forceNoop) // infers the schema if no suite has yet
+    val (n, data) = sparkWorkOf(importDay(dataDay)(forceNoop))
+    assert(n >= 1)
+    // the count fills the cache, the sink reads it back
+    assert(data.jobs.size == 2, data.jobs)
+    assert(data.tasks.nonEmpty &&
+      data.tasks.forall(_.taskType == "ResultTask"), data.tasks.map(_.taskType))
+    val (zero, empty) = sparkWorkOf(importDay(emptyDay)(forceNoop))
+    assert(zero == 0 && empty.jobs.size == 1, empty.jobs)
+  }
+
+  // the benchmark's traced run times the count by this action
+  test("each import reports exactly one `count` SQL action") {
+    // a session of its own: its listener sees no other suite's actions
+    val iso = spark.newSession()
+    val actions = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = actions.put(funcName)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = actions.put(funcName)
+    }
+    // actions up to and including a sentinel `collect` on `iso`: listener
+    // events are delivered in order, so everything before it has arrived
+    def actionsOf(conf: DumpConf): Seq[String] = {
+      importDay(conf, iso)(forceNoop)
+      iso.range(1).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (!seen.lastOption.contains("collect") &&
+             System.nanoTime() < deadline)
+        Option(actions.poll(100, java.util.concurrent.TimeUnit.MILLISECONDS))
+          .foreach(seen += _)
+      assert(seen.lastOption.contains("collect"), seen)
+      seen.toSeq
+    }
+    iso.listenerManager.register(listener)
+    try for (conf <- Seq(dataDay, emptyDay)) {
+      val seen = actionsOf(conf)
+      assert(seen.count(_ == "count") == 1, seen)
+    } finally iso.listenerManager.unregister(listener)
+  }
+
+  test("the JDBC sink reads the cache, not the source a second time") {
+    val url = "jdbc:derby:memory:graftpipeline;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try conn.createStatement().execute(
+      "CREATE TABLE pipeline_t (id BIGINT, ds VARCHAR(8))")
+    finally conn.close()
+    val tableRows = spark.read.parquet(s"$sf/lineitem.parquet").count()
+    importDay(dataDay)(forceNoop) // infers the schema if no suite has yet
+    val (n, work) = sparkWorkOf(importDay(dataDay) { df =>
+      graft.sink.JdbcIdempotentSink.write(df, url, "pipeline_t",
+        Seq("ds" -> "19960102"), batchSize = 100)
+    })
+    assert(n >= 1)
+    // the count's scan reads the source once; reading the cache back adds
+    // one record per cached batch
+    val read = work.tasks.map(_.taskMetrics.inputMetrics.recordsRead).sum
+    assert(read >= tableRows && read < 2 * tableRows,
+      s"$read records read for a $tableRows-row table")
   }
 }
