@@ -5,7 +5,9 @@ package graft
   *
   * The reference communicates failure classes to an external scheduler via
   * process exit codes 9995-9999; here each class is a typed exception that a
-  * driver `main` maps to `sys.exit(code)`.
+  * driver `main` maps to `sys.exit(code)`. The OS keeps only the low 8 bits
+  * of an exit status, so a caller reading it sees 11-15 (9998 → 14), as
+  * with the reference; `graft.Main`'s JSON run report carries the full code.
   */
 sealed abstract class GraftError(val code: Int, msg: String)
     extends RuntimeException(msg)

@@ -20,8 +20,11 @@ import graft.sink.{JdbcIdempotentSink, SqlGenSink}
   * (stage-B artifact, inspectable exactly like the reference's dump.sql).
   *
   * Failures exit with the reference's scheduler contract: 0 ok, 9995-9999
-  * per GraftError. Either way the last stdout line is a one-line JSON run
-  * report ([[RunReport]]).
+  * per GraftError. A process exit status keeps only its low 8 bits, so the
+  * caller sees 11-15 (9998 → 14), the same truncation the reference's
+  * `System.exit` gets; the codes are not remapped. Either way the last
+  * stdout line is a one-line JSON run report ([[RunReport]]), whose
+  * `exit_code` carries the full code.
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -66,6 +69,7 @@ object Main {
     runConf(readConf(confPath), sparkOpt)
 
   private def runConf(conf: DumpConf, sparkOpt: Option[SparkSession]): Long = {
+    val batchSize = conf.batchSize // a bad value fails here, before any job
     val mapPath = conf.raw.getOrElse("dump_map_file", "dump.map")
     val mapping = FieldMapping.parseString(Files.readString(Paths.get(mapPath)))
 
@@ -84,11 +88,11 @@ object Main {
           val target = conf.mysqlTarget.getOrElse(
             throw GraftError.Other("mysql_table missing"))
           JdbcIdempotentSink.write(df, url, target,
-            mapping.constants(conf.raw), batchSize = conf.batchSize,
+            mapping.constants(conf.raw), batchSize = batchSize,
             deleteBeforeDump = conf.deleteBeforeDump)
         case None =>
           SqlGenSink.writeScript(df, conf.mysqlTarget.getOrElse("db.tbl"),
-            conf.batchSize,
+            batchSize,
             Paths.get(conf.raw.getOrElse("dump_sql_file", "dump.sql")))
       }
     }

@@ -53,8 +53,13 @@ final case class DumpConf(raw: Map[String, String]) {
   def skipSink: Boolean = flag("skip_sql_to_target", dflt = false)
 
   /** JDBC batch size; the reference hardcodes 100 rows per INSERT
-    * (HiveToMysql.java:352). */
-  def batchSize: Int = raw.get("batchsize").map(_.toInt).getOrElse(100)
+    * (HiveToMysql.java:352). Anything but an integer ≥ 1 is a conf error
+    * (9999) naming the key. */
+  def batchSize: Int = raw.get("batchsize") match {
+    case None => 100
+    case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse(
+      throw graft.GraftError.Other(s"batchsize must be an integer >= 1, got '$v'"))
+  }
 }
 
 object DumpConf {

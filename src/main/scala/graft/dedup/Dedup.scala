@@ -85,14 +85,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact Jaccard over distinct k-shingle sets — the verify step applied
-    * to candidate pairs (or, in tests/oracles, to a small all-pairs set). */
-  def jaccard(textA: Column, textB: Column, k: Int = 5): Column = {
-    val (sa, sb) = (shingles(textA, k), shingles(textB, k))
-    size(array_intersect(sa, sb)).cast("double") /
-      size(array_union(sa, sb)).cast("double")
-  }
-
   /** Jaccard from precomputed distinct-gram arrays. Keeping grams as a
     * column below the join means each doc's shingle set is computed once,
     * not once per candidate pair. */

@@ -1,36 +1,20 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing for a training-data pipeline: media payloads
   * travel as opaque `binary` columns next to a typed metadata struct; the
-  * decode / feature-extract steps run per-partition over batches.
+  * decode steps run per-partition over batches.
   *
   * Image decode is REAL: PNG/JPEG payloads go through the JDK's
   * `javax.imageio.ImageIO` (no external codec dependency) — true
-  * width/height/format/pixels come off the decoded raster. Payloads ImageIO
-  * cannot identify (audio, video, arbitrary bytes) fall back to
-  * `fakeDecode`, a deterministic stand-in that keeps the distributed
-  * plumbing exercised for media types this container has no codec for.
+  * width/height/format/pixels come off the decoded raster. Audio decode is
+  * a RIFF/WAVE walk with a `javax.sound.sampled` fallback. A payload
+  * neither codec recognizes decodes to None, and the decode passes drop
+  * its row.
   */
 object Multimodal {
-
-  /** The asset schema: payload + typed metadata, the shape a 100 TB media
-    * lakehouse table would use (payload column kept out of stats-heavy
-    * queries via column pruning; metadata queryable without touching
-    * bytes). */
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("format", StringType, nullable = true),
-    )), nullable = true),
-  ))
 
   /** Build an asset table from any (id, string) source — the string bytes
     * stand in for a media payload. Pure column ops. */
@@ -43,9 +27,6 @@ object Multimodal {
         (length(col(textCol)) % 1024).cast("int").as("width"),
         (length(col(textCol)) % 768).cast("int").as("height"),
         lit("fake").as("format")).as("meta"))
-
-  final case class AssetFeatures(asset_id: Long, n_bytes: Int,
-                                 feature: Array[Float])
 
   // ── real image codec (JDK ImageIO — no external dependency) ──────────
 
@@ -91,7 +72,7 @@ object Multimodal {
   /** Real decode: sniff the format with ImageIO's reader registry, decode
     * the pixels, and sum band-0 samples (an order-independent integer
     * checksum of the raster). None when no installed reader recognizes the
-    * bytes — the caller's cue to use the fallback path. */
+    * bytes. */
   def decodeImage(bytes: Array[Byte]): Option[DecodedImage] = {
     if (bytes == null || bytes.isEmpty) return None
     try {
@@ -251,8 +232,7 @@ object Multimodal {
     * a lossless integer checksum. Canonical PCM WAVs take the direct
     * RIFF walk; anything else falls back to javax.sound.sampled, so
     * every format the JDK can read still decodes. None when neither
-    * recognizes the bytes (MP3/OGG have no JDK codec — those fall back
-    * like non-image payloads do). */
+    * recognizes the bytes (MP3/OGG have no JDK codec). */
   def decodeAudio(payload: Array[Byte]): Option[DecodedAudio] = {
     if (payload == null || payload.isEmpty) return None
     parseWavPcm(payload) match {
@@ -321,98 +301,6 @@ object Multimodal {
         decodeAudio(bytes).map(d => AudioMeta(id, d.sample_rate, d.channels,
           d.bits, d.n_frames, d.sample_sum))
       })
-  }
-
-  /** FALLBACK decoder for media types this container has no codec for
-    * (video, compressed audio): derives a deterministic 8-dim feature
-    * from the raw bytes so the distributed plumbing still runs
-    * end-to-end. */
-  def fakeDecode(payload: Array[Byte]): Array[Float] = {
-    val f = new Array[Float](8)
-    var i = 0
-    while (i < payload.length) {
-      f(i % 8) += (payload(i) & 0xFF) / 255.0f
-      i += 1
-    }
-    f
-  }
-
-  /** Real image feature: 8-bin histogram of band-0 samples, normalized by
-    * pixel count (sums to 1). None for non-image payloads. */
-  def imageFeature(bytes: Array[Byte]): Option[Array[Float]] =
-    decodeImage(bytes).map { d =>
-      val raster = d.image.getRaster
-      val counts = new Array[Long](8)
-      var y = 0
-      while (y < d.height) {
-        var x = 0
-        while (x < d.width) {
-          // clamp the bin: >8-bit samples (16-bit gray PNGs decode to
-          // values up to 65535) must not index past the 8 bins
-          counts(math.min(7, raster.getSample(x, y, 0) >> 5)) += 1
-          x += 1
-        }
-        y += 1
-      }
-      val n = d.width.toLong * d.height
-      counts.map(c => c.toFloat / n)
-    }
-
-  /** 8-bin histogram of little-endian 16-bit amplitude magnitude
-    * (bin = |sample| >> 12), normalized by sample count. */
-  private def pcm16Histogram(b: Array[Byte], off: Int, len: Int): Array[Float] = {
-    val counts = new Array[Long](8)
-    var n = 0L
-    var i = off
-    val end = off + len
-    while (i + 1 < end) {
-      val s = ((b(i) & 0xFF) | (b(i + 1).toInt << 8)).toShort
-      counts(math.min(7, math.abs(s.toInt) >> 12)) += 1
-      n += 1
-      i += 2
-    }
-    counts.map(c => c.toFloat / math.max(1L, n))
-  }
-
-  /** Real audio feature: 8-bin histogram of PCM amplitude magnitude
-    * (bin = |sample| >> 12 for 16-bit), normalized by frame count. None
-    * for non-audio payloads. Canonical PCM WAVs histogram the data chunk
-    * in place; others re-read through javax.sound. */
-  def audioFeature(bytes: Array[Byte]): Option[Array[Float]] =
-    decodeAudio(bytes).filter(d => d.bits == 16 && d.n_frames > 0).map { _ =>
-      parseWavPcm(bytes) match {
-        case Some(w) => pcm16Histogram(bytes, w.dataOff, w.dataLen)
-        case None =>
-          import javax.sound.sampled._
-          val ais = AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(bytes))
-          try {
-            val data = ais.readAllBytes()
-            pcm16Histogram(data, 0, data.length)
-          } finally ais.close()
-      }
-    }
-
-  /** Feature extraction over asset batches: mapPartitions so the codec
-    * amortizes per-task init across its partition — the Scala analogue of
-    * a pandas-batched UDF. Image payloads get a REAL decoded pixel
-    * histogram, audio payloads a REAL PCM amplitude histogram;
-    * unrecognized bytes fall back to the deterministic stub. */
-  def extractFeatures(assets: DataFrame): Dataset[AssetFeatures] = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets.select(col("asset_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-task init for a heavier decoder would go here
-        rows.map { case (id, bytes) =>
-          val payload = if (bytes == null) Array.empty[Byte] else bytes
-          AssetFeatures(id, payload.length,
-            imageFeature(payload)
-              .orElse(audioFeature(payload))
-              .getOrElse(fakeDecode(payload)))
-        }
-      }
   }
 
   /** Synthesize an asset table with REAL PNG payloads: dims derive
@@ -578,82 +466,6 @@ object Multimodal {
           ImageHash(id, hi, lo)
         }
       })
-  }
-
-  /** Real image resize: decode, nearest-neighbor downscale to
-    * `targetWidth` (aspect preserved, never upscales), re-encode PNG, and
-    * rewrite the metadata from the dimensions actually applied — payload
-    * and meta cannot drift. Non-image payloads pass through unchanged.
-    * Narrow map, no shuffle. */
-  def resizeImages(assets: DataFrame, targetWidth: Int = 256): DataFrame = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    val out = assets
-      .select(col("asset_id"), col("media_type"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions(_.map { case (id, mt, bytes) =>
-        decodeImage(bytes) match {
-          case Some(d) if d.width > targetWidth =>
-            val nw = targetWidth
-            val nh = math.max(1, (d.height.toLong * nw / d.width).toInt)
-            val img = new java.awt.image.BufferedImage(
-              nw, nh, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-            val src = d.image.getRaster; val dst = img.getRaster
-            var y = 0
-            while (y < nh) {
-              var x = 0
-              while (x < nw) {
-                // clamp into the 8-bit output raster: a deeper source
-                // sample (16-bit gray) would otherwise wrap modulo 256
-                dst.setSample(x, y, 0, math.min(255,
-                  src.getSample(x * d.width / nw, y * d.height / nh, 0)))
-                x += 1
-              }
-              y += 1
-            }
-            (id, mt, writePng(img), nw, nh, "png")
-          case Some(d) => (id, mt, bytes, d.width, d.height, d.format)
-          case None    => (id, mt, bytes, -1, -1, null: String)
-        }
-      })
-      .toDF("asset_id", "media_type", "payload", "w", "h", "fmt")
-    out.select(col("asset_id"), col("media_type"), col("payload"),
-      struct(
-        when(col("w") >= 0, col("w")).as("width"),
-        when(col("h") >= 0, col("h")).as("height"),
-        col("fmt").as("format")).as("meta"))
-  }
-
-  /** Resize stub: a real implementation decodes, scales to
-    * `targetWidth`, and re-encodes; this deterministically downsamples
-    * the payload bytes by the same ratio and rewrites the metadata —
-    * exercising the real pipeline shape (payload AND meta must change
-    * together, new width propagates, narrow map, no shuffle). */
-  def resize(assets: DataFrame, targetWidth: Int = 256): DataFrame = {
-    val spark = assets.sparkSession
-    import spark.implicits._
-    assets
-      .select(col("asset_id"), col("media_type"), col("payload"),
-        col("meta.width").as("w"), col("meta.height").as("h"),
-        col("meta.format").as("f"))
-      .as[(Long, String, Array[Byte], Option[Int], Option[Int], Option[String])]
-      .map { case (id, mt, payload, wOpt, h, f) =>
-        val bytes = if (payload == null) Array.empty[Byte] else payload
-        val w = wOpt.getOrElse(-1)
-        // ceil ratio guarantees the new width lands <= target; the new
-        // metadata width derives from the APPLIED ratio so payload and
-        // meta stay consistent (w=600,target=256 -> ratio 3, width 200)
-        val ratio = if (w <= 0 || w <= targetWidth) 1
-                    else (w + targetWidth - 1) / targetWidth
-        val out =
-          if (ratio == 1) bytes
-          else Array.tabulate(bytes.length / ratio)(i => bytes(i * ratio))
-        (id, mt, out, wOpt.map(x => if (x <= 0) x else x / ratio), h, f)
-      }
-      .toDF("asset_id", "media_type", "payload", "new_width", "h", "f")
-      .select(col("asset_id"), col("media_type"), col("payload"),
-        struct(col("new_width").as("width"), col("h").as("height"),
-          col("f").as("format")).as("meta"))
   }
 
   /** Frame-sampling stub: pick every `stride`-th byte window as a "frame",

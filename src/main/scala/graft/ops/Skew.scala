@@ -3,41 +3,12 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Manual skew-mitigation primitives. Spark's AQE skew-join handles most
-  * cases at runtime (and stays enabled in our sessions); these are for
-  * the two shapes AQE cannot fix:
-  *
-  *   - a broadcast-too-big dimension joined on a hot key (salting spreads
-  *     the hot key's rows over `salts` tasks);
-  *   - a groupBy where one key owns most rows (two-phase salted agg
-  *     splits the hot group into `salts` partials before the final
-  *     combine).
+/** Manual skew mitigation. Spark's AQE skew-join handles skewed joins
+  * at runtime (and stays enabled in our sessions); AQE cannot split a
+  * groupBy where one key owns most rows. Two-phase salted agg splits that
+  * hot group into `salts` partials before the final combine.
   */
 object Skew {
-
-  /** Equi-join with the LARGE (skewed) side salted and the small side
-    * replicated `salts` times. Result rows are identical to the plain
-    * join; the shuffle key becomes (key, salt) so one hot key spreads
-    * over `salts` partitions instead of one straggler task.
-    *
-    * The salt must be DETERMINISTIC per row (an xxhash64 of the full row,
-    * mod salts): monotonically_increasing_id depends on partition layout,
-    * so a task retry above a shuffle could recompute different salts —
-    * for saltedAgg that risks inconsistent partials across fetch retries.
-    * Hashing the whole row (not just the hot join key, which would map a
-    * hot key to ONE salt) spreads uniformly yet reproducibly. */
-  def saltedJoin(large: DataFrame, small: DataFrame, key: String,
-                 salts: Int, joinType: String = "inner"): DataFrame = {
-    // right/full outer would emit each unmatched REPLICATED small-side row
-    // once per salt — result-changing, so refuse rather than mislead
-    require(Set("inner", "leftouter", "leftsemi", "leftanti", "left")
-      .contains(joinType.toLowerCase.replace("_", "")),
-      s"saltedJoin supports inner/left joins only, got $joinType")
-    val salted = large.withColumn("__salt", rowSalt(large, salts))
-    val replicated = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    salted.join(replicated, Seq(key, "__salt"), joinType).drop("__salt")
-  }
 
   /** Deterministic row salt: xxhash64 over every column PLUS the partition
     * id, mod `salts`. Recomputation after a fetch retry yields the same
@@ -48,7 +19,7 @@ object Skew {
     * key of identical rows onto ONE salt, silently reinstating the
     * straggler). Identical rows within one input partition still share a
     * salt — they are one task's local data either way. */
-  private def rowSalt(df: DataFrame, salts: Int): Column =
+  private[ops] def rowSalt(df: DataFrame, salts: Int): Column =
     pmod(xxhash64((df.columns.map(col) :+ spark_partition_id()).toIndexedSeq: _*),
       lit(salts.toLong)).cast("int")
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *     (Expand + two-phase agg, same shape as e23);
   *   - `fkDangling`: orphaned-child count via LeftAnti on the key —
   *     never a cartesian, zero-shuffle when both sides are bucketed on
-  *     the key (Bucketing).
+  *     the key (`bucketBy`).
   */
 object Validate {
 

@@ -566,8 +566,8 @@ object TextQueries {
     * t01/t09 is the backfill shape). Batch-internal dups collapse to the
     * min id, then an anti-join on the 64-bit exact key drops docs already
     * in the corpus. One shuffle each; at 100 TB the corpus side is the
-    * persisted key index (bucketed on the key → the anti-join co-locates
-    * via Bucketing), never a re-scan of raw text. */
+    * persisted key index (bucketed on the key with `bucketBy` → the
+    * anti-join co-locates), never a re-scan of raw text. */
   def incrementalDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = scan(spark, sfDir, "documents")
     val corpusKeys = docs.where(col("doc_id") < 400)

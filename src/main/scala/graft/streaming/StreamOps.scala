@@ -231,11 +231,11 @@ object StreamOps {
     *
     * Exactly-once: a manual `write` inside foreachBatch has NO file-sink
     * transaction log (that log belongs to `format("parquet")` streaming
-    * sinks, [[startParquetSink]]), so each epoch lands in its own
-    * `epoch=<id>` partition dir with OVERWRITE mode — a crash-replayed
-    * epoch rewrites its own directory instead of appending a duplicate
-    * copy of every row. Readers `spark.read.parquet(path)` as before
-    * (partition discovery adds an `epoch` column).
+    * sinks), so each epoch lands in its own `epoch=<id>` partition dir
+    * with OVERWRITE mode — a crash-replayed epoch rewrites its own
+    * directory instead of appending a duplicate copy of every row.
+    * Readers `spark.read.parquet(path)` as before (partition discovery
+    * adds an `epoch` column).
     *
     * Corpus cost: the gate's corpus side (collapse-routing probe, keyed
     * corpus, representative table) is indexed ONCE here and persisted —
@@ -330,15 +330,6 @@ object StreamOps {
       }
       .start()
   }
-
-  /** Write helper showing the intended production shape: append-mode
-    * parquet sink with checkpointing (exactly-once file sink). */
-  def startParquetSink(df: DataFrame, path: String, checkpoint: String) =
-    df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .format("parquet")
-      .option("path", path)
 
   /** Streaming flavor of the reference's idempotent keyed-overwrite sink
     * (JdbcIdempotentSink), hardened to EXACTLY-ONCE per micro-batch with

@@ -148,39 +148,4 @@ object TextOps {
     }
     (id * 48271L) % modulus < rate
   }
-
-  /** Winnowing rolling-hash fingerprints (Schleimer et al., SIGMOD'03):
-    * k-gram Rabin-Karp hashes, then the min hash of each sliding window —
-    * the standard local fingerprinting for plagiarism-style overlap
-    * detection. Pure Scala (driver/executor-side), used via Dataset.map
-    * in tests; the sha-prefix `Dedup.exactKey` is the SQL-path op. */
-  def winnow(text: String, k: Int = 5, window: Int = 4): Vector[Long] = {
-    val s = text.toLowerCase.trim
-    if (s.length < k) return Vector.empty
-    // per-window k-gram hash, recomputed per position (k is small). A
-    // "rolling" formulation with a 61-bit modulus overflowed Long before
-    // the mod and mis-weighted the dropped char, making every hash
-    // prefix-dependent — which silently defeats winnowing's local-overlap
-    // purpose. B and M are sized so B*M fits in a Long.
-    val B = 131L
-    val M = (1L << 31) - 1
-    val hashes = new Array[Long](s.length - k + 1)
-    var p = 0
-    while (p + k <= s.length) {
-      var h = 0L
-      var j = 0
-      while (j < k) { h = (h * B + s.charAt(p + j)) % M; j += 1 }
-      hashes(p) = h
-      p += 1
-    }
-    // min of each window, deduped on position (standard winnowing)
-    val picks = scala.collection.mutable.LinkedHashSet.empty[(Int, Long)]
-    for (w <- 0 to hashes.length - window) {
-      var (mi, mv) = (w, hashes(w))
-      for (j <- w until w + window)
-        if (hashes(j) <= mv) { mi = j; mv = hashes(j) } // rightmost min
-      picks += ((mi, mv))
-    }
-    picks.toVector.map(_._2)
-  }
 }

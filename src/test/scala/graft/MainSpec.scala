@@ -118,6 +118,23 @@ class MainSpec extends SparkSpec {
     assert(rows == n1)
   }
 
+  test("a batchsize below 1 exits 9999 before any Spark job; dump.sql is kept") {
+    val dir = trackedTempDir("graft_main")
+    val conf = writeConf(dir, "batchsize=0")
+    val sql = java.nio.file.Paths.get(s"$dir/dump.sql")
+    Files.writeString(sql, "-- the previous day's script\n")
+    val before = Files.readAllBytes(sql).toSeq
+    val (r, jobs) = jobsStartedBy(Main.report(conf, Some(spark)))
+    assert(r.exitCode == 9999 && r.rows == 0, r)
+    assert(jobs.isEmpty, jobs)
+    assert(Files.readAllBytes(sql).toSeq == before)
+    val err = intercept[GraftError.Other](Main.run(conf, Some(spark)))
+    assert(err.getMessage.contains("batchsize"), err.getMessage)
+    assert(intercept[GraftError.Other](
+      graft.conf.DumpConf.parseString("batchsize=ten").batchSize)
+      .getMessage.contains("batchsize"))
+  }
+
   test("the run report carries ds, rows, elapsed time and the exit code") {
     val data = Main.report(writeConf(trackedTempDir("graft_main")), Some(spark))
     assert(data.ds.contains("19960102") && data.rows >= 1 &&

@@ -12,44 +12,12 @@ class MultimodalSpec extends SparkSpec {
       .toDF("id", "t"), "id", "t")
 
   test("asset table carries binary payload + typed metadata") {
-    // same names and types; nullability may tighten for literal columns
     assert(assets.schema.fields.map(f => (f.name, f.dataType.typeName)).toSeq ==
-      Multimodal.assetSchema.fields.map(f => (f.name, f.dataType.typeName)).toSeq)
+      Seq("asset_id" -> "long", "media_type" -> "string",
+        "payload" -> "binary", "meta" -> "struct"))
     val r = assets.where(col("asset_id") === 1L).head()
     assert(new String(r.getAs[Array[Byte]]("payload")) == "hello world")
     assert(r.getAs[org.apache.spark.sql.Row]("meta").getAs[Int]("width") == 11)
-  }
-
-  test("feature extraction is distributed, deterministic, fixed-width") {
-    val f = Multimodal.extractFeatures(assets).collect()
-      .map(a => a.asset_id -> a).toMap
-    assert(f(1L).n_bytes == 11 && f(2L).n_bytes == 200 && f(3L).n_bytes == 0)
-    assert(f.values.forall(_.feature.length == 8))
-    // deterministic: same payload -> same features on re-run
-    val f2 = Multimodal.extractFeatures(assets).collect()
-      .map(a => a.asset_id -> a.feature.toSeq).toMap
-    assert(f.view.mapValues(_.feature.toSeq).toMap == f2)
-  }
-
-  test("resize shrinks payload and rewrites metadata together") {
-    val out = Multimodal.resize(assets, targetWidth = 100)
-      .collect().map(r => r.getAs[Long]("asset_id") -> r).toMap
-    // asset 2: width 200 -> ratio 2 -> 100 bytes, meta.width becomes 100
-    val big = out(2L)
-    assert(big.getAs[Array[Byte]]("payload").length == 100)
-    assert(big.getAs[org.apache.spark.sql.Row]("meta").getAs[Int]("width") == 100)
-    // asset 1 (width 11 <= target): untouched payload, width unchanged
-    val small = out(1L)
-    assert(new String(small.getAs[Array[Byte]]("payload")) == "hello world")
-    assert(small.getAs[org.apache.spark.sql.Row]("meta").getAs[Int]("width") == 11)
-    // schema is still the asset schema (round-trips into the same table)
-    assert(Multimodal.resize(assets).schema.fields.map(_.name).toSeq ==
-      Multimodal.assetSchema.fields.map(_.name).toSeq)
-    // the scaladoc's narrow-map contract, pinned: one pass, no self-join
-    // shuffling payload bytes back onto their own metadata
-    val plan = Multimodal.resize(assets).queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange") && !plan.contains("Join"),
-      s"resize must stay a narrow map:\n$plan")
   }
 
   test("encodePng round-trips through a REAL ImageIO decode") {
@@ -68,10 +36,6 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.decodeImage("not an image".getBytes).isEmpty)
     assert(Multimodal.decodeImage(Array.empty[Byte]).isEmpty)
     assert(Multimodal.decodeImage(null).isEmpty)
-    // fake (text) assets keep the deterministic stub features
-    val f = Multimodal.extractFeatures(assets).collect()
-      .map(a => a.asset_id -> a.feature.toSeq).toMap
-    assert(f(1L) == Multimodal.fakeDecode("hello world".getBytes).toSeq)
   }
 
   test("decodeImage is format-agnostic: a real JPEG decodes with format=jpeg") {
@@ -103,14 +67,6 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("image features are a real normalized histogram of decoded pixels") {
-    val feat = Multimodal.imageFeature(Multimodal.encodePng(8, 8, seed = 0)).get
-    assert(feat.length == 8)
-    assert(math.abs(feat.sum - 1.0f) < 1e-6) // normalized by pixel count
-    // seed 0 at 8x8: gray = 7x+13y in [0, 140] -> top histogram bins empty
-    assert(feat(7) == 0.0f)
-  }
-
   test("encodeWav round-trips through a REAL javax.sound decode") {
     val bytes = Multimodal.encodeWav(120, seed = 5)
     // genuine RIFF/WAVE container header
@@ -123,19 +79,6 @@ class MultimodalSpec extends SparkSpec {
     // non-audio bytes are rejected, not mangled
     assert(Multimodal.decodeAudio("not audio".getBytes).isEmpty)
     assert(Multimodal.decodeAudio(Multimodal.encodePng(4, 4, 1)).isEmpty)
-  }
-
-  test("audio features are a real normalized amplitude histogram") {
-    val feat = Multimodal.audioFeature(Multimodal.encodeWav(400, seed = 3)).get
-    assert(feat.length == 8 && math.abs(feat.sum - 1.0f) < 1e-6)
-    assert(Multimodal.audioFeature("noise".getBytes).isEmpty)
-    // extractFeatures routes by real sniffing: wav -> audio histogram
-    val assets = Seq((9L, Multimodal.encodeWav(100, 9)))
-      .toDF("asset_id", "payload")
-    val f = Multimodal.extractFeatures(
-      assets.withColumn("media_type", lit("audio/wav"))).collect().head
-    assert(f.feature.toSeq ==
-      Multimodal.audioFeature(Multimodal.encodeWav(100, 9)).get.toSeq)
   }
 
   test("distributed audio decode yields true format + sample checksums") {
@@ -152,8 +95,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("16-bit grayscale PNGs decode and feature-extract without overflow") {
-    // regression: samples up to 65535 used to index past the 8 histogram
-    // bins (sample >> 5 assumed 8-bit depth)
+    // samples up to 65535: the decode keeps their full depth
     val img = new java.awt.image.BufferedImage(
       6, 4, java.awt.image.BufferedImage.TYPE_USHORT_GRAY)
     for (y <- 0 until 4; x <- 0 until 6)
@@ -162,38 +104,8 @@ class MultimodalSpec extends SparkSpec {
     javax.imageio.ImageIO.write(img, "png", bos)
     val d = Multimodal.decodeImage(bos.toByteArray).get
     assert(d.width == 6 && d.height == 4 && d.format == "png")
-    val feat = Multimodal.imageFeature(bos.toByteArray).get
-    assert(feat.length == 8 && math.abs(feat.sum - 1.0f) < 1e-6)
-    assert(feat(7) == 1.0f) // all bright samples clamp into the top bin
-  }
-
-  test("resizeImages decodes, downscales, re-encodes, and meta matches") {
-    val asset = Seq((1L, "image/png", Multimodal.encodePng(100, 40, seed = 5)))
-      .toDF("asset_id", "media_type", "payload")
-    val out = Multimodal.resizeImages(asset, targetWidth = 50).head()
-    val meta = out.getAs[org.apache.spark.sql.Row]("meta")
-    assert(meta.getAs[Int]("width") == 50 && meta.getAs[Int]("height") == 20)
-    // the re-encoded payload is a real PNG whose decoded dims match meta
-    val d = Multimodal.decodeImage(out.getAs[Array[Byte]]("payload")).get
-    assert(d.width == 50 && d.height == 20 && d.format == "png")
-    // nearest-neighbor: corner pixel (0,0) survives the downscale exactly
-    assert(d.image.getRaster.getSample(0, 0, 0) == Multimodal.grayAt(0, 0, 5))
-    // a small image (<= target) passes through byte-identical
-    val small = Seq((2L, "image/png", Multimodal.encodePng(10, 10, seed = 2)))
-      .toDF("asset_id", "media_type", "payload")
-    val sOut = Multimodal.resizeImages(small, targetWidth = 50).head()
-    assert(sOut.getAs[Array[Byte]]("payload").toSeq ==
-      Multimodal.encodePng(10, 10, seed = 2).toSeq)
-    assert(sOut.getAs[org.apache.spark.sql.Row]("meta").getAs[Int]("width") == 10)
-    // a non-image payload passes through byte-identical with null meta
-    val blob = "not an image payload".getBytes
-    val nOut = Multimodal.resizeImages(
-      Seq((3L, "audio/fake", blob)).toDF("asset_id", "media_type", "payload"),
-      targetWidth = 50).head()
-    assert(nOut.getAs[Array[Byte]]("payload").toSeq == blob.toSeq)
-    val nMeta = nOut.getAs[org.apache.spark.sql.Row]("meta")
-    assert(nMeta.isNullAt(0) && nMeta.isNullAt(1) && nMeta.isNullAt(2))
-    assert(nOut.getAs[String]("media_type") == "audio/fake")
+    assert(d.pixel_sum ==
+      (for (y <- 0 until 4; x <- 0 until 6) yield 60000L + x * 100 + y).sum)
   }
 
   test("frame sampling explodes payload into strided windows") {

@@ -11,27 +11,9 @@ class SkewSpec extends SparkSpec {
   private def skewed = (1 to 2000)
     .map(i => (if (i % 10 == 0) i.toLong else 7L, i))
     .toDF("k", "v")
-  private def dim = Seq((7L, "hot"), (10L, "ten"), (20L, "twenty"))
-    .toDF("k", "name")
-
-  test("salted join returns exactly the plain join's rows") {
-    val plain = skewed.join(dim, Seq("k")).select("k", "v", "name")
-      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    val salted = Skew.saltedJoin(skewed, dim, "k", salts = 8)
-      .select("k", "v", "name")
-      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    assert(salted == plain && plain.nonEmpty)
-  }
-
-  test("salted join shuffles on (key, salt), spreading the hot key") {
-    val plan = Skew.saltedJoin(skewed, dim, "k", salts = 8)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("__salt"), "shuffle key must include the salt")
-  }
 
   test("salt is deterministic across recomputation and spreads the hot key") {
-    val salted = skewed.withColumn("__s",
-      pmod(xxhash64(col("k"), col("v")), lit(8L)).cast("int"))
+    val salted = skewed.withColumn("__s", Skew.rowSalt(skewed, 8))
     // recomputing the same plan twice yields identical salts (a task retry
     // would too — unlike monotonically_increasing_id)
     val a = salted.collect().map(_.toSeq).toSeq
@@ -40,10 +22,33 @@ class SkewSpec extends SparkSpec {
     // the hot key's rows land on many salts, not one
     val hotSalts = Skew.saltedAgg(skewed, "k", 8, sum, sum, "v", "s")
     assert(hotSalts.count() == skewed.select("k").distinct().count())
-    val perSalt = skewed.where(col("k") === 7L)
-      .withColumn("__s", pmod(xxhash64(col("k"), col("v")), lit(8L)))
-      .groupBy("__s").count().count()
-    assert(perSalt >= 6, s"hot key should spread over most of 8 salts")
+    val perSalt = salted.where(col("k") === 7L).select("__s").distinct().count()
+    assert(perSalt >= 6, s"hot key should spread over most of 8 salts, got $perSalt")
+  }
+
+  test("salted agg's first shuffle hashes on (key, salt)") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val plan = Skew.saltedAgg(skewed, "k", 8, sum, sum, "v", "s")
+      .queryExecution.executedPlan
+    val root = plan match { // AQE wraps the tree; audit the initial plan
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p                        => p
+    }
+    // the partial aggregate's Exchange is the one with no Exchange below it
+    val first = root.collect {
+      case e: ShuffleExchangeExec
+          if e.child.collect { case c: ShuffleExchangeExec => c }.isEmpty => e
+    }
+    assert(first.size == 1, s"expected one bottom Exchange:\n$root")
+    val keys = first.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.collect { case a: AttributeReference => a.name }
+      case other => fail(s"expected hash partitioning, got $other")
+    }
+    assert(keys.toSet == Set("k", "__salt"), s"shuffle key must include the salt:\n$root")
   }
 
   test("two-phase salted agg equals the direct aggregation") {

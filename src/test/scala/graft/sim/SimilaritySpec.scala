@@ -125,8 +125,8 @@ class SimilaritySpec extends SparkSpec {
     // agreement is high, and buckets shrink so each query compares
     // against a small fraction of the corpus (the property that makes
     // LSH viable at 100 TB). k = MaxValue keeps every candidate pair
-    // through ranking (the AnnScale trick), so the output row count IS
-    // the candidate-set size.
+    // through ranking, so the output row count IS the candidate-set
+    // size.
     val rnd = new scala.util.Random(123)
     val centers = Array.fill(8)(Array.fill(64)(rnd.nextDouble() * 10 - 5))
     val vecs = (0 until 400).map { i =>

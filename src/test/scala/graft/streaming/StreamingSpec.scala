@@ -110,8 +110,12 @@ class StreamingSpec extends SparkSpec {
 
     writeBatch(Seq((1L, ts(0), "click", 1.0), (2L, ts(20), "click", 2.0)))
     val stream = spark.readStream.schema(schema).parquet(in)
-    val q = StreamOps.startParquetSink(
-      StreamOps.windowedCounts(stream, "1 hour", "10 minutes"), out, chk)
+    val q = StreamOps.windowedCounts(stream, "1 hour", "10 minutes")
+      .writeStream
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+      .option("checkpointLocation", chk)
+      .format("parquet")
+      .option("path", out)
       .start()
     try {
       q.processAllAvailable()
